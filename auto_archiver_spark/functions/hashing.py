@@ -6,20 +6,24 @@
   tests/enrichers/test_hash_enricher.py:8-28).
 * SHA3-512 (F2): not native in Spark -> Arrow-batched pandas UDF (hashlib).
 * dHash-64 perceptual hash (F3 analog): see codec.dhash64; UDF in enrich.py.
-* SimHash-64 & MinHash: engine additions for near-duplicate detection at
-  training-data scale (no reference analog; standard sketches). The reference
-  (md5-derived) kernels are kept for parity tests; the production path is the
-  batch-vectorized siphash one below — deterministic across executors/runs
-  for a pinned pandas (checkpoint-resume requirement, SURVEY.md §2.8 F12).
+* SimHash-64: engine addition for near-duplicate detection (no reference
+  analog). ``simhash64`` is the md5-per-token kernel; ``simhash_text_udf``
+  is the batch-vectorized siphash one (pandas ``hash_array``, deterministic
+  for a pinned pandas — checkpoint-resume requirement, SURVEY.md §2.8 F12).
+* MinHash: one Arrow-batched sketch kernel (``shingle_minhash_arrow``) for
+  every near-dup caller — the gate queries and operators/dedup.py. Its
+  md5-int60 word hashes, affine 3-gram combiner and 16 affine permutation
+  minima are portable, so the DuckDB oracle reproduces them bit-for-bit.
 """
 
 from __future__ import annotations
 
 import hashlib
+import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType
 
@@ -38,8 +42,6 @@ def sha3_512_udf(data: pd.Series) -> pd.Series:
 
 
 # ---- deterministic 64-bit token hash (md5-derived, portable) ---------------------
-
-_MASK64 = (1 << 64) - 1
 
 
 def md5_u64(token: str) -> int:
@@ -63,82 +65,113 @@ def simhash64(tokens: list[str]) -> int:
     return val - (1 << 64) if val >= (1 << 63) else val
 
 
-# ---- MinHash ---------------------------------------------------------------------
-
-# fixed odd multipliers/offsets (splitmix-derived constants), k permutations of
-# the universal-hash family h_i(x) = (a_i*x + b_i) mod 2^64
-_MINHASH_K = 64
-_rng = np.random.default_rng(42)
-_MH_A = (_rng.integers(1, _MASK64, size=_MINHASH_K, dtype=np.uint64) | np.uint64(1))
-_MH_B = _rng.integers(0, _MASK64, size=_MINHASH_K, dtype=np.uint64)
-
-
-def minhash_signature(tokens: list[str], k: int = _MINHASH_K) -> list[int]:
-    """k-permutation MinHash signature (signed int64 entries)."""
-    if not tokens:
-        return [0] * k
-    hs = np.array(sorted({md5_u64(t) for t in tokens}), dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        table = hs[:, None] * _MH_A[:k] + _MH_B[:k]  # wraps mod 2^64
-    sig = table.min(axis=0).astype(np.int64)
-    return [int(x) for x in sig]
-
-
-def shingles(words: list[str], n: int = 3) -> list[str]:
-    """Word n-gram shingles; whole doc as one shingle when shorter than n."""
-    if len(words) < n:
-        return [" ".join(words)] if words else []
-    return [" ".join(words[i : i + n]) for i in range(len(words) - n + 1)]
-
-
-# ---- vectorized sketch path -------------------------------------------------------
+# ---- MinHash: portable hashed 3-gram shingles + 16 affine minima -----------------
 #
-# The round-1 hot spot was per-token Python md5 inside the UDF (the #2 bench
-# query). The fast path hashes EVERY shingle of the whole Arrow batch in one
-# C call (``pd.util.hash_array`` — siphash with a fixed key, deterministic
-# across processes for a pinned pandas) and reduces per-doc signatures with a
-# single ``np.minimum.reduceat`` — no per-token and no per-doc Python in the
-# hot loop. Band bucket keys are combined in numpy too, so the JVM never
-# builds band strings.
+# One kernel for every near-dup caller (gate queries and operators/dedup.py):
+# words hash to md5-int60 % M, consecutive triples combine arithmetically,
+# and the signature is 16 affine permutations (a*h + b) % P, per-doc minima.
+# Every product stays < 2^62, so int64 numpy == JVM long == DuckDB BIGINT and
+# the oracle reproduces the sketch bit-for-bit.
 
-_BAND_P = np.uint64(0x9E3779B97F4A7C15)  # splitmix64 constant for band mixing
+# deterministic affine-permutation constants
+_MH_PERMS = [((i * 2654435761 + 1) % 2147483647, (i * 97531 + 12345) % 2147483647)
+             for i in range(16)]
+_MH_P = 1_000_000_007
+_MH_M = 2147483647
+# position-mixing primes for the word-hash 3-gram combiner (< 2^21 so
+# wh * prime stays far under 2^63 — no overflow before the mod)
+_SH_A, _SH_B = 1_000_003, 999_983
 
-
-def _batch_minhash(texts: pd.Series, n: int, k: int) -> np.ndarray:
-    """(len(texts), k) uint64 MinHash signatures for a whole Arrow batch."""
-    docs = [shingles(t.split() if t else [], n) for t in texts]
-    lens = np.array([len(d) for d in docs], dtype=np.int64)
-    sigs = np.zeros((len(docs), k), dtype=np.uint64)
-    total = int(lens.sum())
-    if total == 0:
-        return sigs
-    flat = np.concatenate([np.asarray(d, dtype=object) for d in docs if d])
-    h = pd.util.hash_array(flat, categorize=False).astype(np.uint64)
-    with np.errstate(over="ignore"):
-        table = h[:, None] * _MH_A[:k] + _MH_B[:k]  # (S, k), wraps mod 2^64
-        offsets = np.zeros(len(docs) + 1, dtype=np.int64)
-        np.cumsum(lens, out=offsets[1:])
-        starts = offsets[:-1][lens > 0]
-        sigs[lens > 0] = np.minimum.reduceat(table, starts, axis=0)
-    return sigs
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
-def minhash_band_keys_udf(n: int = 3, bands: int = 16, rows_per_band: int = 4):
-    """text -> array<long> of ``bands`` LSH bucket keys, fully vectorized:
-    batch-wide shingle hashing + reduceat signature + splitmix band mixing."""
-    k = bands * rows_per_band
+def shingle_minhash_batch(texts, with_mins: bool = True) -> pd.DataFrame:
+    """(hs, mins) per text of one Arrow batch — the hashed 3-gram shingles
+    and, if ``with_mins``, the 16 affine-permutation minima (else None).
 
-    @F.pandas_udf("array<long>")
-    def _udf(texts: pd.Series) -> pd.Series:
-        sigs = _batch_minhash(texts, n, k)  # (N, k) uint64
-        with np.errstate(over="ignore"):
-            acc = np.zeros((sigs.shape[0], bands), dtype=np.uint64)
-            for r in range(rows_per_band):
-                acc = acc * _BAND_P + sigs[:, r::rows_per_band][:, :bands]
-        keys = acc.view(np.int64)  # bit-reinterpret, not value cast
-        return pd.Series(list(keys))
+    Bit-identical to the JVM expression twin ``queries._shingle_hash_df``
+    (pinned by tests/test_sketches.py::test_arrow_shingle_twin_bit_identical):
 
-    return _udf
+      * split: Java ``\\s+`` is ASCII-only ([ \\t\\n\\x0B\\f\\r]) without
+        UNICODE_CHARACTER_CLASS, and Spark's trim strips 0x20 only —
+        replicated exactly (strip(' ') + the same char class, re.split
+        keeping leading/trailing empties like Pattern.split(-1));
+      * hash: hashlib.md5 == Spark md5; int(hex[:15],16) == conv(substr(
+        md5,1,15),16,10)::long (60 bits, exact);
+      * docs shorter than 3 words hash their full joined text (so ``""``
+        has one shingle); null text has no shingles (hs and mins null).
+    """
+    # word -> md5-int60 % M memo: natural text is Zipf-distributed, so a
+    # batch sees each frequent word many times — hash each distinct word once.
+    # int.from_bytes(digest[:8]) >> 4 IS int(hexdigest[:15], 16): the first
+    # 15 hex digits are the first 7.5 bytes.
+    wcache: dict = {}
+
+    def whash(w):
+        h = wcache.get(w)
+        if h is None:
+            h = (int.from_bytes(hashlib.md5(w.encode()).digest()[:8], "big") >> 4) % _MH_M
+            wcache[w] = h
+        return h
+
+    n_rows = len(texts)
+    hs_col: list = [None] * n_rows
+    mins_col: list = [None] * n_rows
+    flat_words: list = []
+    doc_rows: list = []  # row index of each doc with >= 3 words
+    wcounts: list = []
+    for j, s in enumerate(texts):
+        if s is None:
+            continue
+        words = _JAVA_WS.split(s.strip(" "))
+        if len(words) < 3:
+            h0 = int(hashlib.md5(" ".join(words).encode()).hexdigest()[:15], 16) % _MH_M
+            hs_col[j] = np.array([h0], dtype=np.int64)
+            if with_mins:
+                mins_col[j] = np.array([(a * h0 + b) % _MH_P for a, b in _MH_PERMS],
+                                       dtype=np.int64)
+        else:
+            doc_rows.append(j)
+            wcounts.append(len(words))
+            flat_words.extend(words)
+    if doc_rows:
+        wv = np.fromiter((whash(w) for w in flat_words), dtype=np.int64, count=len(flat_words))
+        # triple combiner over the whole batch at once; entries at the last
+        # two word positions of each doc are cross-doc garbage and are
+        # dropped before the per-doc shingle ranges are cut
+        hs_flat = ((wv[:-2] * _SH_A) % _MH_M + (wv[1:-1] * _SH_B) % _MH_M + wv[2:]) % _MH_M
+        ends = np.cumsum(np.asarray(wcounts, dtype=np.int64))
+        bad = np.concatenate([ends[:-1] - 2, ends[:-1] - 1])
+        hs_compact = np.delete(hs_flat, bad)
+        sh_ends = np.cumsum(np.asarray(wcounts, dtype=np.int64) - 2)
+        sh_starts = np.concatenate([[0], sh_ends[:-1]])
+        if with_mins:
+            # 16 affine permutations over the batch's shingles in C, per-doc
+            # minima via one reduceat per permutation (every segment >= 1)
+            mins_mat = np.empty((len(doc_rows), len(_MH_PERMS)), dtype=np.int64)
+            for p_i, (a, b) in enumerate(_MH_PERMS):
+                mins_mat[:, p_i] = np.minimum.reduceat((a * hs_compact + b) % _MH_P, sh_starts)
+        for k, j in enumerate(doc_rows):
+            hs_col[j] = hs_compact[sh_starts[k] : sh_ends[k]]
+            if with_mins:
+                mins_col[j] = mins_mat[k]
+    return pd.DataFrame({"hs": hs_col, "mins": mins_col})
+
+
+def shingle_minhash_arrow(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", with_mins: bool = True
+) -> DataFrame:
+    """(id, hs[, mins]) — the sketch of every doc in ONE Arrow-batched pass
+    over the text (heavy per-row work behind one Arrow boundary per batch,
+    not in interpreted HOF lambdas). ``with_mins=False`` skips the
+    signature for callers that only need the shingle hashes."""
+
+    @F.pandas_udf("struct<hs:array<long>, mins:array<long>>")
+    def sketch(texts: pd.Series) -> pd.DataFrame:
+        return shingle_minhash_batch(texts, with_mins)
+
+    out = docs.select(F.col(id_col).alias("id"), sketch(text_col).alias("_s"))
+    return out.select("id", "_s.hs", *(["_s.mins"] if with_mins else []))
 
 
 @F.pandas_udf(LongType())
@@ -162,8 +195,3 @@ def simhash_text_udf(texts: pd.Series) -> pd.Series:
         out[lens > 0] = vals.view(np.int64)  # bit-reinterpret to signed
     return pd.Series(out)
 
-
-def jaccard(a: set, b: set) -> float:
-    if not a and not b:
-        return 1.0
-    return len(a & b) / len(a | b)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.hashing import minhash_band_keys_udf
+from ..functions.hashing import shingle_minhash_arrow
 
 # ---- exact ---------------------------------------------------------------------
 
@@ -55,61 +55,66 @@ def dedup_content_keep_first(
 
 
 # ---- MinHash + LSH ---------------------------------------------------------------
+#
+# One chain for every near-dup caller (the gate queries and the operators
+# below): sketch (functions/hashing.py shingle_minhash_arrow) -> minhash_bands
+# -> minhash_lsh_candidates (capped pairs) -> verify_pairs. Callers
+# localCheckpoint the sketch and the pair set so the Arrow sketch pass runs
+# once per corpus.
 
-
+BANDS, ROWS_PER_BAND = 8, 2  # 16 kernel minima -> 8 band keys of 2 minima
 DEFAULT_BUCKET_CAP = 64  # all-pairs bound per LSH bucket; above -> star pairs
+DEFAULT_BROADCAST_PAIRS_MAX = 2_000_000  # pair rows; ~50 MB of (long,long)
 
 
-def minhash_lsh_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bands: int = 16,
-    rows_per_band: int = 4,
-    ngram: int = 3,
-    bucket_cap: int = DEFAULT_BUCKET_CAP,
-) -> DataFrame:
-    """Candidate near-dup pairs via MinHash banding.
+def minhash_bands(hashed: DataFrame) -> DataFrame:
+    """Band stage: the (id, hs, mins) sketch -> (id, band, key) rows, one per
+    band. Keys are struct<k1,k2> long pairs — two docs share a band key iff
+    both minima match. Null-text docs (null sketch) emit no band rows, so
+    they never become candidates."""
+    bands = F.array(
+        *[
+            F.struct(
+                *[
+                    F.element_at("mins", b * ROWS_PER_BAND + r + 1).alias(f"k{r + 1}")
+                    for r in range(ROWS_PER_BAND)
+                ]
+            )
+            for b in range(BANDS)
+        ]
+    )
+    return hashed.filter(F.col("mins").isNotNull()).select(
+        "id", F.posexplode(bands).alias("band", "key")
+    )
 
-    Batch-vectorized signature stage: ALL shingles in an Arrow batch are
-    hashed in a single C call and per-doc signatures come from one
-    ``np.minimum.reduceat`` (functions/hashing.py) — no per-token Python.
-    The UDF emits ``bands`` combined band-bucket keys directly (no JVM
-    band-string churn) -> posexplode -> band-bucket equi-join.
-    Returns distinct (id_a < id_b) candidate pairs. The only wide exchange is
-    the groupBy on (band, bucket_hash) — O(n·bands) rows, never O(n²).
+
+def minhash_lsh_candidates(hashed: DataFrame) -> DataFrame:
+    """Candidate stage: the sketch's band rows, (band, key) equi-grouped ->
+    distinct (id_a < id_b) pairs. The only wide exchange is the groupBy,
+    O(n·bands) rows, never O(n²).
 
     Degenerate buckets (boilerplate corpora put thousands of near-identical
-    docs in one bucket) are bounded by ``bucket_cap``: buckets over the cap
-    emit **star pairs** (min-id representative <-> each member, O(m)) instead of
-    all pairs (O(m²)) — connectivity for connected-component dedup is
-    preserved while the quadratic blowup is not possible.
+    docs in one bucket) are bounded by ``DEFAULT_BUCKET_CAP``: buckets over
+    the cap emit **star pairs** (min-id representative <-> each member, O(m))
+    instead of all pairs (O(m²)). The DuckDB oracle of the minhash_lsh gate
+    query mirrors the cap exactly.
 
-    CAVEAT (round-2 ADVICE): the connectivity guarantee holds on the
-    *unverified* candidate graph only. After a Jaccard>=threshold verify
-    filter, member<->member near-dups of an over-cap bucket whose rep edge
-    fails the threshold are lost. Consumers deduplicating clusters must run
-    ``connected_components`` on the UNVERIFIED candidates
-    (``minhash_dedup_clusters``); ``minhash_dedup``'s verified pair list is
-    exact only for buckets <= bucket_cap.
-    """
-    banded = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            minhash_band_keys_udf(ngram, bands, rows_per_band)(F.col(text_col))
-        ).alias("band", "bucket"),
+    CAVEAT: star pairs keep connectivity on the *unverified* candidate graph
+    only. After a Jaccard verify, member<->member near-dups of an over-cap
+    bucket whose rep edge fails the threshold are lost — cluster dedup reads
+    ``minhash_dedup_clusters`` (components of the unverified graph)."""
+    grouped = (
+        minhash_bands(hashed).groupBy("band", "key").agg(F.collect_list("id").alias("ids"))
     )
-    grouped = banded.groupBy("band", "bucket").agg(F.collect_list("id").alias("ids"))
     capped = F.when(
-        F.size("ids") <= F.lit(bucket_cap), pairs_expr(F.col("ids"))
+        F.size("ids") <= F.lit(DEFAULT_BUCKET_CAP), pairs_expr(F.col("ids"))
     ).otherwise(star_pairs_expr(F.col("ids")))
-    pairs = (
+    return (
         grouped.filter(F.size("ids") > 1)
         .select(F.explode(capped).alias("p"))
         .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
         .distinct()
     )
-    return pairs
 
 
 def pairs_expr(ids):
@@ -137,102 +142,33 @@ def star_pairs_expr(ids):
     )
 
 
-DEFAULT_BROADCAST_PAIRS_MAX = 2_000_000  # pair rows; ~50 MB of (long,long)
+def verify_pairs(hashed: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Verify stage: (id_a, id_b, inter, uni) — exact hashed-shingle-set
+    intersection and union sizes per candidate pair. Set Jaccard over the
+    hashed shingles equals string-shingle Jaccard up to hash collisions.
 
-
-def ngram_jaccard(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col="doc_id",
-    text_col="text",
-    ngram=3,
-    broadcast_pairs: bool | None = None,
-) -> DataFrame:
-    """Exact word-n-gram Jaccard for given (id_a, id_b) pairs (verify stage).
-
-    Shingle sets are carried as int64 hashes, not strings — cuts the
-    verify-join shuffle ~3-5x in bytes; since r4 the shingle hash is built
-    from per-WORD xxhash64 values via a position-sensitive xor-rotate mix
-    (hashed_word_ngrams_df) so no per-shingle string is ever allocated.
-    Jaccard over hashed sets equals string-set Jaccard up to 64-bit
-    collisions (negligible).
-
-    Verify-only-candidates: the docs table is semi-join-pruned to ids that
-    appear in a pair BEFORE the (expensive) shingle expression runs — at any
-    scale the shingle work is O(candidates), not O(corpus).
-
-    ``broadcast_pairs``: True hints the pair/id sides broadcast (the common
-    LSH+bucket-cap case — tiny vs the corpus, the shingle side never
-    shuffles); False drops every hint and lets AQE pick shuffle joins (the
-    over-threshold candidate-set case — an unconditional broadcast of a
-    boilerplate-heavy corpus's pairs would OOM the driver). None counts the
-    pair set and decides (callers holding a materialized pair set pay ~ms;
-    pass the flag explicitly to skip the count job)."""
-    if broadcast_pairs is None:
-        broadcast_pairs = pairs.limit(DEFAULT_BROADCAST_PAIRS_MAX + 1).count() \
-            <= DEFAULT_BROADCAST_PAIRS_MAX
-    hint = F.broadcast if broadcast_pairs else (lambda df: df)
+    Verify-only-candidates: the sketch is semi-join-pruned to ids that
+    appear in a pair, and reused as is — no re-hashing of the corpus.
+    The pair set (callers hold it materialized) is counted up to
+    ``DEFAULT_BROADCAST_PAIRS_MAX``: under the bound the id side is
+    broadcast; over it every hint is dropped and AQE picks shuffle joins,
+    so a boilerplate-heavy corpus's pair set never lands on the driver."""
+    small = pairs.limit(DEFAULT_BROADCAST_PAIRS_MAX + 1).count() <= DEFAULT_BROADCAST_PAIRS_MAX
     ids = (
         pairs.select(F.col("id_a").alias("id"))
         .union(pairs.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    cand_docs = docs.join(hint(ids), docs[id_col] == ids["id"], "left_semi")
-    sh = hashed_word_ngrams_df(cand_docs, id_col, text_col, ngram).select(
+    sets = hashed.join(F.broadcast(ids) if small else ids, "id", "left_semi").select(
         "id", F.array_distinct("hs").alias("sh")
     )
-    a = sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a")
-    b = sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b")
-    joined = a.join(hint(pairs), "id_a")
-    if broadcast_pairs:
-        joined = joined.hint("broadcast")
-    joined = joined.join(b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return joined.select(
-        "id_a", "id_b", F.when(union > 0, inter / union).otherwise(F.lit(1.0)).alias("jaccard")
+    a = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
+    uni = F.size(F.array_union("sh_a", "sh_b")).cast("long")
+    return pairs.join(a, "id_a").join(b, "id_b").select(
+        "id_a", "id_b", inter.alias("inter"), uni.alias("uni")
     )
-
-
-def hashed_word_ngrams_df(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """(id, hs) — hashed word n-gram shingles WITHOUT building shingle
-    strings: xxhash64 each word once, then combine each window of ``n``
-    word hashes with a second multi-argument ``xxhash64`` over the window
-    (position-sensitive by construction — xxhash64 folds arguments in
-    order). One JVM string hash per word instead of ~n (every word appears
-    in n shingles), zero per-shingle string allocation — the cost that
-    dominates the verify stage at corpus scale; the combiner re-hashes only
-    ``n`` int64s per shingle. Set semantics (Jaccard, banding) equal the
-    string-shingle version up to 64-bit collisions for ANY ``n`` — unlike
-    the round-4 xor-rotate mix, whose rotation schedule repeated with
-    period 9 so equal words 9 positions apart cancelled (round-4 ADVICE).
-
-    Two projections by design: the word-hash array must be a materialized
-    column before the combiner references it n times inside a HOF lambda —
-    Spark does no CSE inside lambda bodies (an inline expression recomputes
-    every word hash per shingle, measured O(n²); BENCH.md round-4 §3).
-    Docs shorter than ``n`` words hash their full joined text, matching
-    word_ngrams_expr's degenerate case."""
-    words = F.split(F.trim(text_col), r"\s+")
-    base = docs.select(
-        F.col(id_col).alias("id"),
-        words.alias("_w"),
-        F.transform(words, lambda w: F.xxhash64(w)).alias("_wv"),
-    )
-    nw = F.size("_w")
-    wv = F.col("_wv")
-
-    def mix(i):
-        return F.xxhash64(
-            *[F.element_at(wv, (i + F.lit(j)).cast("int")) for j in range(n)]
-        )
-
-    hs = F.when(nw < n, F.array(F.xxhash64(F.array_join("_w", " ")))).otherwise(
-        F.transform(F.sequence(F.lit(1), nw - n + 1), mix)
-    )
-    return base.select("id", hs.alias("hs"))
 
 
 def word_ngrams_expr(text, n: int):
@@ -250,30 +186,32 @@ def word_ngrams_expr(text, n: int):
 
 
 def minhash_dedup(
-    docs: DataFrame, threshold: float = 0.8, id_col="doc_id", text_col="text", **lsh_kw
+    docs: DataFrame, threshold: float = 0.8, id_col="doc_id", text_col="text"
 ) -> DataFrame:
-    """Full near-dup pipeline: LSH candidates -> exact-Jaccard verify -> pairs
-    over threshold. Exact pair semantics for buckets <= bucket_cap; over-cap
-    buckets are star-sampled (see minhash_lsh_candidates CAVEAT) — for
-    cluster dedup under capping use ``minhash_dedup_clusters``."""
-    # materialize the (small) candidate set once — the signature UDF stage
-    # must not run a second time inside the verify joins
-    cands = minhash_lsh_candidates(docs, id_col, text_col, **lsh_kw).localCheckpoint()
-    return ngram_jaccard(docs, cands, id_col, text_col).filter(F.col("jaccard") >= threshold)
+    """Full near-dup pipeline: (id_a, id_b, jaccard) for candidate pairs with
+    hashed-3-gram Jaccard >= ``threshold``. Exact pair semantics for buckets
+    <= DEFAULT_BUCKET_CAP; over-cap buckets are star-sampled (see
+    minhash_lsh_candidates CAVEAT) — for cluster dedup use ``minhash_dedup_clusters``."""
+    # materialize the sketch and the (small) candidate set once — the Arrow
+    # sketch pass must not re-run inside the verify joins
+    hashed = shingle_minhash_arrow(docs, id_col, text_col).localCheckpoint()
+    pairs = minhash_lsh_candidates(hashed).localCheckpoint()
+    jac = F.col("inter") / F.col("uni")
+    return verify_pairs(hashed, pairs).select("id_a", "id_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
-def minhash_dedup_clusters(
-    docs: DataFrame, id_col="doc_id", text_col="text", **lsh_kw
-) -> DataFrame:
+def minhash_dedup_clusters(docs: DataFrame, id_col="doc_id", text_col="text") -> DataFrame:
     """Near-dup clusters (id, component) from the UNVERIFIED candidate graph —
-    the capping-safe consumption (round-2 ADVICE): star pairs keep every
-    over-cap bucket member connected to its clique, so components are
-    identical with or without the O(m²) pair expansion. Use this (not the
-    verified pair list) to pick per-cluster survivors in a boilerplate-heavy
-    corpus; verification then runs per (survivor, member) edge if exact
-    thresholds are needed."""
-    cands = minhash_lsh_candidates(docs, id_col, text_col, **lsh_kw).localCheckpoint()
-    return connected_components(cands)
+    the capping-safe consumption: star pairs keep every over-cap bucket
+    member connected to its clique, so components are identical with or
+    without the O(m²) pair expansion. Use this (not the verified pair list)
+    to pick per-cluster survivors in a boilerplate-heavy corpus;
+    verification then runs per (survivor, member) edge if exact thresholds
+    are needed."""
+    hashed = shingle_minhash_arrow(docs, id_col, text_col)
+    return connected_components(minhash_lsh_candidates(hashed).localCheckpoint())
 
 
 # ---- connected components (dedup-cluster collapse) --------------------------------

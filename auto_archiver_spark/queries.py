@@ -29,7 +29,8 @@ from pyspark.sql.window import Window
 
 from .functions import text as T
 from .functions import url_exprs as X
-from .operators.dedup import word_ngrams_expr
+from .functions.hashing import _MH_M, _MH_P, _MH_PERMS, _SH_A, _SH_B, shingle_minhash_arrow
+from .operators.dedup import minhash_lsh_candidates, verify_pairs, word_ngrams_expr
 from .operators.similarity import cosine_topk
 
 
@@ -420,21 +421,21 @@ def q_fingerprint(spark, sf):
 
 def q_ngram_jaccard(spark, sf):
     """Exact word-3-gram Jaccard between consecutive docs (near-dup verify
-    stage). Shingles are the portable hashed 3-grams of _shingle_hash_df —
+    stage). Shingles are the portable hashed 3-grams of the shared sketch
+    kernel (functions/hashing.py shingle_minhash_arrow, signature skipped) —
     one md5 per WORD plus an arithmetic triple combiner, so the shingle
     stage never allocates per-shingle strings and the self-join exchange
     carries int64 arrays (~3-5x fewer bytes at 100 TB). The oracle runs the
     identical combiner, so even hash collisions mirror exactly."""
-    # r8: project + _fan BEFORE shingle hashing — the md5-per-word stage ran
-    # inside the single row-group-bound scan task (guide §2.5); now it runs
-    # on every core, Arrow-vectorized (_shingle_minhash_arrow, guide §4.2),
-    # and the checkpoint holds the fanned partitioning
+    # project + _fan BEFORE shingle hashing — the md5-per-word stage would
+    # otherwise run inside the single row-group-bound scan task (guide
+    # §2.5); the checkpoint holds the fanned partitioning
     docs = _fan(spark, load(spark, sf, "documents").select("doc_id", "text"), "doc_id")
-    d = _shingle_minhash_arrow(docs, "doc_id").select(
-        "doc_id", F.array_distinct("hs").alias("sh")
+    d = shingle_minhash_arrow(docs, with_mins=False).select(
+        "id", F.array_distinct("hs").alias("sh")
     ).localCheckpoint()  # materialize shingles ONCE; both join sides reuse
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = d.select((F.col("doc_id") - 1).alias("id_a"), F.col("sh").alias("sh_b"))
+    a = d.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = d.select((F.col("id") - 1).alias("id_a"), F.col("sh").alias("sh_b"))
     j = a.join(b, "id_a")
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
@@ -503,11 +504,6 @@ def _simhash60_df(d: DataFrame) -> DataFrame:
     )
 
 
-# position-mixing primes for the word-hash 3-gram combiner (< 2^21 so
-# wh * prime stays far under 2^63 — no overflow before the mod)
-_SH_A, _SH_B = 1_000_003, 999_983
-
-
 def _shingle_hash_df(d: DataFrame, id_alias: str = "id"):
     """(id, hs) — portable hashed 3-gram shingles WITHOUT building shingle
     strings: hash each word once (md5-int60 % M), then combine consecutive
@@ -546,199 +542,24 @@ def _shingle_hash_df(d: DataFrame, id_alias: str = "id"):
     return base.select(id_alias, hs.alias("hs"))
 
 
-def _shingle_minhash_arrow(d: DataFrame, id_alias: str = "id") -> DataFrame:
-    """(id, hs, mins) — the Arrow-vectorized twin of ``_shingle_hash_df``
-    plus the 16 affine-permutation minima of the MinHash signature, in ONE
-    pass over the text (guide §4.2: heavy per-row work belongs in native
-    code behind an Arrow boundary, not in interpreted HOF lambdas — the JVM
-    md5-per-word transform + 16 array_min(transform(...)) chains are
-    CodegenFallback islands evaluated expression-tree-per-element).
-
-    Bit-identical to the JVM twins by construction (pinned by
-    tests/test_sketches.py::test_arrow_shingle_twin_bit_identical):
-
-      * split: Java ``\\s+`` is ASCII-only ([ \\t\\n\\x0B\\f\\r]) without
-        UNICODE_CHARACTER_CLASS, and Spark's trim strips 0x20 only —
-        replicated exactly (strip(' ') + the same char class, re.split
-        keeping leading/trailing empties like Pattern.split(-1));
-      * hash: hashlib.md5 == Spark md5; int(hex[:15],16) == conv(substr(
-        md5,1,15),16,10)::long (60 bits, exact);
-      * arithmetic: every product stays < 2^62, so int64 numpy == JVM long.
-    """
-    perm_a = [a for a, _ in _MH_PERMS]
-    perm_b = [b for _, b in _MH_PERMS]
-
-    @F.pandas_udf("struct<hs:array<long>, mins:array<long>>")
-    def sketch(texts: pd.Series) -> pd.DataFrame:
-        import hashlib  # noqa: PLC0415
-        import re  # noqa: PLC0415
-
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-        md5, m_mod, a_mul, b_mul = hashlib.md5, _MH_M, _SH_A, _SH_B
-        # word -> md5-int60 % M memo: natural text is Zipf-distributed, so a
-        # task sees each frequent word thousands of times — hash each
-        # distinct word once per batch loop, not once per occurrence.
-        # int.from_bytes(digest[:8]) >> 4 IS int(hexdigest[:15], 16): the
-        # first 15 hex digits are the first 7.5 bytes.
-        wcache: dict = {}
-
-        def whash(w):
-            h = wcache.get(w)
-            if h is None:
-                h = (int.from_bytes(md5(w.encode()).digest()[:8], "big") >> 4) % m_mod
-                wcache[w] = h
-            return h
-
-        n_rows = len(texts)
-        hs_col: list = [None] * n_rows
-        mins_col: list = [None] * n_rows
-        flat_words: list = []
-        doc_rows: list = []  # (row_idx) of docs with >= 3 words
-        wcounts: list = []
-        for j, s in enumerate(texts):
-            if s is None:
-                continue
-            words = ws.split(s.strip(" "))
-            if len(words) < 3:
-                h0 = np.array(
-                    [int(md5(" ".join(words).encode()).hexdigest()[:15], 16) % m_mod],
-                    dtype=np.int64,
-                )
-                hs_col[j] = h0
-                mins_col[j] = np.array(
-                    [(a * int(h0[0]) + b) % _MH_P for a, b in _MH_PERMS], dtype=np.int64
-                )
-            else:
-                doc_rows.append(j)
-                wcounts.append(len(words))
-                flat_words.extend(words)
-        if doc_rows:
-            wv = np.fromiter(
-                (whash(w) for w in flat_words), dtype=np.int64, count=len(flat_words)
-            )
-            # triple combiner over the whole batch at once; entries at the
-            # last two word positions of each doc are cross-doc garbage and
-            # are dropped by the per-doc shingle ranges below
-            hs_flat = ((wv[:-2] * a_mul) % m_mod + (wv[1:-1] * b_mul) % m_mod + wv[2:]) % m_mod
-            ends = np.cumsum(np.asarray(wcounts, dtype=np.int64))
-            starts = ends - wcounts
-            bad = np.concatenate([ends[:-1] - 2, ends[:-1] - 1]) if len(ends) > 1 else []
-            hs_compact = np.delete(hs_flat, bad) if len(bad) else hs_flat
-            sh_counts = np.asarray(wcounts, dtype=np.int64) - 2
-            sh_ends = np.cumsum(sh_counts)
-            sh_starts = sh_ends - sh_counts
-            # 16 affine permutations over the batch's shingles in C, per-doc
-            # minima via one reduceat per permutation (every segment >= 1)
-            mins_mat = np.empty((len(doc_rows), 16), dtype=np.int64)
-            for p_i in range(16):
-                pf = (perm_a[p_i] * hs_compact + perm_b[p_i]) % _MH_P
-                mins_mat[:, p_i] = np.minimum.reduceat(pf, sh_starts)
-            for k, j in enumerate(doc_rows):
-                hs_col[j] = hs_compact[sh_starts[k] : sh_ends[k]]
-                mins_col[j] = mins_mat[k]
-        return pd.DataFrame({"hs": hs_col, "mins": mins_col})
-
-    return d.select(F.col("doc_id").alias(id_alias), sketch("text").alias("_s")).select(
-        id_alias, F.col("_s.hs").alias("hs"), F.col("_s.mins").alias("mins")
-    )
-
-
 def q_minhash_lsh(spark, sf):
-    """MinHash-LSH near-dup pipeline, now fully oracle-checked (r3 VERDICT
-    #3): portable hashed 3-gram shingles (_shingle_hash_arr) -> 16 affine
-    permutation minima -> 8 bands x 2 rows -> band-key equi-join candidates
-    (a<b, distinct) -> exact hashed-shingle-set Jaccard verify at threshold
-    0.5. The threshold test is integer-exact (2*inter >= uni) so no float
-    crosses the engine boundary; Jaccard over hashed shingles equals
-    string-shingle Jaccard up to hash collisions, identically on both
-    engines (same hash both sides). Same band/verify shape as the
-    production xxhash64 operator (operators/dedup.py minhash_dedup —
-    pytest-exact in tests/test_sketches.py); the only wide exchange is the
-    groupBy on the band key, O(n·bands) rows, never O(n²)."""
-    # r8: project + _fan BEFORE shingle hashing (see q_ngram_jaccard) — the
-    # signature stage (md5 per word + 16 permutation minima) was pinned to
-    # the single row-group-bound scan task
+    """MinHash-LSH near-dup pipeline, oracle-checked: the operators/dedup.py
+    chain — Arrow sketch (hashed 3-gram shingles + 16 affine permutation
+    minima) -> 8 bands x 2 rows -> capped band-key candidates (a<b,
+    distinct) -> exact hashed-shingle-set verify at threshold 0.5. The
+    threshold test is integer-exact (2*inter >= uni) so no float crosses
+    the engine boundary; Jaccard over hashed shingles equals string-shingle
+    Jaccard up to hash collisions, identically on both engines (same hash
+    both sides). The only wide exchange is the groupBy on the band key,
+    O(n·bands) rows, never O(n²)."""
+    # project + _fan BEFORE the sketch (see q_ngram_jaccard); the sketch is
+    # materialized ONCE and shared by the band stage and the verify stage,
+    # and the checkpointed pair set keeps the band stage from re-running
+    # per verify join branch
     d = _fan(spark, load(spark, sf, "documents").select("doc_id", "text"), "doc_id")
-    # hash the corpus' shingles ONCE and share the materialized (id, hs,
-    # mins) projection between the signature stage and the verify stage —
-    # the r6 stage breakdown (tools/minhash_stages.py) attributed ~39% of
-    # the query to verify, most of it re-hashing the pruned corpus from raw
-    # text (r6 VERDICT #4). r8: the sketch (shingle hashes + permutation
-    # minima) is ONE Arrow-batched pass (_shingle_minhash_arrow).
-    hashed = _shingle_minhash_arrow(d, "id").localCheckpoint()
-    pairs = _minhash_lsh_pairs(_minhash_banded(hashed))
-    return _minhash_verify(hashed.select("id", "hs"), pairs.localCheckpoint())
-
-
-def _minhash_banded(hashed):
-    """Signature stage of q_minhash_lsh: the materialized (id, hs, mins)
-    sketch projection -> 8 band keys, exploded to (id, band, key) rows.
-    r8: keys are struct<k1,k2> LONG pairs instead of concat_ws strings —
-    same equivalence classes for the equi-group (two docs share a band key
-    iff both minima match), without 16 long->string casts + string concat
-    per doc, and the groupBy exchange carries 16 bytes instead of ~25-char
-    strings."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.element_at("mins", 2 * b + 1).alias("k1"),
-                F.element_at("mins", 2 * b + 2).alias("k2"),
-            )
-            for b in range(8)
-        ]
-    )
-    return hashed.select("id", F.posexplode(bands).alias("band", "key"))
-
-
-def _minhash_lsh_pairs(banded):
-    """Band-join stage: band-key equi-group -> candidate pairs -> distinct,
-    with the production operator's bucket cap (operators/dedup.py
-    DEFAULT_BUCKET_CAP): buckets over the cap emit O(m) star pairs instead
-    of O(m²) all-pairs. Without the cap the r6 sf-ladder caught this query
-    going 14.7x at 10x data — synthetic replica cliques pushed the largest
-    bucket 109 -> 1083 members and raw pairs 1.9M -> 191M. The DuckDB
-    oracle mirrors the cap exactly. Caller localCheckpoints the (tiny)
-    result so the signature stage does not re-run per verify join branch."""
-    from .operators.dedup import (  # noqa: PLC0415
-        DEFAULT_BUCKET_CAP,
-        pairs_expr,
-        star_pairs_expr,
-    )
-
-    grouped = banded.groupBy("band", "key").agg(F.collect_list("id").alias("ids"))
-    capped = F.when(
-        F.size("ids") <= F.lit(DEFAULT_BUCKET_CAP), pairs_expr(F.col("ids"))
-    ).otherwise(star_pairs_expr(F.col("ids")))
-    return (
-        grouped.filter(F.size("ids") > 1)
-        .select(F.explode(capped).alias("p"))
-        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
-        .distinct()
-    )
-
-
-def _minhash_verify(hashed, pairs):
-    """Verify stage: exact hashed-shingle-set Jaccard at threshold 0.5 over
-    the semi-join-pruned corpus (only ids appearing in some pair). Takes
-    the signature stage's already-materialized (id, hs) shingle-hash
-    projection — no re-hashing of the pruned corpus (r6 VERDICT #4)."""
-    ids = (
-        pairs.select(F.col("id_a").alias("id"))
-        .union(pairs.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    sets = hashed.join(F.broadcast(ids), "id", "left_semi").select(
-        "id", F.array_distinct("hs").alias("sh")
-    )
-    a = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    joined = pairs.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-    uni = F.size(F.array_union("sh_a", "sh_b")).cast("long")
-    return (
-        joined.select("id_a", "id_b", inter.alias("inter"), uni.alias("uni"))
-        .filter(F.lit(2) * F.col("inter") >= F.col("uni"))
-    )
+    hashed = shingle_minhash_arrow(d).localCheckpoint()
+    pairs = minhash_lsh_candidates(hashed).localCheckpoint()
+    return verify_pairs(hashed, pairs).filter(F.lit(2) * F.col("inter") >= F.col("uni"))
 
 
 def q_simhash_buckets(spark, sf):
@@ -770,21 +591,14 @@ def q_simhash_portable(spark, sf):
     return _simhash60_df(load(spark, sf, "documents"))
 
 
-# deterministic affine-permutation constants for the portable MinHash entry
-_MH_PERMS = [((i * 2654435761 + 1) % 2147483647, (i * 97531 + 12345) % 2147483647)
-             for i in range(16)]
-_MH_P = 1_000_000_007
-_MH_M = 2147483647
-
-
 def q_minhash_signature(spark, sf):
     """MinHash signature algebra, cross-engine hash-verified: 3-word shingles
     -> portable md5-int60 -> mod 2^31-ish -> 16 affine permutations
-    (a_i*h+b_i mod p) -> per-permutation minimum. Proves the signature
-    construction the production LSH (functions/hashing.py
-    minhash_band_keys_udf) computes with xxhash64+numpy — same algebra,
-    engine-portable hash. Banding/bucketing above the signature is plain
-    grouping, already exercised by the rows-only minhash_lsh entry."""
+    (a_i*h+b_i mod p) -> per-permutation minimum over STRING shingles —
+    the same permutations the shared sketch kernel (functions/hashing.py
+    shingle_minhash_arrow) applies to its word-hash 3-gram combiner.
+    Banding/bucketing above the signature is the oracle-checked
+    minhash_lsh entry."""
     d = load(spark, sf, "documents")
     sh = word_ngrams_expr(F.col("text"), 3)
     hm = F.transform(sh, lambda s: _md5_int60(s) % F.lit(_MH_M))
@@ -3704,9 +3518,8 @@ ORACLE = {
           END AS cdn_url
         FROM r
     """,
-    # The xxhash64-based production sketches keep exact-value pytest coverage
-    # (tests/test_sketches.py); the gate entries below run the same algebra
-    # over the portable md5-int60 hash so DuckDB verifies rows+schema+hash.
+    # The minhash_lsh entry runs the operators/dedup.py MinHash-LSH chain
+    # over the portable md5-int60 hash, so DuckDB verifies rows+schema+hash.
     "minhash_lsh": f"""
         WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
                    FROM documents),

@@ -4,15 +4,17 @@ sha3-512 pandas UDF; sketch determinism for simhash/minhash."""
 
 import hashlib
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from auto_archiver_spark.functions.hashing import (
-    jaccard,
+    _MH_M,
+    _SH_A,
+    _SH_B,
     md5_u64,
-    minhash_signature,
     sha3_512_udf,
     sha256_tagged_expr,
-    shingles,
+    shingle_minhash_batch,
     simhash64,
 )
 
@@ -66,16 +68,29 @@ def test_simhash_deterministic_and_similar():
 def test_minhash_similarity_estimate():
     w1 = ("spark frontier wave politeness bloom dedup " * 8).split()
     w2 = [*w1[:-4], "x", "y", "z", "w"]
-    s1, s2 = set(shingles(w1)), set(shingles(w2))
-    true_j = jaccard(s1, s2)
-    m1 = minhash_signature(list(s1))
-    m2 = minhash_signature(list(s2))
+    sk = shingle_minhash_batch(pd.Series([" ".join(w1), " ".join(w2)]))
+    s1, s2 = set(sk.hs[0]), set(sk.hs[1])
+    true_j = len(s1 & s2) / len(s1 | s2)
+    m1, m2 = list(sk.mins[0]), list(sk.mins[1])
     est = sum(a == b for a, b in zip(m1, m2)) / len(m1)
     assert abs(est - true_j) < 0.25
-    assert m1 == minhash_signature(list(s1))  # deterministic
+    # deterministic, and independent of the rest of the Arrow batch
+    assert m1 == list(shingle_minhash_batch(pd.Series([" ".join(w1)])).mins[0])
+
+
+def _wh(s):
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % _MH_M
 
 
 def test_shingles_short_doc():
-    assert shingles(["a", "b"], 3) == ["a b"]
-    assert shingles([], 3) == []
-    assert shingles("a b c d".split(), 3) == ["a b c", "b c d"]
+    """Docs shorter than 3 words hash their full joined text as one
+    shingle (so "" has one); longer docs get one combined hash per 3-word
+    window; null text has no sketch at all."""
+    sk = shingle_minhash_batch(pd.Series(["a b", "", "a b c d", None]))
+    assert list(sk.hs[0]) == [_wh("a b")]
+    assert list(sk.hs[1]) == [_wh("")]
+    tri = [((_wh(x) * _SH_A) % _MH_M + (_wh(y) * _SH_B) % _MH_M + _wh(z)) % _MH_M
+           for x, y, z in ["abc", "bcd"]]
+    assert list(sk.hs[2]) == tri
+    assert sk.hs[3] is None and sk.mins[3] is None
+    assert len(sk.mins[0]) == 16

@@ -4,12 +4,15 @@ SimHash block buckets, phash near-dup pairs on the image fixture."""
 import pytest
 from pyspark.sql import functions as F
 
+from auto_archiver_spark.functions.hashing import shingle_minhash_arrow
+from auto_archiver_spark.operators import dedup
 from auto_archiver_spark.operators.dedup import (
     dedup_exact_content,
     minhash_dedup,
     minhash_lsh_candidates,
     phash_near_dup_pairs,
     simhash_buckets,
+    verify_pairs,
 )
 from auto_archiver_spark.sources.fixture import images_df
 
@@ -31,8 +34,12 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _candidates(docs):
+    return minhash_lsh_candidates(shingle_minhash_arrow(docs))
+
+
 def test_lsh_finds_exact_duplicates(docs):
-    cands = {(r.id_a, r.id_b) for r in minhash_lsh_candidates(docs).collect()}
+    cands = {(r.id_a, r.id_b) for r in _candidates(docs).collect()}
     for i in range(4):
         assert (i, 100 + i) in cands, f"planted duplicate {i} missed"
 
@@ -66,14 +73,14 @@ def test_lsh_bucket_cap_bounds_degenerate_buckets(spark):
     txt = "identical boilerplate text repeated across the corpus every day"
     rows = [(i, txt) for i in range(300)] + [(1000, "something else entirely here now")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = minhash_lsh_candidates(docs, bucket_cap=64).collect()
+    pairs = _candidates(docs).collect()
     # all-pairs would be 300*299/2 = 44850; star is 299
     assert len(pairs) == 299
     assert all(r.id_a == 0 for r in pairs)  # rep = min id
     assert {r.id_b for r in pairs} == set(range(1, 300))  # connectivity kept
     # small buckets still get exact all-pairs
     small = spark.createDataFrame([(i, txt) for i in range(5)], "doc_id long, text string")
-    assert len(minhash_lsh_candidates(small, bucket_cap=64).collect()) == 10
+    assert len(_candidates(small).collect()) == 10
 
 
 def test_connected_components_chains_and_cliques(spark):
@@ -110,35 +117,59 @@ def test_exact_content_dedup_on_fixture(spark):
     assert "img_00000095" in ids and "img_00000096" not in ids
 
 
-def test_ngram_jaccard_shuffle_path_matches_broadcast(docs):
-    """VERDICT r2 #7: the over-threshold (no-broadcast) path must produce the
-    same verified pairs as the broadcast fast path."""
-    from auto_archiver_spark.operators.dedup import ngram_jaccard
+def test_ngram_jaccard_shuffle_path_matches_broadcast(docs, monkeypatch):
+    """VERDICT r2 #7: the over-threshold (no-broadcast) verify path must
+    produce the same verified pairs as the broadcast fast path."""
+    hashed = shingle_minhash_arrow(docs).localCheckpoint()
+    cands = minhash_lsh_candidates(hashed).localCheckpoint()
 
-    cands = minhash_lsh_candidates(docs).localCheckpoint()
-    bc = {(r.id_a, r.id_b, round(r.jaccard, 9))
-          for r in ngram_jaccard(docs, cands, broadcast_pairs=True).collect()}
-    sh = {(r.id_a, r.id_b, round(r.jaccard, 9))
-          for r in ngram_jaccard(docs, cands, broadcast_pairs=False).collect()}
+    def run():
+        df = verify_pairs(hashed, cands)
+        plan = df._jdf.queryExecution().analyzed().toString().lower()
+        return {tuple(r) for r in df.collect()}, plan
+
+    bc, bc_plan = run()
+    monkeypatch.setattr(dedup, "DEFAULT_BROADCAST_PAIRS_MAX", 0)
+    sh, sh_plan = run()
     assert bc == sh and len(bc) > 0
+    assert "broadcast" in bc_plan
     # the shuffle path carries no broadcast hint in its analyzed plan
-    plan = ngram_jaccard(docs, cands, broadcast_pairs=False)._jdf.queryExecution().analyzed().toString()
-    assert "broadcast" not in plan.lower()
+    assert "broadcast" not in sh_plan
 
 
-def test_capped_bucket_cluster_consumption(spark):
+def test_capped_bucket_cluster_consumption(spark, monkeypatch):
     """ADVICE r2: over-cap buckets star-sample, so cluster membership must be
     read via connected components on UNVERIFIED candidates — every member of
-    a 12-identical-doc clique lands in ONE component even with bucket_cap=4."""
+    a 12-identical-doc clique lands in ONE component even with a bucket cap
+    of 4."""
     from auto_archiver_spark.operators.dedup import minhash_dedup_clusters
 
+    monkeypatch.setattr(dedup, "DEFAULT_BUCKET_CAP", 4)
     text = "identical boilerplate page footer about cookies privacy terms contact us"
     rows = [(i, text) for i in range(12)] + [(50, "something else entirely here now")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     comp = {r.id: r.component
-            for r in minhash_dedup_clusters(df, bucket_cap=4).collect()}
+            for r in minhash_dedup_clusters(df).collect()}
     assert {comp[i] for i in range(12)} == {0}  # one cluster, rep = min id
     assert 50 not in comp  # no candidate edges for the singleton
+
+
+def test_null_text_is_never_a_near_duplicate(spark):
+    """Null text has no shingles, so it emits no band rows: two null docs
+    are neither a candidate, a verified pair nor a cluster. Two empty docs
+    share the one shingle of "" and stay a verified (inter=1, uni=1) pair."""
+    from auto_archiver_spark.operators.dedup import minhash_dedup_clusters
+
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, "")], "doc_id long, text string"
+    )
+    hashed = shingle_minhash_arrow(df).localCheckpoint()
+    cands = minhash_lsh_candidates(hashed).localCheckpoint()
+    assert {tuple(r) for r in cands.collect()} == {(3, 4)}
+    assert {tuple(r) for r in verify_pairs(hashed, cands).collect()} == {(3, 4, 1, 1)}
+    assert {tuple(r) for r in minhash_dedup(df, threshold=0.5).collect()} == {(3, 4, 1.0)}
+    comp = {r.id: r.component for r in minhash_dedup_clusters(df).collect()}
+    assert comp == {3: 3, 4: 3}
 
 
 def test_phash_bucket_cap_star_pairs(spark):
@@ -162,29 +193,30 @@ def test_phash_bucket_cap_star_pairs(spark):
     assert (rep, "img-zzz") in edges
 
 
-def test_hashed_shingle_combiner_no_periodic_cancellation(spark):
-    """r4 ADVICE regression: the old xor-rotate mix used rotation
-    (7j+1)%63, which repeats with period 9, so a window whose j-th and
-    (j+9)-th words were equal hashed identically regardless of WHICH word
-    they were. The xxhash64 window combiner must distinguish them."""
-    from auto_archiver_spark.operators.dedup import hashed_word_ngrams_df
+def _shingle_hashes(spark, texts):
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    return {r.id: list(r.hs) for r in shingle_minhash_arrow(df, with_mins=False).collect()}
 
-    mid = "a b c d e f g h"  # 8 shared middle words
-    df = spark.createDataFrame(
-        [(0, f"x {mid} x"), (1, f"y {mid} y")], "doc_id long, text string"
+
+def test_hashed_shingle_combiner_no_periodic_cancellation(spark):
+    """The 3-gram combiner (wh_i*A + wh_{i+1}*B + wh_{i+2}) mod M weights
+    each window slot differently, so it is position-sensitive: a reordered
+    window hashes differently (a symmetric mix would cancel), and docs that
+    differ only in their first or last word differ only in that word's
+    window."""
+    mid = "a b c d e f g h"
+    hs = _shingle_hashes(
+        spark, ["a b c", "c b a", f"x {mid}", f"y {mid}", f"{mid} x", f"{mid} y"]
     )
-    hs = {r.id: list(r.hs) for r in hashed_word_ngrams_df(df, n=10).collect()}
-    assert len(hs[0]) == 1 and len(hs[1]) == 1
-    assert hs[0][0] != hs[1][0], "periodic xor cancellation is back"
+    assert hs[0] != hs[1], "reordered 3-gram collides"
+    assert hs[2][0] != hs[3][0] and hs[2][1:] == hs[3][1:]  # first word only
+    assert hs[4][-1] != hs[5][-1] and hs[4][:-1] == hs[5][:-1]  # last word only
 
 
 def test_hashed_shingles_jaccard_matches_string_shingles(spark):
-    """Hashed-window Jaccard must equal string-shingle Jaccard on a
-    collision-free corpus (the equivalence ngram_jaccard relies on)."""
-    from auto_archiver_spark.operators.dedup import (
-        hashed_word_ngrams_df,
-        word_ngrams_expr,
-    )
+    """Hashed-shingle Jaccard must equal string-shingle Jaccard on a
+    collision-free corpus (the equivalence the verify stage relies on)."""
+    from auto_archiver_spark.operators.dedup import word_ngrams_expr
 
     rows = [
         (0, "the quick brown fox jumps over the lazy dog today"),
@@ -192,9 +224,7 @@ def test_hashed_shingles_jaccard_matches_string_shingles(spark):
         (2, "completely different words in this one here now"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    hashed = {
-        r.id: set(r.hs) for r in hashed_word_ngrams_df(df, n=3).collect()
-    }
+    hashed = {k: set(v) for k, v in _shingle_hashes(spark, [t for _, t in rows]).items()}
     strings = {
         r.doc_id: set(r.sh)
         for r in df.select(
@@ -279,7 +309,7 @@ def test_gopher_bigram_long_doc(spark):
 
 
 def test_arrow_shingle_twin_bit_identical(spark):
-    """r8: the Arrow-vectorized sketch stage (_shingle_minhash_arrow) must
+    """r8: the Arrow-vectorized sketch kernel (shingle_minhash_arrow) must
     reproduce the JVM expression twin (_shingle_hash_df + the 16 affine
     permutation minima) BIT-FOR-BIT — including Java-regex split semantics
     (ASCII \\s, leading/trailing empties), the trim-space rule, md5-int60,
@@ -288,6 +318,7 @@ def test_arrow_shingle_twin_bit_identical(spark):
     from pyspark.sql import functions as F
 
     from auto_archiver_spark import queries as Q
+    from auto_archiver_spark.functions.hashing import _MH_P, _MH_PERMS
 
     rows = [
         (0, "order agg batch key spark part hash scan"),
@@ -303,7 +334,7 @@ def test_arrow_shingle_twin_bit_identical(spark):
     jvm_hs = {r["id"]: list(r["hs"]) for r in Q._shingle_hash_df(d, "id").collect()}
 
     def perm(a, b):
-        return lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(Q._MH_P)
+        return lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(_MH_P)
 
     jvm_mins = {
         r["id"]: [r[f"m{i}"] for i in range(16)]
@@ -312,14 +343,14 @@ def test_arrow_shingle_twin_bit_identical(spark):
             "id",
             *[
                 F.array_min(F.transform(F.col("hs"), perm(a, b))).alias(f"m{i}")
-                for i, (a, b) in enumerate(Q._MH_PERMS)
+                for i, (a, b) in enumerate(_MH_PERMS)
             ],
         )
         .collect()
     }
     arrow = {
         r["id"]: (list(r["hs"]), list(r["mins"]))
-        for r in Q._shingle_minhash_arrow(d, "id").collect()
+        for r in shingle_minhash_arrow(d).collect()
     }
     assert set(arrow) == set(jvm_hs)
     for k in jvm_hs:

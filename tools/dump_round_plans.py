@@ -23,6 +23,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from auto_archiver_spark import queries as Q  # noqa: E402
+from auto_archiver_spark.functions.hashing import shingle_minhash_arrow  # noqa: E402
 from auto_archiver_spark.session import get_spark  # noqa: E402
 
 HEADLINE = [
@@ -44,17 +45,11 @@ def plan_of(df, mode: str = "formatted") -> str:
 
 
 def shingle_stage_df(spark, sf):
-    """The (doc_id, hs) shingle-hash projection exactly as the queries build
-    it, WITHOUT the localCheckpoint — so the plan shows the scan/exchange
+    """The (id, hs, mins) Arrow sketch exactly as the queries build it,
+    WITHOUT the localCheckpoint — so the plan shows the scan/exchange
     shape feeding the md5-per-word stage."""
     docs = Q.load(spark, sf, "documents").select("doc_id", "text")
-    fan = getattr(Q, "_fan", None)
-    if fan is not None:  # r8+ tree
-        docs = fan(spark, docs, "doc_id")
-    arrow = getattr(Q, "_shingle_minhash_arrow", None)
-    if arrow is not None:  # r8+: the Arrow-vectorized sketch the queries use
-        return arrow(docs, "doc_id")
-    return Q._shingle_hash_df(docs, "doc_id")
+    return shingle_minhash_arrow(Q._fan(spark, docs, "doc_id"))
 
 
 def main():

@@ -3,12 +3,12 @@ attribute the r3->r5 wall wobble to host vs plan).
 
 Times each stage best-of-N to the noop sink at the bench sf:
 
-  * signature  — hashed shingles -> permutation minima -> band keys
-                 (the Arrow-free native projection; dominated by md5 hashing)
-  * band_join  — + groupBy(band,key) -> pair explode -> distinct
-                 (the query's only wide exchange)
+  * signature  — Arrow sketch (hashed shingles + permutation minima) ->
+                 band keys (operators/dedup.py minhash_bands)
+  * band_join  — + groupBy(band,key) -> capped pair explode -> distinct
+                 (minhash_lsh_candidates; the query's only wide exchange)
   * verify     — + semi-join-pruned shingle sets + exact Jaccard filter
-                 (runs on a localCheckpointed pair set, like the query)
+                 (verify_pairs on a localCheckpointed pair set, like the query)
 
 Stage costs overlap (each includes its predecessors), so deltas are the
 per-stage attribution. Usage: python tools/minhash_stages.py [sf_dir] [reps]
@@ -24,6 +24,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from auto_archiver_spark import queries as Q  # noqa: E402
+from auto_archiver_spark.functions.hashing import shingle_minhash_arrow  # noqa: E402
+from auto_archiver_spark.operators.dedup import minhash_bands, minhash_lsh_candidates  # noqa: E402
 from auto_archiver_spark.session import get_spark  # noqa: E402
 
 
@@ -50,12 +52,10 @@ def main():
     # warmup: python workers, codegen, scan caches — otherwise the first
     # stage timed eats the cold-start and the deltas go negative
     noop(Q.QUERIES["minhash_lsh"](spark, sf))
-    # r8: the sketch stage is the Arrow-vectorized twin, fanned like the query
-    hashed = Q._shingle_minhash_arrow(
-        Q._fan(spark, d.select("doc_id", "text"), "doc_id"), "id"
-    )
-    sig = best_of(lambda: noop(Q._minhash_banded(hashed)), reps)
-    band = best_of(lambda: noop(Q._minhash_lsh_pairs(Q._minhash_banded(hashed))), reps)
+    # the sketch stage runs fanned like the query
+    hashed = shingle_minhash_arrow(Q._fan(spark, d.select("doc_id", "text"), "doc_id"))
+    sig = best_of(lambda: noop(minhash_bands(hashed)), reps)
+    band = best_of(lambda: noop(minhash_lsh_candidates(hashed)), reps)
     full = best_of(lambda: noop(Q.QUERIES["minhash_lsh"](spark, sf)), reps)
     print(
         json.dumps(
