@@ -24,6 +24,7 @@ pandas UDFs (mapInPandas), never per-row Python at the Spark layer.
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 
@@ -181,21 +182,16 @@ def hamming64(a: int, b: int) -> int:
 _PDQ_DCT: np.ndarray | None = None
 
 
-_BOX_IDX: dict = {}  # (n, wsz) -> (lo, hi, norm) — index arrays are pure
-# functions of the window geometry; caching them avoids three arange/clip
-# allocations per box pass (4 passes per image in the fetch UDF). Values
-# are identical, so the filter output is bit-identical.
-
-
+# (n, wsz) -> (lo, hi, norm): index arrays are pure functions of the window
+# geometry; caching them avoids three arange/clip allocations per box pass
+# (4 passes per image in the fetch UDF). Bounded, because image sizes come
+# from fetched payloads. Callers only read the arrays.
+@functools.lru_cache(maxsize=256)
 def _box_idx(n: int, wsz: int):
-    key = (n, wsz)
-    got = _BOX_IDX.get(key)
-    if got is None:
-        idx = np.arange(n)
-        lo = np.maximum(0, idx - (wsz - 1) // 2)
-        hi = np.minimum(n, idx + wsz // 2 + 1)
-        got = _BOX_IDX[key] = (lo, hi, (hi - lo))
-    return got
+    idx = np.arange(n)
+    lo = np.maximum(0, idx - (wsz - 1) // 2)
+    hi = np.minimum(n, idx + wsz // 2 + 1)
+    return lo, hi, (hi - lo)
 
 
 def _box1d(a: np.ndarray, wsz: int, axis: int) -> np.ndarray:

@@ -3,22 +3,24 @@
 ``fetch_archive`` is the Spark twin of the reference's
 extract -> enrich -> store chain (orchestrator.py:632-650), as a single
 ``mapInPandas`` pass so per-partition state (HTTP session / token buckets in a
-live deployment) initializes once per partition, and image bytes stream
-through bounded Arrow batches (like the reference's 16 MB-chunk hashing,
-utils/misc.py:53-61).
+live deployment) initializes once per partition, and image bytes go
+straight to a per-partition sidecar file (plans/blobs.py) while only
+references cross Arrow (the reference streams each download to a local file,
+local_storage.py:25-37).
 
 The sandbox has no network, so the transport is a deterministic *fixture
 server* (sources/fixture.py): a URL's payload is a pure function of the id
 embedded in its path — semantics preserved from the reference chain:
 
   * X1 download (extractor.py:74-122)  -> fixture bytes per URL
-  * F1 SHA-256 "SHA-256:<hex>" (hash_enricher.py:24-42) -> native sha2 AFTER
-    the UDF (JVM-side, vectorized)
+  * F1 SHA-256 "SHA-256:<hex>" (hash_enricher.py:24-42) -> hashlib in the
+    UDF while the payload buffer is hot, tagged JVM-side
   * F3 perceptual hash (pdq_hash_enricher.py:48-62) -> dHash-64 int64 key
     (phash column, partition/dedup-friendly) + spec-following PDQ-256 hex
     in media props["pdq256"] (functions/codec.py pdq256)
   * F4 thumbnail (thumbnail_enricher.py:53-73) -> area-mean resize in-UDF
-  * meta enricher byte totals (meta_enricher.py:24-37) -> native length()
+  * meta enricher byte totals (meta_enricher.py:24-37) -> the sidecar ref's
+    blob_len
 
 Politeness: admission (operators/frontier.py) already capped per-host rows
 per wave; inside a partition the UDF *accounts* crawl-delay cost per
@@ -54,15 +56,12 @@ _ID_RE = re.compile(r"/(?:p|gallery|private)/(\d+)")
 # status cell is cleared for re-archival (gsheet_feeder_db.py:124-126)
 _FLAKY_RE = re.compile(r"/flaky(\d+)/(\d+)")
 
-# One schema for both payload modes. Inline mode fills `bytes` and leaves the
-# blob-reference columns null; sidecar mode (plans/blobs.py — payload written
-# Python-side to a per-partition flat file, never crossing Arrow/parquet)
-# fills (blob_file, blob_off, blob_len, sha_hex) and leaves `bytes` null.
-# An all-null binary column costs ~one definition-level bit per row in the
-# staging parquet, so downstream code keeps a single shape.
+# Payloads never cross Arrow: the UDF writes them to a per-partition flat
+# file (plans/blobs.py) and the row carries (blob_file, blob_off, blob_len)
+# plus the payload's sha256 hex, computed while the buffer is hot.
 FETCH_RESULT_SCHEMA = (
     "sheet string, row_idx long, url string, url_norm string, url_hash long, host string, "
-    "folder string, status string, image_id string, bytes binary, "
+    "folder string, status string, image_id string, "
     "blob_file string, blob_off long, blob_len long, sha_hex string, "
     "w int, h int, fmt string, "
     "caption string, phash long, pdq string, thumb binary, politeness_ms long"
@@ -70,7 +69,7 @@ FETCH_RESULT_SCHEMA = (
 
 _OUT_COLS = [
     "sheet", "row_idx", "url", "url_norm", "url_hash", "host", "folder",
-    "status", "image_id", "bytes", "blob_file", "blob_off", "blob_len",
+    "status", "image_id", "blob_file", "blob_off", "blob_len",
     "sha_hex", "w", "h", "fmt", "caption", "phash", "pdq", "thumb",
     "politeness_ms",
 ]
@@ -84,21 +83,19 @@ class InjectedFetchCrash(RuntimeError):
 
 def _fetch_batches(
     batches: Iterator[pd.DataFrame],
-    blob_root: str | None = None,
+    blob_root: str,
     blob_dir: str = "",
     fail_inject: bool = False,
 ) -> Iterator[pd.DataFrame]:
+    from pyspark import TaskContext  # noqa: PLC0415
+
+    from ..plans.blobs import BlobWriter  # noqa: PLC0415
+
     # per-partition init happens here (sessions, buckets) — once, not per row
     host_elapsed: dict[str, int] = {}
-    writer = None
-    if blob_root is not None:
-        from pyspark import TaskContext  # noqa: PLC0415
-
-        from ..plans.blobs import BlobWriter  # noqa: PLC0415
-
-        writer = BlobWriter(blob_root, blob_dir, TaskContext.get().partitionId())
+    writer = BlobWriter(blob_root, blob_dir, TaskContext.get().partitionId())
     # finally (not loop-end): a consumer that stops the iterator early —
-    # .limit()/.take() on a blob-mode plan — raises GeneratorExit here, and
+    # .limit()/.take() on the plan — raises GeneratorExit here, and
     # the sidecar must still be renamed into place or every emitted row's
     # blob_file would point at a .tmp that never lands (ADVICE r6). Rows are
     # only emitted after their payload is appended, so a partial file is
@@ -113,8 +110,7 @@ def _fetch_batches(
                 # crash between blob append and table commit
                 raise InjectedFetchCrash("injected mid-wave fetch crash")
     finally:
-        if writer is not None:
-            writer.close()
+        writer.close()
 
 
 def _fetch_loop(
@@ -160,7 +156,7 @@ def _fetch_loop(
         cols = {
             name: [None] * n
             for name in (
-                "image_id", "bytes", "blob_file", "blob_off", "blob_len",
+                "image_id", "blob_file", "blob_off", "blob_len",
                 "sha_hex", "w", "h", "fmt", "caption", "phash", "pdq", "thumb",
             )
         }
@@ -173,17 +169,14 @@ def _fetch_loop(
             rec = image_record(int(id_vals[i]), with_phash=False)
             px = decode_image(rec["bytes"])
             cols["image_id"][i] = rec["image_id"]
-            if writer is not None:
-                # payload -> flat sidecar file, hash while the buffer is hot
-                # (hashlib ~= the JVM sha2 in speed, and the bytes then never
-                # cross Arrow or touch parquet assembly at all)
-                rel, off, ln = writer.append(rec["bytes"])
-                cols["blob_file"][i] = rel
-                cols["blob_off"][i] = off
-                cols["blob_len"][i] = ln
-                cols["sha_hex"][i] = hashlib.sha256(rec["bytes"]).hexdigest()
-            else:
-                cols["bytes"][i] = rec["bytes"]
+            # payload -> flat sidecar file, hash while the buffer is hot
+            # (hashlib ~= the JVM sha2 in speed, and the bytes then never
+            # cross Arrow or touch parquet assembly at all)
+            rel, off, ln = writer.append(rec["bytes"])
+            cols["blob_file"][i] = rel
+            cols["blob_off"][i] = off
+            cols["blob_len"][i] = ln
+            cols["sha_hex"][i] = hashlib.sha256(rec["bytes"]).hexdigest()
             cols["w"][i] = rec["w"]
             cols["h"][i] = rec["h"]
             cols["fmt"][i] = rec["fmt"]
@@ -203,36 +196,23 @@ def _fetch_loop(
 
 def fetch_archive(
     admitted: DataFrame,
-    blob_root: str | None = None,
+    blob_root: str,
     blob_dir: str = "",
     fail_inject: bool = False,
 ) -> DataFrame:
     """Run the fetch+enrich chain over admitted frontier rows; then the
-    native enrichers (F1 sha256, byte totals) JVM-side.
+    reference's "SHA-256:<hex>" tag and byte totals JVM-side.
 
-    ``blob_root`` switches on the payload sidecar (plans/blobs.py): bytes
-    are written per-partition to ``blob_root/blob_dir/part-*.bin`` inside
-    the UDF and rows carry references; the SHA-256 is computed in the same
-    loop (bit-identical "SHA-256:<hex>" tag either way)."""
+    Payload bytes are written per-partition to
+    ``blob_root/blob_dir/part-*.bin`` inside the UDF (plans/blobs.py) and
+    rows carry references; the SHA-256 is computed in the same loop."""
     def fn(batches):
         return _fetch_batches(batches, blob_root, blob_dir, fail_inject)
 
     fetched = admitted.mapInPandas(fn, FETCH_RESULT_SCHEMA)
     return (
-        fetched.withColumn(
-            "hash",
-            F.when(
-                F.col("sha_hex").isNotNull(),
-                F.concat(F.lit("SHA-256:"), F.col("sha_hex")),
-            ).when(
-                F.col("bytes").isNotNull(),
-                F.concat(F.lit("SHA-256:"), F.sha2(F.col("bytes"), 256)),
-            ),
-        )
-        .withColumn(
-            "total_bytes",
-            F.coalesce(F.col("blob_len"), F.length("bytes"), F.lit(0)).cast("long"),
-        )
+        fetched.withColumn("hash", F.concat(F.lit("SHA-256:"), F.col("sha_hex")))
+        .withColumn("total_bytes", F.coalesce(F.col("blob_len"), F.lit(0)).cast("long"))
         .withColumn("processed_at", F.current_timestamp())
         .drop("sha_hex")
     )
@@ -250,8 +230,7 @@ def to_archive_results(fetched: DataFrame, wave: int) -> DataFrame:
     mimetype = F.when(F.col("fmt") == "png", "image/png").otherwise(
         F.when(F.col("fmt").isNotNull(), "image/jpeg")
     )
-    # keyed on status, NOT bytes-isNotNull: referencing `bytes` here would
-    # defeat column pruning for every consumer of the staging table
+    # keyed on status: every success row carries a payload ref
     media = F.when(
         F.col("status") == "success",
         F.array(

@@ -74,12 +74,11 @@ def materialize_bytes(
     out_col: str = "bytes",
     keep_refs: bool = False,
 ) -> DataFrame:
-    """Re-attach payload bytes from the sidecar: rows with a non-null
-    ``blob_file`` get ``out_col`` read from ``root/blob_file[off:off+len]``;
-    rows with a null ref keep their existing ``out_col`` (inline mode).
-    A table written before the sidecar existed (no ``blob_file`` column at
-    all — e.g. an images snapshot from an old root) passes through
-    unchanged: its payloads are already inline (ADVICE r6 compat note).
+    """Re-attach payload bytes from the sidecar: ``out_col`` is read from
+    ``root/blob_file[off:off+len]`` (null where the ref is null). A table
+    written before the sidecar existed (no ``blob_file`` column at all —
+    e.g. an images snapshot from an old root) passes through unchanged: its
+    payloads are already inline (ADVICE r6 compat note).
 
     Distributed and batch-grouped: each Arrow batch sorts by (file, offset)
     so a partition's reads against one sidecar file are sequential, then
@@ -88,24 +87,20 @@ def materialize_bytes(
     the skinny reference columns."""
     if "blob_file" not in df.columns:
         return df
-    has_inline = out_col in df.columns
-    cols = list(df.columns)
-    out_cols = cols if has_inline else [*cols, out_col]
-    fields = []
-    for f in df.schema.fields:
-        fields.append(f"`{f.name}` {f.dataType.simpleString()}")
-    if not has_inline:
-        fields.append(f"`{out_col}` binary")
-    out_schema = ", ".join(fields)
+    # a root older than the skinny staging schema also has an all-null
+    # `bytes` column (TableIO.read unions it in); the refs replace it
+    df = df.drop(out_col)
+    out_schema = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
+        + [f"`{out_col}` binary"]
+    )
 
     def _read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         handles: dict[str, object] = {}
         try:
             for pdf in batches:
                 n = len(pdf)
-                vals = (
-                    list(pdf[out_col]) if has_inline else [None] * n
-                )
+                vals = [None] * n
                 refs = [
                     (i, pdf["blob_file"].iat[i], int(pdf["blob_off"].iat[i]), int(pdf["blob_len"].iat[i]))
                     for i in range(n)
@@ -120,7 +115,7 @@ def materialize_bytes(
                     vals[i] = fh.read(ln)
                 out = pdf.copy()
                 out[out_col] = pd.Series(vals, index=pdf.index, dtype="object")
-                yield out[out_cols]
+                yield out
         finally:
             for fh in handles.values():
                 fh.close()

@@ -114,7 +114,10 @@ class TableIO:
                 df = df.filter(~F.col(col).isin(sorted(parts)))
             if s.get("mode") == "replace":
                 shadowed.setdefault(s["part_col"], set()).update(s["parts"])
-            out = df if out is None else out.unionByName(df)
+            # allowMissingColumns: images ref snapshots written while the
+            # fetch staging schema still had an inline `bytes` column select
+            # it; newer ones do not (it reads as null for their rows)
+            out = df if out is None else out.unionByName(df, allowMissingColumns=True)
         return out
 
     def read_or_empty(self, spark: SparkSession, table: str, schema: str) -> DataFrame:
@@ -140,11 +143,11 @@ class TableIO:
     ) -> int:
         """Write df as a new snapshot of ``table``; returns the snapshot id.
 
-        ``compression`` overrides the session parquet codec — payload tables
-        carrying already-compressed image bytes should pass "uncompressed"
-        (zstd/snappy burn 4-8x CPU on incompressible data for ~0% gain).
+        ``compression`` overrides the session parquet codec — tables of
+        already-compressed binaries (PNG thumbnails) can pass "uncompressed"
+        (zstd/snappy burn CPU on incompressible data for ~0% gain).
         ``options`` are extra per-write parquet options (e.g. a small
-        ``parquet.block.size`` for wide-binary tables — see plans/wave.py)."""
+        ``parquet.block.size`` for the fetch staging — see plans/wave.py)."""
         manifest = self._load_manifest(table)
         next_id = self._next_id(table, manifest)
         rel = f"snap-{next_id:05d}"
@@ -271,8 +274,9 @@ class TableIO:
         This is Iceberg merge-on-read in miniature: a MERGE/DELETE commit
         writes *metadata + position deletes*, never rewrites the data files.
         Here it lets the wave driver publish the ``images`` table straight
-        from the staged fetch output — the heavy ``bytes`` column hits
-        parquet exactly once per wave. Readers pay a filter + a (tiny)
+        from the staged fetch output, which is written once per wave
+        (payloads live in the blob sidecar, plans/blobs.py, and never hit
+        parquet). Readers pay a filter + a (tiny)
         anti-join; a real deployment compacts in background maintenance.
         """
         src_manifest = self._load_manifest(src_table)

@@ -9,11 +9,12 @@ One wave = one declarative DataFrame plan (SURVEY.md §3 "Spark lifecycle"):
                                    pre-prune skips the join for provable-new)
       -> politeness admission     (shuffle 2: host window)
       -> salted repartition       (shuffle 3: host x salt — kills Zipf skew)
-      -> fetch+enrich mapInPandas (Arrow batches) -> staged ONCE (fetch_out)
+      -> fetch+enrich mapInPandas (Arrow batches; payloads go to the blob
+         sidecar, plans/blobs.py) -> skinny refs staged ONCE (fetch_out)
       -> commits: images (zero-copy ref into fetch_out + dedup delete keys —
-         merge-on-read, bytes written once), archive_results append, url_seen
-         append, sha_seen/bloom-sidecar deltas, seed_state writeback,
-         per-wave metrics row (incl. per-partition lineage)
+         merge-on-read), archive_results append, url_seen append,
+         sha_seen/bloom-sidecar deltas, seed_state writeback, per-wave
+         metrics row (incl. per-partition lineage)
 
 State between waves lives in TableIO snapshots; the checkpoint commits the
 wave atomically across tables. Deferred rows (admission budget exhausted)
@@ -74,7 +75,6 @@ class CrawlConfig:
     max_waves: int = 32
     fetch_partitions: int = 64
     use_bloom: bool = True
-    bloom_fpp: float = 0.01
     # URL-seen filter structure (the north rule names both): "bloom" =
     # OR-mergeable bitmap sidecar (operators/bloom.py, default); "cuckoo" =
     # deletable fingerprint sidecar (operators/cuckoo.py) — required for
@@ -103,21 +103,13 @@ class CrawlConfig:
     # what trips this host's memory-bandwidth governor — ~400 writer tasks
     # per wave across ~10 commits for tables that are a few MB each. Skinny
     # state tables (url_seen / sha_seen / frontier / bloom / lineage) and the
-    # results table get a bounded writer count instead; the heavy fetch_out
+    # results table get a bounded writer count instead; the fetch_out
     # staging keeps full fan-out (its writers are the fetch tasks
     # themselves). On a real cluster these become "target file size" table
     # properties (1 file per ~128 MB) — the knob bounds files-per-commit
     # there too, it does not serialize the pipeline.
     state_commit_partitions: int = 4
     results_commit_partitions: int = 8
-    # Payload bytes sidecar (plans/blobs.py): the fetch UDF writes image
-    # payloads straight to per-partition flat files and stages only
-    # (blob_file, blob_off, blob_len) references — payload bytes never cross
-    # Arrow, never hit parquet assembly, never enter the JVM. This attacks
-    # the measured 32-wide allocation-rate throttle (BENCH.md r5: the
-    # governor trips in the fetch+staging-write segment itself). False =
-    # legacy inline bytes column (kept for A/B scaling measurement).
-    bytes_sidecar: bool = True
     # Optional outlink expansion: a callable (archive_results_df) -> seed-
     # shaped DataFrame (sheet, row_idx, url, status, folder) of URLs
     # discovered this wave. They re-enter the next wave through the same
@@ -158,31 +150,6 @@ def run_crawl(
     """Run (or resume) the crawl until the frontier drains. Returns per-wave
     stats. ``stop_after_wave`` simulates a crash for the resume tests."""
     config = config or CrawlConfig()
-    if config.bytes_sidecar:
-        return _run_crawl(spark, io, checkpoint, seed, host_policy, config, stop_after_wave)
-    # legacy inline-payload mode stages ~140KB binary cells in parquet: cap
-    # the vectorized reader's batch rows for this crawl's actions so a
-    # 4096-row batch can't allocate ~570MB of OnHeapColumnVector per task
-    # (the session default is sized for skinny tables — session.py), and
-    # restore the session value afterwards.
-    key = "spark.sql.parquet.columnarReaderBatchSize"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "128")
-    try:
-        return _run_crawl(spark, io, checkpoint, seed, host_policy, config, stop_after_wave)
-    finally:
-        spark.conf.set(key, prev)
-
-
-def _run_crawl(
-    spark: SparkSession,
-    io,
-    checkpoint,
-    seed: DataFrame,
-    host_policy: DataFrame,
-    config: CrawlConfig,
-    stop_after_wave: int | None = None,
-) -> list[WaveStats]:
     if config.seen_filter not in ("bloom", "cuckoo"):
         # ADVICE r7: a typo'd value silently fell through to the Bloom
         # sidecar in every branch — fail fast instead
@@ -326,13 +293,10 @@ def _run_crawl(
         mark("admission")
 
         # shuffle 3 + the expensive Arrow UDF — exactly ONE pass, materialized
-        # straight into an uncompressed parquet staging table (persist() of
-        # heavy binary rows costs ~5x the UDF itself in block-store copies;
-        # a columnar staging write is one streaming pass, and every
-        # downstream reader except the images copy prunes the bytes column).
-        # With bytes_sidecar the staging row is SKINNY: payloads go to flat
-        # per-partition blob files inside the UDF (plans/blobs.py) and the
-        # parquet carries only references.
+        # straight into a parquet staging table that every post-fetch job
+        # reads. The staging row is SKINNY: payloads go to flat per-partition
+        # blob files inside the UDF (plans/blobs.py) and the parquet carries
+        # only references.
         to_fetch = admitted.drop("admitted", "robots_blocked")
         if ev_agg is not None:
             # attempt number for the transport (retry semantics): tiny log,
@@ -344,16 +308,14 @@ def _run_crawl(
             ).withColumn("attempt", F.coalesce("attempt", F.lit(0)))
         fetch_plan = fetch_archive(
             salted_fetch_repartition(to_fetch, config.fetch_partitions),
-            blob_root=io.root if config.bytes_sidecar else None,
+            blob_root=io.root,
             blob_dir=f"blobs/wave={wave}",
             fail_inject=(wave == config.crash_during_fetch_wave),
         )
         snap_ids = {}
-        # small row groups for the wide-binary staging table: the default
-        # 128 MB parquet block buffers ~900 payload rows PER WRITER TASK
-        # before flushing — at 32 concurrent writers that is a multi-GB
-        # on-heap churn storm (measured 3-7x slowdown of the whole fetch
-        # stage); 8 MB keeps each writer's buffer ~50 rows while page-level
+        # the staging row still carries unique, already-compressed values
+        # (PNG `thumb`, hashes): no codec, no dictionary, and small row
+        # groups keep each writer task's buffers small; page-level
         # stats/pruning are untouched
         snap_ids["fetch_out"] = io.commit(
             fetch_plan,
@@ -361,9 +323,6 @@ def _run_crawl(
             wave,
             mode="overwrite",
             compression="uncompressed",
-            # dictionary encoding on the wide binary column buffers every
-            # distinct payload per writer — pure allocation churn for
-            # unique image bytes; page-level stats are untouched
             options={
                 "parquet.block.size": str(8 << 20),
                 "parquet.enable.dictionary": "false",
@@ -415,13 +374,13 @@ def _run_crawl(
 
         def t_images():
             # The images snapshot is a ZERO-COPY REF into the staged
-            # fetch_out files (Iceberg merge-on-read shape): heavy bytes hit
-            # parquet exactly once per wave; the commit writes only metadata
-            # + a delete-key sidecar. Dedup is decided entirely on a skinny
-            # (url_hash, sha256) projection: per-wave winner per content
-            # hash (A1), then anti-join against the skinny cross-wave
-            # `sha_seen` table (A2). At 10^10 rows sha_seen is bucketed like
-            # url_seen so the anti-join prunes to candidate buckets.
+            # fetch_out files (Iceberg merge-on-read shape): the commit
+            # writes only metadata + a delete-key sidecar. Dedup is decided
+            # entirely on a skinny (url_hash, sha256) projection: per-wave
+            # winner per content hash (A1), then anti-join against the
+            # skinny cross-wave `sha_seen` table (A2). At 10^10 rows sha_seen
+            # is bucketed like url_seen so the anti-join prunes to candidate
+            # buckets.
             drops = None
             kept_shas = None
             fresh = None
@@ -446,11 +405,9 @@ def _run_crawl(
                 snap_ids["fetch_out"],
                 wave,
                 select=[
-                    # both payload forms survive the projection: inline
-                    # `bytes` (legacy mode) or sidecar refs (plans/blobs.py
-                    # materialize_bytes re-attaches pixels for the consumers
-                    # that need them) — one stable images schema either way
-                    "image_id", "bytes", "blob_file", "blob_off", "blob_len",
+                    # payload refs: plans/blobs.py materialize_bytes
+                    # re-attaches pixels for the consumers that need them
+                    "image_id", "blob_file", "blob_off", "blob_len",
                     "w", "h", "fmt", "caption", "phash",
                     "hash AS sha256", "thumb", f"CAST({wave} AS INT) AS wave",
                 ],

@@ -3,8 +3,8 @@
 Local testing runs on local[N]; the same config block is what we'd ship in
 spark-defaults on a 1000-executor cluster: AQE on (runtime coalesce +
 skew-join splitting), Arrow enabled for every pandas UDF boundary, and a
-bounded Arrow batch size because the ``bytes`` image column makes rows heavy
-(SURVEY.md §4 "chunked hashing" analog).
+bounded Arrow batch size (peak per-task allocation = batch rows x row bytes;
+SURVEY.md §4 "chunked hashing" analog).
 """
 
 from __future__ import annotations
@@ -46,21 +46,9 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_ARROW_BATCH", "256"),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # image payloads are already-compressed PNG: zstd passes them through
+        # PNG thumbnails are already compressed: zstd passes them through
         # cheaply where snappy/dictionary paths burn CPU on incompressible data
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # vectorized-reader batch rows. r8: the old global 128 (sized for the
-        # legacy inline-image-bytes tables, where 4096 x ~140KB binary cells
-        # allocate ~570MB of OnHeapColumnVector PER TASK) taxed every skinny
-        # scan in the engine — decoding 1M-row numeric/string tables in
-        # 128-row batches measured ~2x slower than the 4096 default. Default
-        # back to 4096 for ordinary tables; the ONE consumer of wide-binary
-        # parquet rows (run_crawl with bytes_sidecar=False, the legacy A/B
-        # path) pins the small value around its own actions (plans/wave.py).
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("SPARK_GRAFT_PARQUET_BATCH", "4096"),
-        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # gate queries that *depend* on either value also pin it themselves

@@ -49,31 +49,29 @@ def test_blob_writer_retry_is_idempotent(tmp_path):
 
 
 def test_materialize_bytes_distributed(spark, tmp_path):
-    # three partitions' worth of refs against two sidecar files, plus an
-    # inline row (null ref) that must pass through untouched
+    # three partitions' worth of refs against two sidecar files
     w0 = BlobWriter(str(tmp_path), "blobs/wave=0", 0)
     w1 = BlobWriter(str(tmp_path), "blobs/wave=0", 1)
     rows = []
     for i in range(20):
         payload = (f"payload-{i}-" + "z" * (i * 13)).encode()
         rel, off, ln = (w0 if i % 2 else w1).append(payload)
-        rows.append((str(i), rel, off, ln, None, hashlib.sha256(payload).hexdigest()))
+        rows.append((str(i), rel, off, ln, hashlib.sha256(payload).hexdigest()))
     w0.close()
     w1.close()
-    rows.append(("inline", None, None, None, b"inline bytes", hashlib.sha256(b"inline bytes").hexdigest()))
     df = spark.createDataFrame(
-        rows, "id string, blob_file string, blob_off long, blob_len long, bytes binary, sha string"
+        rows, "id string, blob_file string, blob_off long, blob_len long, sha string"
     ).repartition(3)
     out = materialize_bytes(df, str(tmp_path)).collect()
-    assert len(out) == 21
+    assert len(out) == 20
     for r in out:
         assert hashlib.sha256(bytes(r.bytes)).hexdigest() == r.sha
     assert "blob_file" not in materialize_bytes(df, str(tmp_path)).columns
 
 
 def test_fetch_sidecar_staging_is_skinny(spark, tmp_path):
-    """fetch_archive(blob_root=...) must stage zero payload bytes: every
-    `bytes` cell is null, references resolve bit-exactly, and the sha tag
+    """fetch_archive(blob_root=...) must stage zero payload bytes: the plan
+    has no `bytes` column, references resolve bit-exactly, and the sha tag
     matches the reference's 'SHA-256:<hex>' format from the Python-side
     hashlib path."""
     from auto_archiver_spark.operators.fetch import fetch_archive
@@ -84,7 +82,7 @@ def test_fetch_sidecar_staging_is_skinny(spark, tmp_path):
     plan = fetch_archive(fr, blob_root=str(tmp_path), blob_dir="blobs/wave=0")
     rows = plan.collect()
     ok = [r for r in rows if r.status == "success"]
-    assert ok and all(r.bytes is None for r in rows)
+    assert ok and "bytes" not in plan.columns
     assert all(r.blob_file and r.blob_len > 0 for r in ok)
     assert all(r.total_bytes == r.blob_len for r in ok)
     mat = materialize_bytes(plan.select("url_hash", "blob_file", "blob_off", "blob_len", "hash"),

@@ -112,3 +112,56 @@ def test_resume_without_sidecar_persists_full_bloom(spark):
         assert missed == 0, f"{missed} url_seen keys missing from persisted sidecar"
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_resume_reads_root_with_inline_bytes_column(spark, tmp_path):
+    """A root whose early waves were written while the fetch staging schema
+    still had an (all-null) ``bytes binary`` column, which the images ref
+    snapshot selected, must still read after a resume with the skinny
+    schema: ``images`` unions the old and new ref snapshots, and every
+    payload re-attaches bit-exactly from the blob sidecar."""
+    import hashlib
+    import json
+
+    from pyspark.sql import functions as F
+
+    from auto_archiver_spark.plans.blobs import materialize_bytes
+
+    root = str(tmp_path)
+    io, _, _ = _run(spark, root, stop_after=0)
+
+    # rewrite wave 0 in the older layout: staging snapshot with a null
+    # `bytes` column after image_id, and the images ref selecting it
+    fo_dir = io.live_dirs("fetch_out")[0]
+    old = spark.read.parquet(fo_dir)
+    cols = old.columns
+    at = cols.index("image_id") + 1
+    legacy = old.select(
+        *cols[:at], F.lit(None).cast("binary").alias("bytes"), *cols[at:]
+    )
+    tmp = fo_dir + "-legacy"
+    legacy.write.parquet(tmp)
+    shutil.rmtree(fo_dir)
+    os.replace(tmp, fo_dir)
+    mpath = os.path.join(root, "images", "manifest.json")
+    with open(mpath) as fh:
+        manifest = json.load(fh)
+    (snap,) = manifest["snapshots"]
+    sel = snap["select"]
+    sel.insert(sel.index("image_id") + 1, "bytes")
+    with open(mpath, "w") as fh:
+        json.dump(manifest, fh)
+    wave0 = {
+        r.image_id: r.sha256
+        for r in io.read(spark, "images").select("image_id", "sha256").collect()
+    }
+    assert wave0 and "bytes" in io.read(spark, "images").columns
+
+    io2, _, stats = _run(spark, root)  # resume
+    assert stats[0].wave == 1
+    images = io2.read(spark, "images")
+    rows = materialize_bytes(images, root).collect()
+    assert len(rows) > len(wave0)
+    assert {r.image_id: r.sha256 for r in rows if r.image_id in wave0} == wave0
+    for r in rows:
+        assert r.sha256 == "SHA-256:" + hashlib.sha256(bytes(r.bytes)).hexdigest()

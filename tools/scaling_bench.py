@@ -19,11 +19,9 @@ throttled disk would measure the sandbox, not the engine. tmpfs (916 MB/s
 measured) is the faithful per-executor-storage stand-in.
 
 Usage: python tools/scaling_bench.py [seed_n] [pairs] [lo] [hi] [mode]
-(defaults 12000 2 8 32 wave). Modes: "wave" = full wave with the payload
-blob sidecar (plans/blobs.py, the default config); "wave-inline" = full
-wave with legacy inline bytes staging (the A/B control for the r5 throttle
-trigger); "fetch" measures only the salted fetch/enrich stage into a noop
-sink — per-URL work without per-wave fixed bookkeeping.
+(defaults 12000 2 8 32 wave). Modes: "wave" = full wave (default config);
+"fetch" measures only the salted fetch/enrich stage into a noop sink —
+per-URL work without per-wave fixed bookkeeping.
 Writes JSON to stdout; BENCH/BASELINE.md records the results.
 """
 
@@ -41,7 +39,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # bookkeeping jobs/commits that a toy-sized wave over-weights ~1000x relative
 # to a production wave (fixed cost per wave, not per URL).
 CHILD_FETCH = r"""
-import json, os, sys, time
+import json, os, shutil, sys, tempfile, time
 sys.path.insert(0, {repo!r})
 from auto_archiver_spark.session import get_spark
 from auto_archiver_spark.operators.fetch import fetch_archive
@@ -54,7 +52,8 @@ spark = get_spark(app="aas-scalefetch-%d" % cores, cores=cores)
 spark.sparkContext.setLogLevel("ERROR")
 fr = dedup_in_wave(canonicalize(seed_filter(
     frontier_seed_df(spark, {seed_n})))).localCheckpoint()
-plan = fetch_archive(salted_fetch_repartition(fr, cores * 4)).select(
+blobs = tempfile.mkdtemp(dir="/dev/shm")
+plan = fetch_archive(salted_fetch_repartition(fr, cores * 4), blobs).select(
     "url_hash", "total_bytes", "status")
 n = fr.count()
 
@@ -73,6 +72,7 @@ print("RESULT " + json.dumps({{"cores": cores, "wall_sec": round(wall, 3),
       "archived": n, "urls_per_sec": round(n / wall, 2),
       "cpu_sec": round(cpu, 2), "cpu_ms_per_url": round(1000.0 * cpu / max(n, 1), 2),
       "stage_sec": {{}}}}))
+shutil.rmtree(blobs, ignore_errors=True)
 spark.stop()
 """
 
@@ -91,8 +91,7 @@ spark.sparkContext.setLogLevel("ERROR")
 policy = (host_policy_df(spark)
           .withColumn("max_tokens", F.lit(10_000_000))
           .withColumn("crawl_delay_ms", F.lit(0)))
-cfg = CrawlConfig(wave_seconds=3600.0, fetch_partitions=cores * 4, max_waves=1,
-                  bytes_sidecar={sidecar})
+cfg = CrawlConfig(wave_seconds=3600.0, fetch_partitions=cores * 4, max_waves=1)
 # warmup: JVM JIT, python worker spawn, parquet writer, shuffle paths
 w = tempfile.mkdtemp(dir="/dev/shm")
 run_crawl(spark, TableIO(w), WaveCheckpoint(w), frontier_seed_df(spark, 300), policy, cfg)
@@ -132,10 +131,7 @@ def run_at(cores: int, seed_n: int, mode: str = "wave") -> dict:
     workers all 32 cores, inflating the small-cluster baseline and making
     true scaling unmeasurable."""
     tmpl = CHILD_FETCH if mode == "fetch" else CHILD
-    code = tmpl.format(
-        repo=REPO, cores=cores, seed_n=seed_n,
-        sidecar=(mode != "wave-inline"),
-    )
+    code = tmpl.format(repo=REPO, cores=cores, seed_n=seed_n)
     proc = subprocess.run(
         ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c", code],
         capture_output=True, text=True, cwd=REPO, timeout=3600,

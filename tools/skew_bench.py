@@ -22,7 +22,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -70,9 +72,10 @@ def main():
     parts = cores * 4
 
     salt = F.pmod(F.col("url_hash"), F.lit(1 << SALT_BITS))
+    blobs = tempfile.mkdtemp(dir="/dev/shm")
     plans = {
-        "salted": fetch_archive(fr.repartition(parts, F.col("host"), salt)),
-        "unsalted": fetch_archive(fr.repartition(parts, F.col("host"))),
+        "salted": fetch_archive(fr.repartition(parts, F.col("host"), salt), blobs, "salted"),
+        "unsalted": fetch_archive(fr.repartition(parts, F.col("host")), blobs, "unsalted"),
     }
     skinny = {k: p.select("url_hash", "total_bytes", "status") for k, p in plans.items()}
     for p in skinny.values():  # warm both paths once
@@ -98,6 +101,7 @@ def main():
             }
         )
     )
+    shutil.rmtree(blobs, ignore_errors=True)
     spark.stop()
 
 
