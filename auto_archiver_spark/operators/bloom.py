@@ -8,18 +8,21 @@ PySpark 4.1 exposes neither ``bloom_filter_agg`` nor ``DataFrame.stat
   its own fixed-size bitmap inside ``applyInPandas`` — no key ever travels to
   the driver.
 * **persist**: the bitmaps are a normal (bucket-keyed) DataFrame — the wave
-  driver commits them as the ``url_seen_bloom`` table next to the (equally
-  bucketed) ``url_seen`` table and *merges incrementally*: per wave only the
+  driver commits them as the ``url_seen_bloom`` table next to the (flat)
+  ``url_seen`` table and *merges incrementally*: per wave only the
   newly-seen keys are hashed into delta bitmaps, OR-merged with the prior
   sidecar (fixed ``m`` per bucket makes OR-merge exact).
 * **probe**: a bucket-aligned **cogroup** — candidates shuffle once on the
-  same bucket key the seen-table is partitioned by, and each task zips its
-  candidate group with exactly ONE bitmap row (~m/8 bytes). The driver never
-  materializes a single bitmap; at 10^10 keys the 15-GB sidecar stays
-  executor-side, one bucket per task.
+  sidecar's bucket key, and each task zips its candidate group with exactly
+  ONE bitmap row (~m/8 bytes). The driver never materializes a single
+  bitmap; at 10^10 keys the 15-GB sidecar stays executor-side, one bucket
+  per task.
 
 Bloom-*negative* candidates are provably NEW and skip the anti-join shuffle
-entirely; only positives (true-seen + FPR) join against the big table.
+entirely; only positives (true-seen + FPR) join against the big table. This
+is the crawl's only URL-seen filter, for plain and re-crawl runs alike: a
+key evicted from url_seen for re-crawl keeps its bits, and the exact join
+behind the filter re-admits it (operators/frontier.py ``anti_join_seen``).
 
 Bucket ids are computed with Spark ``pmod`` on the signed int64 hash on BOTH
 build and probe sides (round-1 ADVICE: a uint64 ``%`` probe disagrees with
@@ -119,23 +122,15 @@ class BloomSidecar:
     sidecar: DataFrame
 
     @classmethod
-    def build(cls, url_seen: DataFrame, n_buckets: int, m_bits: int = DEFAULT_M_BITS):
-        return cls(n_buckets, build_sidecar(url_seen, n_buckets, m_bits))
-
-    @classmethod
     def from_table(cls, sidecar_df: DataFrame, n_buckets: int):
         """Wrap a persisted ``url_seen_bloom`` snapshot (wave driver path)."""
         return cls(n_buckets, sidecar_df)
 
-    def is_empty(self) -> bool:
-        return self.sidecar.isEmpty()
-
     def might_contain_col(self, df: DataFrame, hash_col: str = "url_hash") -> DataFrame:
         """Adds boolean ``maybe_seen`` via a bucket-aligned cogroup zip.
 
-        One shuffle of the candidates on the bucket key (the same
-        partitioning the url_seen table and its anti-join already use); each
-        task reads exactly one bitmap row. Vectorized bit math over the whole
+        One shuffle of the candidates on the sidecar's bucket key; each task
+        reads exactly one bitmap row. Vectorized bit math over the whole
         candidate group.
         """
         out_fields = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]

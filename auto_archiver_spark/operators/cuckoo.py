@@ -1,14 +1,15 @@
-"""Partitioned Cuckoo-filter sidecar for the url_seen table — the second
-structure the north rule names ("bloom/cuckoo URL-seen").
+"""Partitioned Cuckoo-filter sidecar — the deletable URL-seen structure
+the north rule names next to Bloom ("bloom/cuckoo URL-seen"). It serves the
+``cuckoo_seen`` gate query only; the crawl's one URL-seen filter is the
+Bloom sidecar (operators/bloom.py), whose stale positives after a re-crawl
+eviction are resolved by the exact anti-join behind it.
 
-Same distributed architecture as the Bloom sidecar (operators/bloom.py):
-one fixed-size filter per url_hash bucket built inside ``applyInPandas``,
-persisted as a normal bucket-keyed DataFrame, probed via a bucket-aligned
-cogroup — no filter ever reaches the driver. What the cuckoo filter adds
-over Bloom is **deletion**: a crawl that wants to RE-crawl failed or stale
-URLs can evict their keys from the seen-filter (`remove_keys`) so a later
-wave's probe reports provably-new again — a Bloom bitmap cannot unset bits
-without rebuilding from the full key set.
+Same distributed architecture as the Bloom sidecar: one fixed-size filter
+per url_hash bucket built inside ``applyInPandas``, a normal bucket-keyed
+DataFrame, probed via a bucket-aligned cogroup — no filter ever reaches the
+driver. What the cuckoo filter adds over Bloom is **deletion**
+(`remove_keys`): an evicted key probes provably-new again — a Bloom bitmap
+cannot unset bits without rebuilding from the full key set.
 
 Construction follows the published partial-key cuckoo hashing design
 (Fan, Andersen, Kaminsky, Mitzenmacher — "Cuckoo Filter: Practically
@@ -16,7 +17,7 @@ Better Than Bloom", CoNEXT 2014): 16-bit fingerprints, 4 slots per inner
 bucket, alternate index ``i2 = i1 XOR hash(fp)`` (inner table size a power
 of two so the XOR stays in range), bounded kick chains. Determinism: the
 kick victim rotates by kick count (not RNG) and inserts happen in the
-group's row order, so resume/rebuild produce identical tables.
+group's row order, so rebuilds produce identical tables.
 
 Guarantees (tested): zero false negatives for inserted-and-not-deleted
 keys; deletes only ever remove a matching fingerprint (deleting a present
@@ -131,9 +132,9 @@ def _delete_all(table: np.ndarray, h: np.ndarray) -> int:
 
 def _group_hashes(pdf: pd.DataFrame, hash_col: str) -> np.ndarray:
     # SORTED: applyInPandas group row order depends on shuffle arrival, so
-    # an order-sensitive insert/kick sequence would make the persisted table
-    # bytes run-dependent — sorting makes build/merge/delete deterministic
-    # (resume fingerprints compare whole state tables byte-for-byte).
+    # an order-sensitive insert/kick sequence would make the table bytes
+    # run-dependent — sorting makes build/delete deterministic, so the same
+    # input always yields the same bytes.
     # Mutation paths ONLY — the probe needs row-aligned hashes (_row_hashes).
     return np.sort(_row_hashes(pdf, hash_col))
 
@@ -169,16 +170,17 @@ def build_sidecar(
     )
 
 
-def _apply_keys(sidecar: DataFrame, keys: DataFrame, n_buckets: int,
-                hash_col: str, op, nb_log2: int = DEFAULT_NB_LOG2) -> DataFrame:
-    """Cogroup the persisted sidecar with a key delta and apply
-    insert/delete executor-side; buckets with no delta pass through."""
+def _delete_keys(sidecar: DataFrame, keys: DataFrame, n_buckets: int,
+                 hash_col: str, nb_log2: int = DEFAULT_NB_LOG2) -> DataFrame:
+    """Cogroup the sidecar with a key delta and delete executor-side;
+    buckets with no delta pass through."""
 
     def merge(key: tuple, side: pd.DataFrame, delta: pd.DataFrame) -> pd.DataFrame:
         if side.empty:
-            # new bucket appearing in the delta: fresh table sized like the
-            # handle's sidecar (ADVICE r6: the module default here gave a
-            # mixed-size sidecar when built with a non-default nb_log2)
+            # bucket only the delta has (nothing inserted there): empty table
+            # sized like the handle's sidecar (ADVICE r6: the module default
+            # here gave a mixed-size sidecar when built with a non-default
+            # nb_log2)
             nb = 1 << nb_log2
             table = np.zeros((nb, SLOTS), dtype=np.uint16)
             n = 0
@@ -189,13 +191,7 @@ def _apply_keys(sidecar: DataFrame, keys: DataFrame, n_buckets: int,
             ).copy()
             n = int(side["n"].iloc[0])
         h = _group_hashes(delta, hash_col)
-        if op == "insert":
-            failed = _insert_all(table, h)
-            if failed:
-                raise ValueError(f"cuckoo bucket {key[0]} overflow: {failed} keys")
-            n += len(h)
-        else:
-            n -= len(h) - _delete_all(table, h)
+        n -= len(h) - _delete_all(table, h)
         return pd.DataFrame(
             [{"bucket": int(key[0]), "n": n, "nb": nb, "table": table.tobytes()}]
         )
@@ -226,34 +222,21 @@ class CuckooSidecar:
               nb_log2: int = DEFAULT_NB_LOG2):
         return cls(n_buckets, build_sidecar(url_seen, n_buckets, nb_log2), nb_log2)
 
-    @classmethod
-    def from_table(cls, sidecar_df: DataFrame, n_buckets: int,
-                   nb_log2: int = DEFAULT_NB_LOG2):
-        return cls(n_buckets, sidecar_df, nb_log2)
-
-    def insert_keys(self, keys: DataFrame, hash_col: str = "url_hash"):
-        return CuckooSidecar(
-            self.n_buckets,
-            _apply_keys(self.sidecar, keys, self.n_buckets, hash_col, "insert",
-                        self.nb_log2),
-            self.nb_log2,
-        )
-
     def remove_keys(self, keys: DataFrame, hash_col: str = "url_hash"):
-        """Evict keys (e.g. failed archives due for re-crawl): their next
-        probe is provably-new again, modulo the shared-fingerprint FP rate.
+        """Evict keys: their next probe is provably-new again, modulo the
+        shared-fingerprint FP rate.
 
         Deletion safety (Fan et al. §3.2): only ever called for keys that
-        were actually inserted (evictions come from url_seen members), and
-        _insert_all stores duplicate fingerprints rather than deduping —
-        so when two keys collide on (bucket, fingerprint), BOTH copies are
-        present and deleting one leaves the other key's membership intact.
+        were actually inserted (the gate query evicts a subset of its build
+        keys), and _insert_all stores duplicate fingerprints rather than
+        deduping — so when two keys collide on (bucket, fingerprint), BOTH
+        copies are present and deleting one leaves the other key's
+        membership intact.
         Copies in the filter = inserts − deletes per (bucket, fp), hence no
         deletion-induced false negatives."""
         return CuckooSidecar(
             self.n_buckets,
-            _apply_keys(self.sidecar, keys, self.n_buckets, hash_col, "delete",
-                        self.nb_log2),
+            _delete_keys(self.sidecar, keys, self.n_buckets, hash_col, self.nb_log2),
             self.nb_log2,
         )
 

@@ -8,18 +8,17 @@ shuffles are planned explicitly:
   wave plan =  seed filter (P11/P12, pushdown-able)
              → canonicalize (native exprs, no shuffle)
              → in-wave dedup (1 shuffle on url_hash; first-wins by crawl order)
-             → anti-join vs url_seen (same url_hash partitioning; Bloom
-               pre-prune turns most of it into a scan-local filter)
+             → anti-join vs url_seen (Bloom sidecar probe first, then the
+               exact join for the positives only)
              → politeness admission (1 shuffle on host — window top-k)
              → salted repartition for the fetch stage (host skew kill)
 
-At 10^10-URL scale: url_seen is bucketed by ``pmod(url_hash, N_BUCKETS)``;
-each bucket carries a Bloom sidecar. A candidate wave is first filtered by
-``might_contain`` against the union-of-blooms — negatives (the common case
-for a crawl frontier: most discovered URLs are new... actually most are SEEN
-in steady state, so the Bloom's job is the reverse: a *negative* proves NEW
-without touching the big table; only Bloom-positives shuffle into the
-anti-join) — see SURVEY.md §4 "Bloom-partition pruning".
+url_seen itself is a flat table. Its Bloom sidecar (operators/bloom.py) is
+keyed by ``pmod(url_hash, N_BUCKETS)``: one bitmap per bucket, probed by a
+cogroup on that key. A Bloom *negative* proves a candidate NEW without the
+join; only positives (true-seen, false positives, stale bits of evicted
+keys) go on to the exact anti-join against the whole url_seen table — see
+SURVEY.md §4 "Bloom-partition pruning".
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ from pyspark.sql.window import Window
 
 from ..functions.url_exprs import archivable_url_expr, north_norm_expr, url_hash_expr
 
-N_BUCKETS = 256  # url_seen bucket count; at 10^10 rows -> ~40M rows/bucket
+N_BUCKETS = 256  # Bloom sidecar bucket count; at 10^10 keys -> ~40M keys/bucket
 SALT_BITS = 4  # per-host salt fan-out for the fetch repartition
 
 
@@ -170,11 +169,14 @@ def bucket_of(url_hash: Column) -> Column:
 def anti_join_seen(frontier: DataFrame, url_seen: DataFrame, bloom=None) -> DataFrame:
     """J1/J6: frontier rows whose url_hash is NOT in url_seen.
 
-    ``bloom`` is an optional BloomSidecar (operators/bloom.py) over
-    url_seen.url_hash. Bloom-negatives are provably NEW and bypass the
-    shuffle entirely; only the (small) positive slice — true-seen + FPR —
-    joins against the big table, and at 10^10 rows that join touches only the
-    url_hash buckets that contain positives (bucket pruning on pmod)."""
+    ``bloom`` is an optional BloomSidecar (operators/bloom.py) built from a
+    superset of url_seen's keys. Bloom-negatives are provably NEW and skip
+    the join; every positive is checked by the exact anti-join against
+    ``url_seen``, so a stale positive (a false positive, or a key since
+    evicted from ``url_seen`` for re-crawl) is resolved there and comes back
+    as new. The filter only decides how much of the frontier joins; the
+    result equals the plain anti-join. ``url_seen`` is not bucketed: the
+    join reads all of it."""
     if bloom is None:
         return frontier.join(url_seen.select("url_hash"), "url_hash", "left_anti")
     probed = bloom.might_contain_col(frontier, "url_hash")

@@ -5,16 +5,16 @@ One wave = one declarative DataFrame plan (SURVEY.md §3 "Spark lifecycle"):
     seed/deferred frontier
       -> P11 seed filter -> P1+north canonicalize (narrow, codegen)
       -> in-wave dedup            (shuffle 1: url_hash)
-      -> anti-join vs url_seen    (reuses url_hash partitioning; Bloom
-                                   pre-prune skips the join for provable-new)
+      -> anti-join vs url_seen    (Bloom sidecar probe: negatives skip the
+                                   join, positives are checked exactly)
       -> politeness admission     (shuffle 2: host window)
       -> salted repartition       (shuffle 3: host x salt — kills Zipf skew)
       -> fetch+enrich mapInPandas (Arrow batches; payloads go to the blob
          sidecar, plans/blobs.py) -> skinny refs staged ONCE (fetch_out)
       -> commits: images (zero-copy ref into fetch_out + dedup delete keys —
          merge-on-read), archive_results append, url_seen append,
-         sha_seen/bloom-sidecar deltas, seed_state writeback, per-wave
-         metrics row (incl. per-partition lineage)
+         sha_seen delta, Bloom sidecar OR-merge, seed_state writeback,
+         per-wave metrics row (incl. per-partition lineage)
 
 State between waves lives in TableIO snapshots; the checkpoint commits the
 wave atomically across tables. Deferred rows (admission budget exhausted)
@@ -32,8 +32,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.bloom import BloomSidecar, build_sidecar, merge_sidecars
 from ..operators.fetch import fetch_archive, to_archive_results
 from ..operators.frontier import (
+    N_BUCKETS,
     anti_join_seen,
     canonicalize,
     dedup_in_wave,
@@ -74,19 +76,13 @@ class CrawlConfig:
     wave_seconds: float = 60.0
     max_waves: int = 32
     fetch_partitions: int = 64
-    use_bloom: bool = True
-    # URL-seen filter structure (the north rule names both): "bloom" =
-    # OR-mergeable bitmap sidecar (operators/bloom.py, default); "cuckoo" =
-    # deletable fingerprint sidecar (operators/cuckoo.py) — required for
-    # recrawl_failed, since evicting a key from a Bloom bitmap would need a
-    # full rebuild from the surviving key set.
-    seen_filter: str = "bloom"
     # Re-archival semantics (reference: a cleared/failed status cell makes
     # the row re-eligible when the feeder re-reads the sheet,
     # gsheet_feeder_db.py:124-126): when True, URLs whose fetch FAILED this
-    # wave are evicted from the cuckoo seen-filter and re-injected into the
-    # next wave's frontier, at most max_recrawls times per URL. The retry
-    # count rides the skinny `url_evictions` state table, never the driver.
+    # wave are logged to the skinny `url_evictions` table and re-injected
+    # into the next wave's frontier, at most max_recrawls times per URL. An
+    # evicted key drops out of the exact seen set; its stale Bloom bits are
+    # harmless because the anti-join re-checks every positive against it.
     recrawl_failed: bool = False
     max_recrawls: int = 1
     # fault injection (tests only): raise inside the fetch UDF during this
@@ -150,19 +146,6 @@ def run_crawl(
     """Run (or resume) the crawl until the frontier drains. Returns per-wave
     stats. ``stop_after_wave`` simulates a crash for the resume tests."""
     config = config or CrawlConfig()
-    if config.seen_filter not in ("bloom", "cuckoo"):
-        # ADVICE r7: a typo'd value silently fell through to the Bloom
-        # sidecar in every branch — fail fast instead
-        raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {config.seen_filter!r}")
-    if config.recrawl_failed and config.seen_filter != "cuckoo":
-        raise ValueError(
-            "recrawl_failed requires seen_filter='cuckoo' (a Bloom bitmap cannot evict)"
-        )
-    if config.recrawl_failed and not config.use_bloom:
-        raise ValueError(
-            "recrawl_failed requires use_bloom=True (the seen-filter sidecar "
-            "machinery must be enabled for eviction to have a filter to act on)"
-        )
     state = checkpoint.recover(io)
     start_wave = (state["wave"] + 1) if state else 0
 
@@ -229,12 +212,12 @@ def run_crawl(
         # Re-crawl state: the skinny eviction log (url_hash, evict_wave,
         # tries). A key is EFFECTIVELY seen iff its latest url_seen insert
         # is newer than its latest eviction — computed without aggregating
-        # the big table: only url_seen rows matching an evicted key
-        # (semi-join, bucket-pruned at 10^10 rows) are aggregated. The log
-        # is broadcast only while it measures small — a long-running crawl
-        # with a high failure rate grows it past driver/executor memory, at
-        # which point the joins fall back to shuffle (AQE picks the
-        # strategy) rather than OOMing a 10^10-row run.
+        # the big table: only url_seen rows matching an evicted key (a
+        # semi-join against the log, which still scans url_seen) are
+        # aggregated. The log is broadcast only while it measures small — a
+        # long-running crawl with a high failure rate grows it past
+        # driver/executor memory, at which point the joins fall back to
+        # shuffle (AQE picks the strategy) rather than OOMing a 10^10-row run.
         ev_agg = None
         seen_eff = seen
         if config.recrawl_failed:
@@ -260,25 +243,17 @@ def run_crawl(
             )
             seen_eff = seen.join(_bcast(dead), "url_hash", "left_anti")
 
-        # URL-seen filter sidecar: read the PERSISTED bucket-partitioned
-        # table (committed incrementally below) — the driver holds only a
-        # handle, never a filter; probe is a bucket-aligned cogroup
-        # (bloom.py / cuckoo.py — same plan shape, cuckoo adds deletion).
+        # URL-seen Bloom sidecar: probe the PERSISTED bucket-keyed table
+        # (OR-merged incrementally below) — the driver holds only a handle,
+        # never a bitmap. Without a sidecar (wave 0, or a root written
+        # before it existed) the anti-join is the plain exact one, and this
+        # wave's commit builds the sidecar, from every seen key if any.
         filt = None
-        filt_full_build = False  # True when rebuilt from url_seen this wave
-        filt_table = "url_seen_cuckoo" if config.seen_filter == "cuckoo" else "url_seen_bloom"
-        if config.use_bloom and io.exists("url_seen"):
-            from ..operators.frontier import N_BUCKETS  # noqa: PLC0415
-
-            if config.seen_filter == "cuckoo":
-                from ..operators.cuckoo import CuckooSidecar as _Sidecar  # noqa: PLC0415
-            else:
-                from ..operators.bloom import BloomSidecar as _Sidecar  # noqa: PLC0415
-            if io.exists(filt_table):
-                filt = _Sidecar.from_table(io.read(spark, filt_table), N_BUCKETS)
-            else:  # legacy/resumed layout without a sidecar: one full build
-                filt = _Sidecar.build(seen_eff, N_BUCKETS)
-                filt_full_build = True
+        backfill = None  # seen keys that no sidecar holds yet
+        if io.exists("url_seen_bloom"):
+            filt = BloomSidecar.from_table(io.read(spark, "url_seen_bloom"), N_BUCKETS)
+        elif io.exists("url_seen"):
+            backfill = seen.select("url_hash")
         mark("bloom_build")
         new_urls = anti_join_seen(cand, seen_eff, filt)
 
@@ -333,11 +308,11 @@ def run_crawl(
         results_plan = to_archive_results(fetched, wave)
 
         # Re-archival: failed URLs still under the retry budget are logged
-        # to url_evictions (their cuckoo fingerprints are removed below) and
-        # re-injected into the next frontier — the reference's cleared-
-        # status-cell re-eligibility, as one skinny append + one cogroup.
-        # Computed BEFORE the commit pool: reinject feeds both the frontier
-        # and the cuckoo commits.
+        # to url_evictions and re-injected into the next frontier — the
+        # reference's cleared-status-cell re-eligibility, as one skinny
+        # append. Next wave, seen_eff drops them from the exact seen set.
+        # Computed BEFORE the commit pool: elig feeds both the evictions and
+        # the frontier commits.
         reinject = None
         elig = None
         n_reinjected = 0
@@ -378,9 +353,8 @@ def run_crawl(
             # writes only metadata + a delete-key sidecar. Dedup is decided
             # entirely on a skinny (url_hash, sha256) projection: per-wave
             # winner per content hash (A1), then anti-join against the
-            # skinny cross-wave `sha_seen` table (A2). At 10^10 rows sha_seen
-            # is bucketed like url_seen so the anti-join prunes to candidate
-            # buckets.
+            # skinny cross-wave `sha_seen` table (A2). sha_seen is not
+            # bucketed, so the anti-join reads all of it.
             drops = None
             kept_shas = None
             fresh = None
@@ -500,58 +474,16 @@ def run_crawl(
             # recovery (pre-consumed retry budgets, phantom attempts)
             return io.latest_snapshot_id("url_evictions")
 
-        def _commit_cuckoo():
-            # incremental cuckoo sidecar: insert ONLY this wave's new keys
-            # via the bucket-aligned cogroup, then remove this wave's
-            # evicted fingerprints — both executor-side, never on the driver
-            from ..operators.cuckoo import CuckooSidecar  # noqa: PLC0415
-            from ..operators.frontier import N_BUCKETS  # noqa: PLC0415
-
-            if io.exists("url_seen_cuckoo"):
-                # the probe handle `filt` already wraps this exact snapshot
-                # (read once at wave top) — reuse it instead of scanning the
-                # sidecar table a second time in the commit segment
-                side = (
-                    filt
-                    if filt is not None and not filt_full_build
-                    else CuckooSidecar.from_table(
-                        io.read(spark, "url_seen_cuckoo"), N_BUCKETS
-                    )
-                ).insert_keys(newly_seen)
-            elif filt_full_build:
-                # legacy/migration wave: persist the full rebuild + delta,
-                # not the delta alone (same rule as the Bloom branch below)
-                side = filt.insert_keys(newly_seen)
-            else:
-                side = CuckooSidecar.build(newly_seen, N_BUCKETS)
-            if reinject is not None:
-                side = side.remove_keys(reinject.select("url_hash"))
-            return io.commit(
-                side.sidecar.coalesce(n_state),
-                "url_seen_cuckoo",
-                wave,
-                mode="overwrite",
-                options=_state_opts,
-            )
-
         def _commit_bloom():
             # incremental sidecar: hash ONLY this wave's new keys into delta
-            # bitmaps, OR-merge with the persisted sidecar (fixed m ⇒ exact)
-            from ..operators.bloom import build_sidecar, merge_sidecars  # noqa: PLC0415
-            from ..operators.frontier import N_BUCKETS  # noqa: PLC0415
-
-            delta = build_sidecar(newly_seen, N_BUCKETS)
-            if io.exists("url_seen_bloom"):
-                merged = merge_sidecars(io.read(spark, "url_seen_bloom"), delta)
-            elif filt_full_build:
-                # legacy/migration wave (url_seen existed before any sidecar):
-                # the probe used a FULL rebuild this wave — persist that full
-                # sidecar OR-merged with the delta, not the delta alone, or
-                # every later wave would probe an incomplete bitmap and treat
-                # previously-seen URLs as provably new (round-2 ADVICE high)
-                merged = merge_sidecars(filt.sidecar, delta)
-            else:
-                merged = delta
+            # bitmaps, OR-merge with the snapshot probed at wave top (fixed
+            # m ⇒ exact). Evicted keys keep their bits: a stale positive
+            # costs one exact join probe, never a wrong answer.
+            keys = newly_seen.select("url_hash")
+            if backfill is not None:
+                keys = backfill.unionByName(keys)
+            delta = build_sidecar(keys, N_BUCKETS)
+            merged = delta if filt is None else merge_sidecars(filt.sidecar, delta)
             return io.commit(
                 merged.coalesce(n_state),
                 "url_seen_bloom",
@@ -598,13 +530,12 @@ def run_crawl(
             f_results = pool.submit(t_results)
             f_stats = pool.submit(t_stats)
             f_images = pool.submit(t_images)
-            futs: dict = {"url_seen": pool.submit(_commit_url_seen)}
+            futs: dict = {
+                "url_seen": pool.submit(_commit_url_seen),
+                "url_seen_bloom": pool.submit(_commit_bloom),
+            }
             if config.recrawl_failed:
                 futs["url_evictions"] = pool.submit(_commit_evictions)
-            if config.use_bloom and config.seen_filter == "cuckoo":
-                futs["url_seen_cuckoo"] = pool.submit(_commit_cuckoo)
-            elif config.use_bloom:
-                futs["url_seen_bloom"] = pool.submit(_commit_bloom)
             f_writeback = pool.submit(_commit_writeback)
             f_lineage = pool.submit(_commit_lineage)
             f_frontier = pool.submit(_commit_frontier)

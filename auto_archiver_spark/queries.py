@@ -338,22 +338,24 @@ def q_pricing_summary(spark, sf):
     """TPC-H Q1-shaped aggregate (A6/A8 totals analog; bench headline).
     Money math routed through decimal so both engines agree bit-for-bit.
 
-    r8: sum_qty/sum_base run on LONGS instead of per-row BigDecimal — the
-    values are exact integers of the decimal grid (quantities are integral;
-    prices have <= 2 decimals in their shortest double representation, which
-    is exactly what a double->decimal(18,2) cast reads), so
-    sum(round(p*100)::long)/100.0 is the SAME rational number as
-    sum(p::decimal(18,2)), and both final doubles are the correctly-rounded
-    conversion of it — bit-identical output, ~2x cheaper per row.
-    sum_disc_price stays decimal: its per-row value is the shortest-repr
-    decimal of a double PRODUCT, which integer math cannot reproduce."""
+    r8: sum_qty/sum_base sum exact integers instead of per-row
+    decimal(18,2) — quantities are integral, and prices have <= 2 decimals
+    in their shortest double representation, which is exactly what a
+    double->decimal(18,2) cast reads. So sum(round(p*100))/100.0 is the SAME
+    rational number as sum(p::decimal(18,2)), and both final doubles are the
+    correctly-rounded conversion of it — bit-identical output, cheaper per
+    row. sum_base sums its cents as decimal(20,0), not long: a long sum of
+    cents overflows at ~9.2e16 of price total, a decimal sum (38 digits)
+    does not. sum_disc_price stays decimal: its per-row value is the
+    shortest-repr decimal of a double PRODUCT, which integer math cannot
+    reproduce."""
     li = load(spark, sf, "lineitem")
+    cents = F.round(F.col("l_extendedprice") * 100).cast("decimal(20,0)")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum(F.col("l_quantity").cast("long")).cast("double").alias("sum_qty"),
-            (F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")) / 100.0)
-            .alias("sum_base"),
+            (F.sum(cents) / 100.0).alias("sum_base"),
             F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)"))
             .cast("double")
             .alias("sum_disc_price"),

@@ -5,7 +5,7 @@ salted repartition fan-out."""
 from pyspark.sql import functions as F
 
 from auto_archiver_spark.functions.urls import north_norm
-from auto_archiver_spark.operators.bloom import BloomSidecar
+from auto_archiver_spark.operators.bloom import BloomSidecar, build_sidecar
 from auto_archiver_spark.operators.frontier import (
     anti_join_seen,
     canonicalize,
@@ -76,7 +76,7 @@ def test_bloom_sidecar_no_false_negatives(spark):
     seen = fr.limit(80).select("url_hash", "url_norm").withColumn(
         "first_seen_wave", F.lit(0)
     )
-    sidecar = BloomSidecar.build(seen, n_buckets=16)
+    sidecar = BloomSidecar(16, build_sidecar(seen, 16))
     probed = sidecar.might_contain_col(fr)
     seen_hashes = {r.url_hash for r in seen.collect()}
     rows = probed.collect()
@@ -95,10 +95,18 @@ def test_anti_join_with_and_without_bloom_agree(spark):
         "first_seen_wave", F.lit(0)
     )
     plain = {r.url_hash for r in anti_join_seen(fr, seen).collect()}
-    bloom = BloomSidecar.build(seen, n_buckets=16)
+    bloom = BloomSidecar(16, build_sidecar(seen, 16))
     with_bloom = {r.url_hash for r in anti_join_seen(fr, seen, bloom).collect()}
     assert plain == with_bloom
     assert plain.isdisjoint({r.url_hash for r in seen.collect()})
+    # stale filter (re-crawl eviction): the Bloom still holds keys that have
+    # since left the seen set — the exact join must hand them back as new
+    evicted = seen.limit(20).localCheckpoint()
+    live = seen.join(evicted.select("url_hash"), "url_hash", "left_anti")
+    stale = {r.url_hash for r in anti_join_seen(fr, live, bloom).collect()}
+    assert stale == {r.url_hash for r in anti_join_seen(fr, live).collect()}
+    evicted_keys = {r.url_hash for r in evicted.collect()}
+    assert len(evicted_keys) == 20 and evicted_keys <= stale
 
 
 def test_admission_budget_math(spark):

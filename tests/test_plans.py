@@ -105,12 +105,12 @@ def test_bloom_probe_is_bucket_aligned_no_driver_bitmaps(spark):
     """The sidecar probe plan cogroups on the bucket key (FlatMapCoGroups);
     nothing in the plan collects bitmaps to the driver, and the only
     exchanges hash on the bucket id."""
-    from auto_archiver_spark.operators.bloom import BloomSidecar
+    from auto_archiver_spark.operators.bloom import BloomSidecar, build_sidecar
     from auto_archiver_spark.operators.frontier import dedup_in_wave
 
     fr = dedup_in_wave(canonicalize(seed_filter(frontier_seed_df(spark, 120))))
     seen = fr.limit(30).select("url_hash")
-    sidecar = BloomSidecar.build(seen, n_buckets=16)
+    sidecar = BloomSidecar(16, build_sidecar(seen, 16))
     probed = sidecar.might_contain_col(fr)
     plan = _plan(probed, "simple")
     assert "FlatMapCoGroupsInPandas [_bucket" in plan

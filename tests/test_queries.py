@@ -50,3 +50,23 @@ def test_query_matches_duckdb_oracle(spark, duck, name):
     assert sorted(sdf.columns) == sorted(odf.columns), name
     assert len(sdf) == len(odf), name
     assert _norm_hash(sdf) == _norm_hash(odf), name
+
+
+def test_pricing_summary_sum_base_survives_long_overflow(spark, tmp_path):
+    """sum_base sums price cents; 1,000 rows at 9.9e13 (the largest price the
+    sum_disc_price decimal(18,4) cast accepts) total 9.9e18 cents, past the
+    int64 range, and must still give the exact 9.9e16."""
+    import pandas as pd
+
+    from auto_archiver_spark.queries import q_pricing_summary
+
+    pd.DataFrame({
+        "l_returnflag": ["A"] * 1000,
+        "l_linestatus": ["F"] * 1000,
+        "l_quantity": [1.0] * 1000,
+        "l_extendedprice": [9.9e13] * 1000,
+        "l_discount": [0.0] * 1000,
+    }).to_parquet(tmp_path / "lineitem.parquet")
+    (row,) = q_pricing_summary(spark, str(tmp_path)).collect()
+    assert row.sum_base == 9.9e16
+    assert row.count_order == 1000

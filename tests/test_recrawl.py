@@ -1,11 +1,12 @@
-"""Cuckoo seen-filter in the crawl loop + failed-URL re-archival.
+"""Failed-URL re-archival in the crawl loop.
 
 The reference re-archives a row when its failed status cell is cleared
 (gsheet_feeder_db.py:124-126 — a cleared status makes the row re-eligible
-on the next feeder read). Spark-scale version: failures are EVICTED from
-the cuckoo URL-seen sidecar (a Bloom bitmap cannot unset bits) and
-re-injected into the next wave's frontier, at most ``max_recrawls`` times,
-with the retry count riding the skinny ``url_evictions`` state table.
+on the next feeder read). Spark-scale version: failures are logged to the
+skinny ``url_evictions`` state table, which drops them from the exact
+URL-seen set, and re-injected into the next wave's frontier, at most
+``max_recrawls`` times. The Bloom sidecar keeps an evicted key's bits; the
+exact anti-join behind it re-admits the key anyway.
 
 The transport's /flaky<k>/<id> URLs fail until attempt>=k — the
 deterministic stand-in for a transiently-down host.
@@ -23,7 +24,6 @@ from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df
 CFG = dict(
     wave_seconds=3600.0,
     fetch_partitions=8,
-    seen_filter="cuckoo",
     recrawl_failed=True,
     max_recrawls=1,
     max_waves=6,
@@ -72,8 +72,8 @@ def test_failed_urls_evicted_and_rearchived_next_wave(spark):
         assert len(by_url) == 3
         for url, hist in by_url.items():
             hist.sort()
-            # wave k: failed; wave k+1: evicted fingerprint made the URL
-            # provably-new again, re-fetched with attempt=1 -> archived
+            # wave k: failed; wave k+1: the eviction made the URL new
+            # again, re-fetched with attempt=1 -> archived
             assert [s for _, s in hist] == ["nothing archived", "success"], (url, hist)
             assert hist[1][0] == hist[0][0] + 1
         # retry budget recorded once per URL
@@ -103,7 +103,7 @@ def test_recrawl_kill_resume_fingerprint_identical(spark):
         io_b2, _, _ = _run(spark, root_b)  # resume
         for table in (
             "images", "archive_results", "url_seen", "url_evictions",
-            "url_seen_cuckoo", "seed_state",
+            "url_seen_bloom", "seed_state",
         ):
             drop = ("processed_at", "ts") if table == "archive_results" else (
                 ("date",) if table == "seed_state" else ()
@@ -111,31 +111,6 @@ def test_recrawl_kill_resume_fingerprint_identical(spark):
             assert _table_fingerprint(spark, io_a, table, drop) == _table_fingerprint(
                 spark, io_b2, table, drop
             ), f"table {table} differs after resume"
-    finally:
-        shutil.rmtree(root_a, ignore_errors=True)
-        shutil.rmtree(root_b, ignore_errors=True)
-
-
-def test_cuckoo_filter_without_recrawl_matches_bloom_crawl(spark):
-    """seen_filter='cuckoo' alone (no eviction) must produce the same crawl
-    as the Bloom default — both are exact for true members, and the checked
-    path resolves FPs against url_seen either way."""
-    root_a = tempfile.mkdtemp(prefix="aas_cuckoo_a_")
-    root_b = tempfile.mkdtemp(prefix="aas_cuckoo_b_")
-    cfg_c = dict(wave_seconds=20.0, fetch_partitions=8, seen_filter="cuckoo")
-    cfg_b = dict(wave_seconds=20.0, fetch_partitions=8)
-    try:
-        io_a = TableIO(root_a)
-        run_crawl(spark, io_a, WaveCheckpoint(root_a), frontier_seed_df(spark, 140),
-                  host_policy_df(spark), CrawlConfig(**cfg_c))
-        io_b = TableIO(root_b)
-        run_crawl(spark, io_b, WaveCheckpoint(root_b), frontier_seed_df(spark, 140),
-                  host_policy_df(spark), CrawlConfig(**cfg_b))
-        for table in ("url_seen", "archive_results"):
-            drop = ("processed_at", "ts") if table == "archive_results" else ()
-            assert _table_fingerprint(spark, io_a, table, drop) == _table_fingerprint(
-                spark, io_b, table, drop
-            ), f"table {table} differs between cuckoo and bloom filters"
     finally:
         shutil.rmtree(root_a, ignore_errors=True)
         shutil.rmtree(root_b, ignore_errors=True)
@@ -169,16 +144,3 @@ def test_partial_eviction_commit_rolled_back_on_recover(spark):
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
-
-def test_recrawl_requires_cuckoo(spark):
-    import pytest
-
-    root = tempfile.mkdtemp(prefix="aas_recrawl_bad_")
-    try:
-        with pytest.raises(ValueError, match="cuckoo"):
-            run_crawl(
-                spark, TableIO(root), WaveCheckpoint(root), _seed(spark, 10),
-                host_policy_df(spark), CrawlConfig(recrawl_failed=True),
-            )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

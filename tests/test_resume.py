@@ -91,16 +91,17 @@ def test_resume_without_sidecar_persists_full_bloom(spark):
     root = tempfile.mkdtemp(prefix="aas_bloom_migrate_")
     try:
         io, cp = TableIO(root), WaveCheckpoint(root)
-        # wave 0 ran before the sidecar existed (use_bloom off)
         run_crawl(
             spark, io, cp, frontier_seed_df(spark, N), host_policy_df(spark),
-            CrawlConfig(use_bloom=False, **CFG), stop_after_wave=0,
+            CrawlConfig(**CFG), stop_after_wave=0,
         )
+        # a root whose wave 0 ran before the sidecar existed
+        io.rollback_to("url_seen_bloom", 0)
         assert io.exists("url_seen") and not io.exists("url_seen_bloom")
-        # resume with the sidecar toggled on -> legacy full-build branch
+        # resume -> the commit's one-time full build from url_seen
         run_crawl(
             spark, io, cp, frontier_seed_df(spark, N), host_policy_df(spark),
-            CrawlConfig(use_bloom=True, **CFG),
+            CrawlConfig(**CFG),
         )
         assert io.exists("url_seen_bloom")
         # every key ever admitted (incl. wave 0, pre-sidecar) must be bloom-

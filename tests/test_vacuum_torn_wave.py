@@ -11,6 +11,7 @@ import hashlib
 import os
 import shutil
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,6 +48,24 @@ def _disk_blobs(root):
     }
 
 
+def _wait_for_crashed_tasks(spark, root, timeout=60.0):
+    """The fetch job fails on its first crashed task while sibling tasks may
+    still be appending blobs. Wait until no task runs on any executor and
+    the blob file set is unchanged for a second, so the disk listing that
+    vacuum is checked against is final."""
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    deadline = time.monotonic() + timeout
+    prev = None
+    while time.monotonic() < deadline:
+        busy = sum(e.numRunningTasks() for e in tracker.getExecutorInfos())
+        cur = _disk_blobs(root)
+        if busy == 0 and cur == prev:
+            return
+        prev = cur
+        time.sleep(1.0)
+    raise AssertionError("crashed fetch job's tasks did not stop")
+
+
 def test_torn_wave_orphans_vacuumed_resume_identical(spark):
     root_a = tempfile.mkdtemp(prefix="aas_vac_a_")
     root_b = tempfile.mkdtemp(prefix="aas_vac_b_")
@@ -59,6 +78,7 @@ def test_torn_wave_orphans_vacuumed_resume_identical(spark):
         # commit ever happens
         with pytest.raises(Exception, match="injected mid-wave fetch crash"):
             _run(spark, root_b, crash_during_fetch_wave=1)
+        _wait_for_crashed_tasks(spark, root_b)
         io_b, cp_b = TableIO(root_b), WaveCheckpoint(root_b)
 
         # recovery rolls back to the wave-0 checkpoint

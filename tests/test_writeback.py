@@ -120,7 +120,7 @@ def test_writeback_survives_resume(spark, tmp_path):
 
     seed = frontier_seed_df(spark, 120)
     policy = host_policy_df(spark)
-    cfg = CrawlConfig(wave_seconds=10.0, max_waves=4, fetch_partitions=8, use_bloom=True)
+    cfg = CrawlConfig(wave_seconds=10.0, max_waves=4, fetch_partitions=8)
 
     io_a, cp_a = TableIO(str(tmp_path / "a")), WaveCheckpoint(str(tmp_path / "a"))
     run_crawl(spark, io_a, cp_a, seed, policy, cfg)

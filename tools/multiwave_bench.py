@@ -16,14 +16,11 @@ and resumed must converge to the identical final state — compared by
 distributed order-insensitive fingerprints (sum of per-row crc32s), never
 a driver collect.
 
-Usage: python tools/multiwave_bench.py [seed_n] [waves] [span] [cores] [filter]
-       (defaults 48000 4 150000 32 bloom; filter = bloom | cuckoo |
-       cuckoo-recrawl — bloom/cuckoo pick the url-seen sidecar structure
-       (same plan shape, cuckoo adds deletion, so the frontier_sec delta IS
-       the probe-cost datapoint); cuckoo-recrawl additionally plants
-       transiently-failing /flaky1/ seeds and turns on failed-URL eviction +
-       re-archival, reporting per-wave eviction counts and the final
-       flaky-recovery tally)
+Usage: python tools/multiwave_bench.py [seed_n] [waves] [span] [cores] [mode]
+       (defaults 48000 4 150000 32 plain; mode = plain | recrawl — recrawl
+       plants transiently-failing /flaky1/ seeds and turns on failed-URL
+       eviction + re-archival, reporting per-wave eviction counts and the
+       final flaky-recovery tally)
 """
 
 from __future__ import annotations
@@ -71,7 +68,9 @@ def main():
     waves = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     span = int(sys.argv[3]) if len(sys.argv) > 3 else 150_000
     cores = int(sys.argv[4]) if len(sys.argv) > 4 else 32
-    seen_filter = sys.argv[5] if len(sys.argv) > 5 else "bloom"
+    mode = sys.argv[5] if len(sys.argv) > 5 else "plain"
+    if mode not in ("plain", "recrawl"):
+        sys.exit(f"mode must be 'plain' or 'recrawl', got {mode!r}")
     spark = get_spark(app="aas-multiwave", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -80,14 +79,13 @@ def main():
         .withColumn("max_tokens", F.lit(10_000_000))
         .withColumn("crawl_delay_ms", F.lit(0))
     )
-    recrawl = seen_filter == "cuckoo-recrawl"
+    recrawl = mode == "recrawl"
     n_flaky = 300 if recrawl else 0
     cfg = CrawlConfig(
         wave_seconds=3600.0,
         fetch_partitions=cores * 4,
         max_waves=waves,
         link_expander=fixture_link_expander(span),
-        seen_filter="cuckoo" if recrawl else seen_filter,
         recrawl_failed=recrawl,
         max_recrawls=1,
     )
@@ -150,9 +148,10 @@ def main():
             ("images", ()),
             ("archive_results", ("processed_at", "ts", "lineage_partition")),
             ("sha_seen", ()),
+            ("url_seen_bloom", ()),
         ]
         if recrawl:
-            resume_tables += [("url_evictions", ()), ("url_seen_cuckoo", ())]
+            resume_tables.append(("url_evictions", ()))
         for table, drop in resume_tables:
             fa = fingerprint(io_a.read(spark, table), drop)
             fb = fingerprint(io_b.read(spark, table), drop)
@@ -164,7 +163,7 @@ def main():
                     "seed_n": seed_n,
                     "span": span,
                     "cores": cores,
-                    "seen_filter": seen_filter,
+                    "mode": mode,
                     "waves": len(stats),
                     "total_wall_sec": round(wall, 3),
                     "total_archived": sum(s.archived_ok for s in stats),
