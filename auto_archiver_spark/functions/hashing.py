@@ -6,10 +6,8 @@
   tests/enrichers/test_hash_enricher.py:8-28).
 * SHA3-512 (F2): not native in Spark -> Arrow-batched pandas UDF (hashlib).
 * dHash-64 perceptual hash (F3 analog): see codec.dhash64; UDF in enrich.py.
-* SimHash-64: engine addition for near-duplicate detection (no reference
-  analog). ``simhash64`` is the md5-per-token kernel; ``simhash_text_udf``
-  is the batch-vectorized siphash one (pandas ``hash_array``, deterministic
-  for a pinned pandas — checkpoint-resume requirement, SURVEY.md §2.8 F12).
+* ``md5_int60``: the portable 60-bit md5 prefix every near-dup sketch
+  (MinHash words, SimHash tokens, winnowing) hashes with.
 * MinHash: one Arrow-batched sketch kernel (``shingle_minhash_arrow``) for
   every near-dup caller — the gate queries and operators/dedup.py. Its
   md5-int60 word hashes, affine 3-gram combiner and 16 affine permutation
@@ -25,7 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType
+from pyspark.sql.types import StringType
 
 # ---- F1 / F2 -------------------------------------------------------------------
 
@@ -41,28 +39,13 @@ def sha3_512_udf(data: pd.Series) -> pd.Series:
     return data.map(lambda b: "SHA3-512:" + hashlib.sha3_512(b).hexdigest())
 
 
-# ---- deterministic 64-bit token hash (md5-derived, portable) ---------------------
+# ---- deterministic 60-bit token hash (md5-derived, portable) ---------------------
 
 
-def md5_u64(token: str) -> int:
-    """First 8 bytes of md5 as unsigned 64-bit int. Portable across Python,
-    Spark (``conv(substring(md5(x),1,16),16,10)``) and DuckDB — the shared
-    hash for sketch parity tests."""
-    return int.from_bytes(hashlib.md5(token.encode("utf-8")).digest()[:8], "big")
-
-
-# ---- SimHash-64 ------------------------------------------------------------------
-
-
-def simhash64(tokens: list[str]) -> int:
-    """64-bit SimHash over a token multiset (signed int64)."""
-    if not tokens:
-        return 0
-    hs = np.array([md5_u64(t) for t in tokens], dtype=np.uint64)
-    bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(np.int64)
-    votes = (2 * bits - 1).sum(axis=0)
-    val = int(((votes > 0).astype(np.uint64) << np.arange(64, dtype=np.uint64)).sum())
-    return val - (1 << 64) if val >= (1 << 63) else val
+def md5_int60(col) -> Column:
+    """Portable 60-bit int from md5 (identical on Spark & DuckDB — see
+    oracle-gate conventions): conv(substr(md5,1,15),16,10) as long."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 # ---- MinHash: portable hashed 3-gram shingles + 16 affine minima -----------------
@@ -172,26 +155,3 @@ def shingle_minhash_arrow(
 
     out = docs.select(F.col(id_col).alias("id"), sketch(text_col).alias("_s"))
     return out.select("id", "_s.hs", *(["_s.mins"] if with_mins else []))
-
-
-@F.pandas_udf(LongType())
-def simhash_text_udf(texts: pd.Series) -> pd.Series:
-    """SimHash-64 straight from text, batch-vectorized: one hash_array call
-    for every token in the Arrow batch, per-doc bit votes via add.reduceat."""
-    bit_idx = np.arange(64, dtype=np.uint64)
-    docs = [t.strip().lower().split() if t else [] for t in texts]
-    lens = np.array([len(d) for d in docs], dtype=np.int64)
-    out = np.zeros(len(docs), dtype=np.int64)
-    total = int(lens.sum())
-    if total:
-        flat = np.concatenate([np.asarray(d, dtype=object) for d in docs if d])
-        h = pd.util.hash_array(flat, categorize=False).astype(np.uint64)
-        signs = (((h[:, None] >> bit_idx) & np.uint64(1)).astype(np.int8) * 2 - 1)
-        offsets = np.zeros(len(docs) + 1, dtype=np.int64)
-        np.cumsum(lens, out=offsets[1:])
-        starts = offsets[:-1][lens > 0]
-        votes = np.add.reduceat(signs.astype(np.int64), starts, axis=0)
-        vals = ((votes > 0).astype(np.uint64) << bit_idx).sum(axis=1)
-        out[lens > 0] = vals.view(np.int64)  # bit-reinterpret to signed
-    return pd.Series(out)
-

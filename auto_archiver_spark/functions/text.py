@@ -4,7 +4,7 @@ All native ``pyspark.sql.functions`` — no Python in the hot path. Each has an
 ANSI-SQL twin in ``__spark_entry__.oracle_sql`` so the driver's DuckDB harness
 value-checks them at sf0.01. These are engine additions (the reference
 archives pages; a 100 TB corpus pipeline additionally needs language ID,
-quality scoring, token accounting and fingerprinting over the text columns).
+quality scoring and token accounting over the text columns).
 """
 
 from __future__ import annotations
@@ -73,14 +73,6 @@ def quality_score_expr(text: Column) -> Column:
     word_ok = F.when((avg_word >= 2.5) & (avg_word <= 12), F.lit(0.4)).otherwise(F.lit(0.0))
     punct_ok = F.when(punct_ratio <= 0.2, F.lit(0.2)).otherwise(F.lit(0.0))
     return F.round(len_ok + word_ok + punct_ok, 2)
-
-
-def fingerprint64_expr(text: Column) -> Column:
-    """Document fingerprint: 64-bit hash of the token-normalized text
-    (lowercase, collapse whitespace) — an order-sensitive rolling-hash analog
-    done natively via xxhash64 of the normalized string."""
-    norm = F.regexp_replace(F.lower(F.trim(text)), _WS, " ")
-    return F.xxhash64(norm)
 
 
 # ---- corpus-curation additions (C4 / Gopher published rules, engine tier) ---------

@@ -9,9 +9,11 @@ plus the training-data additions (MinHash-LSH, SimHash, n-gram Jaccard,
 embedding-cosine) that a 100 TB corpus pipeline needs.
 
 Scale notes: every near-dup operator is bucket-first — candidates are
-generated by an equi-join on a bucket key (LSH band hash / simhash prefix /
-phash prefix), never by a cartesian product. The verify step runs only on
-candidate pairs.
+generated by grouping on a bucket key, never by a cartesian product. The
+keys are MinHash band keys or pigeonhole bit blocks (``block_keys``) of a
+SimHash, dHash or hyperplane-LSH signature; one capped stage
+(``bucket_pairs``) turns every bucket into pairs. The verify step runs only
+on candidate pairs.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.hashing import shingle_minhash_arrow
+from ..functions.hashing import md5_int60, shingle_minhash_arrow
 
 # ---- exact ---------------------------------------------------------------------
 
@@ -54,17 +56,101 @@ def dedup_content_keep_first(
     return payload.join(F.broadcast(winners.select(id_col)), id_col, "left_semi")
 
 
+# ---- candidate stage (every near-dup family) -----------------------------------
+#
+# The block-table scheme of Manku, Jain & Das Sarma (WWW'07): each row emits
+# bucket keys, rows sharing a key become candidate pairs, and only candidate
+# pairs are verified. MinHash emits band keys; SimHash, dHash and
+# hyperplane LSH emit pigeonhole bit blocks. All of them share bucket_pairs
+# and the verify-side prune.
+
+DEFAULT_BUCKET_CAP = 64  # all-pairs bound per bucket; above -> star pairs
+DEFAULT_BROADCAST_PAIRS_MAX = 2_000_000  # pair rows; ~50 MB of (long,long)
+
+
+def block_keys(sig, n_blocks: int, bits: int):
+    """Pigeonhole block split of a long signature:
+    array<struct<block:long, val:long>>, block i = bits [i·bits, (i+1)·bits).
+    Two signatures within hamming < ``n_blocks`` share at least one exact
+    block, so grouping on (block, val) finds them."""
+    mask = F.lit((1 << bits) - 1).cast("long")
+    return F.array(
+        *[
+            F.struct(
+                F.lit(i).cast("long").alias("block"),
+                F.shiftrightunsigned(sig, bits * i).bitwiseAND(mask).alias("val"),
+            )
+            for i in range(n_blocks)
+        ]
+    )
+
+
+def bucket_pairs(rows: DataFrame, bucket_cols: list[str], member, cap: int) -> DataFrame:
+    """Bucket -> pairs stage: ``member`` values grouped per bucket, buckets
+    of more than one member exploded to (a, b) pairs, a < b in sort order.
+    The only wide exchange is the groupBy. Buckets of at most ``cap``
+    members emit all pairs; bigger ones (boilerplate corpora, screenshot
+    farms) emit O(m) star pairs (min member <-> each other member) instead
+    of O(m²). Callers dedupe pairs found in more than one bucket."""
+    grouped = rows.groupBy(*bucket_cols).agg(F.collect_list(member).alias("ids"))
+    capped = F.when(F.size("ids") <= F.lit(cap), pairs_expr(F.col("ids"))).otherwise(
+        star_pairs_expr(F.col("ids"))
+    )
+    return grouped.filter(F.size("ids") > 1).select(F.explode(capped).alias("p")).select(
+        "p.a", "p.b"
+    )
+
+
+def pairs_expr(ids):
+    """All (a<b) pairs from an array — native higher-order flatten/transform."""
+    sorted_ids = F.array_sort(ids)
+    return F.flatten(
+        F.transform(
+            sorted_ids,
+            lambda x, i: F.transform(
+                F.slice(sorted_ids, i + 2, F.size(sorted_ids)),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
+            ),
+        )
+    )
+
+
+def star_pairs_expr(ids):
+    """O(m) star pairs (rep = min element) for oversized buckets — keeps
+    every member connected to the clique without the quadratic expansion."""
+    sorted_ids = F.array_sort(ids)
+    rep = F.element_at(sorted_ids, 1)
+    return F.transform(
+        F.slice(sorted_ids, 2, F.size(sorted_ids)),
+        lambda y: F.struct(rep.alias("a"), y.alias("b")),
+    )
+
+
+def pair_members(side: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Verify-side prune: the rows of ``side`` whose ``id`` appears in an
+    (id_a, id_b) pair. The pair set (callers hold it materialized) is
+    counted up to ``DEFAULT_BROADCAST_PAIRS_MAX``: under the bound the id
+    side is broadcast; over it every hint is dropped and AQE picks shuffle
+    joins, so a boilerplate-heavy corpus's pair set never lands on the
+    driver."""
+    small = pairs.limit(DEFAULT_BROADCAST_PAIRS_MAX + 1).count() <= DEFAULT_BROADCAST_PAIRS_MAX
+    ids = (
+        pairs.select(F.col("id_a").alias("id"))
+        .union(pairs.select(F.col("id_b").alias("id")))
+        .distinct()
+    )
+    return side.join(F.broadcast(ids) if small else ids, "id", "left_semi")
+
+
 # ---- MinHash + LSH ---------------------------------------------------------------
 #
-# One chain for every near-dup caller (the gate queries and the operators
+# One chain for every MinHash caller (the gate queries and the operators
 # below): sketch (functions/hashing.py shingle_minhash_arrow) -> minhash_bands
 # -> minhash_lsh_candidates (capped pairs) -> verify_pairs. Callers
 # localCheckpoint the sketch and the pair set so the Arrow sketch pass runs
 # once per corpus.
 
 BANDS, ROWS_PER_BAND = 8, 2  # 16 kernel minima -> 8 band keys of 2 minima
-DEFAULT_BUCKET_CAP = 64  # all-pairs bound per LSH bucket; above -> star pairs
-DEFAULT_BROADCAST_PAIRS_MAX = 2_000_000  # pair rows; ~50 MB of (long,long)
 
 
 def minhash_bands(hashed: DataFrame) -> DataFrame:
@@ -89,57 +175,17 @@ def minhash_bands(hashed: DataFrame) -> DataFrame:
 
 
 def minhash_lsh_candidates(hashed: DataFrame) -> DataFrame:
-    """Candidate stage: the sketch's band rows, (band, key) equi-grouped ->
-    distinct (id_a < id_b) pairs. The only wide exchange is the groupBy,
-    O(n·bands) rows, never O(n²).
-
-    Degenerate buckets (boilerplate corpora put thousands of near-identical
-    docs in one bucket) are bounded by ``DEFAULT_BUCKET_CAP``: buckets over
-    the cap emit **star pairs** (min-id representative <-> each member, O(m))
-    instead of all pairs (O(m²)). The DuckDB oracle of the minhash_lsh gate
-    query mirrors the cap exactly.
+    """Candidate stage: the sketch's band rows, (band, key) bucketed by
+    ``bucket_pairs`` -> distinct (id_a < id_b) pairs, O(n·bands) shuffled
+    rows, never O(n²). Buckets over ``DEFAULT_BUCKET_CAP`` emit star pairs;
+    the DuckDB oracle of the minhash_lsh gate query mirrors the cap exactly.
 
     CAVEAT: star pairs keep connectivity on the *unverified* candidate graph
     only. After a Jaccard verify, member<->member near-dups of an over-cap
     bucket whose rep edge fails the threshold are lost — cluster dedup reads
     ``minhash_dedup_clusters`` (components of the unverified graph)."""
-    grouped = (
-        minhash_bands(hashed).groupBy("band", "key").agg(F.collect_list("id").alias("ids"))
-    )
-    capped = F.when(
-        F.size("ids") <= F.lit(DEFAULT_BUCKET_CAP), pairs_expr(F.col("ids"))
-    ).otherwise(star_pairs_expr(F.col("ids")))
-    return (
-        grouped.filter(F.size("ids") > 1)
-        .select(F.explode(capped).alias("p"))
-        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
-        .distinct()
-    )
-
-
-def pairs_expr(ids):
-    """All (a<b) pairs from an id array — native higher-order flatten/transform."""
-    sorted_ids = F.array_sort(ids)
-    return F.flatten(
-        F.transform(
-            sorted_ids,
-            lambda x, i: F.transform(
-                F.slice(sorted_ids, i + 2, F.size(sorted_ids)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-
-
-def star_pairs_expr(ids):
-    """O(m) star pairs (rep = min id) for oversized buckets — keeps every
-    member connected to the clique without the quadratic expansion."""
-    sorted_ids = F.array_sort(ids)
-    rep = F.element_at(sorted_ids, 1)
-    return F.transform(
-        F.slice(sorted_ids, 2, F.size(sorted_ids)),
-        lambda y: F.struct(rep.alias("a"), y.alias("b")),
-    )
+    pairs = bucket_pairs(minhash_bands(hashed), ["band", "key"], "id", DEFAULT_BUCKET_CAP)
+    return pairs.select(F.col("a").alias("id_a"), F.col("b").alias("id_b")).distinct()
 
 
 def verify_pairs(hashed: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -147,21 +193,9 @@ def verify_pairs(hashed: DataFrame, pairs: DataFrame) -> DataFrame:
     intersection and union sizes per candidate pair. Set Jaccard over the
     hashed shingles equals string-shingle Jaccard up to hash collisions.
 
-    Verify-only-candidates: the sketch is semi-join-pruned to ids that
-    appear in a pair, and reused as is — no re-hashing of the corpus.
-    The pair set (callers hold it materialized) is counted up to
-    ``DEFAULT_BROADCAST_PAIRS_MAX``: under the bound the id side is
-    broadcast; over it every hint is dropped and AQE picks shuffle joins,
-    so a boilerplate-heavy corpus's pair set never lands on the driver."""
-    small = pairs.limit(DEFAULT_BROADCAST_PAIRS_MAX + 1).count() <= DEFAULT_BROADCAST_PAIRS_MAX
-    ids = (
-        pairs.select(F.col("id_a").alias("id"))
-        .union(pairs.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    sets = hashed.join(F.broadcast(ids) if small else ids, "id", "left_semi").select(
-        "id", F.array_distinct("hs").alias("sh")
-    )
+    Verify-only-candidates: the sketch is pruned to ids that appear in a
+    pair (``pair_members``) and reused as is — no re-hashing of the corpus."""
+    sets = pair_members(hashed, pairs).select("id", F.array_distinct("hs").alias("sh"))
     a = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
@@ -268,32 +302,51 @@ def connected_components(
 # ---- SimHash ---------------------------------------------------------------------
 
 
+def simhash60(docs: DataFrame, id_col="doc_id", text_col="text") -> DataFrame:
+    """(id, simhash60) via the portable SimHash construction: per doc,
+    whitespace tokens hash to md5-int60; each of 60 bit positions sums votes
+    (+1 if the token hash has the bit set, else -1); signature bit j =
+    vote_j >= 0. The hash is engine-portable, so the DuckDB oracle
+    reproduces it bit-for-bit. Null text has signature 0.
+
+    One pass over the token array: the vote vector is a 60-long array
+    accumulator (aggregate + zip_with); bit tests unroll to literal shifts
+    (Spark requires literal shift amounts)."""
+    tokens = F.split(F.trim(text_col), r"\s+")
+    hashes = F.transform(tokens, md5_int60)
+
+    def bits_of(h):
+        return F.array(
+            *[
+                F.shiftrightunsigned(h, j).bitwiseAND(F.lit(1).cast("long"))
+                for j in range(60)
+            ]
+        )
+
+    votes = F.aggregate(
+        hashes,
+        F.array_repeat(F.lit(0).cast("long"), 60),
+        lambda acc, h: F.zip_with(acc, bits_of(h), lambda a, b: a + 2 * b - 1),
+    )
+    sig = None
+    for j in range(60):
+        term = F.when(
+            F.element_at(F.col("_votes"), j + 1) >= 0, F.lit(1 << j).cast("long")
+        ).otherwise(F.lit(0).cast("long"))
+        sig = term if sig is None else sig + term
+    return (
+        docs.select(F.col(id_col).alias("id"), votes.alias("_votes"))
+        .select("id", sig.alias("simhash60"))
+    )
+
+
 def simhash_buckets(docs: DataFrame, id_col="doc_id", text_col="text") -> DataFrame:
-    """SimHash-64 with 4x16-bit block buckets: two docs within hamming<=3 share
-    at least one exact 16-bit block (pigeonhole) -> equi-join candidates.
-
-    Fully batch-vectorized: every token of the Arrow batch is hashed in one
-    C call, per-doc bit votes via add.reduceat (functions/hashing.py)."""
-    from ..functions.hashing import simhash_text_udf  # noqa: PLC0415
-
-    sig = docs.select(
-        F.col(id_col).alias("id"),
-        simhash_text_udf(F.col(text_col)).alias("simhash"),
-    )
-    blocks = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("block"),
-                F.shiftrightunsigned(F.col("simhash"), 16 * i)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("val"),
-            )
-            for i in range(4)
-        ]
-    )
-    return sig.select("id", "simhash", F.explode(blocks).alias("b")).select(
-        "id", "simhash", "b.block", "b.val"
-    )
+    """(id, simhash60, block, val): SimHash-60 with 4x15-bit block buckets —
+    two docs within hamming<=3 share at least one exact block (pigeonhole),
+    so grouping on (block, val) yields the candidates."""
+    return simhash60(docs, id_col, text_col).select(
+        "id", "simhash60", F.explode(block_keys(F.col("simhash60"), 4, 15)).alias("b")
+    ).select("id", "simhash60", "b.block", "b.val")
 
 
 # ---- phash (perceptual, images) ----------------------------------------------------
@@ -310,65 +363,16 @@ def phash_near_dup_pairs(
     MinHash path — O(m) instead of O(m²); identical-hash members still all
     connect to the representative (hamming 0 passes any threshold), so
     exact-duplicate clusters survive capping losslessly."""
-    blocks = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("block"),
-                F.shiftrightunsigned(F.col("phash"), 16 * i)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("val"),
-            )
-            for i in range(4)
-        ]
-    )
     b = images.select(
-        F.col("image_id").alias("id"), F.col("phash"), F.explode(blocks).alias("b")
+        F.col("image_id").alias("id"),
+        F.col("phash"),
+        F.explode(block_keys(F.col("phash"), 4, 16)).alias("b"),
     ).select("id", "phash", "b.block", "b.val")
-    grouped = b.groupBy("block", "val").agg(
-        F.collect_list(F.struct("id", "phash")).alias("members")
-    )
-    capped = F.when(
-        F.size("members") <= F.lit(bucket_cap), member_pairs_expr(F.col("members"))
-    ).otherwise(member_star_pairs_expr(F.col("members")))
-    pairs = (
-        grouped.filter(F.size("members") > 1)
-        .select(F.explode(capped).alias("p"))
-        .select("p.id_a", "p.id_b", "p.phash_a", "p.phash_b")
-        .distinct()
-    )
+    pairs = bucket_pairs(b, ["block", "val"], F.struct("id", "phash"), bucket_cap).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.col("a.phash").alias("phash_a"),
+        F.col("b.phash").alias("phash_b"),
+    ).distinct()
     ham = F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b")))
     return pairs.withColumn("hamming", ham).filter(F.col("hamming") <= max_hamming)
-
-
-def member_pairs_expr(members):
-    s = F.array_sort(members)
-    return F.flatten(
-        F.transform(
-            s,
-            lambda x, i: F.transform(
-                F.slice(s, i + 2, F.size(s)),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    x["phash"].alias("phash_a"),
-                    y["phash"].alias("phash_b"),
-                ),
-            ),
-        )
-    )
-
-
-def member_star_pairs_expr(members):
-    """O(m) star pairs over (id, phash) member structs for over-cap buckets
-    (rep = min member by (id, phash) sort order)."""
-    s = F.array_sort(members)
-    rep = F.element_at(s, 1)
-    return F.transform(
-        F.slice(s, 2, F.size(s)),
-        lambda y: F.struct(
-            rep["id"].alias("id_a"),
-            y["id"].alias("id_b"),
-            rep["phash"].alias("phash_a"),
-            y["phash"].alias("phash_b"),
-        ),
-    )

@@ -162,10 +162,6 @@ def per_group_limit(
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= n).drop("_rn")
 
 
-def bucket_of(url_hash: Column) -> Column:
-    return F.pmod(url_hash, F.lit(N_BUCKETS))
-
-
 def anti_join_seen(frontier: DataFrame, url_seen: DataFrame, bloom=None) -> DataFrame:
     """J1/J6: frontier rows whose url_hash is NOT in url_seen.
 

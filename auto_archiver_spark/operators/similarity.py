@@ -225,58 +225,41 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     round_to: int = 5,
 ) -> DataFrame:
-    """End-to-end embedding near-duplicate pairs — the embedding twin of
-    operators/dedup.py minhash_dedup: random-hyperplane signature
-    (embedding_lsh_signature) -> pigeonhole block buckets (two vectors
-    within hamming <= n_blocks-1 of each other share at least one exact
-    ``block_bits``-bit block) -> equi-join candidates (a<b, distinct,
-    bucket-capped like the MinHash path: over-cap buckets emit O(m) star
+    """End-to-end embedding near-duplicate pairs, on the shared candidate
+    stage of operators/dedup.py: random-hyperplane signature
+    (embedding_lsh_signature) -> pigeonhole block buckets (``block_keys``:
+    two vectors within hamming <= n_blocks-1 of each other share at least
+    one exact ``block_bits``-bit block) -> capped candidate pairs
+    (``bucket_pairs``: a<b, distinct, over-cap buckets emit O(m) star
     pairs instead of O(m²)) -> exact cosine verify at ``threshold``.
 
     Scale shape: the only wide exchange is the groupBy on (block, val) —
     O(n·n_blocks) skinny rows; the verify joins are pruned to candidate ids
-    before the vectors are touched, so cosine work is O(candidates), never
-    O(n²). Rounded cosine (``round_to``) keeps the verdict reproducible
+    (``pair_members``, broadcast bounded like the MinHash verify) before
+    the vectors are touched, so cosine work is O(candidates), never O(n²).
+    Rounded cosine (``round_to``) keeps the verdict reproducible
     cross-engine (the DuckDB oracle)."""
-    from .dedup import pairs_expr, star_pairs_expr  # noqa: PLC0415
+    from .dedup import block_keys, bucket_pairs, pair_members  # noqa: PLC0415
 
     n_blocks = max(1, len(planes) // block_bits)
     sig = embedding_lsh_signature(embeddings, planes, vec_col).select(
         F.col(id_col).alias("id"), "lsh_sig"
     )
-    blocks = F.array(
-        *[
-            F.struct(
-                F.lit(i).cast("long").alias("block"),
-                F.shiftrightunsigned(F.col("lsh_sig"), block_bits * i)
-                .bitwiseAND(F.lit((1 << block_bits) - 1).cast("long"))
-                .alias("val"),
-            )
-            for i in range(n_blocks)
-        ]
-    )
-    banded = sig.select("id", F.explode(blocks).alias("b")).select(
-        "id", F.col("b.block").alias("block"), F.col("b.val").alias("val")
-    )
-    grouped = banded.groupBy("block", "val").agg(F.collect_list("id").alias("ids"))
-    capped = F.when(
-        F.size("ids") <= F.lit(bucket_cap), pairs_expr(F.col("ids"))
-    ).otherwise(star_pairs_expr(F.col("ids")))
+    banded = sig.select(
+        "id", F.explode(block_keys(F.col("lsh_sig"), n_blocks, block_bits)).alias("b")
+    ).select("id", "b.block", "b.val")
     pairs = (
-        grouped.filter(F.size("ids") > 1)
-        .select(F.explode(capped).alias("p"))
-        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
+        bucket_pairs(banded, ["block", "val"], "id", bucket_cap)
+        .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
         .distinct()
         .localCheckpoint()  # tiny; the signature stage must not re-run per branch
     )
-    ids = (
-        pairs.select(F.col("id_a").alias("id"))
-        .union(pairs.select(F.col("id_b").alias("id")))
-        .distinct()
+    vecs = pair_members(
+        embeddings.select(
+            F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+        ),
+        pairs,
     )
-    vecs = embeddings.join(
-        F.broadcast(ids), embeddings[id_col] == ids["id"], "left_semi"
-    ).select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
     a = vecs.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
     b = vecs.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
     cos = F.round(cosine_expr(F.col("v_a"), F.col("v_b")), round_to)
@@ -296,8 +279,9 @@ def embedding_lsh_signature(
 ) -> DataFrame:
     """Random-hyperplane LSH (the embedding analog of SimHash): signature
     bit i = [cosine(v, plane_i) >= 0]. Vectors within a small angle share
-    most bits, so an equi-join on the signature (or on bit-blocks, as in
-    simhash_buckets) yields near-dup candidates without a cartesian product.
+    most bits, so grouping on the signature's bit blocks (dedup.block_keys,
+    as for SimHash and dHash) yields near-dup candidates without a
+    cartesian product.
 
     ``planes`` is a small literal list (unrolled into native exprs — no
     Python in the plan); rounding makes the sign decision reproducible

@@ -71,6 +71,22 @@ def _cpu_snap() -> tuple[float, float] | None:
     except OSError:  # pragma: no cover
         return None
 
+
+# Writer-task fan-out for the per-wave commits. Every parquet writer task
+# allocates row-group + dictionary buffers; at 32-wide the r4 full-wave
+# attempts showed the commit segments' ALLOCATION RATE (not bytes) is
+# what trips this host's memory-bandwidth governor — ~400 writer tasks
+# per wave across ~10 commits for tables that are a few MB each. Skinny
+# state tables (url_seen / sha_seen / frontier / bloom / lineage) and the
+# results table get a bounded writer count instead; the fetch_out
+# staging keeps full fan-out (its writers are the fetch tasks
+# themselves). On a real cluster these become "target file size" table
+# properties (1 file per ~128 MB) — the bound caps files-per-commit
+# there too, it does not serialize the pipeline.
+STATE_COMMIT_PARTITIONS = 4
+RESULTS_COMMIT_PARTITIONS = 8
+
+
 @dataclass
 class CrawlConfig:
     wave_seconds: float = 60.0
@@ -93,19 +109,6 @@ class CrawlConfig:
     strict_urls: bool = False  # P1 via exact ipaddress UDF (reference parity)
     allow_sheets: tuple = ()
     block_sheets: tuple = ()
-    # Writer-task fan-out for the per-wave commits. Every parquet writer task
-    # allocates row-group + dictionary buffers; at 32-wide the r4 full-wave
-    # attempts showed the commit segments' ALLOCATION RATE (not bytes) is
-    # what trips this host's memory-bandwidth governor — ~400 writer tasks
-    # per wave across ~10 commits for tables that are a few MB each. Skinny
-    # state tables (url_seen / sha_seen / frontier / bloom / lineage) and the
-    # results table get a bounded writer count instead; the fetch_out
-    # staging keeps full fan-out (its writers are the fetch tasks
-    # themselves). On a real cluster these become "target file size" table
-    # properties (1 file per ~128 MB) — the knob bounds files-per-commit
-    # there too, it does not serialize the pipeline.
-    state_commit_partitions: int = 4
-    results_commit_partitions: int = 8
     # Optional outlink expansion: a callable (archive_results_df) -> seed-
     # shaped DataFrame (sheet, row_idx, url, status, folder) of URLs
     # discovered this wave. They re-enter the next wave through the same
@@ -172,9 +175,8 @@ def run_crawl(
         frontier = io.read(spark, "frontier")
 
     stats: list[WaveStats] = []
-    # bounded writer fan-out + small row groups for the skinny state commits
-    # (see CrawlConfig.state_commit_partitions)
-    n_state = max(1, config.state_commit_partitions)
+    # small row groups for the skinny state commits (their writer fan-out is
+    # STATE_COMMIT_PARTITIONS)
     _state_opts = {"parquet.block.size": str(4 << 20)}
     for wave in range(start_wave, config.max_waves):
         t0 = time.monotonic()
@@ -392,7 +394,8 @@ def run_crawl(
             if config.dedup_content:
                 # the content hashes this wave actually kept (skinny)
                 ids["sha_seen"] = io.commit(
-                    kept_shas.coalesce(n_state), "sha_seen", wave, options=_state_opts
+                    kept_shas.coalesce(STATE_COMMIT_PARTITIONS), "sha_seen", wave,
+                    options=_state_opts,
                 )
             if fresh is not None:
                 fresh.unpersist()
@@ -400,7 +403,7 @@ def run_crawl(
 
         def t_results():
             sid = io.commit(
-                results_plan.coalesce(config.results_commit_partitions),
+                results_plan.coalesce(RESULTS_COMMIT_PARTITIONS),
                 "archive_results",
                 wave,
                 options=_state_opts,
@@ -452,7 +455,7 @@ def run_crawl(
 
         def _commit_url_seen():
             return io.commit(
-                newly_seen.coalesce(n_state), "url_seen", wave, options=_state_opts
+                newly_seen.coalesce(STATE_COMMIT_PARTITIONS), "url_seen", wave, options=_state_opts
             )
 
         def _commit_evictions():
@@ -463,7 +466,7 @@ def run_crawl(
                     (F.coalesce(F.col("tries"), F.lit(0)) + 1).cast("int").alias("tries"),
                 )
                 return io.commit(
-                    evict_delta.coalesce(n_state), "url_evictions", wave,
+                    evict_delta.coalesce(STATE_COMMIT_PARTITIONS), "url_evictions", wave,
                     options=_state_opts,
                 )
             # carry the table's snapshot forward UNCONDITIONALLY (0 when
@@ -485,7 +488,7 @@ def run_crawl(
             delta = build_sidecar(keys, N_BUCKETS)
             merged = delta if filt is None else merge_sidecars(filt.sidecar, delta)
             return io.commit(
-                merged.coalesce(n_state),
+                merged.coalesce(STATE_COMMIT_PARTITIONS),
                 "url_seen_bloom",
                 wave,
                 mode="overwrite",
@@ -505,7 +508,7 @@ def run_crawl(
                 ).select(*FRONTIER_COLS, "url_norm", "url_hash", "host")
                 nf = nf.unionByName(children)
             sid = io.commit(
-                nf.coalesce(n_state),
+                nf.coalesce(STATE_COMMIT_PARTITIONS),
                 "frontier",
                 wave,
                 mode="overwrite",

@@ -29,8 +29,22 @@ from pyspark.sql.window import Window
 
 from .functions import text as T
 from .functions import url_exprs as X
-from .functions.hashing import _MH_M, _MH_P, _MH_PERMS, _SH_A, _SH_B, shingle_minhash_arrow
-from .operators.dedup import minhash_lsh_candidates, verify_pairs, word_ngrams_expr
+from .functions.hashing import (
+    _MH_M,
+    _MH_P,
+    _MH_PERMS,
+    _SH_A,
+    _SH_B,
+    md5_int60,
+    shingle_minhash_arrow,
+)
+from .operators.dedup import (
+    minhash_lsh_candidates,
+    simhash60,
+    simhash_buckets,
+    verify_pairs,
+    word_ngrams_expr,
+)
 from .operators.similarity import cosine_topk
 
 
@@ -461,49 +475,15 @@ def q_cosine_topk(spark, sf):
 # --- sketches (deterministic, all gate-verified via the portable md5 hash) --------
 
 
-def _md5_int60(col):
-    """Portable 60-bit int from md5 (identical on Spark & DuckDB — see
-    oracle-gate conventions): conv(substr(md5,1,15),16,10) as long."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def _simhash60_df(d: DataFrame) -> DataFrame:
-    """(doc_id, simhash60) via the portable SimHash construction: per doc,
-    tokens hash to md5-prefix int60; each of 60 bit positions sums votes
-    (+1 if the token hash has the bit set, else -1); signature bit j =
-    vote_j >= 0. Same algebra the production operator (operators/dedup.py
-    simhash_buckets / functions/hashing.py) runs with xxhash64, with an
-    engine-portable hash so DuckDB reproduces it bit-for-bit.
-
-    One pass over the token array: the vote vector is a 60-long array
-    accumulator (aggregate + zip_with); bit tests unroll to literal shifts
-    (Spark requires literal shift amounts)."""
-    tokens = F.split(F.trim("text"), r"\s+")
-    hashes = F.transform(tokens, _md5_int60)
-
-    def bits_of(h):
-        return F.array(
-            *[
-                F.shiftrightunsigned(h, j).bitwiseAND(F.lit(1).cast("long"))
-                for j in range(60)
-            ]
-        )
-
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), 60),
-        lambda acc, h: F.zip_with(acc, bits_of(h), lambda a, b: a + 2 * b - 1),
-    )
-    sig = None
-    for j in range(60):
-        term = F.when(
-            F.element_at(F.col("_votes"), j + 1) >= 0, F.lit(1 << j).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        sig = term if sig is None else sig + term
+def _tri(wv, i):
+    """Affine 3-gram combiner at 1-based word position ``i`` of the word-hash
+    array ``wv`` — the same combiner as the Arrow sketch kernel:
+    (wh_i*A % M + wh_{i+1}*B % M + wh_{i+2}) % M."""
     return (
-        d.select("doc_id", votes.alias("_votes"))
-        .select("doc_id", sig.alias("simhash60"))
-    )
+        (F.element_at(wv, i) * F.lit(_SH_A)) % F.lit(_MH_M)
+        + (F.element_at(wv, (i + F.lit(1)).cast("int")) * F.lit(_SH_B)) % F.lit(_MH_M)
+        + F.element_at(wv, (i + F.lit(2)).cast("int"))
+    ) % F.lit(_MH_M)
 
 
 def _shingle_hash_df(d: DataFrame, id_alias: str = "id"):
@@ -521,26 +501,16 @@ def _shingle_hash_df(d: DataFrame, id_alias: str = "id"):
     expression would recompute every word hash 3x PER SHINGLE (measured
     O(n²) blowup: 87s vs 1s at sf0.1)."""
     words = F.split(F.trim("text"), r"\s+")
-    wv = F.transform(words, lambda w: _md5_int60(w) % F.lit(_MH_M))
+    wv = F.transform(words, lambda w: md5_int60(w) % F.lit(_MH_M))
     base = d.select(
         F.col("doc_id").alias(id_alias),
         words.alias("_w"),
         wv.alias("_wv"),
     )
     nw = F.size("_w")
-    col_wv = F.col("_wv")
-
-    def tri(i):
-        return (
-            (F.element_at(col_wv, i) * F.lit(_SH_A)) % F.lit(_MH_M)
-            + (F.element_at(col_wv, (i + F.lit(1)).cast("int")) * F.lit(_SH_B))
-            % F.lit(_MH_M)
-            + F.element_at(col_wv, (i + F.lit(2)).cast("int"))
-        ) % F.lit(_MH_M)
-
     hs = F.when(
-        nw < 3, F.array(_md5_int60(F.array_join("_w", " ")) % F.lit(_MH_M))
-    ).otherwise(F.transform(F.sequence(F.lit(1), nw - 2), tri))
+        nw < 3, F.array(md5_int60(F.array_join("_w", " ")) % F.lit(_MH_M))
+    ).otherwise(F.transform(F.sequence(F.lit(1), nw - 2), lambda i: _tri(F.col("_wv"), i)))
     return base.select(id_alias, hs.alias("hs"))
 
 
@@ -565,32 +535,21 @@ def q_minhash_lsh(spark, sf):
 
 
 def q_simhash_buckets(spark, sf):
-    """SimHash signatures + pigeonhole block bucket keys, now fully
-    oracle-checked (r3 VERDICT #3): portable simhash60 (_simhash60_df) split
-    into 4x15-bit blocks — two docs within hamming<=3 share at least one
-    exact block, so the (block, val) equi-join is the candidate generator.
-    Production xxhash64 twin: operators/dedup.py simhash_buckets."""
-    sig = _simhash60_df(load(spark, sf, "documents"))
-    blocks = F.array(
-        *[
-            F.struct(
-                F.lit(i).cast("long").alias("block"),
-                F.shiftrightunsigned(F.col("simhash60"), 15 * i)
-                .bitwiseAND(F.lit(0x7FFF).cast("long"))
-                .alias("val"),
-            )
-            for i in range(4)
-        ]
-    )
-    return sig.select("doc_id", "simhash60", F.explode(blocks).alias("b")).select(
-        "doc_id", "simhash60", F.col("b.block").alias("block"), F.col("b.val").alias("val")
+    """SimHash signatures + pigeonhole block bucket keys, oracle-checked:
+    operators/dedup.py simhash_buckets — portable simhash60 split into
+    4x15-bit blocks; two docs within hamming<=3 share at least one exact
+    block, so (block, val) is the candidate bucket key."""
+    return simhash_buckets(load(spark, sf, "documents")).select(
+        F.col("id").alias("doc_id"), "simhash60", "block", "val"
     )
 
 
 def q_simhash_portable(spark, sf):
-    """SimHash bit-vote algebra, cross-engine hash-verified (see
-    _simhash60_df — shared with q_simhash_buckets)."""
-    return _simhash60_df(load(spark, sf, "documents"))
+    """SimHash bit-vote algebra, cross-engine hash-verified
+    (operators/dedup.py simhash60 — shared with q_simhash_buckets)."""
+    return simhash60(load(spark, sf, "documents")).select(
+        F.col("id").alias("doc_id"), "simhash60"
+    )
 
 
 def q_minhash_signature(spark, sf):
@@ -603,7 +562,7 @@ def q_minhash_signature(spark, sf):
     minhash_lsh entry."""
     d = load(spark, sf, "documents")
     sh = word_ngrams_expr(F.col("text"), 3)
-    hm = F.transform(sh, lambda s: _md5_int60(s) % F.lit(_MH_M))
+    hm = F.transform(sh, lambda s: md5_int60(s) % F.lit(_MH_M))
     def perm(a, b):  # closure factory: the HOF lambda must stay unary
         return lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(_MH_P)
 
@@ -1979,16 +1938,9 @@ def q_winnowing(spark, sf):
     d1 = d.select("doc_id", words.alias("ws"))
     d2 = d1.select(
         "doc_id",
-        F.transform("ws", lambda w: _md5_int60(w) % F.lit(_MH_M)).alias("wv"),
+        F.transform("ws", lambda w: md5_int60(w) % F.lit(_MH_M)).alias("wv"),
     )
-    kgram = F.transform(
-        F.sequence(F.lit(1), F.size("wv") - 2),
-        lambda i: (
-            (F.element_at("wv", i) * _SH_A) % _MH_M
-            + (F.element_at("wv", i + 1) * _SH_B) % _MH_M
-            + F.element_at("wv", i + 2)
-        ) % _MH_M,
-    )
+    kgram = F.transform(F.sequence(F.lit(1), F.size("wv") - 2), lambda i: _tri(F.col("wv"), i))
     d3 = d2.select(
         "doc_id",
         F.when(F.size("wv") >= 3, kgram)
@@ -2464,11 +2416,11 @@ def q_stratified_sample(spark, sf):
     sampling pattern that survives resume/retry at 100 TB because a row's
     fate is a pure function of its key."""
     d = load(spark, sf, "documents")
-    rate = (_md5_int60(F.col("source")) % 50 + 25).cast("int")
+    rate = (md5_int60(F.col("source")) % 50 + 25).cast("int")
     key = F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("source"))
     return (
         d.select("doc_id", "source", rate.alias("rate"),
-                 (_md5_int60(key) % 100).cast("int").alias("roll"))
+                 (md5_int60(key) % 100).cast("int").alias("roll"))
         .filter(F.col("roll") < F.col("rate"))
     )
 
@@ -2531,7 +2483,7 @@ def q_domain_rebalance(spark, sf):
     )
     key = F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("source"))
     return (
-        d.select("doc_id", "source", (_md5_int60(key) % 1000).cast("int").alias("roll"))
+        d.select("doc_id", "source", (md5_int60(key) % 1000).cast("int").alias("roll"))
         .join(F.broadcast(rates), "source")
         .filter(F.col("roll") < F.col("rate_pm"))
         .select("doc_id", "source", "n_src", "rate_pm", "roll")

@@ -11,12 +11,11 @@ from auto_archiver_spark.functions.hashing import (
     _MH_M,
     _SH_A,
     _SH_B,
-    md5_u64,
     sha3_512_udf,
     sha256_tagged_expr,
     shingle_minhash_batch,
-    simhash64,
 )
+from auto_archiver_spark.operators.dedup import simhash60
 
 GOLDEN = {
     b"test1": (
@@ -51,18 +50,15 @@ def test_spark_hash_goldens(spark):
         assert r.sha3 == exp3
 
 
-def test_md5_u64_portable():
-    # matches int('0x'+md5hex[:16]) — the cross-engine contract
-    assert md5_u64("abc") == int(hashlib.md5(b"abc").hexdigest()[:16], 16)
-
-
-def test_simhash_deterministic_and_similar():
-    toks = "the quick brown fox jumps over the lazy dog".split()
-    a = simhash64(toks)
-    assert a == simhash64(list(toks))
-    b = simhash64([*toks, "extra"])  # small edit -> small hamming distance
-    assert bin((a ^ b) & (2**64 - 1)).count("1") <= 12
-    assert simhash64([]) == 0
+def test_simhash_deterministic_and_similar(spark):
+    text = "the quick brown fox jumps over the lazy dog"
+    df = spark.createDataFrame(
+        [(1, text), (2, text), (3, text + " extra"), (4, None)], "doc_id long, text string"
+    )
+    sig = {r.id: r.simhash60 for r in simhash60(df).collect()}
+    assert sig[1] == sig[2]
+    assert bin(sig[1] ^ sig[3]).count("1") <= 12  # small edit -> small hamming distance
+    assert sig[4] == 0  # null text
 
 
 def test_minhash_similarity_estimate():

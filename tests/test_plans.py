@@ -200,6 +200,21 @@ def test_robots_parse_stays_native(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def test_fan_is_noop_on_a_scan_as_wide_as_the_cluster(spark, tmp_path):
+    """A scan with at least as many partitions as cores is returned as is:
+    _fan adds no exchange on a multi-file production table."""
+    from auto_archiver_spark import queries as Q
+
+    n = spark.sparkContext.defaultParallelism
+    path = tmp_path / "wide"
+    spark.range(n * 10).toDF("k").repartition(n).write.parquet(str(path))
+    assert len(list(path.glob("*.parquet"))) >= n
+    df = spark.read.parquet(str(path))
+    fanned = Q._fan(spark, df, "k")
+    assert fanned is df
+    assert "Exchange" not in _plan(fanned)
+
+
 def test_embedding_near_dup_no_cartesian(spark):
     """The embedding near-dup candidate stage must be a bucket equi-join —
     no CartesianProduct / BroadcastNestedLoopJoin anywhere in the plan."""

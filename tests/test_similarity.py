@@ -128,6 +128,39 @@ def test_embedding_near_dup_bucket_cap_star_pairs(spark):
     assert all(r.cos == 1.0 for r in pairs)
 
 
+def test_embedding_near_dup_shuffle_path_matches_broadcast(spark, monkeypatch):
+    """The over-bound (no-broadcast) verify-side prune must produce the same
+    verified pairs as the broadcast fast path, with no broadcast hint."""
+    from auto_archiver_spark.operators import dedup
+    from auto_archiver_spark.operators.similarity import embedding_near_dup_pairs
+
+    rows = (
+        [(i, [1.0, 0.01 * i, 0.0, 0.0]) for i in range(4)]
+        + [(10 + i, [0.0, 0.0, 1.0, 0.01 * i]) for i in range(3)]
+        + [(20, [0.0, 1.0, 0.0, 0.0])]
+    )
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    planes = [
+        [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0],
+        [0.0, 0.0, 0.0, 1.0], [1.0, 1.0, 0.0, 0.0], [1.0, -1.0, 0.0, 0.0],
+        [0.0, 0.0, 1.0, 1.0], [0.0, 0.0, 1.0, -1.0], [1.0, 0.0, 1.0, 0.0],
+        [1.0, 0.0, -1.0, 0.0], [0.0, 1.0, 0.0, 1.0], [0.0, 1.0, 0.0, -1.0],
+    ]
+
+    def run():
+        out = embedding_near_dup_pairs(df, planes, threshold=0.8)
+        plan = out._jdf.queryExecution().analyzed().toString().lower()
+        return {tuple(r) for r in out.collect()}, plan
+
+    bc, bc_plan = run()
+    monkeypatch.setattr(dedup, "DEFAULT_BROADCAST_PAIRS_MAX", 0)
+    sh, sh_plan = run()
+    assert bc == sh and len(bc) > 0
+    assert "broadcast" in bc_plan
+    # the shuffle path carries no broadcast hint in its analyzed plan
+    assert "broadcast" not in sh_plan
+
+
 def test_ivf_recall_bound_on_clustered_fixture(spark):
     """r4 verdict #6: recall@10 >= 0.9 at nprobe=4 on a clustered corpus
     (the data shape IVF exists for). 8 well-separated 16-dim clusters,
