@@ -137,6 +137,20 @@ class WaveStats:
     extra: dict = field(default_factory=dict)
 
 
+# Spark's size estimate of the widest eviction-log side a wave broadcasts,
+# (url_hash long, tries int): 8 bytes of row overhead + 8 + 4
+EVICT_ROW_BYTES = 20
+
+
+def log_broadcast(spark: SparkSession, log: DataFrame):
+    """``F.broadcast`` while ``log`` (materialized) fits under
+    ``spark.sql.autoBroadcastJoinThreshold`` at ``EVICT_ROW_BYTES`` a row,
+    else no hint, so AQE picks the join. A threshold of -1 never broadcasts."""
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    fits = threshold >= 0 and log.count() * EVICT_ROW_BYTES <= threshold
+    return F.broadcast if fits else (lambda df: df)
+
+
 def run_crawl(
     spark: SparkSession,
     io,
@@ -216,10 +230,11 @@ def run_crawl(
         # is newer than its latest eviction — computed without aggregating
         # the big table: only url_seen rows matching an evicted key (a
         # semi-join against the log, which still scans url_seen) are
-        # aggregated. The log is broadcast only while it measures small — a
-        # long-running crawl with a high failure rate grows it past
-        # driver/executor memory, at which point the joins fall back to
-        # shuffle (AQE picks the strategy) rather than OOMing a 10^10-row run.
+        # aggregated. The log is broadcast only while it fits under the
+        # session's broadcast threshold (log_broadcast) — a long-running crawl
+        # with a high failure rate grows it past driver/executor memory, at
+        # which point the joins fall back to shuffle (AQE picks the strategy)
+        # rather than OOMing a 10^10-row run.
         ev_agg = None
         seen_eff = seen
         if config.recrawl_failed:
@@ -229,8 +244,7 @@ def run_crawl(
             ev_agg = ev.groupBy("url_hash").agg(
                 F.max("tries").alias("tries"), F.max("evict_wave").alias("ew")
             ).localCheckpoint()
-            small_log = ev_agg.count() <= 5_000_000  # ~120 MB of (long,int,int)
-            _bcast = F.broadcast if small_log else (lambda df: df)
+            _bcast = log_broadcast(spark, ev_agg)
             ins_w = (
                 seen.join(_bcast(ev_agg.select("url_hash")), "url_hash", "left_semi")
                 .groupBy("url_hash")

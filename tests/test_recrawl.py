@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
-from auto_archiver_spark.plans.wave import CrawlConfig, run_crawl
+from auto_archiver_spark.plans.wave import CrawlConfig, log_broadcast, run_crawl
 from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df
 
 CFG = dict(
@@ -56,6 +56,25 @@ def _table_fingerprint(spark, io, table, drop=()):
     cols = sorted(df.columns)
     rows = df.select(*cols).collect()
     return sorted(tuple(str(x) for x in r) for r in rows)
+
+
+def _assert_same_tables(spark, io_a, io_b, why, blob_refs=True):
+    """``blob_refs=False`` leaves out where each payload sits in the blob
+    files: that follows the fetch partition layout, which a different join
+    strategy changes. The ``sha256`` column still pins each payload."""
+    drops = {
+        "archive_results": ("processed_at", "ts"),
+        "seed_state": ("date",),
+        "images": () if blob_refs else ("blob_file", "blob_off", "blob_len"),
+    }
+    for table in (
+        "images", "archive_results", "url_seen", "url_evictions",
+        "url_seen_bloom", "seed_state",
+    ):
+        drop = drops.get(table, ())
+        assert _table_fingerprint(spark, io_a, table, drop) == _table_fingerprint(
+            spark, io_b, table, drop
+        ), f"table {table} differs {why}"
 
 
 def test_failed_urls_evicted_and_rearchived_next_wave(spark):
@@ -101,16 +120,7 @@ def test_recrawl_kill_resume_fingerprint_identical(spark):
         io_b, _, s1 = _run(spark, root_b, stop_after=0)  # crash after wave 0
         assert len(s1) == 1
         io_b2, _, _ = _run(spark, root_b)  # resume
-        for table in (
-            "images", "archive_results", "url_seen", "url_evictions",
-            "url_seen_bloom", "seed_state",
-        ):
-            drop = ("processed_at", "ts") if table == "archive_results" else (
-                ("date",) if table == "seed_state" else ()
-            )
-            assert _table_fingerprint(spark, io_a, table, drop) == _table_fingerprint(
-                spark, io_b2, table, drop
-            ), f"table {table} differs after resume"
+        _assert_same_tables(spark, io_a, io_b2, "after resume")
     finally:
         shutil.rmtree(root_a, ignore_errors=True)
         shutil.rmtree(root_b, ignore_errors=True)
@@ -144,3 +154,35 @@ def test_partial_eviction_commit_rolled_back_on_recover(spark):
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
+
+
+def test_eviction_log_not_broadcast_when_threshold_disabled(spark):
+    """The eviction log's broadcast bound is the session's
+    spark.sql.autoBroadcastJoinThreshold: at -1 its joins carry no broadcast
+    hint, and the crawl's tables equal the default run's."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    log = spark.createDataFrame([(1, 0, 1)], "url_hash long, ew int, tries int")
+    seen = spark.createDataFrame([(1, 0), (2, 0)], "url_hash long, first_seen_wave int")
+
+    def semi_join_plan():
+        hint = log_broadcast(spark, log)
+        j = seen.join(hint(log.select("url_hash")), "url_hash", "left_semi")
+        return j._jdf.queryExecution().analyzed().toString().lower()
+
+    cfg = dict(CFG, max_waves=3)
+    root_a = tempfile.mkdtemp(prefix="aas_recrawl_bc_")
+    root_b = tempfile.mkdtemp(prefix="aas_recrawl_nobc_")
+    prior = spark.conf.get(key)
+    try:
+        assert "broadcast" in semi_join_plan()
+        io_a, _, _ = _run(spark, root_a, cfg)
+        spark.conf.set(key, "-1")
+        assert "broadcast" not in semi_join_plan()
+        io_b, _, _ = _run(spark, root_b, cfg)
+        spark.conf.set(key, prior)
+        assert io_b.read(spark, "url_evictions").count() > 0
+        _assert_same_tables(spark, io_a, io_b, "without the broadcast hint", blob_refs=False)
+    finally:
+        spark.conf.set(key, prior)
+        shutil.rmtree(root_a, ignore_errors=True)
+        shutil.rmtree(root_b, ignore_errors=True)

@@ -19,6 +19,22 @@ summary line; exit code 0 iff the crawl completed.
 Resume: re-running with the same ``--root`` continues from the last
 committed wave checkpoint (§2.9 batch-iterative state), which is exactly the
 spark-submit restart story on a cluster.
+
+Zip-free workers (auto_archiver_spark/worker_daemon.py) are not switched on
+here: the launcher owns the executors, so the setting is the submitter's.
+The daemon starts before any task, and ``--py-files`` archives only reach
+``sys.path`` inside each task, so the daemon module cannot be imported from
+``--py-files`` alone. Observed on ``--master local-cluster[2,1,1024]
+--seeds 2000 --permissive`` (pyspark 4.1.2): adding only
+``--conf spark.python.daemon.module=auto_archiver_spark.worker_daemon``
+fails every Python task with ``No module named 'auto_archiver_spark'``
+(the executor's ``PYTHONPATH`` held just Spark's two zips and the
+``spark-core`` jar); adding as well
+``--conf spark.executorEnv.PYTHONPATH=<abs path>/dist/auto_archiver_spark.zip``
+(a path every executor can read) or installing the package on the
+executors makes it import, and the run archived the same 1,642 URLs as the
+default. Use it only when the executors' pyspark is the version in
+``$SPARK_HOME/python/lib/pyspark.zip``.
 """
 
 from __future__ import annotations
