@@ -8,6 +8,10 @@ Reference semantics covered:
 plus the training-data additions (MinHash-LSH, SimHash, n-gram Jaccard,
 embedding-cosine) that a 100 TB corpus pipeline needs.
 
+Exact dedup is one primitive, ``first_per_key`` (the crawl's in-wave dedup
+and the argmax gate queries), plus the crawl's A1+A2 payload decision,
+``content_dedup`` (its winners: ``content_winners``).
+
 Scale notes: every near-dup operator is bucket-first — candidates are
 generated by grouping on a bucket key, never by a cartesian product. The
 keys are MinHash band keys or pigeonhole bit blocks (``block_keys``) of a
@@ -20,40 +24,56 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions.hashing import md5_int60, shingle_minhash_arrow
 
 # ---- exact ---------------------------------------------------------------------
 
 
-def dedup_exact_first(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
-    """A1/A2: keep the first row per key in a deterministic order.
-
-    One shuffle; map-side partial ranking is not possible for row_number but
-    AQE coalesces the post-shuffle partitions."""
-    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
-def dedup_exact_content(df: DataFrame, bytes_col: str = "bytes", order_col: str = "image_id"):
-    """A2 semantics on the payload table: content hash -> first occurrence."""
-    return dedup_exact_first(
-        df.withColumn("sha256", F.sha2(F.col(bytes_col), 256)), ["sha256"], [order_col]
-    )
-
-
-def dedup_content_keep_first(
-    payload: DataFrame, key: str = "sha256", id_col: str = "image_id"
+def first_per_key(
+    df: DataFrame, keys: list[str], order: list[str], desc: bool = False
 ) -> DataFrame:
-    """A2 dedup for payload tables WITHOUT shuffling the heavy bytes column:
-    the winner per content hash is decided on a skinny (key, id) projection
-    (tiny shuffle), then applied to the payload via a broadcast semi-join —
-    the big side stays narrow, bytes never cross the network. At 10^10 scale
-    the winner set is per-wave (admitted-count-sized), well under broadcast
-    limits for realistic wave sizes."""
-    winners = payload.select(key, id_col).groupBy(key).agg(F.min(id_col).alias(id_col))
-    return payload.join(F.broadcast(winners.select(id_col)), id_col, "left_semi")
+    """One row per ``keys`` value with all of ``df``'s columns, in their
+    order: the first row under ``order`` ascending, or the last with
+    ``desc=True``.
+
+    This is ``row_number() = 1`` over ``partitionBy(keys).orderBy(order)``
+    written as one aggregate, ``min`` (``max``) of ``struct(*order,
+    *rest)``. Struct comparison is lexicographic by field, so the extremum
+    is the window's first row; the remaining columns break ties on
+    ``order``, so every run picks the same row. Nulls in an order column
+    sort first ascending and last descending, as in the window. The
+    aggregate gets map-side partials: the shuffle carries one row per
+    (task, key), not every duplicate, and nothing sorts the input. Every
+    column rides in the struct, so callers project first."""
+    rest = [c for c in df.columns if c not in keys and c not in order]
+    pick = F.max if desc else F.min
+    best = df.groupBy(*keys).agg(pick(F.struct(*order, *rest)).alias("_b"))
+    return best.select(*[c if c in keys else F.col(f"_b.{c}").alias(c) for c in df.columns])
+
+
+def content_winners(rows: DataFrame, sha_seen: DataFrame) -> DataFrame:
+    """A1+A2 winners (sha256, url_hash) of one wave's payload rows: per
+    sha256 the least url_hash (``url_hash`` is unique per row; a plain
+    ``min``, so the aggregate stays a HashAggregate and no payload column
+    of ``rows`` reaches its exchange), minus the sha256s the cross-wave
+    ``sha_seen`` table already holds (an anti-join). ``sha_seen`` gets no
+    broadcast hint: it is broadcast only while it is under
+    ``spark.sql.autoBroadcastJoinThreshold``."""
+    winners = rows.groupBy("sha256").agg(F.min("url_hash").alias("url_hash"))
+    return winners.join(sha_seen, "sha256", "left_anti")
+
+
+def content_dedup(rows: DataFrame, sha_seen: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The crawl's content-addressed dedup, decided on the skinny
+    (url_hash, sha256) projection of ``rows``. Returns ``(kept, drops)``:
+    ``kept`` is ``content_winners``, materialized because the delete keys
+    and the ``sha_seen`` commit both read it; ``drops`` (url_hash) is every
+    other row."""
+    keys = rows.select("url_hash", "sha256")
+    kept = content_winners(keys, sha_seen).localCheckpoint()
+    drops = keys.join(kept.select("url_hash"), "url_hash", "left_anti").select("url_hash")
+    return kept, drops
 
 
 # ---- candidate stage (every near-dup family) -----------------------------------

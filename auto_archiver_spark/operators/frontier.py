@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.url_exprs import archivable_url_expr, north_norm_expr, url_hash_expr
+from .dedup import first_per_key
 
 N_BUCKETS = 256  # Bloom sidecar bucket count; at 10^10 keys -> ~40M keys/bucket
 SALT_BITS = 4  # per-host salt fan-out for the fetch repartition
@@ -96,25 +97,9 @@ def crawl_order_cols() -> list[Column]:
 
 
 def dedup_in_wave(df: DataFrame) -> DataFrame:
-    """First occurrence per url_hash in crawl order (reference processes each
-    URL once by construction; ties broken by O1). One shuffle on url_hash.
-
-    r8: sort-window row_number -> min(struct(...)) aggregate (guide §2.3,
-    same rewrite as the gate argmax queries): (sheet, row_idx) is the unique
-    O1 total order, so the lexicographic struct minimum IS the
-    row_number()=1 row and the payload fields after it never decide the
-    comparison. The aggregate gets map-side partials instead of shipping and
-    sorting every duplicate occurrence."""
-    others = [c for c in df.columns if c not in ("url_hash", "sheet", "row_idx")]
-    agg = df.groupBy("url_hash").agg(
-        F.min(F.struct("sheet", "row_idx", *others)).alias("_b")
-    )
-    return agg.select(
-        *[
-            F.col("url_hash") if c == "url_hash" else F.col(f"_b.{c}").alias(c)
-            for c in df.columns
-        ]
-    )
+    """First occurrence per url_hash in crawl order O1 (the reference
+    processes each URL once by construction). One shuffle on url_hash."""
+    return first_per_key(df, ["url_hash"], ["sheet", "row_idx"])
 
 
 def sanitize_chain(df: DataFrame, url_col: str = "url", strict: bool = False) -> DataFrame:

@@ -91,9 +91,12 @@ def first_success(df: DataFrame, order_col: str = "attempt") -> DataFrame:
 
 def choose_most_complete(df: DataFrame) -> DataFrame:
     """A5 (metadata.py:221-235): per url_hash the result with the most media,
-    then the most metadata keys."""
+    then the most metadata keys; on a tie the earliest attempt, as the
+    reference's ``max()`` keeps the first maximal element."""
     score = F.struct(
-        F.size("media").alias("n_media"), F.size(F.map_keys("metadata")).alias("n_meta")
+        F.size("media").alias("n_media"),
+        F.size(F.map_keys("metadata")).alias("n_meta"),
+        (-F.col("attempt")).alias("first"),
     )
     agg = df.groupBy("url_hash").agg(
         F.max_by(F.struct(*[F.col(c) for c in df.columns if c != "url_hash"]), score).alias("r")

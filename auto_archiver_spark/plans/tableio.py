@@ -148,36 +148,7 @@ class TableIO:
         (zstd/snappy burn CPU on incompressible data for ~0% gain).
         ``options`` are extra per-write parquet options (e.g. a small
         ``parquet.block.size`` for the fetch staging — see plans/wave.py)."""
-        manifest = self._load_manifest(table)
-        next_id = self._next_id(table, manifest)
-        rel = f"snap-{next_id:05d}"
-        writer = df.write.mode("overwrite")
-        if compression:
-            writer = writer.option("compression", compression)
-        for k, v in (options or {}).items():
-            writer = writer.option(k, v)
-        if partition_by:
-            # cluster rows by the partition column first: otherwise every
-            # write task opens a file per partition value it sees
-            # (tasks x partitions tiny files — measured 17x slowdown of the
-            # wave-0 seed_state commit + every later read of it)
-            from pyspark.sql import functions as F  # noqa: PLC0415
-
-            writer = (
-                df.repartition(F.col(partition_by)).write.mode("overwrite")
-            )
-            if compression:
-                writer = writer.option("compression", compression)
-            for k, v in (options or {}).items():
-                writer = writer.option(k, v)
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(os.path.join(self._tdir(table), rel))
-        entry = {"id": next_id, "dir": rel, "wave": wave, "mode": mode}
-        if partition_by:
-            entry["part_col"] = partition_by
-        manifest["snapshots"].append(entry)
-        self._store_manifest(table, manifest)
-        return next_id
+        return self._write_snapshot(df, table, wave, mode, compression, options, partition_by)
 
     def commit_replace(
         self,
@@ -196,30 +167,48 @@ class TableIO:
         seed table (round-2 VERDICT #5). Data files land under
         ``part_col=value`` subdirs so a partition filter prunes at the
         directory level."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
+        return self._write_snapshot(df, table, wave, mode, partition_by=part_col, parts=parts)
 
+    def _write_snapshot(
+        self,
+        df: DataFrame,
+        table: str,
+        wave: int,
+        mode: str,
+        compression: str | None = None,
+        options: dict[str, str] | None = None,
+        partition_by: str | None = None,
+        parts: list | None = None,
+    ) -> int:
+        """The one parquet write path: data files into a fresh ``snap-XXXXX``
+        dir, then the manifest entry. With ``parts`` the snapshot replaces
+        those values of ``partition_by``, written by one task per listed
+        partition."""
         manifest = self._load_manifest(table)
         next_id = self._next_id(table, manifest)
         rel = f"snap-{next_id:05d}"
-        # cluster rows by partition before the write: without this every task
-        # opens a file per partition value (tasks x partitions small files);
-        # with it the commit is ~one file per touched partition
-        (
-            df.repartition(max(1, len(parts)), F.col(part_col))
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(os.path.join(self._tdir(table), rel))
-        )
-        manifest["snapshots"].append(
-            {
-                "id": next_id,
-                "dir": rel,
-                "wave": wave,
-                "mode": mode,
-                "part_col": part_col,
-                "parts": sorted(parts),
-            }
-        )
+        entry = {"id": next_id, "dir": rel, "wave": wave, "mode": mode}
+        if partition_by:
+            from pyspark.sql import functions as F  # noqa: PLC0415
+
+            # cluster rows by the partition column first: otherwise every
+            # write task opens a file per partition value it sees
+            # (tasks x partitions tiny files — measured 17x slowdown of the
+            # wave-0 seed_state commit + every later read of it)
+            n = [] if parts is None else [max(1, len(parts))]
+            df = df.repartition(*n, F.col(partition_by))
+            entry["part_col"] = partition_by
+            if parts is not None:
+                entry["parts"] = sorted(parts)
+        writer = df.write.mode("overwrite")
+        if compression:
+            writer = writer.option("compression", compression)
+        for k, v in (options or {}).items():
+            writer = writer.option(k, v)
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(os.path.join(self._tdir(table), rel))
+        manifest["snapshots"].append(entry)
         self._store_manifest(table, manifest)
         return next_id
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.bloom import BloomSidecar, build_sidecar, merge_sidecars
+from ..operators.dedup import content_dedup
 from ..operators.fetch import fetch_archive, to_archive_results
 from ..operators.frontier import (
     N_BUCKETS,
@@ -104,8 +105,6 @@ class CrawlConfig:
     # fault injection (tests only): raise inside the fetch UDF during this
     # wave — simulates a mid-wave task death between blob append and commit
     crash_during_fetch_wave: int | None = None
-    dedup_content: bool = True  # A2: content-addressed image dedup before sink
-    writeback: bool = True  # J3/K4: only-fill-empty MERGE into seed_state
     strict_urls: bool = False  # P1 via exact ipaddress UDF (reference parity)
     allow_sheets: tuple = ()
     block_sheets: tuple = ()
@@ -177,13 +176,12 @@ def run_crawl(
             f_frontier = boot.submit(
                 io.commit, frontier, "frontier", 0, "overwrite"
             )
-            if config.writeback:
-                # bucket-partitioned base so later replace-commits and
-                # bucket-filtered reads prune at the directory level
-                boot.submit(
-                    io.commit, init_seed_state(seed), "seed_state", 0,
-                    "overwrite", None, None, "wb_bucket",
-                ).result()
+            # bucket-partitioned base so later replace-commits and
+            # bucket-filtered reads prune at the directory level
+            boot.submit(
+                io.commit, init_seed_state(seed), "seed_state", 0,
+                "overwrite", None, None, "wb_bucket",
+            ).result()
             f_frontier.result()
     else:
         frontier = io.read(spark, "frontier")
@@ -366,28 +364,13 @@ def run_crawl(
         def t_images():
             # The images snapshot is a ZERO-COPY REF into the staged
             # fetch_out files (Iceberg merge-on-read shape): the commit
-            # writes only metadata + a delete-key sidecar. Dedup is decided
-            # entirely on a skinny (url_hash, sha256) projection: per-wave
-            # winner per content hash (A1), then anti-join against the
-            # skinny cross-wave `sha_seen` table (A2). sha_seen is not
-            # bucketed, so the anti-join reads all of it.
-            drops = None
-            kept_shas = None
-            fresh = None
-            if config.dedup_content:
-                keys = fetched.filter(F.col("status") == "success").select(
-                    # url_hash is the unique per-row key this wave (frontier
-                    # deduped); image_id is NOT unique — two URLs, same payload
-                    F.col("url_hash").alias("_uid"),
-                    F.col("hash").alias("sha256"),
-                )
-                sha_seen = io.read_or_empty(spark, "sha_seen", "sha256 string")
-                winners = keys.groupBy("sha256").agg(F.min("_uid").alias("_uid"))
-                fresh = winners.join(sha_seen, "sha256", "left_anti").localCheckpoint()
-                drops = keys.join(fresh.select("_uid"), "_uid", "left_anti").select(
-                    F.col("_uid").alias("url_hash")
-                ).coalesce(1)
-                kept_shas = fresh.select("sha256")
+            # writes only metadata + a delete-key sidecar. Which rows the
+            # sidecar deletes is content_dedup's A1+A2 decision; sha_seen is
+            # not bucketed, so its anti-join reads all of it.
+            kept, drops = content_dedup(
+                fetched.filter(F.col("status") == "success").withColumnRenamed("hash", "sha256"),
+                io.read_or_empty(spark, "sha_seen", "sha256 string"),
+            )
             ids = {}
             ids["images"] = io.commit_ref(
                 "images",
@@ -402,17 +385,15 @@ def run_crawl(
                     "hash AS sha256", "thumb", f"CAST({wave} AS INT) AS wave",
                 ],
                 where="status = 'success'",
-                anti_keys=drops,
+                anti_keys=drops.coalesce(1),
                 anti_key_col="url_hash",
             )
-            if config.dedup_content:
-                # the content hashes this wave actually kept (skinny)
-                ids["sha_seen"] = io.commit(
-                    kept_shas.coalesce(STATE_COMMIT_PARTITIONS), "sha_seen", wave,
-                    options=_state_opts,
-                )
-            if fresh is not None:
-                fresh.unpersist()
+            # the content hashes this wave actually kept (skinny)
+            ids["sha_seen"] = io.commit(
+                kept.select("sha256").coalesce(STATE_COMMIT_PARTITIONS), "sha_seen", wave,
+                options=_state_opts,
+            )
+            kept.unpersist()
             return ids
 
         def t_results():
@@ -444,8 +425,6 @@ def run_crawl(
             return cand.count(), adm_row, fs
 
         def _commit_writeback():
-            if not config.writeback:
-                return None
             # J3/K4: MERGE this wave's results into the seed-state table
             # (only-fill-empty cells; status always) — Iceberg MERGE INTO on a
             # real deployment. The commit is partition-replace: only the row

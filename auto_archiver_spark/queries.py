@@ -39,6 +39,7 @@ from .functions.hashing import (
     shingle_minhash_arrow,
 )
 from .operators.dedup import (
+    first_per_key,
     minhash_lsh_candidates,
     simhash60,
     simhash_buckets,
@@ -217,18 +218,10 @@ def q_url_best_quality(spark, sf):
 
 
 def q_dedup_first_per_key(spark, sf):
-    """A1: first line per order in line-number order.
-
-    r8: the sort-window (row_number over orderBy) shipped every lineitem row
-    through the exchange and sorted it; min(struct(...)) computes the same
-    winner with MAP-SIDE partial aggregation (guide §2.3 "aggregate before
-    you shuffle") — the shuffle carries one partial row per (task, orderkey)
-    and the sort disappears. struct ordering is lexicographic by field, so
-    min(struct(l_linenumber, l_partkey, l_quantity)) is exactly the
-    row_number()=1 row under (l_linenumber asc, l_partkey asc, l_quantity
-    asc); the tie-break covers every output column, so output is identical.
-    _fan on the GROUP key: the groupBy then reuses the exchange and the
-    hash-aggregate runs on every core instead of per row group."""
+    """A1: first line per order in line-number order (``first_per_key``;
+    l_partkey, l_quantity break ties). _fan on the GROUP key: the groupBy
+    then reuses the exchange and the hash-aggregate runs on every core
+    instead of per row group."""
     li = _fan(
         spark,
         load(spark, sf, "lineitem").select(
@@ -236,32 +229,18 @@ def q_dedup_first_per_key(spark, sf):
         ),
         "l_orderkey",
     )
-    return (
-        li.groupBy("l_orderkey")
-        .agg(F.min(F.struct("l_linenumber", "l_partkey", "l_quantity")).alias("_b"))
-        .select(
-            "l_orderkey",
-            F.col("_b.l_partkey").alias("l_partkey"),
-            F.col("_b.l_quantity").alias("l_quantity"),
-        )
+    return first_per_key(li, ["l_orderkey"], ["l_linenumber"]).select(
+        "l_orderkey", "l_partkey", "l_quantity"
     )
 
 
 def q_most_complete(spark, sf):
-    """A5 choose_most_complete: argmax order per customer by (price, key).
-
-    r8: window row_number -> max(struct(...)) groupBy (map-side partial agg,
-    no sort — guide §2.3); both sort keys are desc, so the lexicographic
-    struct max IS the row_number()=1 row, and the keys cover the output."""
-    o = load(spark, sf, "orders")
-    return (
-        o.groupBy("o_custkey")
-        .agg(F.max(F.struct("o_totalprice", "o_orderkey")).alias("_b"))
-        .select(
-            "o_custkey",
-            F.col("_b.o_orderkey").alias("best_order"),
-            F.col("_b.o_totalprice").alias("best_price"),
-        )
+    """A5 choose_most_complete: argmax order per customer by (price, key)."""
+    o = load(spark, sf, "orders").select("o_custkey", "o_totalprice", "o_orderkey")
+    return first_per_key(o, ["o_custkey"], ["o_totalprice", "o_orderkey"], desc=True).select(
+        "o_custkey",
+        F.col("o_orderkey").alias("best_order"),
+        F.col("o_totalprice").alias("best_price"),
     )
 
 
@@ -321,30 +300,19 @@ def q_metadata_merge(spark, sf):
 
 
 def q_merge_status(spark, sf):
-    """A4 status-merge rule: latest status wins per key.
-
-    r8: window -> max(struct(ts, event_id, event_type)) (map-side partial
-    agg, no sort). event_id is unique, so the comparison never reaches the
-    payload field — the struct max is exactly the (ts desc, event_id desc)
-    row_number()=1 row."""
-    ev = load(spark, sf, "events")
-    return (
-        ev.groupBy("user_id")
-        .agg(F.max(F.struct("ts", "event_id", "event_type")).alias("_b"))
-        .select("user_id", F.col("_b.event_type").alias("last_status"))
+    """A4 status-merge rule: latest status (by ts, then event_id) wins per key."""
+    ev = load(spark, sf, "events").select("user_id", "ts", "event_id", "event_type")
+    return first_per_key(ev, ["user_id"], ["ts", "event_id"], desc=True).select(
+        "user_id", F.col("event_type").alias("last_status")
     )
 
 
 def q_top_variant(spark, sf):
     """O3 best-variant: per order, the part with max line revenue."""
-    li = load(spark, sf, "lineitem")
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-    # r8: argmax via max(struct(rev desc-key, l_partkey desc-key)) — map-side
-    # partial agg instead of a sort window (guide §2.3); identical winner
-    return (
-        li.groupBy("l_orderkey")
-        .agg(F.max(F.struct(rev.alias("rev"), F.col("l_partkey"))).alias("_b"))
-        .select("l_orderkey", F.col("_b.l_partkey").alias("best_part"))
+    li = load(spark, sf, "lineitem").select("l_orderkey", rev.alias("rev"), "l_partkey")
+    return first_per_key(li, ["l_orderkey"], ["rev", "l_partkey"], desc=True).select(
+        "l_orderkey", F.col("l_partkey").alias("best_part")
     )
 
 

@@ -4,15 +4,18 @@
   ReadSchema narrower than the table),
 * the politeness dimension joins as BroadcastHashJoin (J5 — never shuffles
   the frontier),
-* content dedup of the payload table never exchanges the bytes column,
+* the crawl's content dedup never exchanges a payload column and never
+  broadcasts the committed ``sha_seen`` corpus,
 * the URL canonicalization chain stays inside WholeStageCodegen (no Python
   in the hot path).
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from auto_archiver_spark.operators.dedup import dedup_content_keep_first
+from auto_archiver_spark.operators.dedup import content_dedup, content_winners
 from auto_archiver_spark.operators.frontier import canonicalize, politeness_admission, seed_filter
 from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df, images_df
 
@@ -44,19 +47,56 @@ def test_policy_join_is_broadcast(spark):
     assert plan.count("Exchange hashpartitioning") <= 1  # only the host window
 
 
-def test_content_dedup_never_shuffles_bytes(spark):
-    imgs = images_df(spark, 60, partitions=4).withColumn(
-        "sha256", F.sha2(F.col("bytes"), 256)
-    )
-    deduped = dedup_content_keep_first(imgs, key="sha256", id_col="image_id")
-    plan = _plan(deduped)
-    # the only hash exchange is the skinny winners aggregation; the payload
-    # side reaches the join through BroadcastExchange
-    assert "BroadcastExchange" in plan
-    sections = [
-        s for s in plan.split("Exchange hashpartitioning") if "bytes" in s.split("\n")[0]
+def _content_dedup_plans(rows, sha_seen, mode="formatted") -> list[str]:
+    """Plans of the crawl's A2 decision: its winners and its delete keys."""
+    _, drops = content_dedup(rows, sha_seen)
+    return [_plan(content_winners(rows, sha_seen), mode), _plan(drops, mode)]
+
+
+def _subtrees(plan: str, op: str) -> list[str]:
+    """The subtree below every ``op`` node of a simple-mode plan: the lines
+    after it whose operator name sits deeper in the indentation."""
+    lines = plan.splitlines()
+    depth = [re.search(r"[A-Za-z]", line).start() if line.strip() else 0 for line in lines]
+    out = []
+    for i, line in enumerate(lines):
+        if re.search(rf"(^|[\s)]){op}\b", line):
+            j = i + 1
+            while j < len(lines) and depth[j] > depth[i]:
+                j += 1
+            out.append("\n".join(lines[i + 1 : j]))
+    return out
+
+
+def _hash_exchange_inputs(plan: str) -> list[set[str]]:
+    """Input column names of every hash Exchange in a formatted plan."""
+    return [
+        set(re.findall(r"(\w+)#\d+", block.split("Input")[1].split("\n")[0]))
+        for block in plan.split("\n\n")
+        if re.match(r"\(\d+\) Exchange\b", block.strip()) and "hashpartitioning" in block
     ]
-    assert not sections, "bytes column crossed a hash exchange"
+
+
+def _payload_rows(spark, n, partitions):
+    return (
+        images_df(spark, n, partitions=partitions)
+        .withColumn("sha256", F.sha2(F.col("bytes"), 256))
+        .withColumn("url_hash", F.xxhash64("image_id"))
+    )
+
+
+def test_content_dedup_never_shuffles_bytes(spark):
+    """The crawl's A2 decision reads payload rows but shuffles only the
+    skinny (sha256, url_hash) keys: the winner aggregation is the hash
+    exchange, and no payload column is an input of any hash exchange."""
+    rows = _payload_rows(spark, 60, 4)
+    sha_seen = spark.createDataFrame([], "sha256 string")
+    plans = _content_dedup_plans(rows, sha_seen)
+    inputs = [cols for plan in plans for cols in _hash_exchange_inputs(plan)]
+    assert inputs, "the winner aggregation has no hash exchange"
+    payload = {"bytes", "image_id", "caption", "phash", "w", "h", "fmt"}
+    assert not any(cols & payload for cols in inputs), inputs
+    assert "HashAggregate" in plans[0] and "min(url_hash" in plans[0]
 
 
 def test_canonicalize_is_whole_stage_codegen(spark):
@@ -67,38 +107,30 @@ def test_canonicalize_is_whole_stage_codegen(spark):
 
 
 def test_prior_dedup_has_no_corpus_broadcast(spark, tmp_path):
-    """The cross-wave content dedup must NOT broadcast the committed corpus:
-    the only BroadcastExchange allowed builds from the wave-sized winner set
-    (round-1 scale-killer: broadcast of every sha256 ever committed)."""
+    """The cross-wave content dedup must NOT broadcast the committed corpus
+    (round-1 scale-killer: a broadcast hint on every sha256 ever committed).
+    ``sha_seen`` grows without bound, so only the size rule may broadcast
+    it: with every table over the broadcast threshold, no BroadcastExchange
+    may build from a bare ``sha_seen`` scan (the only parquet scan here);
+    the committed table enters the plan only through the anti-join."""
     from auto_archiver_spark.plans.tableio import TableIO
 
     io = TableIO(str(tmp_path))
-    imgs = images_df(spark, 40, partitions=2).withColumn(
-        "sha256", F.sha2(F.col("bytes"), 256)
-    ).withColumn("_uid", F.xxhash64("image_id"))
-    # simulate two prior committed waves of seen hashes (the skinny table)
-    io.commit(imgs.limit(10).select("sha256"), "sha_seen", 0)
-    io.commit(imgs.limit(20).select("sha256"), "sha_seen", 1)
-
-    sha_seen = io.read(spark, "sha_seen")
-    deduped = dedup_content_keep_first(imgs, key="sha256", id_col="_uid")
-    fresh = (
-        deduped.select("sha256", "_uid").join(sha_seen, "sha256", "left_anti").select("_uid")
-    )
-    out = deduped.join(F.broadcast(fresh), "_uid", "left_semi")
-    plan = _plan(out)
-    # every BroadcastExchange subtree must be wave-derived (contains the
-    # anti-join), never a bare scan of the committed sha_seen snapshots
-    for section in plan.split("BroadcastExchange")[1:]:
-        head = section.split("\n\n")[0]
-        assert "sha_seen" not in head.split("LeftAnti")[0] or "LeftAnti" in head
-    # and the committed table is only ever the *probe* side of an anti-join
-    assert "LeftAnti" in plan
-    # bytes never cross a hash exchange here either
-    sections = [
-        s for s in plan.split("Exchange hashpartitioning") if "bytes" in s.split("\n")[0]
-    ]
-    assert not sections, "bytes column crossed a hash exchange"
+    rows = _payload_rows(spark, 40, 2)
+    # two prior committed waves of seen hashes (the skinny table)
+    io.commit(rows.limit(10).select("sha256"), "sha_seen", 0)
+    io.commit(rows.limit(20).select("sha256"), "sha_seen", 1)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        plans = _content_dedup_plans(rows, io.read(spark, "sha_seen"), "simple")
+    finally:
+        spark.conf.set(key, old)
+    assert "LeftAnti" in plans[0] and "FileScan parquet [sha256" in plans[0]
+    for plan in plans:
+        for sub in _subtrees(plan, "BroadcastExchange"):
+            assert "FileScan" not in sub or "Join" in sub, sub
 
 
 def test_bloom_probe_is_bucket_aligned_no_driver_bitmaps(spark):

@@ -1,13 +1,16 @@
-"""Near-dup sketch operators: MinHash-LSH (planted duplicates must surface),
-SimHash block buckets, phash near-dup pairs on the image fixture."""
+"""Dedup operators: MinHash-LSH (planted duplicates must surface), SimHash
+block buckets, phash near-dup pairs and exact content dedup on the image
+fixture, and the first-row-per-key helper against its window form."""
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from auto_archiver_spark.functions.hashing import shingle_minhash_arrow
 from auto_archiver_spark.operators import dedup
 from auto_archiver_spark.operators.dedup import (
-    dedup_exact_content,
+    content_dedup,
+    first_per_key,
     minhash_dedup,
     minhash_lsh_candidates,
     phash_near_dup_pairs,
@@ -109,12 +112,60 @@ def test_phash_near_dup_pairs_on_fixture(spark):
 
 
 def test_exact_content_dedup_on_fixture(spark):
-    imgs = images_df(spark, 130, partitions=4)
-    deduped = dedup_exact_content(imgs)
-    assert deduped.groupBy("sha256").count().filter("count > 1").isEmpty()
+    """The crawl's A1+A2 decision (``content_dedup``): one survivor per
+    sha256, the least url_hash; every other row is a delete key."""
+    imgs = images_df(spark, 130, partitions=4).select(
+        # url_hash in image order, so the least one is the first occurrence
+        F.substring("image_id", 5, 8).cast("long").alias("url_hash"),
+        F.sha2(F.col("bytes"), 256).alias("sha256"),
+        "image_id",
+        "bytes",
+    )
+    kept, drops = content_dedup(imgs, spark.createDataFrame([], "sha256 string"))
+    kept_ids = {r.url_hash for r in kept.collect()}
+    drop_ids = {r.url_hash for r in drops.collect()}
+    n_sha = imgs.select("sha256").distinct().count()
+    assert len(kept_ids) == n_sha and not kept_ids & drop_ids
+    assert kept_ids | drop_ids == set(range(130))
     # the exact duplicate img_96 is dropped, its source 95 kept
-    ids = {r.image_id for r in deduped.select("image_id").collect()}
-    assert "img_00000095" in ids and "img_00000096" not in ids
+    assert 95 in kept_ids and 96 in drop_ids
+
+
+def _window_first(df, keys, order, desc):
+    """Reference: ``row_number() = 1`` per key, ordered by ``order`` and
+    then the remaining columns (the helper's tie-break), all one way."""
+    rest = [c for c in df.columns if c not in keys and c not in order]
+    w = Window.partitionBy(*keys).orderBy(
+        *[F.col(c).desc() if desc else F.col(c).asc() for c in order + rest]
+    )
+    return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+
+
+@pytest.mark.parametrize("desc", [False, True])
+def test_first_per_key_matches_row_number_window(spark, desc):
+    df = spark.createDataFrame(
+        [
+            ("x", 1, 5, "a", 1),
+            ("y", 1, 5, "a", 0),  # tie on o1, o2 decides
+            ("z", 1, None, "a", 9),  # null o1: first asc, last desc
+            ("p", 1, 3, "b", 2),
+            ("q", 1, 3, "b", 2),  # tie on (o1, o2), v decides
+            ("r", 2, 7, "a", 1),
+            ("s", 2, None, "a", None),
+            ("t", 2, 8, "a", None),  # null o2 under a tied o1
+            ("u", 2, 8, "a", 4),
+            ("w", 2, 8, "b", 4),
+        ],
+        # key and order columns interleaved with the payload column
+        "v string, k1 int, o1 int, k2 string, o2 int",
+    )
+    keys, order = ["k1", "k2"], ["o1", "o2"]
+    got = first_per_key(df, keys, order, desc=desc)
+    want = _window_first(df, keys, order, desc)
+    assert got.columns == df.columns
+    assert [f.dataType for f in got.schema] == [f.dataType for f in df.schema]
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert "Window" not in got._jdf.queryExecution().executedPlan().toString()
 
 
 def test_ngram_jaccard_shuffle_path_matches_broadcast(docs, monkeypatch):

@@ -12,7 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from auto_archiver_spark import queries as Q  # noqa: E402
-from auto_archiver_spark.operators.dedup import dedup_content_keep_first  # noqa: E402
+from auto_archiver_spark.operators.dedup import content_dedup, content_winners  # noqa: E402
 from auto_archiver_spark.operators.frontier import (  # noqa: E402
     anti_join_seen,
     canonicalize,
@@ -54,9 +54,15 @@ def main():
     sections.append(("salted fetch repartition (host-skew kill)",
                      plan_of(salted_fetch_repartition(cand, 16))))
 
-    imgs = images_df(spark, 40, partitions=2).withColumn("sha256", F.sha2(F.col("bytes"), 256))
-    sections.append(("payload content dedup (A2, broadcast semi-join — bytes never shuffle)",
-                     plan_of(dedup_content_keep_first(imgs, "sha256", "image_id"))))
+    imgs = images_df(spark, 40, partitions=2).withColumn(
+        "sha256", F.sha2(F.col("bytes"), 256)).withColumn("url_hash", F.xxhash64("image_id"))
+    sha_seen = spark.createDataFrame([], "sha256 string")
+    _, drops = content_dedup(imgs, sha_seen)
+    sections.append(("payload content dedup (A1+A2 winners: skinny HashAggregate "
+                     "+ anti-join vs sha_seen — bytes never shuffle)",
+                     plan_of(content_winners(imgs.select("url_hash", "sha256"), sha_seen))))
+    sections.append(("payload content dedup (A2 delete keys vs the materialized winners)",
+                     plan_of(drops)))
 
     for name in ("pricing_summary", "url_canonicalize", "frontier_admission",
                  "cosine_topk", "minhash_lsh", "media_explode", "twitter_parse",
