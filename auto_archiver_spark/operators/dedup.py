@@ -52,16 +52,44 @@ def first_per_key(
     return best.select(*[c if c in keys else F.col(f"_b.{c}").alias(c) for c in df.columns])
 
 
+# Spark's size estimate of a broadcast (sha256 hex string) row: 8 bytes of
+# row overhead + 8 of offset/length + 64 chars
+SHA_ROW_BYTES = 80
+
+
+def _broadcast_threshold(spark) -> int:
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def broadcast_fits(spark, df: DataFrame, row_bytes: int) -> bool:
+    """Whether ``df``, at ``row_bytes`` a row, fits under
+    ``spark.sql.autoBroadcastJoinThreshold`` (counts ``df``; callers hold it
+    materialized or staged). A threshold of -1 never fits."""
+    threshold = _broadcast_threshold(spark)
+    return threshold >= 0 and df.count() * row_bytes <= threshold
+
+
 def content_winners(rows: DataFrame, sha_seen: DataFrame) -> DataFrame:
     """A1+A2 winners (sha256, url_hash) of one wave's payload rows: per
     sha256 the least url_hash (``url_hash`` is unique per row; a plain
     ``min``, so the aggregate stays a HashAggregate and no payload column
     of ``rows`` reaches its exchange), minus the sha256s the cross-wave
-    ``sha_seen`` table already holds (an anti-join). ``sha_seen`` gets no
-    broadcast hint: it is broadcast only while it is under
-    ``spark.sql.autoBroadcastJoinThreshold``."""
+    ``sha_seen`` table already holds.
+
+    ``sha_seen`` grows with the corpus. While Spark's size estimate of it
+    is under the broadcast threshold, the size rule broadcasts it into a
+    plain anti-join. Over it, and while the wave's rows (which bound its
+    winners) fit the threshold, ``sha_seen`` streams through a semi-join
+    against the broadcast winners and the winners anti-join those hits,
+    which are no more than the winners: it is neither broadcast nor
+    shuffled. With both over, the plain anti-join stays and AQE picks it."""
     winners = rows.groupBy("sha256").agg(F.min("url_hash").alias("url_hash"))
-    return winners.join(sha_seen, "sha256", "left_anti")
+    spark = rows.sparkSession
+    seen_bytes = sha_seen._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if seen_bytes <= _broadcast_threshold(spark) or not broadcast_fits(spark, rows, SHA_ROW_BYTES):
+        return winners.join(sha_seen, "sha256", "left_anti")
+    hits = sha_seen.join(F.broadcast(winners.select("sha256")), "sha256", "left_semi")
+    return winners.join(F.broadcast(hits), "sha256", "left_anti")
 
 
 def content_dedup(rows: DataFrame, sha_seen: DataFrame) -> tuple[DataFrame, DataFrame]:

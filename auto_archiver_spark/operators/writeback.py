@@ -10,11 +10,10 @@ chars (gworksheet.py:105, O6).
 
 Spark mapping: ``MERGE INTO seed USING results ON key WHEN MATCHED THEN
 UPDATE SET col = CASE WHEN target.col = '' THEN source.col ELSE target.col
-END`` — on Iceberg this is a row-level MERGE commit; on the TableIO fallback
-the merged seed snapshot is rewritten (same contract, coarser granularity).
-The join is an equi-join on (sheet, row_idx) — broadcast-able when the wave's
-results are small relative to the seed, hash-join otherwise; either way the
-seed side never needs more than one shuffle.
+END`` (``writeback_merge``). The crawl never rewrites the seed table: every
+wave's results are already committed to ``archive_results``, so the seed
+state is a fold of that log over the bootstrap snapshot (``seed_state``),
+computed only when a reader asks — one aggregate per key, then one merge.
 """
 
 from __future__ import annotations
@@ -66,39 +65,24 @@ def writeback_merge(
 
 STATE_COLS = ["date", "title", "hash", "pdq"]  # gsheet result cells we model
 
-# row-bucket partitioning of the seed-state table: each wave rewrites only
-# the buckets its results touch (TableIO.commit_replace), so the writeback
-# commit is O(wave), not O(seed) — at 10^10 seed rows a full-table rewrite
-# per wave would dominate the whole job (round-2 VERDICT #5). Iceberg analog:
-# MERGE INTO over a bucket(sheet,row_idx)-partitioned table.
-WB_BUCKETS = 64
-
-
-def wb_bucket_expr():
-    """Deterministic row bucket from the writeback key (sheet, row_idx)."""
-    return F.pmod(F.xxhash64("sheet", "row_idx"), F.lit(WB_BUCKETS)).cast("int")
-
 
 def init_seed_state(seed: DataFrame) -> DataFrame:
     """Wave-0 seed-state: the feeder columns plus blank result cells
-    (a fresh worksheet has the header but empty archive columns), bucketed
-    for partition-replace writeback."""
+    (a fresh worksheet has the header but empty archive columns)."""
     out = seed
     for c in STATE_COLS:
         out = out.withColumn(c, F.lit("").cast("string"))
-    return out.withColumn("wb_bucket", wb_bucket_expr())
+    return out
 
 
-def wave_writeback(seed_state: DataFrame, results: DataFrame) -> DataFrame:
-    """Apply one wave's archive results to the seed-state table.
-
-    Mirrors the reference's done() cell batch (gsheet_feeder_db.py:132-198):
-    status always updated; date/title/hash/pdq only fill blanks
-    (A8 pdq CSV cell: gsheet_feeder_db.py:164-171).
-    """
-    enriched = results.select(
+def done_cells(results: DataFrame) -> DataFrame:
+    """The done() cell batch of each archive_results row, keyed by
+    (sheet, row_idx, wave): status, date, title, first-media hash and the
+    pdq-hash CSV (A8, gsheet_feeder_db.py:164-171)."""
+    return results.select(
         "sheet",
         "row_idx",
+        "wave",
         "status",
         F.date_format("processed_at", "yyyy-MM-dd'T'HH:mm:ssXXX").alias("date"),
         "title",
@@ -107,9 +91,39 @@ def wave_writeback(seed_state: DataFrame, results: DataFrame) -> DataFrame:
             F.transform(F.col("media"), lambda m: m["phash"].cast("string")), ","
         ).alias("pdq"),
     )
+
+
+def seed_state(base: DataFrame, results: DataFrame) -> DataFrame:
+    """The seed-state table after every wave of ``results`` (archive_results
+    rows, any number of waves) was merged into ``base`` in wave order.
+
+    The reference's done() cell batch (gsheet_feeder_db.py:132-198): status
+    always updated; date/title/hash/pdq only fill blanks. Applying
+    ``writeback_merge`` wave by wave leaves, per key: the latest non-null
+    status; per fill cell, the first non-blank value (a blank cell keeps
+    accepting non-null values), else the last non-null blank one. So the
+    waves fold into one row per key — each cell a ``min(struct(order,
+    value))``, null where the value is null — and one merge applies that
+    row. Values are cut to ``CELL_CAP - 1`` chars before they are judged
+    blank, as the merge cuts them."""
+    cells = done_cells(results)
+    wave = F.col("wave")
+    picks = []
+    for c in ["status", *STATE_COLS]:
+        v = F.substring(F.col(c).cast("string"), 1, CELL_CAP - 1)
+        if c == "status":
+            order = [-wave]  # latest wave first
+        else:
+            # non-blank values first, earliest wave first; then blank ones,
+            # latest wave first
+            blank = F.trim(v) == ""
+            order = [blank, F.when(blank, -wave).otherwise(wave)]
+        best = F.min(F.when(v.isNotNull(), F.struct(*order, v.alias("v"))))
+        picks.append(best["v"].alias(c))
+    folded = cells.groupBy("sheet", "row_idx").agg(*picks)
     return writeback_merge(
-        seed_state,
-        enriched,
+        base,
+        folded,
         key_cols=["sheet", "row_idx"],
         fill_cols=STATE_COLS,
         overwrite_cols=["status"],

@@ -1,7 +1,7 @@
 """TableIO — snapshot/commit/resume table layer (Iceberg-semantics fallback).
 
 The sandbox has no Iceberg runtime jar (no network), so this implements the
-same *contract* over partitioned parquet + JSON manifests, behind one small
+same *contract* over parquet snapshot dirs + JSON manifests, behind one small
 interface (SURVEY.md §7 risk item): atomic per-wave commits, snapshot lineage,
 read-at-latest, and checkpoint-resume. On a real cluster the calls map 1:1 to
 Iceberg: ``commit(append)`` -> ``df.writeTo(t).append()`` inside a single
@@ -19,6 +19,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -89,36 +90,30 @@ class TableIO:
         ]
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
+        """Every live snapshot's rows. Roots written before seed_state became
+        a fold also hold partition-replace snapshots of it, whose rows were
+        meant to shadow older ones; reading those would repeat keys, so it
+        raises — ``plans.wave.read_seed_state`` reads such a root."""
         snaps = self._live_snapshots(table)
         if not snaps:
             raise FileNotFoundError(f"table {table} has no committed snapshots")
-        if all(
-            "ref" not in s and s.get("fmt") != "csv" and s.get("mode") != "replace"
-            for s in snaps
-        ):
+        if any("parts" in s for s in snaps):
+            raise ValueError(
+                f"table {table} holds partition-replace snapshots; "
+                "read seed_state with plans.wave.read_seed_state"
+            )
+        if all("ref" not in s and s.get("fmt") != "csv" for s in snaps):
             # fast path: one multi-dir parquet scan
             return spark.read.parquet(
                 *[os.path.join(self._tdir(table), s["dir"]) for s in snaps]
             )
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        # newest-wins partition shadowing: walk snapshots newest-first; each
-        # snapshot contributes only partitions no NEWER replace-snapshot
-        # already covers (the partition filter prunes at directory level for
-        # partitioned snapshot dirs)
-        out = None
-        shadowed: dict[str, set] = {}
-        for s in reversed(snaps):
-            df = self._snapshot_df(spark, table, s)
-            for col, parts in shadowed.items():
-                df = df.filter(~F.col(col).isin(sorted(parts)))
-            if s.get("mode") == "replace":
-                shadowed.setdefault(s["part_col"], set()).update(s["parts"])
-            # allowMissingColumns: images ref snapshots written while the
-            # fetch staging schema still had an inline `bytes` column select
-            # it; newer ones do not (it reads as null for their rows)
-            out = df if out is None else out.unionByName(df, allowMissingColumns=True)
-        return out
+        # allowMissingColumns: images ref snapshots written while the fetch
+        # staging schema still had an inline `bytes` column select it; newer
+        # ones do not (it reads as null for their rows)
+        return reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [self._snapshot_df(spark, table, s) for s in snaps],
+        )
 
     def read_or_empty(self, spark: SparkSession, table: str, schema: str) -> DataFrame:
         if self.exists(table):
@@ -139,76 +134,26 @@ class TableIO:
         mode: str = "append",
         compression: str | None = None,
         options: dict[str, str] | None = None,
-        partition_by: str | None = None,
     ) -> int:
         """Write df as a new snapshot of ``table``; returns the snapshot id.
+        Data files land in a fresh ``snap-XXXXX`` dir; the manifest entry
+        then makes them visible.
 
         ``compression`` overrides the session parquet codec — tables of
         already-compressed binaries (PNG thumbnails) can pass "uncompressed"
         (zstd/snappy burn CPU on incompressible data for ~0% gain).
         ``options`` are extra per-write parquet options (e.g. a small
         ``parquet.block.size`` for the fetch staging — see plans/wave.py)."""
-        return self._write_snapshot(df, table, wave, mode, compression, options, partition_by)
-
-    def commit_replace(
-        self,
-        df: DataFrame,
-        table: str,
-        wave: int,
-        part_col: str,
-        parts: list,
-        mode: str = "replace",
-    ) -> int:
-        """Partition-replace commit (Iceberg ``REPLACE WHERE`` /
-        dynamic-partition-overwrite shape): ``df`` holds ONLY the listed
-        partitions' rows; readers see them shadow the same partitions of
-        every earlier live snapshot. The wave writeback uses this to commit
-        O(touched-partitions) files per wave instead of rewriting the whole
-        seed table (round-2 VERDICT #5). Data files land under
-        ``part_col=value`` subdirs so a partition filter prunes at the
-        directory level."""
-        return self._write_snapshot(df, table, wave, mode, partition_by=part_col, parts=parts)
-
-    def _write_snapshot(
-        self,
-        df: DataFrame,
-        table: str,
-        wave: int,
-        mode: str,
-        compression: str | None = None,
-        options: dict[str, str] | None = None,
-        partition_by: str | None = None,
-        parts: list | None = None,
-    ) -> int:
-        """The one parquet write path: data files into a fresh ``snap-XXXXX``
-        dir, then the manifest entry. With ``parts`` the snapshot replaces
-        those values of ``partition_by``, written by one task per listed
-        partition."""
         manifest = self._load_manifest(table)
         next_id = self._next_id(table, manifest)
         rel = f"snap-{next_id:05d}"
-        entry = {"id": next_id, "dir": rel, "wave": wave, "mode": mode}
-        if partition_by:
-            from pyspark.sql import functions as F  # noqa: PLC0415
-
-            # cluster rows by the partition column first: otherwise every
-            # write task opens a file per partition value it sees
-            # (tasks x partitions tiny files — measured 17x slowdown of the
-            # wave-0 seed_state commit + every later read of it)
-            n = [] if parts is None else [max(1, len(parts))]
-            df = df.repartition(*n, F.col(partition_by))
-            entry["part_col"] = partition_by
-            if parts is not None:
-                entry["parts"] = sorted(parts)
         writer = df.write.mode("overwrite")
         if compression:
             writer = writer.option("compression", compression)
         for k, v in (options or {}).items():
             writer = writer.option(k, v)
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
         writer.parquet(os.path.join(self._tdir(table), rel))
-        manifest["snapshots"].append(entry)
+        manifest["snapshots"].append({"id": next_id, "dir": rel, "wave": wave, "mode": mode})
         self._store_manifest(table, manifest)
         return next_id
 

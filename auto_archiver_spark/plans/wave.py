@@ -13,8 +13,12 @@ One wave = one declarative DataFrame plan (SURVEY.md §3 "Spark lifecycle"):
          sidecar, plans/blobs.py) -> skinny refs staged ONCE (fetch_out)
       -> commits: images (zero-copy ref into fetch_out + dedup delete keys —
          merge-on-read), archive_results append, url_seen append,
-         sha_seen delta, Bloom sidecar OR-merge, seed_state writeback,
-         per-wave metrics row (incl. per-partition lineage)
+         sha_seen delta, Bloom sidecar OR-merge, per-wave metrics row
+         (incl. per-partition lineage)
+
+The seed-state table is committed once, at bootstrap; its result cells are
+a fold of the committed archive_results log, computed by ``read_seed_state``
+when a reader asks (operators/writeback.py).
 
 State between waves lives in TableIO snapshots; the checkpoint commits the
 wave atomically across tables. Deferred rows (admission budget exhausted)
@@ -33,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.bloom import BloomSidecar, build_sidecar, merge_sidecars
-from ..operators.dedup import content_dedup
+from ..operators.dedup import broadcast_fits, content_dedup
 from ..operators.fetch import fetch_archive, to_archive_results
 from ..operators.frontier import (
     N_BUCKETS,
@@ -44,7 +48,7 @@ from ..operators.frontier import (
     salted_fetch_repartition,
     seed_filter,
 )
-from ..operators.writeback import init_seed_state, wave_writeback
+from ..operators.writeback import init_seed_state, seed_state
 
 URL_SEEN_SCHEMA = "url_hash long, url_norm string, first_seen_wave int"
 FRONTIER_COLS = ["sheet", "row_idx", "url", "status", "folder"]
@@ -145,9 +149,19 @@ def log_broadcast(spark: SparkSession, log: DataFrame):
     """``F.broadcast`` while ``log`` (materialized) fits under
     ``spark.sql.autoBroadcastJoinThreshold`` at ``EVICT_ROW_BYTES`` a row,
     else no hint, so AQE picks the join. A threshold of -1 never broadcasts."""
-    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    fits = threshold >= 0 and log.count() * EVICT_ROW_BYTES <= threshold
-    return F.broadcast if fits else (lambda df: df)
+    return F.broadcast if broadcast_fits(spark, log, EVICT_ROW_BYTES) else (lambda df: df)
+
+
+def read_seed_state(spark: SparkSession, io) -> DataFrame:
+    """The seed-state table: the bootstrap snapshot with every committed
+    archive_results row merged into its result cells (``seed_state``). The
+    base is the first live snapshot, so a root whose waves also committed
+    merged snapshots reads the same: those held nothing that archive_results
+    lacks."""
+    base = spark.read.parquet(io.live_dirs("seed_state")[0])
+    if not io.exists("archive_results"):
+        return base
+    return seed_state(base, io.read(spark, "archive_results"))
 
 
 def run_crawl(
@@ -176,11 +190,8 @@ def run_crawl(
             f_frontier = boot.submit(
                 io.commit, frontier, "frontier", 0, "overwrite"
             )
-            # bucket-partitioned base so later replace-commits and
-            # bucket-filtered reads prune at the directory level
             boot.submit(
-                io.commit, init_seed_state(seed), "seed_state", 0,
-                "overwrite", None, None, "wb_bucket",
+                io.commit, init_seed_state(seed), "seed_state", 0, "overwrite"
             ).result()
             f_frontier.result()
     else:
@@ -355,18 +366,17 @@ def run_crawl(
         # tables) and writes a DISJOINT table, so almost all of them are
         # independent. Sequentially they serialized ~10 tiny Spark jobs'
         # scheduling latency per wave (r7: ~4.5 s wall for ~4 s of cpu across
-        # images/results/stats/writeback/state segments). A thread pool runs
-        # them overlapped; the only true edges are expressed as futures:
-        #   * writeback needs the committed archive_results read-back AND the
-        #     touched-bucket set from the fetch stats;
-        #   * lineage and the link expander need the read-back too.
+        # images/results/stats/state segments). A thread pool runs them
+        # overlapped; the only true edges are expressed as futures: lineage
+        # and the link expander need the committed archive_results read-back.
 
         def t_images():
             # The images snapshot is a ZERO-COPY REF into the staged
             # fetch_out files (Iceberg merge-on-read shape): the commit
             # writes only metadata + a delete-key sidecar. Which rows the
             # sidecar deletes is content_dedup's A1+A2 decision; sha_seen is
-            # not bucketed, so its anti-join reads all of it.
+            # not bucketed, so it is scanned whole, and shuffled only when
+            # the wave's rows exceed the broadcast threshold.
             kept, drops = content_dedup(
                 fetched.filter(F.col("status") == "success").withColumnRenamed("hash", "sha256"),
                 io.read_or_empty(spark, "sha_seen", "sha256 string"),
@@ -403,19 +413,16 @@ def run_crawl(
                 wave,
                 options=_state_opts,
             )
-            # downstream consumers (writeback, lineage, expander) re-read the
+            # downstream consumers (lineage, expander) re-read the
             # committed snapshot instead of re-running the to_archive_results
             # chain over fetch_out once per job; the wave filter prunes to
             # this wave's row group via parquet predicate pushdown
             return sid, io.read(spark, "archive_results").filter(F.col("wave") == wave)
 
         def t_stats():
-            from ..operators.writeback import wb_bucket_expr  # noqa: PLC0415
-
             fs = fetched.agg(
                 F.sum((F.col("status") == "success").cast("long")).alias("ok"),
                 F.sum("total_bytes").alias("bytes"),
-                F.collect_set(wb_bucket_expr()).alias("buckets"),
             ).collect()[0]
             adm_row = adm.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -423,28 +430,6 @@ def run_crawl(
                 F.sum(F.col("robots_blocked").cast("long")).alias("robots"),
             ).collect()[0]
             return cand.count(), adm_row, fs
-
-        def _commit_writeback():
-            # J3/K4: MERGE this wave's results into the seed-state table
-            # (only-fill-empty cells; status always) — Iceberg MERGE INTO on a
-            # real deployment. The commit is partition-replace: only the row
-            # buckets this wave's results touch are re-read, merged and
-            # rewritten — O(wave) files per wave, not O(seed) (VERDICT r2 #5)
-            _, _, fs = f_stats.result()
-            _, results_rb = f_results.result()
-            touched = sorted(fs["buckets"] or [])
-            if not touched:
-                return None
-            seed_sub = io.read(spark, "seed_state").filter(
-                F.col("wb_bucket").isin(touched)
-            )
-            return io.commit_replace(
-                wave_writeback(seed_sub, results_rb),
-                "seed_state",
-                wave,
-                part_col="wb_bucket",
-                parts=touched,
-            )
 
         def _commit_url_seen():
             return io.commit(
@@ -519,7 +504,7 @@ def run_crawl(
             return io.commit(lineage.coalesce(1), "lineage", wave, options=_state_opts)
 
         # submit order puts the heavy/critical thunks first; max_workers
-        # leaves headroom so the future-blocked thunks (writeback, lineage,
+        # leaves headroom so the future-blocked thunks (lineage,
         # expander-frontier) can never deadlock behind a full pool
         pool = ThreadPoolExecutor(max_workers=10)
         try:
@@ -532,7 +517,6 @@ def run_crawl(
             }
             if config.recrawl_failed:
                 futs["url_evictions"] = pool.submit(_commit_evictions)
-            f_writeback = pool.submit(_commit_writeback)
             f_lineage = pool.submit(_commit_lineage)
             f_frontier = pool.submit(_commit_frontier)
 
@@ -540,10 +524,6 @@ def run_crawl(
             mark("results_commit")
             n_cand, adm_stats, fetch_stats = f_stats.result()
             mark("wave_stats")
-            sid = f_writeback.result()
-            if sid is not None:
-                snap_ids["seed_state"] = sid
-            mark("writeback_commit")
             snap_ids.update(f_images.result())
             snap_ids["lineage"] = f_lineage.result()
             snap_ids["frontier"], next_frontier = f_frontier.result()

@@ -4,8 +4,9 @@
   ReadSchema narrower than the table),
 * the politeness dimension joins as BroadcastHashJoin (J5 — never shuffles
   the frontier),
-* the crawl's content dedup never exchanges a payload column and never
-  broadcasts the committed ``sha_seen`` corpus,
+* the crawl's content dedup never exchanges a payload column, never
+  broadcasts the committed ``sha_seen`` corpus, and does not shuffle it
+  while the wave fits the broadcast threshold,
 * the URL canonicalization chain stays inside WholeStageCodegen (no Python
   in the hot path).
 """
@@ -42,9 +43,10 @@ def test_parquet_pushdown_and_pruning(spark):
 def test_policy_join_is_broadcast(spark):
     fr = canonicalize(seed_filter(frontier_seed_df(spark, 100)))
     adm = politeness_admission(fr, host_policy_df(spark))
-    plan = _plan(adm)
+    plan = _plan(adm, "simple")
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert plan.count("Exchange hashpartitioning") <= 1  # only the host window
+    # the only hash exchange is the host window's
+    assert re.findall(r"Exchange hashpartitioning\((\w+)#", plan) == ["host"]
 
 
 def _content_dedup_plans(rows, sha_seen, mode="formatted") -> list[str]:
@@ -106,31 +108,78 @@ def test_canonicalize_is_whole_stage_codegen(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_prior_dedup_has_no_corpus_broadcast(spark, tmp_path):
-    """The cross-wave content dedup must NOT broadcast the committed corpus
-    (round-1 scale-killer: a broadcast hint on every sha256 ever committed).
-    ``sha_seen`` grows without bound, so only the size rule may broadcast
-    it: with every table over the broadcast threshold, no BroadcastExchange
-    may build from a bare ``sha_seen`` scan (the only parquet scan here);
-    the committed table enters the plan only through the anti-join."""
+def _prior_dedup_plans(spark, root, threshold: str) -> list[str]:
+    """Simple-mode plans of the A2 decision for a 40-row wave against two
+    committed waves of ``sha_seen`` (the only parquet scan here, ~2000
+    hashes: tens of KB of parquet), at the given broadcast threshold."""
     from auto_archiver_spark.plans.tableio import TableIO
 
-    io = TableIO(str(tmp_path))
+    io = TableIO(root)
     rows = _payload_rows(spark, 40, 2)
+    filler = spark.range(2000).select(F.sha2(F.col("id").cast("string"), 256).alias("sha256"))
     # two prior committed waves of seen hashes (the skinny table)
     io.commit(rows.limit(10).select("sha256"), "sha_seen", 0)
-    io.commit(rows.limit(20).select("sha256"), "sha_seen", 1)
+    io.commit(rows.limit(20).select("sha256").union(filler), "sha_seen", 1)
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
-    spark.conf.set(key, "1")
+    spark.conf.set(key, threshold)
     try:
         plans = _content_dedup_plans(rows, io.read(spark, "sha_seen"), "simple")
     finally:
         spark.conf.set(key, old)
     assert "LeftAnti" in plans[0] and "FileScan parquet [sha256" in plans[0]
+    return plans
+
+
+# the wave's 40 rows fit (40 x SHA_ROW_BYTES); the committed sha_seen does not
+WAVE_FITS = "8192"
+
+
+def test_prior_dedup_has_no_corpus_broadcast(spark, tmp_path):
+    """The cross-wave content dedup must NOT broadcast the committed corpus
+    (round-1 scale-killer: a broadcast hint on every sha256 ever committed):
+    over the threshold, with the wave over or under it, no BroadcastExchange
+    may build from a bare ``sha_seen`` scan; the committed table enters a
+    broadcast only through a join that cuts it to the wave's hits."""
+    for threshold in ("1", WAVE_FITS):
+        for plan in _prior_dedup_plans(spark, str(tmp_path / threshold), threshold):
+            for sub in _subtrees(plan, "BroadcastExchange"):
+                assert "FileScan" not in sub or "Join" in sub, sub
+
+
+def _streamed(plan: str) -> str:
+    """A simple-mode plan without its BroadcastExchange subtrees: the
+    operators whose rows stream into the plan's other nodes."""
+    for sub in _subtrees(plan, "BroadcastExchange"):
+        plan = plan.replace(sub, "")
+    return plan
+
+
+def test_prior_dedup_never_shuffles_sha_seen(spark, tmp_path):
+    """``sha_seen`` grows with the corpus. With it over the broadcast
+    threshold and the wave under it, no Exchange may stream its scan: it
+    streams through a semi-join against the broadcast wave winners instead
+    of being hash-exchanged every wave. Only its wave-sized hits may reach
+    an exchange, as a broadcast."""
+    plans = _prior_dedup_plans(spark, str(tmp_path), WAVE_FITS)
+    assert "LeftSemi" in plans[0]
     for plan in plans:
-        for sub in _subtrees(plan, "BroadcastExchange"):
-            assert "FileScan" not in sub or "Join" in sub, sub
+        for sub in _subtrees(plan, "Exchange"):
+            assert "FileScan" not in _streamed(sub), sub
+
+
+def test_prior_dedup_small_sha_seen_keeps_size_rule(spark, tmp_path):
+    """A ``sha_seen`` under the broadcast threshold is broadcast by the
+    size rule into the plain anti-join: no semi-join, no extra broadcast."""
+    plan = _prior_dedup_plans(spark, str(tmp_path), "10485760")[0]
+    assert "LeftSemi" not in plan and plan.count("BroadcastExchange") == 1, plan
+
+
+def test_prior_dedup_wave_over_threshold_is_not_broadcast(spark, tmp_path):
+    """A wave whose rows do not fit the broadcast threshold is not
+    broadcast: the winners anti-join ``sha_seen`` with no hint."""
+    for plan in _prior_dedup_plans(spark, str(tmp_path), "1"):
+        assert "BroadcastExchange" not in plan and "LeftSemi" not in plan, plan
 
 
 def test_bloom_probe_is_bucket_aligned_no_driver_bitmaps(spark):
@@ -182,26 +231,6 @@ def test_url_query_pushdown_end_to_end(spark):
 
     plan = _plan(q_url_canonicalize(spark, SF), "simple")
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_seed_state_bucket_filter_prunes_partitions(spark, tmp_path):
-    """The partition-replace writeback's bucket-filtered read must prune at
-    the directory level (PartitionFilters in the scan), so per-wave merges
-    scan O(touched buckets), not the whole seed table."""
-    from auto_archiver_spark.operators.writeback import init_seed_state
-    from auto_archiver_spark.plans.tableio import TableIO
-
-    io = TableIO(str(tmp_path))
-    seed = frontier_seed_df(spark, 400)
-    io.commit(init_seed_state(seed), "seed_state", wave=0, mode="overwrite",
-              partition_by="wb_bucket")
-    pruned = io.read(spark, "seed_state").filter(F.col("wb_bucket").isin([3, 9]))
-    plan = _plan(pruned)
-    assert "PartitionFilters" in plan and "wb_bucket" in plan.split("PartitionFilters")[1].split("]")[0]
-    # and the scan actually lists a fraction of the files
-    n_all = io.read(spark, "seed_state").count()
-    n_sub = pruned.count()
-    assert 0 < n_sub < n_all
 
 
 def test_train_centroids_runs_no_count_job(spark, monkeypatch):
@@ -309,16 +338,16 @@ def test_decontaminate_broadcasts_dict_single_doc_shuffle(spark):
     never on the exploded gram stream, and no Python eval anywhere."""
     from auto_archiver_spark.queries import q_decontaminate
 
-    plan = _plan(q_decontaminate(spark, SF))
+    plan = _plan(q_decontaminate(spark, SF), "simple")
     assert "BroadcastHashJoin" in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    # exchanges: doc_id aggregations (partial/final pairs collapse to the
-    # same key) — the exploded gram column must not be a shuffle key
-    gram_exchanges = [
-        s for s in plan.split("Exchange hashpartitioning")[1:]
-        if s.split("\n")[0].lstrip("(").startswith("[g")
-    ]
-    assert not gram_exchanges, "gram column crossed a hash exchange"
+    # exchanges: the doc_id aggregation, and the eval-set dictionary's
+    # distinct (its doc_id % 211 filter sits below it) — the corpus's
+    # exploded gram stream must not be a shuffle key
+    keys = re.findall(r"Exchange hashpartitioning\((\w+)#", plan)
+    assert set(keys) == {"doc_id", "g"}, keys
+    for sub in _subtrees(plan, r"Exchange hashpartitioning\(g"):
+        assert "pmod(doc_id" in sub, "gram column crossed a hash exchange"
 
 
 def test_pii_and_sampling_stay_native_no_exchange(spark):

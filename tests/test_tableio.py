@@ -118,34 +118,3 @@ def test_rollback_keeps_dirs_pinned_by_refs(spark, root):
     assert os.path.isdir(dir2)
     io.rollback_to("src", sid0)
     assert not os.path.isdir(dir2)
-
-
-def test_commit_replace_partition_shadowing(spark, root):
-    """VERDICT r2 #5: replace-commits shadow only their listed partitions,
-    newest wins, and write only those partitions' files."""
-    from pyspark.sql import functions as F
-
-    io = TableIO(root)
-    base = spark.range(8).select(
-        F.col("id"), (F.col("id") % 4).cast("int").alias("b"), F.lit("v0").alias("v")
-    )
-    io.commit(base, "t", wave=0, mode="overwrite", partition_by="b")
-    r1 = spark.range(8).filter((F.col("id") % 4).isin([1, 3])).select(
-        F.col("id"), (F.col("id") % 4).cast("int").alias("b"), F.lit("v1").alias("v")
-    )
-    sid1 = io.commit_replace(r1, "t", wave=1, part_col="b", parts=[1, 3])
-    r2 = spark.range(8).filter((F.col("id") % 4) == 3).select(
-        F.col("id"), (F.col("id") % 4).cast("int").alias("b"), F.lit("v2").alias("v")
-    )
-    io.commit_replace(r2, "t", wave=2, part_col="b", parts=[3])
-    got = {(r.id, r.v) for r in io.read(spark, "t").collect()}
-    want = {(i, "v2" if i % 4 == 3 else ("v1" if i % 4 == 1 else "v0")) for i in range(8)}
-    assert got == want
-    assert io.read(spark, "t").count() == 8  # no duplicate rows
-    # the replace snapshot holds ONLY its partitions' dirs (O(touched) files)
-    snap2 = os.path.join(root, "t", "snap-00003")
-    assert sorted(d for d in os.listdir(snap2) if d.startswith("b=")) == ["b=3"]
-    # rollback: bucket 3 returns to v1
-    io.rollback_to("t", sid1)
-    got = {(r.id, r.v) for r in io.read(spark, "t").collect()}
-    assert got == {(i, "v1" if i % 4 in (1, 3) else "v0") for i in range(8)}

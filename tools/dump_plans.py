@@ -59,7 +59,9 @@ def main():
     sha_seen = spark.createDataFrame([], "sha256 string")
     _, drops = content_dedup(imgs, sha_seen)
     sections.append(("payload content dedup (A1+A2 winners: skinny HashAggregate "
-                     "+ anti-join vs sha_seen — bytes never shuffle)",
+                     "+ anti-join vs the sha_seen hits of a broadcast semi-join — "
+                     "bytes never shuffle, sha_seen not while the wave fits the "
+                     "broadcast threshold)",
                      plan_of(content_winners(imgs.select("url_hash", "sha256"), sha_seen))))
     sections.append(("payload content dedup (A2 delete keys vs the materialized winners)",
                      plan_of(drops)))
