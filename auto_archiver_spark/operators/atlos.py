@@ -14,9 +14,6 @@ transport is out of scope in a sandboxed engine, the logic ports exactly:
   NOT already among the target source material's artifact hashes — per
   (atlos_id, sha256) anti-join, the A2 content-address shape keyed per
   material.
-
-The K3 API sink (plans/api_sink.py) provides the acked delivery loop these
-payloads would ride on.
 """
 
 from __future__ import annotations

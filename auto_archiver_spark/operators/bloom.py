@@ -20,9 +20,11 @@ PySpark 4.1 exposes neither ``bloom_filter_agg`` nor ``DataFrame.stat
 
 Bloom-*negative* candidates are provably NEW and skip the anti-join shuffle
 entirely; only positives (true-seen + FPR) join against the big table. This
-is the crawl's only URL-seen filter, for plain and re-crawl runs alike: a
-key evicted from url_seen for re-crawl keeps its bits, and the exact join
-behind the filter re-admits it (operators/frontier.py ``anti_join_seen``).
+is the crawl's only URL-seen filter, for plain and re-crawl runs alike. No
+key ever leaves url_seen (a re-crawl retry skips the anti-join instead), so
+the sidecar holds exactly url_seen's keys and a positive is a true hit or a
+false positive, which the exact join resolves (operators/frontier.py
+``anti_join_seen``).
 
 Bucket ids are computed with Spark ``pmod`` on the signed int64 hash on BOTH
 build and probe sides (round-1 ADVICE: a uint64 ``%`` probe disagrees with

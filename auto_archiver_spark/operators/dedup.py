@@ -76,9 +76,10 @@ def content_winners(rows: DataFrame, sha_seen: DataFrame) -> DataFrame:
     of ``rows`` reaches its exchange), minus the sha256s the cross-wave
     ``sha_seen`` table already holds.
 
-    ``sha_seen`` grows with the corpus. While Spark's size estimate of it
-    is under the broadcast threshold, the size rule broadcasts it into a
-    plain anti-join. Over it, and while the wave's rows (which bound its
+    ``sha_seen`` grows with the corpus. Before its first commit it is an
+    empty relation (``TableIO.read_or_empty``) and the optimizer prunes
+    the anti-join. While Spark's size estimate of it is under the broadcast
+    threshold, the size rule broadcasts it into a plain anti-join. Over it, and while the wave's rows (which bound its
     winners) fit the threshold, ``sha_seen`` streams through a semi-join
     against the broadcast winners and the winners anti-join those hits,
     which are no more than the winners: it is neither broadcast nor

@@ -50,18 +50,20 @@ from ..sources.fixture import image_record
 
 _ID_RE = re.compile(r"/(?:p|gallery|private)/(\d+)")
 # transient-failure simulation for the re-crawl path (CrawlConfig
-# .recrawl_failed): a /flaky<k>/<id> URL fails until its retry attempt
-# number (joined from the url_evictions log) reaches k — the deterministic
-# stand-in for a host that recovers, like the reference rows whose failed
-# status cell is cleared for re-archival (gsheet_feeder_db.py:124-126)
+# .recrawl_failed): a /flaky<k>/<id> URL fails until the frontier row's
+# ``attempt`` reaches k — the deterministic stand-in for a host that
+# recovers, like the reference rows whose failed status cell is cleared for
+# re-archival (gsheet_feeder_db.py:124-126)
 _FLAKY_RE = re.compile(r"/flaky(\d+)/(\d+)")
 
 # Payloads never cross Arrow: the UDF writes them to a per-partition flat
 # file (plans/blobs.py) and the row carries (blob_file, blob_off, blob_len)
 # plus the payload's sha256 hex, computed while the buffer is hot.
+# ``attempt`` is the input row's (0 where it has none), so a failed row can
+# be queued for its next one.
 FETCH_RESULT_SCHEMA = (
     "sheet string, row_idx long, url string, url_norm string, url_hash long, host string, "
-    "folder string, status string, image_id string, "
+    "folder string, attempt int, status string, image_id string, "
     "blob_file string, blob_off long, blob_len long, sha_hex string, "
     "w int, h int, fmt string, "
     "caption string, phash long, pdq string, thumb binary, politeness_ms long"
@@ -69,7 +71,7 @@ FETCH_RESULT_SCHEMA = (
 
 _OUT_COLS = [
     "sheet", "row_idx", "url", "url_norm", "url_hash", "host", "folder",
-    "status", "image_id", "blob_file", "blob_off", "blob_len",
+    "attempt", "status", "image_id", "blob_file", "blob_off", "blob_len",
     "sha_hex", "w", "h", "fmt", "caption", "phash", "pdq", "thumb",
     "politeness_ms",
 ]
@@ -136,14 +138,15 @@ def _fetch_loop(
         host_elapsed.update(
             (carry.groupby(by_host).first() + delay.groupby(by_host).sum()).to_dict()
         )
+        att = (
+            pd.to_numeric(pdf["attempt"], errors="coerce").fillna(0).astype("int32")
+            if "attempt" in pdf.columns
+            else pd.Series(0, index=pdf.index, dtype="int32")
+        )
+        out["attempt"] = att
         ids = pdf["url_norm"].str.extract(_ID_RE, expand=False)
         fl = pdf["url_norm"].str.extract(_FLAKY_RE)
         if fl[1].notna().any():
-            att = (
-                pd.to_numeric(pdf["attempt"], errors="coerce").fillna(0).astype("int64")
-                if "attempt" in pdf.columns
-                else pd.Series(0, index=pdf.index, dtype="int64")
-            )
             ready = fl[1].where(
                 fl[1].notna() & (att >= pd.to_numeric(fl[0], errors="coerce"))
             )

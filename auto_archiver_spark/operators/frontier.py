@@ -16,9 +16,10 @@ shuffles are planned explicitly:
 url_seen itself is a flat table. Its Bloom sidecar (operators/bloom.py) is
 keyed by ``pmod(url_hash, N_BUCKETS)``: one bitmap per bucket, probed by a
 cogroup on that key. A Bloom *negative* proves a candidate NEW without the
-join; only positives (true-seen, false positives, stale bits of evicted
-keys) go on to the exact anti-join against the whole url_seen table — see
-SURVEY.md §4 "Bloom-partition pruning".
+join; only positives (true-seen and false positives) go on to the exact
+anti-join against the whole url_seen table — see SURVEY.md §4
+"Bloom-partition pruning". A re-crawl retry does not come here: its key is
+already seen (plans/wave.py).
 """
 
 from __future__ import annotations
@@ -153,11 +154,11 @@ def anti_join_seen(frontier: DataFrame, url_seen: DataFrame, bloom=None) -> Data
     ``bloom`` is an optional BloomSidecar (operators/bloom.py) built from a
     superset of url_seen's keys. Bloom-negatives are provably NEW and skip
     the join; every positive is checked by the exact anti-join against
-    ``url_seen``, so a stale positive (a false positive, or a key since
-    evicted from ``url_seen`` for re-crawl) is resolved there and comes back
-    as new. The filter only decides how much of the frontier joins; the
-    result equals the plain anti-join. ``url_seen`` is not bucketed: the
-    join reads all of it."""
+    ``url_seen``, so a false positive (or any key the filter holds that
+    ``url_seen`` does not) is resolved there and comes back as new. The
+    filter only decides how much of the frontier joins; the result equals
+    the plain anti-join. ``url_seen`` is not bucketed: the join reads all
+    of it, once."""
     if bloom is None:
         return frontier.join(url_seen.select("url_hash"), "url_hash", "left_anti")
     probed = bloom.might_contain_col(frontier, "url_hash")

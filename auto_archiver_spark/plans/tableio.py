@@ -22,6 +22,17 @@ from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def empty_df(spark: SparkSession, schema: str) -> DataFrame:
+    """Zero rows of ``schema`` that the optimizer can see are zero: typed
+    nulls over ``range(0)`` fold to an empty LocalRelation, so a join against
+    it is pruned away. ``createDataFrame([], schema)`` is an RDD scan whose
+    size estimate is Long.MaxValue, which plans a SortMergeJoin."""
+    fields = StructType.fromDDL(schema).fields
+    return spark.range(0).select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])
 
 
 @dataclass
@@ -118,13 +129,7 @@ class TableIO:
     def read_or_empty(self, spark: SparkSession, table: str, schema: str) -> DataFrame:
         if self.exists(table):
             return self.read(spark, table)
-        return spark.createDataFrame([], schema)
-
-    def latest_snapshot_id(self, table: str) -> int:
-        """Newest committed snapshot id (0 for an absent/empty table) — for
-        carrying an untouched table forward in a wave checkpoint."""
-        snaps = self._load_manifest(table)["snapshots"]
-        return max((s["id"] for s in snaps), default=0)
+        return empty_df(spark, schema)
 
     def commit(
         self,
@@ -251,8 +256,6 @@ class TableIO:
             if snap.get("where"):
                 base = base.filter(snap["where"])
             if snap.get("anti"):
-                from pyspark.sql import functions as F  # noqa: PLC0415
-
                 key = snap["anti"]["key"]
                 deletes = spark.read.parquet(
                     os.path.join(self._tdir(table), snap["anti"]["dir"])

@@ -2,11 +2,12 @@
 
 One wave = one declarative DataFrame plan (SURVEY.md §3 "Spark lifecycle"):
 
-    seed/deferred frontier
+    seed/deferred/retry frontier
       -> P11 seed filter -> P1+north canonicalize (narrow, codegen)
-      -> in-wave dedup            (shuffle 1: url_hash)
-      -> anti-join vs url_seen    (Bloom sidecar probe: negatives skip the
-                                   join, positives are checked exactly)
+      -> in-wave dedup            (shuffle 1: url_hash; first attempts only)
+      -> anti-join vs url_seen    (first attempts only; Bloom sidecar probe:
+                                   negatives skip the join, positives are
+                                   checked exactly)
       -> politeness admission     (shuffle 2: host window)
       -> salted repartition       (shuffle 3: host x salt — kills Zipf skew)
       -> fetch+enrich mapInPandas (Arrow batches; payloads go to the blob
@@ -22,7 +23,8 @@ when a reader asks (operators/writeback.py).
 
 State between waves lives in TableIO snapshots; the checkpoint commits the
 wave atomically across tables. Deferred rows (admission budget exhausted)
-re-enter the next wave — the reference analog is its retry/backoff
+re-enter the next wave, and so do failed rows under a re-crawl, as their
+next ``attempt`` — the reference analog is its retry/backoff
 (extractor.py:74) and the resumable status cell (gsheet_feeder_db.py:115-126).
 """
 
@@ -37,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.bloom import BloomSidecar, build_sidecar, merge_sidecars
-from ..operators.dedup import broadcast_fits, content_dedup
+from ..operators.dedup import content_dedup
 from ..operators.fetch import fetch_archive, to_archive_results
 from ..operators.frontier import (
     N_BUCKETS,
@@ -51,7 +53,11 @@ from ..operators.frontier import (
 from ..operators.writeback import init_seed_state, seed_state
 
 URL_SEEN_SCHEMA = "url_hash long, url_norm string, first_seen_wave int"
-FRONTIER_COLS = ["sheet", "row_idx", "url", "status", "folder"]
+# a frontier row: the seed columns, their canonical key, and the fetch
+# attempt it is queued for (0 = first, k > 0 = k-th re-crawl)
+FRONTIER_COLS = [
+    "sheet", "row_idx", "url", "status", "folder", "url_norm", "url_hash", "host", "attempt",
+]
 
 try:  # USER_HZ: jiffies per second for /proc/stat fields
     _CLK_TCK = float(os.sysconf("SC_CLK_TCK"))
@@ -99,11 +105,11 @@ class CrawlConfig:
     fetch_partitions: int = 64
     # Re-archival semantics (reference: a cleared/failed status cell makes
     # the row re-eligible when the feeder re-reads the sheet,
-    # gsheet_feeder_db.py:124-126): when True, URLs whose fetch FAILED this
-    # wave are logged to the skinny `url_evictions` table and re-injected
-    # into the next wave's frontier, at most max_recrawls times per URL. An
-    # evicted key drops out of the exact seen set; its stale Bloom bits are
-    # harmless because the anti-join re-checks every positive against it.
+    # gsheet_feeder_db.py:124-126): when True, a row whose fetch FAILED
+    # this wave goes back into the frontier with `attempt` + 1, at most
+    # max_recrawls times. A retry skips the in-wave dedup and the url_seen
+    # anti-join (its key was inserted at its first attempt), so url_seen
+    # holds each key once.
     recrawl_failed: bool = False
     max_recrawls: int = 1
     # fault injection (tests only): raise inside the fetch UDF during this
@@ -140,16 +146,37 @@ class WaveStats:
     extra: dict = field(default_factory=dict)
 
 
-# Spark's size estimate of the widest eviction-log side a wave broadcasts,
-# (url_hash long, tries int): 8 bytes of row overhead + 8 + 4
-EVICT_ROW_BYTES = 20
+def _first_attempts(rows: DataFrame, strict: bool = False) -> DataFrame:
+    """Seed-shaped rows (sheet, row_idx, url, status, folder) as frontier
+    rows queued for their first fetch."""
+    return canonicalize(rows, strict=strict).withColumn("attempt", F.lit(0)).select(*FRONTIER_COLS)
 
 
-def log_broadcast(spark: SparkSession, log: DataFrame):
-    """``F.broadcast`` while ``log`` (materialized) fits under
-    ``spark.sql.autoBroadcastJoinThreshold`` at ``EVICT_ROW_BYTES`` a row,
-    else no hint, so AQE picks the join. A threshold of -1 never broadcasts."""
-    return F.broadcast if broadcast_fits(spark, log, EVICT_ROW_BYTES) else (lambda df: df)
+def _legacy_attempts(spark: SparkSession, io, frontier: DataFrame) -> DataFrame:
+    """``attempt`` for a frontier committed before rows carried it. Such a
+    root kept its retries in a ``url_evictions`` log of (url_hash,
+    evict_wave, tries): a key evicted at or after its latest ``url_seen``
+    insert was queued for attempt ``tries``. Its first row in crawl order
+    gets that attempt, the row the old in-wave dedup fetched; the key's
+    other rows would lose the anti-join, so they are dropped. Every other
+    row is a first attempt."""
+    if not io.exists("url_evictions"):
+        return frontier.withColumn("attempt", F.lit(0))
+    log = io.read(spark, "url_evictions").groupBy("url_hash").agg(
+        F.max("tries").alias("tries"), F.max("evict_wave").alias("ew")
+    )
+    inserted = io.read(spark, "url_seen").groupBy("url_hash").agg(
+        F.max("first_seen_wave").alias("iw")
+    )
+    pending = log.join(inserted, "url_hash").filter(F.col("ew") >= F.col("iw"))
+    rows = frontier.join(pending.select("url_hash", "tries"), "url_hash", "left")
+    retry = dedup_in_wave(rows.filter(F.col("tries").isNotNull()))
+    return (
+        rows.filter(F.col("tries").isNull())
+        .withColumn("attempt", F.lit(0))
+        .unionByName(retry.withColumn("attempt", F.col("tries").cast("int")))
+        .select(*FRONTIER_COLS)
+    )
 
 
 def read_seed_state(spark: SparkSession, io) -> DataFrame:
@@ -181,9 +208,7 @@ def run_crawl(
 
     if start_wave == 0:
         base = seed_filter(seed, config.allow_sheets or None, config.block_sheets or None)
-        frontier = canonicalize(base, strict=config.strict_urls).select(
-            *FRONTIER_COLS, "url_norm", "url_hash", "host"
-        )
+        frontier = _first_attempts(base, config.strict_urls)
         # the two bootstrap commits write disjoint tables from the same seed
         # — overlap them like the per-wave commit pool (guide §2.6)
         with ThreadPoolExecutor(max_workers=2) as boot:
@@ -196,6 +221,8 @@ def run_crawl(
             f_frontier.result()
     else:
         frontier = io.read(spark, "frontier")
+        if "attempt" not in frontier.columns:
+            frontier = _legacy_attempts(spark, io, frontier)
 
     stats: list[WaveStats] = []
     # small row groups for the skinny state commits (their writer fan-out is
@@ -226,47 +253,20 @@ def run_crawl(
                     marks[name + "_steal"] = round(snap[1] - steal0, 2)
             _last[0], _last[1] = now, snap
 
-        # shuffle 1: in-wave dedup; checkpointed so the anti-join, admission
+        # shuffle 1: in-wave dedup of the first attempts. A retry is one row
+        # per url_hash already and its key is in url_seen, so it skips the
+        # dedup and the anti-join. Checkpointed so the anti-join, admission
         # and stats all reuse one materialization (r8: the stats count moved
         # into the overlapped post-fetch pool — it is bookkeeping, not a
         # dependency of the wave's data path)
-        cand = dedup_in_wave(frontier).localCheckpoint()
+        first = F.col("attempt") == 0
+        cand = (
+            dedup_in_wave(frontier.filter(first))
+            .unionByName(frontier.filter(~first))
+            .localCheckpoint()
+        )
         mark("dedup")
         seen = io.read_or_empty(spark, "url_seen", URL_SEEN_SCHEMA)
-
-        # Re-crawl state: the skinny eviction log (url_hash, evict_wave,
-        # tries). A key is EFFECTIVELY seen iff its latest url_seen insert
-        # is newer than its latest eviction — computed without aggregating
-        # the big table: only url_seen rows matching an evicted key (a
-        # semi-join against the log, which still scans url_seen) are
-        # aggregated. The log is broadcast only while it fits under the
-        # session's broadcast threshold (log_broadcast) — a long-running crawl
-        # with a high failure rate grows it past driver/executor memory, at
-        # which point the joins fall back to shuffle (AQE picks the strategy)
-        # rather than OOMing a 10^10-row run.
-        ev_agg = None
-        seen_eff = seen
-        if config.recrawl_failed:
-            ev = io.read_or_empty(
-                spark, "url_evictions", "url_hash long, evict_wave int, tries int"
-            )
-            ev_agg = ev.groupBy("url_hash").agg(
-                F.max("tries").alias("tries"), F.max("evict_wave").alias("ew")
-            ).localCheckpoint()
-            _bcast = log_broadcast(spark, ev_agg)
-            ins_w = (
-                seen.join(_bcast(ev_agg.select("url_hash")), "url_hash", "left_semi")
-                .groupBy("url_hash")
-                .agg(F.max("first_seen_wave").alias("iw"))
-            )
-            # insert and evict in the same wave => evict happened after
-            # (failures are evicted at wave end), so ties mean NOT seen
-            dead = (
-                ev_agg.join(ins_w, "url_hash")
-                .filter(F.col("ew") >= F.col("iw"))
-                .select("url_hash")
-            )
-            seen_eff = seen.join(_bcast(dead), "url_hash", "left_anti")
 
         # URL-seen Bloom sidecar: probe the PERSISTED bucket-keyed table
         # (OR-merged incrementally below) — the driver holds only a handle,
@@ -280,7 +280,9 @@ def run_crawl(
         elif io.exists("url_seen"):
             backfill = seen.select("url_hash")
         mark("bloom_build")
-        new_urls = anti_join_seen(cand, seen_eff, filt)
+        new_urls = anti_join_seen(cand.filter(first), seen, filt).unionByName(
+            cand.filter(~first)
+        )
 
         # shuffle 2: admission window; one materialization feeds four consumers
         # (the stats agg over it runs later, inside the overlapped pool)
@@ -298,14 +300,6 @@ def run_crawl(
         # blob files inside the UDF (plans/blobs.py) and the parquet carries
         # only references.
         to_fetch = admitted.drop("admitted", "robots_blocked")
-        if ev_agg is not None:
-            # attempt number for the transport (retry semantics): tiny log,
-            # broadcast join, default 0
-            to_fetch = to_fetch.join(
-                _bcast(ev_agg.select("url_hash", F.col("tries").alias("attempt"))),
-                "url_hash",
-                "left",
-            ).withColumn("attempt", F.coalesce("attempt", F.lit(0)))
         fetch_plan = fetch_archive(
             salted_fetch_repartition(to_fetch, config.fetch_partitions),
             blob_root=io.root,
@@ -332,30 +326,20 @@ def run_crawl(
         mark("fetch_udf")
         results_plan = to_archive_results(fetched, wave)
 
-        # Re-archival: failed URLs still under the retry budget are logged
-        # to url_evictions and re-injected into the next frontier — the
-        # reference's cleared-status-cell re-eligibility, as one skinny
-        # append. Next wave, seen_eff drops them from the exact seen set.
-        # Computed BEFORE the commit pool: elig feeds both the evictions and
-        # the frontier commits.
-        reinject = None
-        elig = None
+        # Re-archival: a failed row still under the retry budget goes back
+        # into the next frontier as its next attempt, status cleared — the
+        # reference's cleared-status-cell re-eligibility, kept by the row.
         n_reinjected = 0
         if config.recrawl_failed:
-            elig = (
-                fetched.filter(F.col("status") != "success")
-                .select("sheet", "row_idx", "url", "folder", "url_norm", "url_hash", "host")
-                .join(_bcast(ev_agg.select("url_hash", "tries")), "url_hash", "left")
-                .filter(F.coalesce(F.col("tries"), F.lit(0)) < config.max_recrawls)
-                .localCheckpoint()
+            reinject = fetched.filter(
+                (F.col("status") != "success") & (F.col("attempt") < config.max_recrawls)
+            ).select(
+                "sheet", "row_idx", "url", F.lit("").alias("status"), "folder",
+                "url_norm", "url_hash", "host", (F.col("attempt") + 1).alias("attempt"),
             )
-            n_reinjected = elig.count()
-            if n_reinjected:
-                reinject = elig.select(
-                    "sheet", "row_idx", "url", F.lit("").alias("status"), "folder",
-                    "url_norm", "url_hash", "host",
-                )
-        newly_seen = admitted.select(
+            n_reinjected = reinject.count()
+        # a key enters url_seen at its first attempt only
+        newly_seen = admitted.filter(first).select(
             "url_hash", "url_norm", F.lit(wave).cast("int").alias("first_seen_wave")
         )
         mark("images_commit")
@@ -376,7 +360,8 @@ def run_crawl(
             # writes only metadata + a delete-key sidecar. Which rows the
             # sidecar deletes is content_dedup's A1+A2 decision; sha_seen is
             # not bucketed, so it is scanned whole, and shuffled only when
-            # the wave's rows exceed the broadcast threshold.
+            # the wave's rows exceed the broadcast threshold. At wave 0 it
+            # is absent, and the join against its empty relation is pruned.
             kept, drops = content_dedup(
                 fetched.filter(F.col("status") == "success").withColumnRenamed("hash", "sha256"),
                 io.read_or_empty(spark, "sha_seen", "sha256 string"),
@@ -436,30 +421,10 @@ def run_crawl(
                 newly_seen.coalesce(STATE_COMMIT_PARTITIONS), "url_seen", wave, options=_state_opts
             )
 
-        def _commit_evictions():
-            if n_reinjected:
-                evict_delta = elig.select(
-                    "url_hash",
-                    F.lit(wave).cast("int").alias("evict_wave"),
-                    (F.coalesce(F.col("tries"), F.lit(0)) + 1).cast("int").alias("tries"),
-                )
-                return io.commit(
-                    evict_delta.coalesce(STATE_COMMIT_PARTITIONS), "url_evictions", wave,
-                    options=_state_opts,
-                )
-            # carry the table's snapshot forward UNCONDITIONALLY (0 when
-            # the log doesn't exist yet): recover() only rolls back
-            # tables named in the checkpoint, so a wave with no
-            # evictions must still pin the log's current state or a
-            # torn NEXT wave's partial eviction commit would survive
-            # recovery (pre-consumed retry budgets, phantom attempts)
-            return io.latest_snapshot_id("url_evictions")
-
         def _commit_bloom():
             # incremental sidecar: hash ONLY this wave's new keys into delta
             # bitmaps, OR-merge with the snapshot probed at wave top (fixed
-            # m ⇒ exact). Evicted keys keep their bits: a stale positive
-            # costs one exact join probe, never a wrong answer.
+            # m ⇒ exact)
             keys = newly_seen.select("url_hash")
             if backfill is not None:
                 keys = backfill.unionByName(keys)
@@ -474,16 +439,14 @@ def run_crawl(
             )
 
         def _commit_frontier():
-            nf = deferred.select(*FRONTIER_COLS, "url_norm", "url_hash", "host")
-            if reinject is not None:
-                nf = nf.unionByName(
-                    reinject.select(*FRONTIER_COLS, "url_norm", "url_hash", "host")
-                )
+            nf = deferred.select(*FRONTIER_COLS)
+            if n_reinjected:
+                nf = nf.unionByName(reinject)
             if config.link_expander is not None:
                 _, results_rb = f_results.result()
-                children = canonicalize(
-                    seed_filter(config.link_expander(results_rb)), strict=config.strict_urls
-                ).select(*FRONTIER_COLS, "url_norm", "url_hash", "host")
+                children = _first_attempts(
+                    seed_filter(config.link_expander(results_rb)), config.strict_urls
+                )
                 nf = nf.unionByName(children)
             sid = io.commit(
                 nf.coalesce(STATE_COMMIT_PARTITIONS),
@@ -511,12 +474,10 @@ def run_crawl(
             f_results = pool.submit(t_results)
             f_stats = pool.submit(t_stats)
             f_images = pool.submit(t_images)
-            futs: dict = {
+            futs = {
                 "url_seen": pool.submit(_commit_url_seen),
                 "url_seen_bloom": pool.submit(_commit_bloom),
             }
-            if config.recrawl_failed:
-                futs["url_evictions"] = pool.submit(_commit_evictions)
             f_lineage = pool.submit(_commit_lineage)
             f_frontier = pool.submit(_commit_frontier)
 
@@ -528,14 +489,12 @@ def run_crawl(
             snap_ids["lineage"] = f_lineage.result()
             snap_ids["frontier"], next_frontier = f_frontier.result()
             for name, fut in futs.items():
-                sid = fut.result()
-                if sid is not None:
-                    snap_ids[name] = sid
+                snap_ids[name] = fut.result()
         finally:
             pool.shutdown(wait=True)
         mark("state_commits")
         if config.recrawl_failed:
-            marks["evicted"] = n_reinjected
+            marks["reinjected"] = n_reinjected
 
         ws = WaveStats(
             wave=wave,
@@ -574,13 +533,6 @@ def run_crawl(
         stats.append(ws)
         cand.unpersist()
         adm.unpersist()
-        if ev_agg is not None:
-            ev_agg.unpersist()
-        if elig is not None:
-            # ADVICE r7: elig is localCheckpoint()ed per recrawl wave — free
-            # its cached blocks like ev_agg or they accumulate across a long
-            # recrawl-enabled crawl
-            elig.unpersist()
 
         if stop_after_wave is not None and wave >= stop_after_wave:
             return stats

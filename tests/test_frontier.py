@@ -99,8 +99,8 @@ def test_anti_join_with_and_without_bloom_agree(spark):
     with_bloom = {r.url_hash for r in anti_join_seen(fr, seen, bloom).collect()}
     assert plain == with_bloom
     assert plain.isdisjoint({r.url_hash for r in seen.collect()})
-    # stale filter (re-crawl eviction): the Bloom still holds keys that have
-    # since left the seen set — the exact join must hand them back as new
+    # a filter over a superset of the seen keys: the Bloom holds keys the
+    # seen side lacks — the exact join must hand them back as new
     evicted = seen.limit(20).localCheckpoint()
     live = seen.join(evicted.select("url_hash"), "url_hash", "left_anti")
     stale = {r.url_hash for r in anti_join_seen(fr, live, bloom).collect()}

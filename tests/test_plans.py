@@ -182,6 +182,22 @@ def test_prior_dedup_wave_over_threshold_is_not_broadcast(spark, tmp_path):
         assert "BroadcastExchange" not in plan and "LeftSemi" not in plan, plan
 
 
+def test_anti_join_against_absent_table_is_pruned(spark, tmp_path):
+    """Before its first commit ``url_seen`` is absent. ``read_or_empty``
+    gives an empty relation the optimizer can see, so wave 0's anti-join
+    plans neither a join nor an exchange."""
+    from auto_archiver_spark.operators.frontier import anti_join_seen
+    from auto_archiver_spark.plans.tableio import TableIO
+    from auto_archiver_spark.plans.wave import URL_SEEN_SCHEMA
+
+    fr = canonicalize(seed_filter(frontier_seed_df(spark, 50)))
+    seen = TableIO(str(tmp_path)).read_or_empty(spark, "url_seen", URL_SEEN_SCHEMA)
+    new = anti_join_seen(fr, seen)
+    ops = re.findall(r"[+:]- (\w+)", _plan(new, "simple"))
+    assert ops and not [op for op in ops if op.endswith("Join") or op == "Exchange"], ops
+    assert new.count() == fr.count()
+
+
 def test_bloom_probe_is_bucket_aligned_no_driver_bitmaps(spark):
     """The sidecar probe plan cogroups on the bucket key (FlatMapCoGroups);
     nothing in the plan collects bitmaps to the driver, and the only

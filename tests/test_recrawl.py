@@ -2,28 +2,23 @@
 
 The reference re-archives a row when its failed status cell is cleared
 (gsheet_feeder_db.py:124-126 — a cleared status makes the row re-eligible
-on the next feeder read). Spark-scale version: failures are logged to the
-skinny ``url_evictions`` state table, which drops them from the exact
-URL-seen set, and re-injected into the next wave's frontier, at most
-``max_recrawls`` times. The Bloom sidecar keeps an evicted key's bits; the
-exact anti-join behind it re-admits the key anyway.
+on the next feeder read). Spark-scale version: the retry state is the
+frontier row's own ``attempt``. A failed row goes back into the next wave's
+frontier as attempt + 1, at most ``max_recrawls`` times; a retry skips the
+in-wave dedup and the url_seen anti-join, so url_seen holds each key once.
 
 The transport's /flaky<k>/<id> URLs fail until attempt>=k — the
 deterministic stand-in for a transiently-down host.
 """
 
+import os
 import shutil
 import tempfile
 
 from pyspark.sql import functions as F
 
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
-from auto_archiver_spark.plans.wave import (
-    CrawlConfig,
-    log_broadcast,
-    read_seed_state,
-    run_crawl,
-)
+from auto_archiver_spark.plans.wave import CrawlConfig, read_seed_state, run_crawl
 from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df
 
 CFG = dict(
@@ -35,11 +30,16 @@ CFG = dict(
 )
 
 
-def _seed(spark, n=60, flaky=(7, 11, 23)):
+def _seed(spark, n=60, flaky=(7, 11, 23), stubborn=()):
+    """``flaky`` ids recover at attempt 1; ``stubborn`` ids need attempt 2,
+    past the CFG retry budget, so they never succeed."""
     base = frontier_seed_df(spark, n)
     rows = [
         ("ws1", 1000 + i, f"https://news.example.org/flaky1/{i}", "", "folder-f")
         for i in flaky
+    ] + [
+        ("ws1", 2000 + i, f"https://news.example.org/flaky2/{i}", "", "folder-f")
+        for i in stubborn
     ]
     extra = spark.createDataFrame(
         rows, "sheet string, row_idx long, url string, status string, folder string"
@@ -47,10 +47,10 @@ def _seed(spark, n=60, flaky=(7, 11, 23)):
     return base.unionByName(extra)
 
 
-def _run(spark, root, cfg=None, stop_after=None, n=60):
+def _run(spark, root, cfg=None, stop_after=None, n=60, seed=None):
     io, cp = TableIO(root), WaveCheckpoint(root)
     stats = run_crawl(
-        spark, io, cp, _seed(spark, n), host_policy_df(spark),
+        spark, io, cp, seed or _seed(spark, n), host_policy_df(spark),
         CrawlConfig(**(cfg or CFG)), stop_after_wave=stop_after,
     )
     return io, cp, stats
@@ -75,8 +75,7 @@ def _assert_same_tables(spark, io_a, io_b, why, blob_refs=True):
         "images": () if blob_refs else ("blob_file", "blob_off", "blob_len"),
     }
     for table in (
-        "images", "archive_results", "url_seen", "url_evictions",
-        "url_seen_bloom", "seed_state",
+        "images", "archive_results", "url_seen", "url_seen_bloom", "frontier", "seed_state",
     ):
         drop = drops.get(table, ())
         assert _table_fingerprint(spark, io_a, table, drop) == _table_fingerprint(
@@ -87,7 +86,7 @@ def _assert_same_tables(spark, io_a, io_b, why, blob_refs=True):
 def test_failed_urls_evicted_and_rearchived_next_wave(spark):
     root = tempfile.mkdtemp(prefix="aas_recrawl_")
     try:
-        io, _, stats = _run(spark, root)
+        io, _, stats = _run(spark, root, seed=_seed(spark, stubborn=(31,)))
         res = io.read(spark, "archive_results")
         flaky = res.filter(F.col("url").contains("/flaky1/")).select(
             "url", "status", "wave"
@@ -98,23 +97,25 @@ def test_failed_urls_evicted_and_rearchived_next_wave(spark):
         assert len(by_url) == 3
         for url, hist in by_url.items():
             hist.sort()
-            # wave k: failed; wave k+1: the eviction made the URL new
-            # again, re-fetched with attempt=1 -> archived
+            # wave k: failed; wave k+1: the row came back as attempt 1,
+            # re-fetched -> archived
             assert [s for _, s in hist] == ["nothing archived", "success"], (url, hist)
             assert hist[1][0] == hist[0][0] + 1
-        # retry budget recorded once per URL
-        ev = io.read(spark, "url_evictions").collect()
-        assert len(ev) == 3 and all(r.tries == 1 for r in ev)
+        # a retry is not inserted again: url_seen stays a set
+        seen = io.read(spark, "url_seen")
+        assert seen.count() == seen.select("url_hash").distinct().count()
         # the re-archived flaky images actually landed
         imgs = io.read(spark, "images").filter(F.col("caption").isNotNull()).count()
         assert imgs > 0
-        # permanently-failing URLs (invalid fixture rows) retried at most
-        # max_recrawls times: every non-flaky failure appears <= 2x
-        fails = (
-            res.filter(F.col("status") != "success")
-            .groupBy("url_hash").count().agg(F.max("count")).collect()[0][0]
-        )
-        assert fails is not None and fails <= 1 + CFG["max_recrawls"]
+        # the retry budget: the URL that never succeeds is fetched exactly
+        # 1 + max_recrawls times, and no URL more often
+        per_key = res.groupBy("url").agg(
+            F.count("*").alias("n"), F.max((F.col("status") == "success").cast("int")).alias("ok")
+        ).collect()
+        assert max(r.n for r in per_key) <= 1 + CFG["max_recrawls"]
+        assert [(r.url, r.n) for r in per_key if not r.ok] == [
+            ("https://news.example.org/flaky2/31", 1 + CFG["max_recrawls"])
+        ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -134,62 +135,102 @@ def test_recrawl_kill_resume_fingerprint_identical(spark):
 
 
 def test_partial_eviction_commit_rolled_back_on_recover(spark):
-    """A torn wave's partial url_evictions commit must not survive
-    recovery: every recrawl wave pins the log's snapshot in its checkpoint
-    (0 when absent), so recover() truncates anything newer. Otherwise a
-    replayed wave would see pre-consumed retry budgets / phantom attempt
-    numbers and the resume-fingerprint invariant breaks."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
-
+    """A torn wave's partial frontier commit must not survive recovery:
+    the retry state lives in the frontier's ``attempt``, which every wave
+    pins in its checkpoint, so recover() truncates the newer snapshot.
+    Otherwise a replayed wave would see pre-consumed retry budgets."""
     root = tempfile.mkdtemp(prefix="aas_recrawl_torn_")
     try:
-        io, cp, s1 = _run(spark, root, stop_after=0)
-        ev0 = io.read(spark, "url_evictions").collect()
-        assert ev0, "wave 0 should evict the flaky URLs"
-        # simulate: wave 1 committed an eviction delta but crashed before
-        # its checkpoint landed
-        extra = io.read(spark, "url_evictions").limit(1).select(
-            "url_hash", F.lit(1).alias("evict_wave"), F.lit(9).alias("tries")
-        )
-        io.commit(extra, "url_evictions", wave=1)
-        assert io.read(spark, "url_evictions").count() == len(ev0) + 1
+        io, cp, _ = _run(spark, root, stop_after=0)
+        rows0 = io.read(spark, "frontier").collect()
+        assert any(r.attempt > 0 for r in rows0), "wave 0 should queue the flaky URLs for a retry"
+        f0 = sorted(map(tuple, rows0))
+        # simulate: wave 1 committed its frontier with bumped attempts but
+        # crashed before its checkpoint landed
+        bumped = io.read(spark, "frontier").withColumn("attempt", F.col("attempt") + 1)
+        io.commit(bumped.localCheckpoint(), "frontier", wave=1, mode="overwrite")
+        assert sorted(map(tuple, io.read(spark, "frontier").collect())) != f0
         state = cp.recover(io)
         assert state["wave"] == 0
-        assert sorted(map(tuple, io.read(spark, "url_evictions").collect())) == sorted(
-            map(tuple, ev0)
-        )
+        assert sorted(map(tuple, io.read(spark, "frontier").collect())) == f0
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_retry_wins_over_fresh_row_of_same_url(spark):
+    """A failed URL that also arrives as a new row, with another (sheet,
+    row_idx) that sorts first, during its retry wave: the fresh row loses
+    the anti-join (the key is in url_seen), and the retry is fetched once
+    more and archived under its original row."""
 
-def test_eviction_log_not_broadcast_when_threshold_disabled(spark):
-    """The eviction log's broadcast bound is the session's
-    spark.sql.autoBroadcastJoinThreshold: at -1 its joins carry no broadcast
-    hint, and the crawl's tables equal the default run's."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    log = spark.createDataFrame([(1, 0, 1)], "url_hash long, ew int, tries int")
-    seen = spark.createDataFrame([(1, 0), (2, 0)], "url_hash long, first_seen_wave int")
+    def expander(results):
+        return results.filter(
+            F.col("url").endswith("/flaky1/7") & (F.col("status") != "success")
+        ).select(
+            F.lit("ws0").alias("sheet"), F.lit(0).cast("long").alias("row_idx"), "url",
+            F.lit("").alias("status"), F.lit("folder-x").alias("folder"),
+        )
 
-    def semi_join_plan():
-        hint = log_broadcast(spark, log)
-        j = seen.join(hint(log.select("url_hash")), "url_hash", "left_semi")
-        return j._jdf.queryExecution().analyzed().toString().lower()
-
-    cfg = dict(CFG, max_waves=3)
-    root_a = tempfile.mkdtemp(prefix="aas_recrawl_bc_")
-    root_b = tempfile.mkdtemp(prefix="aas_recrawl_nobc_")
-    prior = spark.conf.get(key)
+    root = tempfile.mkdtemp(prefix="aas_recrawl_collide_")
     try:
-        assert "broadcast" in semi_join_plan()
-        io_a, _, _ = _run(spark, root_a, cfg)
-        spark.conf.set(key, "-1")
-        assert "broadcast" not in semi_join_plan()
-        io_b, _, _ = _run(spark, root_b, cfg)
-        spark.conf.set(key, prior)
-        assert io_b.read(spark, "url_evictions").count() > 0
-        _assert_same_tables(spark, io_a, io_b, "without the broadcast hint", blob_refs=False)
+        io, _, stats = _run(spark, root, dict(CFG, link_expander=expander))
+        hist = (
+            io.read(spark, "archive_results")
+            .filter(F.col("url").endswith("/flaky1/7"))
+            .select("wave", "sheet", "row_idx", "status")
+            .orderBy("wave")
+            .collect()
+        )
+        assert [tuple(r) for r in hist] == [
+            (0, "ws1", 1007, "nothing archived"),
+            (1, "ws1", 1007, "success"),
+        ]
+        assert stats[1].candidates == stats[1].new_urls + 1  # the fresh row dropped
+        seen = io.read(spark, "url_seen")
+        assert seen.count() == seen.select("url_hash").distinct().count()
     finally:
-        spark.conf.set(key, prior)
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_resume_eviction_log_root_with_pending_retries(spark):
+    """A root written while retries were kept in a ``url_evictions`` log
+    (url_hash, evict_wave, tries) and the frontier had no ``attempt``: the
+    resumed crawl derives the pending retries from the log once and ends
+    where an uninterrupted run does."""
+    root_a = tempfile.mkdtemp(prefix="aas_recrawl_a_")
+    root_b = tempfile.mkdtemp(prefix="aas_recrawl_old_")
+    try:
+        io_a, _, _ = _run(spark, root_a)
+        io_b, cp, _ = _run(spark, root_b, stop_after=0)
+
+        # rewrite wave 0 in the older layout: the frontier without
+        # `attempt`, and each queued retry as an eviction-log row
+        fr_dir = io_b.live_dirs("frontier")[0]
+        fr = spark.read.parquet(fr_dir).localCheckpoint()
+        retries = fr.filter(F.col("attempt") > 0).select(
+            "url_hash", F.lit(0).alias("evict_wave"), F.col("attempt").alias("tries")
+        )
+        assert retries.count() == 3
+        tmp = fr_dir + "-legacy"
+        fr.drop("attempt").write.parquet(tmp)
+        shutil.rmtree(fr_dir)
+        os.replace(tmp, fr_dir)
+        state = cp.load()
+        state["snapshots"]["url_evictions"] = io_b.commit(retries, "url_evictions", 0)
+        cp.commit_wave(0, state["snapshots"])
+        assert "attempt" not in io_b.read(spark, "frontier").columns
+
+        io_b2, _, stats = _run(spark, root_b)  # resume
+        assert stats[0].wave == 1
+        drops = {
+            "archive_results": ("processed_at", "ts"),
+            "seed_state": ("date",),
+        }
+        for table in ("archive_results", "images", "seed_state"):
+            drop = drops.get(table, ())
+            assert _table_fingerprint(spark, io_a, table, drop) == _table_fingerprint(
+                spark, io_b2, table, drop
+            ), f"table {table} differs after resuming the older layout"
+    finally:
         shutil.rmtree(root_a, ignore_errors=True)
         shutil.rmtree(root_b, ignore_errors=True)

@@ -157,18 +157,6 @@ def test_corrupt_records_skip_not_crash(spark, tmp_path):
     assert [r.record_url for r in rows] == ["https://site.example/ok.jpg"]
 
 
-def test_truncated_ihdr_flags_not_crash():
-    """functions/exif.py: a truncated IHDR flags the record (r2 ADVICE)."""
-    from auto_archiver_spark.functions.exif import _PNG_SIG, image_metadata
-
-    import struct as _struct
-    # chunk header claims IHDR but the payload is cut short
-    trunc = _PNG_SIG + _struct.pack(">I", 13) + b"IHDR" + b"\x00\x00"
-    meta = image_metadata(trunc)
-    assert meta["corrupt"] == "truncated-ihdr"
-    assert meta["format"] == "png"
-
-
 def test_wacz_pages_jsonl_title_text(spark, tmp_path):
     """X9 metadata half (wacz_extractor_enricher.py:157-174): every title
     overwrites (set_title last-wins), every text appends (F16 newline

@@ -21,6 +21,8 @@ from auto_archiver_spark.operators.frontier import (  # noqa: E402
     salted_fetch_repartition,
     seed_filter,
 )
+from auto_archiver_spark.plans.tableio import empty_df  # noqa: E402
+from auto_archiver_spark.plans.wave import URL_SEEN_SCHEMA  # noqa: E402
 from auto_archiver_spark.session import get_spark  # noqa: E402
 from auto_archiver_spark.sources.fixture import (  # noqa: E402
     frontier_seed_df,
@@ -44,8 +46,11 @@ def main():
     sections.append(("frontier canonicalize (P1+north-rule, pure codegen)", plan_of(fr)))
 
     cand = dedup_in_wave(fr)
-    seen = spark.createDataFrame([], "url_hash long, url_norm string, first_seen_wave int")
-    sections.append(("in-wave dedup + anti-join vs url_seen (J1/J6)",
+    # wave 0: url_seen and sha_seen are absent, read as empty relations
+    # (TableIO.read_or_empty), and the joins against them are pruned
+    seen = empty_df(spark, URL_SEEN_SCHEMA)
+    sections.append(("in-wave dedup + anti-join vs url_seen (J1/J6) at wave 0: "
+                     "the join against the absent url_seen is pruned",
                      plan_of(anti_join_seen(cand, seen))))
 
     adm = politeness_admission(cand, host_policy_df(spark))
@@ -56,12 +61,11 @@ def main():
 
     imgs = images_df(spark, 40, partitions=2).withColumn(
         "sha256", F.sha2(F.col("bytes"), 256)).withColumn("url_hash", F.xxhash64("image_id"))
-    sha_seen = spark.createDataFrame([], "sha256 string")
+    sha_seen = empty_df(spark, "sha256 string")
     _, drops = content_dedup(imgs, sha_seen)
-    sections.append(("payload content dedup (A1+A2 winners: skinny HashAggregate "
-                     "+ anti-join vs the sha_seen hits of a broadcast semi-join — "
-                     "bytes never shuffle, sha_seen not while the wave fits the "
-                     "broadcast threshold)",
+    sections.append(("payload content dedup at wave 0 (A1+A2 winners: skinny "
+                     "HashAggregate, bytes never shuffle; the anti-join against "
+                     "the absent sha_seen is pruned)",
                      plan_of(content_winners(imgs.select("url_hash", "sha256"), sha_seen))))
     sections.append(("payload content dedup (A2 delete keys vs the materialized winners)",
                      plan_of(drops)))

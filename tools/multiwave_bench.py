@@ -19,8 +19,9 @@ a driver collect.
 Usage: python tools/multiwave_bench.py [seed_n] [waves] [span] [cores] [mode]
        (defaults 48000 4 150000 32 plain; mode = plain | recrawl — recrawl
        plants transiently-failing /flaky1/ seeds and turns on failed-URL
-       eviction + re-archival, reporting per-wave eviction counts and the
-       final flaky-recovery tally)
+       re-archival, reporting per-wave re-injection counts and the final
+       flaky-recovery tally; its resume check also covers the frontier,
+       whose `attempt` column is the retry state)
 """
 
 from __future__ import annotations
@@ -92,7 +93,7 @@ def main():
     seed = frontier_seed_df(spark, seed_n)
     if recrawl:
         # transiently-down hosts: /flaky1/<id> fails until attempt>=1, i.e.
-        # succeeds only after one eviction + re-injection cycle
+        # succeeds only after one re-injection as the row's next attempt
         flaky = spark.createDataFrame(
             [
                 ("ws1", 10_000_000 + i, f"https://news.example.org/flaky1/{i}", "",
@@ -114,10 +115,14 @@ def main():
     root_b = tempfile.mkdtemp(prefix="aas_mw_b_", dir="/dev/shm")
     try:
         io_a, stats, wall = run(spark, root_a, seed, policy, cfg)
+        # a re-crawl retry is admitted but not inserted again: count url_seen
+        inserted = dict(
+            io_a.read(spark, "url_seen").groupBy("first_seen_wave").count().collect()
+        )
         seen_cum = 0
         per_wave = []
         for s in stats:
-            seen_cum += s.admitted
+            seen_cum += inserted.get(s.wave, 0)
             frontier_sec = (
                 s.extra.get("dedup", 0) + s.extra.get("bloom_build", 0) + s.extra.get("admission", 0)
             )
@@ -135,7 +140,7 @@ def main():
                         sum(v for k, v in s.extra.items()
                             if k.endswith("_commit") or k == "state_commits"), 3),
                     "wave_sec": round(s.seconds, 3),
-                    **({"evicted": s.extra.get("evicted", 0)} if recrawl else {}),
+                    **({"reinjected": s.extra.get("reinjected", 0)} if recrawl else {}),
                 }
             )
 
@@ -151,7 +156,7 @@ def main():
             ("url_seen_bloom", ()),
         ]
         if recrawl:
-            resume_tables.append(("url_evictions", ()))
+            resume_tables.append(("frontier", ()))
         for table, drop in resume_tables:
             fa = fingerprint(io_a.read(spark, table), drop)
             fb = fingerprint(io_b.read(spark, table), drop)
