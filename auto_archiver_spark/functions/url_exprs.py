@@ -32,6 +32,7 @@ _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://"
 _NETLOC_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)"
 _PATH_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)"
 _QUERY_RE = r"\?([^#]*)"
+_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 
 
 def url_scheme(url: Column) -> Column:
@@ -49,6 +50,20 @@ def url_path(url: Column) -> Column:
 
 def url_query(url: Column) -> Column:
     return F.regexp_extract(url, _QUERY_RE, 1)
+
+
+def lower_expr(s: Column) -> Column:
+    """``lower(s)`` for every string, null included, without Spark 4.1's
+    ICU case-mapping class on ASCII input. ``lower`` runs
+    ``CollationAwareUTF8String.toLowerCase``, whose ASCII fast path is only
+    reached after the class's static initializer has built a title-case
+    table over every code point up to U+10FFFF: seconds of every task
+    thread's time, the first time any task of the JVM lowercases. A string
+    whose character count equals its byte count is ASCII, and its lowercase
+    is the A-Z -> a-z translation; anything else still goes to ``lower``."""
+    return F.when(
+        F.length(s) == F.octet_length(s), F.translate(s, _UPPER, _UPPER.lower())
+    ).otherwise(F.lower(s))
 
 
 def strip_query(url: Column) -> Column:
@@ -78,8 +93,8 @@ def north_norm_expr(url: Column) -> Column:
     identical for every string: both yield the prefix before the first '='
     or the whole string when absent.
     """
-    scheme = F.lower(url_scheme(url))
-    netloc = F.lower(url_netloc(url))
+    scheme = lower_expr(url_scheme(url))
+    netloc = lower_expr(url_netloc(url))
     path = F.coalesce(F.nullif(url_path(url), F.lit("")), F.lit("/"))
     pairs = F.split(url_query(url), "&")
     kept = F.array_sort(
@@ -133,15 +148,19 @@ def archivable_url_expr(url: Column) -> Column:
     required. At frontier scale this expression filters >99.9% of junk
     before any Python is invoked.
     """
-    host = F.lower(
-        F.regexp_replace(F.regexp_replace(url_netloc(url), r"^.*@", ""), r":\d+$", "")
-    )
+    # Only the localhost test depends on case: lowercasing maps no other
+    # character to '[', a digit or a dot, and no string to ''. (?i) folds
+    # ASCII case only, which equals lower() for "localhost": the only
+    # non-ASCII characters that lowercase into ASCII letters are U+0130 and
+    # U+212A ('i' + U+0307, 'k'). A filter shares no common subexpressions,
+    # so every use of `host` reruns its regexes.
+    host = F.regexp_replace(F.regexp_replace(url_netloc(url), r"^.*@", ""), r":\d+$", "")
     is_quad = host.rlike(_DOTTED_QUAD_RE)
     bad_ip = is_quad & (host.rlike(_PRIVATE_V4_RE) | host.rlike(_SPECIAL_V4_RE))
     return (
         (url.startswith("http://") | url.startswith("https://"))
         & (host != "")
-        & (host != "localhost")
+        & ~host.rlike("(?i)^localhost$")
         & ~host.startswith("[")
         & ~bad_ip
     )

@@ -111,9 +111,9 @@ _DOMAIN_RULES = [
 
 def platform_expr(url: Column) -> Column:
     """Platform from URL domain (contains-match on netloc, reference order)."""
-    from ..functions.url_exprs import url_netloc  # noqa: PLC0415
+    from ..functions.url_exprs import lower_expr, url_netloc  # noqa: PLC0415
 
-    domain = F.lower(url_netloc(url))
+    domain = lower_expr(url_netloc(url))
     out = F.lit("unknown")
     for domains, plat in reversed(_DOMAIN_RULES):
         cond = None

@@ -75,14 +75,13 @@ def canonicalize(df: DataFrame, url_col: str = "url", strict: bool = False) -> D
         base
         .withColumn("url_norm", north_norm_expr(u))
         .withColumn("url_hash", url_hash_expr(F.col("url_norm")))
+        # url_norm's netloc is already lowercase
         .withColumn(
             "host",
-            F.lower(
-                F.regexp_replace(
-                    F.regexp_extract(F.col("url_norm"), r"^[a-z][a-z0-9+.\-]*://([^/?#]*)", 1),
-                    r":\d+$",
-                    "",
-                )
+            F.regexp_replace(
+                F.regexp_extract(F.col("url_norm"), r"^[a-z][a-z0-9+.\-]*://([^/?#]*)", 1),
+                r":\d+$",
+                "",
             ),
         )
     )

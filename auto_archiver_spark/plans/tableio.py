@@ -26,13 +26,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
-def empty_df(spark: SparkSession, schema: str) -> DataFrame:
-    """Zero rows of ``schema`` that the optimizer can see are zero: typed
-    nulls over ``range(0)`` fold to an empty LocalRelation, so a join against
-    it is pruned away. ``createDataFrame([], schema)`` is an RDD scan whose
-    size estimate is Long.MaxValue, which plans a SortMergeJoin."""
+def local_df(spark: SparkSession, schema: str, rows=()) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s field order) as typed literals over
+    ``spark.range``. ``createDataFrame(rows, schema)`` plans a ``Scan
+    ExistingRDD`` instead: its scan runs Python tasks, and its size estimate
+    is Long.MaxValue, which plans a SortMergeJoin against it. Zero rows are
+    typed nulls over ``range(0)``, which fold to an empty LocalRelation, so
+    a join against them is pruned away."""
     fields = StructType.fromDDL(schema).fields
-    return spark.range(0).select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])
+    if not rows:
+        return spark.range(0).select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, fields)])
+        for row in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*structs)))
 
 
 @dataclass
@@ -129,7 +137,7 @@ class TableIO:
     def read_or_empty(self, spark: SparkSession, table: str, schema: str) -> DataFrame:
         if self.exists(table):
             return self.read(spark, table)
-        return empty_df(spark, schema)
+        return local_df(spark, schema)
 
     def commit(
         self,

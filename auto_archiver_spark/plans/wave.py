@@ -17,14 +17,17 @@ One wave = one declarative DataFrame plan (SURVEY.md §3 "Spark lifecycle"):
          sha_seen delta, Bloom sidecar OR-merge, per-wave metrics row
          (incl. per-partition lineage)
 
-The seed-state table is committed once, at bootstrap; its result cells are
-a fold of the committed archive_results log, computed by ``read_seed_state``
-when a reader asks (operators/writeback.py).
+A fresh crawl has no bootstrap ``frontier`` snapshot: wave 0 plans its
+frontier straight from the seed, and every wave commits the next one. The
+seed-state table is committed once, at bootstrap, alongside wave 0; its
+result cells are a fold of the committed archive_results log, computed by
+``read_seed_state`` when a reader asks (operators/writeback.py).
 
 State between waves lives in TableIO snapshots; the checkpoint commits the
-wave atomically across tables. Deferred rows (admission budget exhausted)
-re-enter the next wave, and so do failed rows under a re-crawl, as their
-next ``attempt`` — the reference analog is its retry/backoff
+wave atomically across tables, and each wave reads its frontier from the
+snapshot the previous wave committed. Deferred rows (admission budget
+exhausted) re-enter the next wave, and so do failed rows under a re-crawl,
+as their next ``attempt`` — the reference analog is its retry/backoff
 (extractor.py:74) and the resumable status cell (gsheet_feeder_db.py:115-126).
 """
 
@@ -51,8 +54,13 @@ from ..operators.frontier import (
     seed_filter,
 )
 from ..operators.writeback import init_seed_state, seed_state
+from .tableio import local_df
 
 URL_SEEN_SCHEMA = "url_hash long, url_norm string, first_seen_wave int"
+METRICS_SCHEMA = (
+    "wave int, candidates long, new_urls long, admitted long, robots_blocked long, "
+    "deferred long, archived_ok long, bytes_written long, seconds double"
+)
 # a frontier row: the seed columns, their canonical key, and the fetch
 # attempt it is queued for (0 = first, k > 0 = k-th re-crawl)
 FRONTIER_COLS = [
@@ -201,38 +209,63 @@ def run_crawl(
     stop_after_wave: int | None = None,
 ) -> list[WaveStats]:
     """Run (or resume) the crawl until the frontier drains. Returns per-wave
-    stats. ``stop_after_wave`` simulates a crash for the resume tests."""
+    stats. ``stop_after_wave`` simulates a crash for the resume tests.
+
+    A fresh crawl's wave 0 reads the seed's frontier as a plan; the first
+    ``frontier`` snapshot is wave 0's own. Its seed-state snapshot is
+    committed in the background while wave 0 runs: wave 0's checkpoint waits
+    for it, and so does every exit, so a run that raises has committed
+    nothing after it raised. A crash before wave 0's checkpoint rolls every
+    table back to empty, and the next run bootstraps again."""
     config = config or CrawlConfig()
     state = checkpoint.recover(io)
-    start_wave = (state["wave"] + 1) if state else 0
-
-    if start_wave == 0:
-        base = seed_filter(seed, config.allow_sheets or None, config.block_sheets or None)
-        frontier = _first_attempts(base, config.strict_urls)
-        # the two bootstrap commits write disjoint tables from the same seed
-        # — overlap them like the per-wave commit pool (guide §2.6)
-        with ThreadPoolExecutor(max_workers=2) as boot:
-            f_frontier = boot.submit(
-                io.commit, frontier, "frontier", 0, "overwrite"
-            )
-            boot.submit(
+    with ThreadPoolExecutor(max_workers=1) as boot:
+        if state is None:
+            seed_commit = boot.submit(
                 io.commit, init_seed_state(seed), "seed_state", 0, "overwrite"
-            ).result()
-            f_frontier.result()
-    else:
-        frontier = io.read(spark, "frontier")
-        if "attempt" not in frontier.columns:
-            frontier = _legacy_attempts(spark, io, frontier)
+            )
+            base = seed_filter(seed, config.allow_sheets or None, config.block_sheets or None)
+            frontier = _first_attempts(base, config.strict_urls)
+        else:
+            seed_commit = None
+            frontier = io.read(spark, "frontier")
+            if "attempt" not in frontier.columns:
+                frontier = _legacy_attempts(spark, io, frontier)
+        stats = _run_waves(
+            spark, io, checkpoint, frontier, state["wave"] + 1 if state else 0,
+            host_policy, config, stop_after_wave, seed_commit,
+        )
+        if seed_commit is not None:
+            seed_commit.result()  # raises its error when no wave committed
+        return stats
 
+
+def _release(*checkpoints: DataFrame) -> None:
+    """Drop the blocks of ``localCheckpoint()`` frames. ``unpersist()`` does
+    not: a checkpoint is an RDD under a LogicalRDD, not a cached plan."""
+    for df in checkpoints:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+
+def _run_waves(
+    spark: SparkSession,
+    io,
+    checkpoint,
+    frontier: DataFrame,
+    start_wave: int,
+    host_policy: DataFrame,
+    config: CrawlConfig,
+    stop_after_wave: int | None,
+    seed_commit,
+) -> list[WaveStats]:
+    """The wave loop of ``run_crawl`` from ``start_wave``; ``seed_commit``
+    is the bootstrap seed-state commit (a future), or None on a resume."""
     stats: list[WaveStats] = []
     # small row groups for the skinny state commits (their writer fan-out is
     # STATE_COMMIT_PARTITIONS)
     _state_opts = {"parquet.block.size": str(4 << 20)}
     for wave in range(start_wave, config.max_waves):
         t0 = time.monotonic()
-        if frontier.isEmpty():
-            break
-
         marks = {}
         _last = [time.monotonic(), _cpu_snap()]
 
@@ -255,16 +288,19 @@ def run_crawl(
 
         # shuffle 1: in-wave dedup of the first attempts. A retry is one row
         # per url_hash already and its key is in url_seen, so it skips the
-        # dedup and the anti-join. Checkpointed so the anti-join, admission
-        # and stats all reuse one materialization (r8: the stats count moved
-        # into the overlapped post-fetch pool — it is bookkeeping, not a
-        # dependency of the wave's data path)
+        # dedup and the anti-join. Checkpointed so the emptiness test, the
+        # anti-join, admission and stats all reuse one materialization (r8:
+        # the stats count moved into the overlapped post-fetch pool — it is
+        # bookkeeping, not a dependency of the wave's data path)
         first = F.col("attempt") == 0
         cand = (
             dedup_in_wave(frontier.filter(first))
             .unionByName(frontier.filter(~first))
             .localCheckpoint()
         )
+        if cand.isEmpty():
+            _release(cand)
+            break
         mark("dedup")
         seen = io.read_or_empty(spark, "url_seen", URL_SEEN_SCHEMA)
 
@@ -388,7 +424,7 @@ def run_crawl(
                 kept.select("sha256").coalesce(STATE_COMMIT_PARTITIONS), "sha_seen", wave,
                 options=_state_opts,
             )
-            kept.unpersist()
+            _release(kept)
             return ids
 
         def t_results():
@@ -448,14 +484,13 @@ def run_crawl(
                     seed_filter(config.link_expander(results_rb)), config.strict_urls
                 )
                 nf = nf.unionByName(children)
-            sid = io.commit(
+            return io.commit(
                 nf.coalesce(STATE_COMMIT_PARTITIONS),
                 "frontier",
                 wave,
                 mode="overwrite",
                 options=_state_opts,
             )
-            return sid, nf
 
         def _commit_lineage():
             _, results_rb = f_results.result()
@@ -487,11 +522,14 @@ def run_crawl(
             mark("wave_stats")
             snap_ids.update(f_images.result())
             snap_ids["lineage"] = f_lineage.result()
-            snap_ids["frontier"], next_frontier = f_frontier.result()
+            snap_ids["frontier"] = f_frontier.result()
             for name, fut in futs.items():
                 snap_ids[name] = fut.result()
         finally:
             pool.shutdown(wait=True)
+        # every reader of the two checkpoints has run; the next wave reads
+        # its frontier from the committed snapshot
+        _release(cand, adm)
         mark("state_commits")
         if config.recrawl_failed:
             marks["reinjected"] = n_reinjected
@@ -510,33 +548,20 @@ def run_crawl(
             seconds=time.monotonic() - t0,
             extra=marks,
         )
-        metrics = spark.createDataFrame(
-            [
-                (
-                    ws.wave,
-                    ws.candidates,
-                    ws.new_urls,
-                    ws.admitted,
-                    ws.robots_blocked,
-                    ws.deferred,
-                    ws.archived_ok,
-                    ws.bytes_written,
-                    float(ws.seconds),
-                )
-            ],
-            "wave int, candidates long, new_urls long, admitted long, robots_blocked long, "
-            "deferred long, archived_ok long, bytes_written long, seconds double",
-        )
+        metrics = local_df(spark, METRICS_SCHEMA, [(
+            ws.wave, ws.candidates, ws.new_urls, ws.admitted, ws.robots_blocked,
+            ws.deferred, ws.archived_ok, ws.bytes_written, float(ws.seconds),
+        )])
         snap_ids["metrics"] = io.commit(metrics, "metrics", wave)
 
+        if seed_commit is not None:
+            seed_commit.result()
         checkpoint.commit_wave(wave, snap_ids)
         stats.append(ws)
-        cand.unpersist()
-        adm.unpersist()
 
         if stop_after_wave is not None and wave >= stop_after_wave:
             return stats
         if ws.deferred == 0 and config.link_expander is None and n_reinjected == 0:
-            break  # with an expander the loop-top isEmpty() is the exit
-        frontier = next_frontier
+            break  # with an expander the empty candidate set is the exit
+        frontier = io.read(spark, "frontier")
     return stats

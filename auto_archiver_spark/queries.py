@@ -152,7 +152,7 @@ def q_url_canonicalize(spark, sf):
 def q_url_host(spark, sf):
     """P10 netloc extraction on the synthesized URLs."""
     ev = _synth_url(load(spark, sf, "events"))
-    return ev.select("event_id", F.lower(X.url_netloc(F.col("url"))).alias("host"))
+    return ev.select("event_id", X.lower_expr(X.url_netloc(F.col("url"))).alias("host"))
 
 
 _REL_ITEMS = [

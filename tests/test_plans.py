@@ -389,3 +389,17 @@ def test_domain_rebalance_broadcasts_rates_no_corpus_shuffle(spark):
     # hash exchanges: the groupBy(source) partial/final agg only (the
     # window over the k-row counts runs single-partition)
     assert plan.count("Exchange hashpartitioning") <= 1
+
+
+def test_metrics_row_has_no_rdd_scan(spark):
+    """A wave's metrics row is typed literals over ``range``: no ``Scan
+    ExistingRDD``, so committing it runs no Python task."""
+    from auto_archiver_spark.plans.tableio import local_df
+    from auto_archiver_spark.plans.wave import METRICS_SCHEMA
+
+    row = (3, 10, 9, 8, 1, 0, 7, 5_000_000_000, 1.5)
+    df = local_df(spark, METRICS_SCHEMA, [row])
+    plan = _plan(df, "simple")
+    assert "ExistingRDD" not in plan and "Python" not in plan, plan
+    assert [tuple(r) for r in df.collect()] == [row]
+    assert df.schema.simpleString() == spark.createDataFrame([row], METRICS_SCHEMA).schema.simpleString()

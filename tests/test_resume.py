@@ -2,9 +2,15 @@
 uninterrupted run (BASELINE.md "resume correctness"; reference analog is the
 resumable gsheet status cell, gsheet_feeder_db.py:115-126)."""
 
+import json
 import os
 import shutil
 import tempfile
+import threading
+import time
+from dataclasses import dataclass, field
+
+import pytest
 
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
 from auto_archiver_spark.plans.wave import CrawlConfig, read_seed_state, run_crawl
@@ -168,3 +174,80 @@ def test_resume_reads_root_with_inline_bytes_column(spark, tmp_path):
     assert {r.image_id: r.sha256 for r in rows if r.image_id in wave0} == wave0
     for r in rows:
         assert r.sha256 == "SHA-256:" + hashlib.sha256(bytes(r.bytes)).hexdigest()
+
+
+@dataclass
+class _SeedStateAfterFetch(TableIO):
+    """Starts the seed-state commit only once wave 0's fetch commit has
+    returned or raised, so a failed wave raises while it is still running."""
+
+    fetch_done: threading.Event = field(default_factory=threading.Event)
+
+    def commit(self, df, table, *args, **kwargs):
+        if table == "seed_state":
+            assert self.fetch_done.wait(120)
+        try:
+            return super().commit(df, table, *args, **kwargs)
+        finally:
+            if table == "fetch_out":
+                self.fetch_done.set()
+
+
+def _manifests(root):
+    out = {}
+    for t in sorted(os.listdir(root)):
+        p = os.path.join(root, t, "manifest.json")
+        if os.path.exists(p):
+            with open(p) as fh:
+                out[t] = fh.read()
+    return out
+
+
+def test_wave0_crash_with_background_seed_state(spark, tmp_path):
+    """The seed-state snapshot is committed alongside wave 0. A run whose
+    wave 0 fails has finished that commit before it raises, so nothing
+    changes after; the resumed run equals an uninterrupted one, with one
+    live seed-state snapshot and no bootstrap frontier snapshot."""
+    root_a, root_b = str(tmp_path / "a"), str(tmp_path / "b")
+    io_a, _, _ = _run(spark, root_a)
+    with pytest.raises(Exception):
+        run_crawl(
+            spark, _SeedStateAfterFetch(root_b), WaveCheckpoint(root_b),
+            frontier_seed_df(spark, N), host_policy_df(spark),
+            CrawlConfig(**CFG, crash_during_fetch_wave=0),
+        )
+    after_raise = _manifests(root_b)
+    assert "seed_state" in after_raise
+    time.sleep(3)
+    assert _manifests(root_b) == after_raise
+    assert not os.path.exists(os.path.join(root_b, "_checkpoint.json"))
+
+    io_b, _, _ = _run(spark, root_b)  # resume: bootstraps again
+    drops = {"archive_results": ("processed_at", "ts"), "seed_state": ("date",)}
+    for table in ("archive_results", "images", "seed_state"):
+        drop = drops.get(table, ())
+        assert _table_fingerprint(spark, io_a, table, drop) == _table_fingerprint(
+            spark, io_b, table, drop
+        ), f"table {table} differs after resume"
+    assert len(io_b.live_dirs("seed_state")) == 1
+    with open(os.path.join(root_b, "frontier", "manifest.json")) as fh:
+        waves = [s["wave"] for s in json.load(fh)["snapshots"]]
+    assert waves == sorted(set(waves)), waves  # one snapshot per wave
+
+
+def test_crawl_releases_its_checkpoint_blocks(spark, tmp_path):
+    """The candidate, admission and content-winner checkpoints are released
+    once read: after a 3-wave crawl the session holds no more RDD blocks
+    than before it."""
+
+    def rdd_blocks():
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    before = rdd_blocks()
+    stats = run_crawl(
+        spark, TableIO(str(tmp_path)), WaveCheckpoint(str(tmp_path)),
+        frontier_seed_df(spark, N), host_policy_df(spark),
+        CrawlConfig(wave_seconds=5.0, fetch_partitions=8, max_waves=3),
+    )
+    assert len(stats) == 3
+    assert rdd_blocks() <= before

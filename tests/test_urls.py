@@ -250,3 +250,66 @@ def test_p1_ip_udf_parity(spark):
     rows = df.select("url", X.url_invalid_reason_udf(F.col("url")).alias("reason")).collect()
     for r in rows:
         assert r.reason == U.url_invalid_reason(r.url), r.url
+
+
+# ASCII and mixed-case hosts, then characters whose lowercase is not a plain
+# one-to-one ASCII map: dotted capital I (two chars), Kelvin sign (to ASCII
+# k), a final sigma, capital sharp s, a fullwidth letter
+LOWER_CASES = [
+    "example.com", "WWW.Example.COM", "MiXeD-Case.Host:8080", "HTTPS",
+    "\u0130stanbul.example", "\u212aelvin.example", "\u03a3\u0391\u03a3",
+    "STRA\u1e9eE.example", "\uff21.example", "", None,
+]
+
+
+def test_lower_expr_matches_lower(spark):
+    df = spark.createDataFrame([(s,) for s in LOWER_CASES], "s string")
+    rows = df.select(
+        X.lower_expr(F.col("s")).alias("got"), F.lower("s").alias("want")
+    ).collect()
+    assert [r.got for r in rows] == [r.want for r in rows]
+    assert rows[-2].got == "" and rows[-1].got is None
+
+
+def test_canonicalize_keys_match_lower_formula(spark):
+    """``canonicalize``'s url_norm, url_hash and host equal the forms
+    computed with ``lower`` on the golden URLs, mixed-case and non-ASCII
+    hosts included; so does the validity filter."""
+    from auto_archiver_spark.operators.frontier import canonicalize
+
+    urls = (
+        [u for u, _ in AUTH_CASES + RELEVANT_CASES + BEST_QUALITY_CASES + VALID_CASES]
+        + [u for u, _ in CLEAN_CASES]
+        + ["HTTPS://WWW.Example.COM/P/1?b=2&a=1", "https://WWW.Example.COM:8443/P/1?b=2&a=1",
+           "http://LocalHost:8080/x", "http://LOCALHOST/x", "http://localhost.example/x",
+           "https://\u0130stanbul.Example/p", "https://\u212aelvin.example/",
+           "https://STRA\u1e9eE.example/x?Z=1", "https://\uff21.example/"]
+    )
+    cdf = spark.createDataFrame(
+        [("ws1", i + 1, u, "", "") for i, u in enumerate(urls)],
+        "sheet string, row_idx long, url string, status string, folder string",
+    )
+    u = F.col("url")
+    netloc = X.url_netloc(u)
+    host = F.regexp_replace(F.regexp_replace(netloc, r"^.*@", ""), r":\d+$", "")
+    valid = (
+        (u.startswith("http://") | u.startswith("https://"))
+        & (host != "") & (F.lower(host) != "localhost") & ~host.startswith("[")
+        & ~(host.rlike(X._DOTTED_QUAD_RE)
+            & (host.rlike(X._PRIVATE_V4_RE) | host.rlike(X._SPECIAL_V4_RE)))
+    )
+    norm = F.concat(
+        F.lower(X.url_scheme(u)), F.lit("://"), F.lower(netloc),
+        F.regexp_extract(X.north_norm_expr(u), r"^[^:]*://[^/?#]*(.*)$", 1),
+    )
+    want = cdf.filter(valid).select(
+        "row_idx",
+        norm.alias("url_norm"),
+        F.xxhash64(norm).alias("url_hash"),
+        F.lower(F.regexp_replace(
+            F.regexp_extract(norm, r"^[a-z][a-z0-9+.\-]*://([^/?#]*)", 1), r":\d+$", ""
+        )).alias("host"),
+    )
+    got = canonicalize(cdf).select("row_idx", "url_norm", "url_hash", "host")
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() < len(urls)

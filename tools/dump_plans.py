@@ -21,7 +21,7 @@ from auto_archiver_spark.operators.frontier import (  # noqa: E402
     salted_fetch_repartition,
     seed_filter,
 )
-from auto_archiver_spark.plans.tableio import empty_df  # noqa: E402
+from auto_archiver_spark.plans.tableio import local_df  # noqa: E402
 from auto_archiver_spark.plans.wave import URL_SEEN_SCHEMA  # noqa: E402
 from auto_archiver_spark.session import get_spark  # noqa: E402
 from auto_archiver_spark.sources.fixture import (  # noqa: E402
@@ -48,7 +48,7 @@ def main():
     cand = dedup_in_wave(fr)
     # wave 0: url_seen and sha_seen are absent, read as empty relations
     # (TableIO.read_or_empty), and the joins against them are pruned
-    seen = empty_df(spark, URL_SEEN_SCHEMA)
+    seen = local_df(spark, URL_SEEN_SCHEMA)
     sections.append(("in-wave dedup + anti-join vs url_seen (J1/J6) at wave 0: "
                      "the join against the absent url_seen is pruned",
                      plan_of(anti_join_seen(cand, seen))))
@@ -61,7 +61,7 @@ def main():
 
     imgs = images_df(spark, 40, partitions=2).withColumn(
         "sha256", F.sha2(F.col("bytes"), 256)).withColumn("url_hash", F.xxhash64("image_id"))
-    sha_seen = empty_df(spark, "sha256 string")
+    sha_seen = local_df(spark, "sha256 string")
     _, drops = content_dedup(imgs, sha_seen)
     sections.append(("payload content dedup at wave 0 (A1+A2 winners: skinny "
                      "HashAggregate, bytes never shuffle; the anti-join against "
