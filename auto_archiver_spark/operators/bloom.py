@@ -9,9 +9,9 @@ PySpark 4.1 exposes neither ``bloom_filter_agg`` nor ``DataFrame.stat
   the driver.
 * **persist**: the bitmaps are a normal (bucket-keyed) DataFrame — the wave
   driver commits them as the ``url_seen_bloom`` table next to the (flat)
-  ``url_seen`` table and *merges incrementally*: per wave only the
-  newly-seen keys are hashed into delta bitmaps, OR-merged with the prior
-  sidecar (fixed ``m`` per bucket makes OR-merge exact).
+  ``url_seen`` table and *updates it incrementally*: per wave only the
+  newly-seen keys are hashed, in the same grouped pass that ORs them into
+  the prior sidecar's bitmaps (fixed ``m`` per bucket makes the OR exact).
 * **probe**: a bucket-aligned **cogroup** — candidates shuffle once on the
   sidecar's bucket key, and each task zips its candidate group with exactly
   ONE bitmap row (~m/8 bytes). The driver never materializes a single
@@ -61,8 +61,11 @@ def _bit_positions(hashes: np.ndarray, m: int) -> np.ndarray:
     return ((h1[:, None] + i[None, :] * h2[:, None]) % m_).astype(np.int64)
 
 
-def _build_bitmap(hashes: np.ndarray, m: int) -> bytes:
+def _build_bitmap(hashes: np.ndarray, m: int, priors=()) -> bytes:
+    """The bitmap of ``hashes`` ORed with every bitmap in ``priors``."""
     bitmap = np.zeros((m + 7) // 8, dtype=np.uint8)
+    for b in priors:
+        bitmap |= np.frombuffer(b, dtype=np.uint8)
     pos = _bit_positions(hashes, m).ravel()
     np.bitwise_or.at(bitmap, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
     return bitmap.tobytes()
@@ -78,41 +81,36 @@ def _check_bitmap(hashes: np.ndarray, m: int, bitmap: bytes) -> np.ndarray:
 
 
 def build_sidecar(
-    keys: DataFrame, n_buckets: int, m_bits: int = DEFAULT_M_BITS, hash_col: str = "url_hash"
+    keys: DataFrame, n_buckets: int, m_bits: int = DEFAULT_M_BITS, hash_col: str = "url_hash",
+    prior: DataFrame | None = None,
 ) -> DataFrame:
     """One fixed-size Bloom bitmap per url_hash bucket, built executor-side.
-    Only buckets that contain keys get a row (delta-friendly)."""
+    Only buckets that hold keys, or a ``prior`` row, get a row.
+
+    ``prior`` is a sidecar built with the same ``m_bits``. Its rows join the
+    keys in the same grouped pass: each bucket's bitmap is the prior's ORed
+    with the keys' bits, and ``n`` is the prior's plus the bucket's key
+    count. A fixed ``m`` per bucket makes this the exact union."""
+    # a key row has no bitmap; a prior row's hash is a placeholder, since a
+    # null would make the pandas column float64 and lose hash bits
+    rows = keys.select(
+        F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int").alias("bucket"),
+        F.col(hash_col).alias("h"), F.lit(0).cast("long").alias("n"),
+        F.lit(None).cast("binary").alias("bloom"),
+    )
+    if prior is not None:
+        placeholder = F.lit(0).cast("long").alias("h")
+        rows = rows.unionByName(prior.select("bucket", placeholder, "n", "bloom"))
 
     def build_one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        hashes = pdf[hash_col].to_numpy(dtype=np.int64).astype(np.uint64)
+        is_key = pdf["bloom"].isna().to_numpy()
+        hashes = pdf["h"].to_numpy(dtype=np.int64)[is_key].astype(np.uint64)
         return pd.DataFrame(
-            [{"bucket": int(key[0]), "n": len(hashes), "m": m_bits,
-              "bloom": _build_bitmap(hashes, m_bits)}]
+            [{"bucket": int(key[0]), "n": int(pdf["n"].sum()) + len(hashes), "m": m_bits,
+              "bloom": _build_bitmap(hashes, m_bits, pdf["bloom"][~is_key])}]
         )
 
-    return (
-        keys.select(hash_col)
-        .withColumn("bucket", F.pmod(hash_col, F.lit(n_buckets)).cast("int"))
-        .groupBy("bucket")
-        .applyInPandas(build_one, SIDECAR_SCHEMA)
-    )
-
-
-def merge_sidecars(prior: DataFrame, delta: DataFrame) -> DataFrame:
-    """OR-merge two sidecars (fixed equal ``m`` per bucket ⇒ exact union).
-    Executor-side; each group holds at most 2 bitmap rows."""
-
-    def or_merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        m = int(pdf["m"].iloc[0])
-        acc = np.zeros((m + 7) // 8, dtype=np.uint8)
-        for b in pdf["bloom"]:
-            acc |= np.frombuffer(b, dtype=np.uint8)
-        return pd.DataFrame(
-            [{"bucket": int(key[0]), "n": int(pdf["n"].sum()), "m": m,
-              "bloom": acc.tobytes()}]
-        )
-
-    return prior.unionByName(delta).groupBy("bucket").applyInPandas(or_merge, SIDECAR_SCHEMA)
+    return rows.groupBy("bucket").applyInPandas(build_one, SIDECAR_SCHEMA)
 
 
 @dataclass

@@ -52,6 +52,13 @@ def first_per_key(
     return best.select(*[c if c in keys else F.col(f"_b.{c}").alias(c) for c in df.columns])
 
 
+def release(*checkpoints: DataFrame) -> None:
+    """Drop the blocks of ``localCheckpoint()`` frames. ``unpersist()`` does
+    not: a checkpoint is an RDD under a LogicalRDD, not a cached plan."""
+    for df in checkpoints:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+
 # Spark's size estimate of a broadcast (sha256 hex string) row: 8 bytes of
 # row overhead + 8 of offset/length + 64 chars
 SHA_ROW_BYTES = 80
@@ -300,9 +307,7 @@ def minhash_dedup_clusters(docs: DataFrame, id_col="doc_id", text_col="text") ->
 # ---- connected components (dedup-cluster collapse) --------------------------------
 
 
-def connected_components(
-    edges: DataFrame, id_a: str = "id_a", id_b: str = "id_b", max_iter: int = 20
-) -> DataFrame:
+def connected_components(edges: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Collapse near-dup pairs into clusters: (id, component) with
     ``component`` = the minimum id reachable through the pair graph — the
     canonical representative every duplicate deduplicates TO.
@@ -311,9 +316,10 @@ def connected_components(
     label among itself and its neighbors (one join + one groupBy per round,
     all skinny columns), converging in O(graph diameter) rounds — near-dup
     clusters are shallow (stars/cliques from LSH buckets), so 2-3 rounds is
-    typical; ``max_iter`` bounds adversarial chains. Each round is
-    checkpointed so the lineage (and the per-round shuffle count) stays
-    constant. At trillion-edge scale you would switch to the
+    typical. Labels only decrease, so the loop ends at the fixpoint, however
+    long the chain. Each round is checkpointed so the lineage (and the
+    per-round shuffle count) stays constant, and the previous round's
+    checkpoint is released. At trillion-edge scale you would switch to the
     large-star/small-star formulation (same primitive ops, provably
     O(log n) rounds); the per-round plan here is identical in shape.
     """
@@ -323,7 +329,7 @@ def connected_components(
     labels = (
         sym.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
     ).localCheckpoint()
-    for _ in range(max_iter):
+    while True:
         neigh = sym.join(labels, sym.dst == labels.id).select(
             F.col("src").alias("id"), F.col("comp")
         )
@@ -334,18 +340,16 @@ def connected_components(
             .agg(F.min("comp").alias("comp"))
             .localCheckpoint()
         )
-        changed = (
+        fixpoint = (
             new.alias("n")
             .join(labels.alias("o"), "id")
             .filter(F.col("n.comp") != F.col("o.comp"))
             .isEmpty()
         )
-        old = labels
+        release(labels)
         labels = new
-        old.unpersist()
-        if changed:  # isEmpty() == True -> fixpoint
-            break
-    return labels.select("id", F.col("comp").alias("component"))
+        if fixpoint:
+            return labels.select("id", F.col("comp").alias("component"))
 
 
 # ---- SimHash ---------------------------------------------------------------------

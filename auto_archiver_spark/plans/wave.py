@@ -14,14 +14,15 @@ One wave = one declarative DataFrame plan (SURVEY.md §3 "Spark lifecycle"):
          sidecar, plans/blobs.py) -> skinny refs staged ONCE (fetch_out)
       -> commits: images (zero-copy ref into fetch_out + dedup delete keys —
          merge-on-read), archive_results append, url_seen append,
-         sha_seen delta, Bloom sidecar OR-merge, per-wave metrics row
-         (incl. per-partition lineage)
+         sha_seen delta, Bloom sidecar update, next frontier, per-wave
+         metrics row
 
 A fresh crawl has no bootstrap ``frontier`` snapshot: wave 0 plans its
 frontier straight from the seed, and every wave commits the next one. The
 seed-state table is committed once, at bootstrap, alongside wave 0; its
 result cells are a fold of the committed archive_results log, computed by
-``read_seed_state`` when a reader asks (operators/writeback.py).
+``read_seed_state`` when a reader asks (operators/writeback.py). The
+per-partition lineage is a fold of the same log (``read_lineage``).
 
 State between waves lives in TableIO snapshots; the checkpoint commits the
 wave atomically across tables, and each wave reads its frontier from the
@@ -41,8 +42,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.bloom import BloomSidecar, build_sidecar, merge_sidecars
-from ..operators.dedup import content_dedup
+from ..operators.bloom import BloomSidecar, build_sidecar
+from ..operators.dedup import content_dedup, release
 from ..operators.fetch import fetch_archive, to_archive_results
 from ..operators.frontier import (
     N_BUCKETS,
@@ -96,7 +97,7 @@ def _cpu_snap() -> tuple[float, float] | None:
 # attempts showed the commit segments' ALLOCATION RATE (not bytes) is
 # what trips this host's memory-bandwidth governor — ~400 writer tasks
 # per wave across ~10 commits for tables that are a few MB each. Skinny
-# state tables (url_seen / sha_seen / frontier / bloom / lineage) and the
+# state tables (url_seen / sha_seen / frontier / bloom) and the
 # results table get a bounded writer count instead; the fetch_out
 # staging keeps full fan-out (its writers are the fetch tasks
 # themselves). On a real cluster these become "target file size" table
@@ -128,7 +129,9 @@ class CrawlConfig:
     block_sheets: tuple = ()
     # Optional outlink expansion: a callable (archive_results_df) -> seed-
     # shaped DataFrame (sheet, row_idx, url, status, folder) of URLs
-    # discovered this wave. They re-enter the next wave through the same
+    # discovered this wave. Its input is the plan of this wave's
+    # archive_results rows, the one the wave commits, over the staged
+    # fetch_out. The URLs re-enter the next wave through the same
     # canonicalize -> in-wave dedup -> anti-join-vs-url_seen path as seeds,
     # so already-crawled children are dropped by the frontier, not the
     # expander. This is the batch-iterative crawl loop proper (the reference
@@ -199,6 +202,19 @@ def read_seed_state(spark: SparkSession, io) -> DataFrame:
     return seed_state(base, io.read(spark, "archive_results"))
 
 
+def read_lineage(spark: SparkSession, io) -> DataFrame:
+    """Per-partition lineage: the committed archive_results rows counted and
+    their bytes summed per (fetch partition, wave). A root written before
+    lineage became a fold also holds a ``lineage`` table; it was this same
+    aggregate of the same committed rows."""
+    return (
+        io.read(spark, "archive_results")
+        .groupBy("lineage_partition", "wave")
+        .agg(F.count("*").alias("rows"), F.sum("total_bytes").alias("bytes"))
+        .select("lineage_partition", "rows", "bytes", "wave")
+    )
+
+
 def run_crawl(
     spark: SparkSession,
     io,
@@ -240,13 +256,6 @@ def run_crawl(
         return stats
 
 
-def _release(*checkpoints: DataFrame) -> None:
-    """Drop the blocks of ``localCheckpoint()`` frames. ``unpersist()`` does
-    not: a checkpoint is an RDD under a LogicalRDD, not a cached plan."""
-    for df in checkpoints:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(True)
-
-
 def _run_waves(
     spark: SparkSession,
     io,
@@ -266,6 +275,8 @@ def _run_waves(
     _state_opts = {"parquet.block.size": str(4 << 20)}
     for wave in range(start_wave, config.max_waves):
         t0 = time.monotonic()
+        if wave > start_wave:  # the snapshot the previous wave committed
+            frontier = io.read(spark, "frontier")
         marks = {}
         _last = [time.monotonic(), _cpu_snap()]
 
@@ -299,7 +310,7 @@ def _run_waves(
             .localCheckpoint()
         )
         if cand.isEmpty():
-            _release(cand)
+            release(cand)
             break
         mark("dedup")
         seen = io.read_or_empty(spark, "url_seen", URL_SEEN_SCHEMA)
@@ -380,15 +391,15 @@ def _run_waves(
         )
         mark("images_commit")
 
-        # ---- overlapped post-fetch DAG (r8, guide §2.6) -------------------
+        # ---- overlapped post-fetch pool (r8, guide §2.6) ------------------
         # Every post-fetch job consumes only materialized inputs (the
         # committed fetch_out staging, the adm/cand checkpoints, prior-wave
-        # tables) and writes a DISJOINT table, so almost all of them are
+        # tables) and writes a DISJOINT table, so all of them are
         # independent. Sequentially they serialized ~10 tiny Spark jobs'
         # scheduling latency per wave (r7: ~4.5 s wall for ~4 s of cpu across
-        # images/results/stats/state segments). A thread pool runs them
-        # overlapped; the only true edges are expressed as futures: lineage
-        # and the link expander need the committed archive_results read-back.
+        # images/results/stats/state segments). A thread pool runs them as a
+        # flat fan-out: no thunk waits on another's future, and none reads a
+        # table this wave committed.
 
         def t_images():
             # The images snapshot is a ZERO-COPY REF into the staged
@@ -424,21 +435,16 @@ def _run_waves(
                 kept.select("sha256").coalesce(STATE_COMMIT_PARTITIONS), "sha_seen", wave,
                 options=_state_opts,
             )
-            _release(kept)
+            release(kept)
             return ids
 
         def t_results():
-            sid = io.commit(
+            return io.commit(
                 results_plan.coalesce(RESULTS_COMMIT_PARTITIONS),
                 "archive_results",
                 wave,
                 options=_state_opts,
             )
-            # downstream consumers (lineage, expander) re-read the
-            # committed snapshot instead of re-running the to_archive_results
-            # chain over fetch_out once per job; the wave filter prunes to
-            # this wave's row group via parquet predicate pushdown
-            return sid, io.read(spark, "archive_results").filter(F.col("wave") == wave)
 
         def t_stats():
             fs = fetched.agg(
@@ -458,16 +464,15 @@ def _run_waves(
             )
 
         def _commit_bloom():
-            # incremental sidecar: hash ONLY this wave's new keys into delta
-            # bitmaps, OR-merge with the snapshot probed at wave top (fixed
-            # m ⇒ exact)
+            # incremental sidecar: hash ONLY this wave's new keys, ORed into
+            # the snapshot probed at wave top in the same pass (fixed m ⇒
+            # exact)
             keys = newly_seen.select("url_hash")
             if backfill is not None:
                 keys = backfill.unionByName(keys)
-            delta = build_sidecar(keys, N_BUCKETS)
-            merged = delta if filt is None else merge_sidecars(filt.sidecar, delta)
+            sidecar = build_sidecar(keys, N_BUCKETS, prior=filt.sidecar if filt else None)
             return io.commit(
-                merged.coalesce(STATE_COMMIT_PARTITIONS),
+                sidecar.coalesce(STATE_COMMIT_PARTITIONS),
                 "url_seen_bloom",
                 wave,
                 mode="overwrite",
@@ -479,9 +484,8 @@ def _run_waves(
             if n_reinjected:
                 nf = nf.unionByName(reinject)
             if config.link_expander is not None:
-                _, results_rb = f_results.result()
                 children = _first_attempts(
-                    seed_filter(config.link_expander(results_rb)), config.strict_urls
+                    seed_filter(config.link_expander(results_plan)), config.strict_urls
                 )
                 nf = nf.unionByName(children)
             return io.commit(
@@ -492,44 +496,31 @@ def _run_waves(
                 options=_state_opts,
             )
 
-        def _commit_lineage():
-            _, results_rb = f_results.result()
-            lineage = (
-                results_rb.groupBy("lineage_partition")
-                .agg(F.count("*").alias("rows"), F.sum("total_bytes").alias("bytes"))
-                .withColumn("wave", F.lit(wave))
-            )
-            return io.commit(lineage.coalesce(1), "lineage", wave, options=_state_opts)
-
-        # submit order puts the heavy/critical thunks first; max_workers
-        # leaves headroom so the future-blocked thunks (lineage,
-        # expander-frontier) can never deadlock behind a full pool
-        pool = ThreadPoolExecutor(max_workers=10)
+        # submit order puts the heavy/critical thunks first; one worker per
+        # thunk, so none queues behind another
+        thunks = {
+            "archive_results": t_results,
+            "stats": t_stats,
+            "images": t_images,
+            "url_seen": _commit_url_seen,
+            "url_seen_bloom": _commit_bloom,
+            "frontier": _commit_frontier,
+        }
+        pool = ThreadPoolExecutor(max_workers=len(thunks))
         try:
-            f_results = pool.submit(t_results)
-            f_stats = pool.submit(t_stats)
-            f_images = pool.submit(t_images)
-            futs = {
-                "url_seen": pool.submit(_commit_url_seen),
-                "url_seen_bloom": pool.submit(_commit_bloom),
-            }
-            f_lineage = pool.submit(_commit_lineage)
-            f_frontier = pool.submit(_commit_frontier)
-
-            snap_ids["archive_results"], results = f_results.result()
+            futs = {name: pool.submit(thunk) for name, thunk in thunks.items()}
+            snap_ids["archive_results"] = futs.pop("archive_results").result()
             mark("results_commit")
-            n_cand, adm_stats, fetch_stats = f_stats.result()
+            n_cand, adm_stats, fetch_stats = futs.pop("stats").result()
             mark("wave_stats")
-            snap_ids.update(f_images.result())
-            snap_ids["lineage"] = f_lineage.result()
-            snap_ids["frontier"] = f_frontier.result()
+            snap_ids.update(futs.pop("images").result())
             for name, fut in futs.items():
                 snap_ids[name] = fut.result()
         finally:
             pool.shutdown(wait=True)
         # every reader of the two checkpoints has run; the next wave reads
         # its frontier from the committed snapshot
-        _release(cand, adm)
+        release(cand, adm)
         mark("state_commits")
         if config.recrawl_failed:
             marks["reinjected"] = n_reinjected
@@ -563,5 +554,4 @@ def _run_waves(
             return stats
         if ws.deferred == 0 and config.link_expander is None and n_reinjected == 0:
             break  # with an expander the empty candidate set is the exit
-        frontier = io.read(spark, "frontier")
     return stats

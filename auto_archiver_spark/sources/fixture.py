@@ -31,6 +31,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..functions.codec import dhash64, encode_image
+from ..plans.tableio import local_df
 
 SEED = 42
 
@@ -235,9 +236,9 @@ def frontier_seed_df(spark, n: int):
 
 
 def host_policy_df(spark):
-    return spark.createDataFrame(
-        [tuple(r.values()) for r in host_policy_rows()], HOST_POLICY_SCHEMA
-    )
+    """The policy as literal rows (``local_df``): admission's broadcast of
+    it runs one JVM task and no Python task."""
+    return local_df(spark, HOST_POLICY_SCHEMA, [tuple(r.values()) for r in host_policy_rows()])
 
 
 def images_df(spark, n: int, partitions: int = 8):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from auto_archiver_spark.functions.codec import decode_image, psnr
 from auto_archiver_spark.oracle.runner import run_oracle
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
-from auto_archiver_spark.plans.wave import CrawlConfig, run_crawl
+from auto_archiver_spark.plans.wave import CrawlConfig, read_lineage, run_crawl
 from auto_archiver_spark.sources.fixture import (
     frontier_seed_df,
     host_policy_df,
@@ -107,7 +107,7 @@ def test_metrics_and_lineage_tables(crawl):
     m = io.read(spark, "metrics").orderBy("wave").collect()
     assert [r.wave for r in m] == list(range(len(stats)))
     assert sum(r.archived_ok for r in m) == len(oracle.crawl_order)
-    lin = io.read(spark, "lineage")
+    lin = read_lineage(spark, io)
     assert lin.agg(F.sum("rows")).collect()[0][0] == len(oracle.crawl_order)
 
 

@@ -2,6 +2,7 @@
 dedup (O1 ties), Bloom sidecar guarantees, politeness admission budget math,
 salted repartition fan-out."""
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from auto_archiver_spark.functions.urls import north_norm
@@ -87,6 +88,45 @@ def test_bloom_sidecar_no_false_negatives(spark):
         elif r.maybe_seen:
             fp += 1
     assert fp / max(len(rows) - len(seen_hashes), 1) < 0.05
+
+
+def _or_merge(a, b):
+    """Two sidecars' rows by bucket, ORed where both have one: the exact
+    union of two independent builds."""
+    out = {r.bucket: (r.n, r.m, bytes(r.bloom)) for r in a}
+    for r in b:
+        if r.bucket in out:
+            n, m, bits = out[r.bucket]
+            acc = np.frombuffer(bits, np.uint8) | np.frombuffer(bytes(r.bloom), np.uint8)
+            out[r.bucket] = (n + r.n, m, acc.tobytes())
+        else:
+            out[r.bucket] = (r.n, r.m, bytes(r.bloom))
+    return out
+
+
+def test_build_with_prior_equals_or_merge_of_builds(spark):
+    rng = np.random.default_rng(7)
+
+    def keys(hashes):
+        return spark.createDataFrame([(int(h),) for h in hashes], "url_hash long")
+
+    def rows(sidecar):
+        return {r.bucket: (r.n, r.m, bytes(r.bloom)) for r in sidecar.collect()}
+
+    k1 = rng.integers(-(2**63), 2**63 - 1, 300, dtype=np.int64)
+    # bucket 3 holds keys of k2 only, bucket 5 keys of k1 only
+    k1 = k1[np.mod(k1, 16) != 3]
+    k2 = rng.integers(-(2**63), 2**63 - 1, 200, dtype=np.int64)
+    k2 = k2[np.mod(k2, 16) != 5]
+    prior = build_sidecar(keys(k1), 16).localCheckpoint()
+    merged = rows(build_sidecar(keys(k2), 16, prior=prior))
+    assert merged == _or_merge(prior.collect(), build_sidecar(keys(k2), 16).collect())
+    assert 3 in merged and 5 in merged and len(merged) == 16
+    # one pass over both key sets builds the same bytes
+    assert merged == rows(build_sidecar(keys(np.concatenate([k1, k2])), 16))
+    # no new keys: the prior, bucket by bucket
+    empty = spark.createDataFrame([], "url_hash long")
+    assert rows(build_sidecar(empty, 16, prior=prior)) == rows(prior)
 
 
 def test_anti_join_with_and_without_bloom_agree(spark):

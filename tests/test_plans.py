@@ -18,7 +18,16 @@ from pyspark.sql import functions as F
 
 from auto_archiver_spark.operators.dedup import content_dedup, content_winners
 from auto_archiver_spark.operators.frontier import canonicalize, politeness_admission, seed_filter
-from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df, images_df
+from auto_archiver_spark.plans.tableio import local_df
+from auto_archiver_spark.sources.fixture import (
+    FRONTIER_SEED_SCHEMA,
+    HOST_POLICY_SCHEMA,
+    frontier_seed_df,
+    frontier_seed_rows,
+    host_policy_df,
+    host_policy_rows,
+    images_df,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -47,6 +56,18 @@ def test_policy_join_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     # the only hash exchange is the host window's
     assert re.findall(r"Exchange hashpartitioning\((\w+)#", plan) == ["host"]
+
+
+def test_host_policy_is_a_local_relation(spark):
+    """The fixture policy is literal rows: admission's broadcast of it scans
+    no RDD, so it starts no Python task. Its rows are the createDataFrame
+    frame's, array columns included."""
+    seeds = [tuple(r.values()) for r in frontier_seed_rows(50)]
+    fr = canonicalize(seed_filter(local_df(spark, FRONTIER_SEED_SCHEMA, seeds)))
+    adm = politeness_admission(fr, host_policy_df(spark))
+    assert "ExistingRDD" not in _plan(adm, "simple")
+    old = spark.createDataFrame([tuple(r.values()) for r in host_policy_rows()], HOST_POLICY_SCHEMA)
+    assert host_policy_df(spark).collect() == old.collect()
 
 
 def _content_dedup_plans(rows, sha_seen, mode="formatted") -> list[str]:
@@ -392,7 +413,7 @@ def test_domain_rebalance_broadcasts_rates_no_corpus_shuffle(spark):
 
 
 def test_metrics_row_has_no_rdd_scan(spark):
-    """A wave's metrics row is typed literals over ``range``: no ``Scan
+    """A wave's metrics row is a folded literal over ``range``: no ``Scan
     ExistingRDD``, so committing it runs no Python task."""
     from auto_archiver_spark.plans.tableio import local_df
     from auto_archiver_spark.plans.wave import METRICS_SCHEMA

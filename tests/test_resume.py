@@ -13,7 +13,12 @@ from dataclasses import dataclass, field
 import pytest
 
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
-from auto_archiver_spark.plans.wave import CrawlConfig, read_seed_state, run_crawl
+from auto_archiver_spark.plans.wave import (
+    CrawlConfig,
+    read_lineage,
+    read_seed_state,
+    run_crawl,
+)
 from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df
 
 N = 140
@@ -21,8 +26,9 @@ CFG = dict(wave_seconds=20.0, fetch_partitions=8)
 
 
 def _table_fingerprint(spark, io, table, drop=()):
-    # seed_state is read as the fold of archive_results over its base
-    df = read_seed_state(spark, io) if table == "seed_state" else io.read(spark, table)
+    # seed_state and lineage are read as folds of archive_results
+    read = {"seed_state": read_seed_state, "lineage": read_lineage}.get(table)
+    df = read(spark, io) if read else io.read(spark, table)
     df = df.drop(*drop)
     cols = sorted(df.columns)
     rows = df.select(*cols).collect()
@@ -58,7 +64,7 @@ def test_kill_and_resume_equals_uninterrupted(spark):
         io_b2, _, s2 = _run(spark, root_b)  # resume
         assert s2[0].wave == 1
 
-        for table in ("images", "archive_results", "url_seen", "metrics", "seed_state"):
+        for table in ("images", "archive_results", "url_seen", "metrics", "seed_state", "lineage"):
             drop = ("processed_at", "ts", "seconds", "lineage_partition") if table in (
                 "archive_results",
                 "metrics",

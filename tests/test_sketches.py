@@ -100,6 +100,24 @@ def test_connected_components_chains_and_cliques(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
+def test_connected_components_long_chain_reaches_fixpoint(spark):
+    """A 41-edge chain needs 41 rounds: the loop runs to the fixpoint, and
+    each round's label checkpoint is released, so only the one under the
+    returned frame stays."""
+    from auto_archiver_spark.operators.dedup import connected_components
+
+    def rdd_blocks():
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(41)] + [(100, 101)], "id_a long, id_b long"
+    )
+    before = rdd_blocks()
+    comp = {r.id: r.component for r in connected_components(edges).collect()}
+    assert rdd_blocks() <= before + 1
+    assert comp == {**{i: 0 for i in range(42)}, 100: 100, 101: 100}
+
+
 def test_phash_near_dup_pairs_on_fixture(spark):
     imgs = images_df(spark, 130, partitions=4).localCheckpoint()
     pairs = phash_near_dup_pairs(imgs, max_hamming=3).collect()
