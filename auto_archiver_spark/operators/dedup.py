@@ -8,9 +8,9 @@ Reference semantics covered:
 plus the training-data additions (MinHash-LSH, SimHash, n-gram Jaccard,
 embedding-cosine) that a 100 TB corpus pipeline needs.
 
-Exact dedup is one primitive, ``first_per_key`` (the crawl's in-wave dedup
-and the argmax gate queries), plus the crawl's A1+A2 payload decision,
-``content_dedup`` (its winners: ``content_winners``).
+Exact dedup is one primitive, ``first_per_key``: the crawl's in-wave dedup,
+its A1+A2 payload decision (``plans.wave.read_images``, first occurrence per
+sha256) and the argmax gate queries.
 
 Scale notes: every near-dup operator is bucket-first — candidates are
 generated by grouping on a bucket key, never by a cartesian product. The
@@ -57,59 +57,6 @@ def release(*checkpoints: DataFrame) -> None:
     not: a checkpoint is an RDD under a LogicalRDD, not a cached plan."""
     for df in checkpoints:
         df._jdf.queryExecution().analyzed().rdd().unpersist(True)
-
-
-# Spark's size estimate of a broadcast (sha256 hex string) row: 8 bytes of
-# row overhead + 8 of offset/length + 64 chars
-SHA_ROW_BYTES = 80
-
-
-def _broadcast_threshold(spark) -> int:
-    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-
-
-def broadcast_fits(spark, df: DataFrame, row_bytes: int) -> bool:
-    """Whether ``df``, at ``row_bytes`` a row, fits under
-    ``spark.sql.autoBroadcastJoinThreshold`` (counts ``df``; callers hold it
-    materialized or staged). A threshold of -1 never fits."""
-    threshold = _broadcast_threshold(spark)
-    return threshold >= 0 and df.count() * row_bytes <= threshold
-
-
-def content_winners(rows: DataFrame, sha_seen: DataFrame) -> DataFrame:
-    """A1+A2 winners (sha256, url_hash) of one wave's payload rows: per
-    sha256 the least url_hash (``url_hash`` is unique per row; a plain
-    ``min``, so the aggregate stays a HashAggregate and no payload column
-    of ``rows`` reaches its exchange), minus the sha256s the cross-wave
-    ``sha_seen`` table already holds.
-
-    ``sha_seen`` grows with the corpus. Before its first commit it is an
-    empty relation (``TableIO.read_or_empty``) and the optimizer prunes
-    the anti-join. While Spark's size estimate of it is under the broadcast
-    threshold, the size rule broadcasts it into a plain anti-join. Over it, and while the wave's rows (which bound its
-    winners) fit the threshold, ``sha_seen`` streams through a semi-join
-    against the broadcast winners and the winners anti-join those hits,
-    which are no more than the winners: it is neither broadcast nor
-    shuffled. With both over, the plain anti-join stays and AQE picks it."""
-    winners = rows.groupBy("sha256").agg(F.min("url_hash").alias("url_hash"))
-    spark = rows.sparkSession
-    seen_bytes = sha_seen._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if seen_bytes <= _broadcast_threshold(spark) or not broadcast_fits(spark, rows, SHA_ROW_BYTES):
-        return winners.join(sha_seen, "sha256", "left_anti")
-    hits = sha_seen.join(F.broadcast(winners.select("sha256")), "sha256", "left_semi")
-    return winners.join(F.broadcast(hits), "sha256", "left_anti")
-
-
-def content_dedup(rows: DataFrame, sha_seen: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The crawl's content-addressed dedup, decided on the skinny
-    (url_hash, sha256) projection of ``rows``. Returns ``(kept, drops)``:
-    ``kept`` is ``content_winners``, materialized because the delete keys
-    and the ``sha_seen`` commit both read it; ``drops`` (url_hash) is every
-    other row."""
-    keys = rows.select("url_hash", "sha256")
-    kept = content_winners(keys, sha_seen).localCheckpoint()
-    drops = keys.join(kept.select("url_hash"), "url_hash", "left_anti").select("url_hash")
-    return kept, drops
 
 
 # ---- candidate stage (every near-dup family) -----------------------------------

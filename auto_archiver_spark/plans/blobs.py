@@ -87,8 +87,8 @@ def materialize_bytes(
     the skinny reference columns."""
     if "blob_file" not in df.columns:
         return df
-    # a root older than the skinny staging schema also has an all-null
-    # `bytes` column (TableIO.read unions it in); the refs replace it
+    # a staging snapshot written while the schema still had an all-null
+    # `bytes` column carries it; the refs replace it
     df = df.drop(out_col)
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
@@ -126,34 +126,29 @@ def materialize_bytes(
     return res
 
 
-def vacuum_blobs(
-    spark, io, tables=("images",), blob_dir: str = "blobs",
-    grace_sec: float = 600.0,
-) -> dict:
-    """Delete sidecar blob files no live snapshot references — the
+def vacuum_blobs(spark, io, blob_dir: str = "blobs", grace_sec: float = 600.0) -> dict:
+    """Delete sidecar blob files no images row references — the
     ``remove_orphan_files`` maintenance op of this layout. Orphans appear
     when a torn wave is rolled back (its rows never commit but its
-    task-written blob files remain) or when an images snapshot is dropped.
+    task-written blob files remain) or when a file holds only payloads
+    whose hash an earlier row already archived.
 
     The referenced-file set is one distinct over the skinny ``blob_file``
-    column (bounded by partitions x waves, never by row count); the
-    filesystem walk is driver-side over the blobs dir only. Returns
-    counts + bytes reclaimed."""
+    column of ``plans.wave.read_images`` (bounded by partitions x waves,
+    never by row count); the filesystem walk is driver-side over the blobs
+    dir only. Returns counts + bytes reclaimed."""
     import os  # noqa: PLC0415
 
     from pyspark.sql import functions as F  # noqa: PLC0415
 
+    from .wave import read_images  # noqa: PLC0415
+
     live: set[str] = set()
-    for t in tables:
-        if not io.exists(t):
-            continue
-        df = io.read(spark, t)
-        if "blob_file" not in df.columns:
-            continue
+    if io.exists("fetch_out"):
         live.update(
             r[0]
-            for r in df.select("blob_file").filter(F.col("blob_file").isNotNull())
-            .distinct().collect()
+            for r in read_images(spark, io).select("blob_file")
+            .filter(F.col("blob_file").isNotNull()).distinct().collect()
         )
     import time  # noqa: PLC0415
 

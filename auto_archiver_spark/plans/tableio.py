@@ -63,8 +63,6 @@ class TableIO:
             return json.load(f)
 
     def _store_manifest(self, table: str, manifest: dict) -> None:
-        # a metadata-only first commit (commit_ref with no deletes) reaches
-        # here before any data write created the table dir
         os.makedirs(self._tdir(table), exist_ok=True)
         tmp = self._manifest_path(table) + ".tmp"
         with open(tmp, "w") as f:
@@ -76,9 +74,9 @@ class TableIO:
 
     def _next_id(self, table: str, manifest: dict) -> int:
         """Monotonic snapshot id: above every manifest id AND every snap dir
-        still on disk — a rolled-back id whose dir was preserved (pinned by
-        another table's ref-snapshot) must never be reused, or the new commit
-        would overwrite data a live ref still reads."""
+        still on disk — an orphan dir (a torn commit, or one an older root
+        kept for another table's reference to it) must never be taken over
+        by a new commit."""
         high = max((s["id"] for s in manifest["snapshots"]), default=0)
         tdir = self._tdir(table)
         if os.path.isdir(tdir):
@@ -110,27 +108,36 @@ class TableIO:
             if "dir" in s
         ]
 
+    def wave_dirs(self, table: str) -> list[tuple[int, str]]:
+        """(wave, data dir) of every committed snapshot of ``table`` in
+        commit order, overwritten ones included: a table overwritten each
+        wave read as the log of its waves (``plans.wave.read_images``)."""
+        return [
+            (s["wave"], os.path.join(self._tdir(table), s["dir"]))
+            for s in self._load_manifest(table)["snapshots"]
+        ]
+
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        """Every live snapshot's rows. Roots written before seed_state became
-        a fold also hold partition-replace snapshots of it, whose rows were
-        meant to shadow older ones; reading those would repeat keys, so it
-        raises — ``plans.wave.read_seed_state`` reads such a root."""
+        """Every live snapshot's rows. Roots written before seed_state and
+        images became folds also hold partition-replace snapshots of
+        seed_state, whose rows were meant to shadow older ones, and
+        zero-copy reference snapshots of images; reading those raises —
+        ``plans.wave.read_seed_state`` and ``read_images`` read such a
+        root."""
         snaps = self._live_snapshots(table)
         if not snaps:
             raise FileNotFoundError(f"table {table} has no committed snapshots")
-        if any("parts" in s for s in snaps):
+        if any("parts" in s or "ref" in s for s in snaps):
             raise ValueError(
-                f"table {table} holds partition-replace snapshots; "
-                "read seed_state with plans.wave.read_seed_state"
+                f"table {table} holds partition-replace or reference snapshots of "
+                "an older layout; read it with plans.wave.read_seed_state or "
+                "plans.wave.read_images"
             )
-        if all("ref" not in s and s.get("fmt") != "csv" for s in snaps):
+        if all(s.get("fmt") != "csv" for s in snaps):
             # fast path: one multi-dir parquet scan
             return spark.read.parquet(
                 *[os.path.join(self._tdir(table), s["dir"]) for s in snaps]
             )
-        # allowMissingColumns: images ref snapshots written while the fetch
-        # staging schema still had an inline `bytes` column select it; newer
-        # ones do not (it reads as null for their rows)
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             [self._snapshot_df(spark, table, s) for s in snaps],
@@ -203,55 +210,8 @@ class TableIO:
         self._store_manifest(table, manifest)
         return next_id
 
-    def commit_ref(
-        self,
-        table: str,
-        src_table: str,
-        src_snapshot_id: int,
-        wave: int,
-        select: list[str] | None = None,
-        where: str | None = None,
-        anti_keys: "DataFrame | None" = None,
-        anti_key_col: str = "_uid",
-        mode: str = "append",
-    ) -> int:
-        """Zero-copy snapshot: reference another table's committed data files
-        with a projection (``select`` exprs), a row ``where`` filter, and an
-        optional delete-key set (``anti_keys`` — written as a small parquet
-        sidecar; applied as a read-time anti-join).
-
-        This is Iceberg merge-on-read in miniature: a MERGE/DELETE commit
-        writes *metadata + position deletes*, never rewrites the data files.
-        Here it lets the wave driver publish the ``images`` table straight
-        from the staged fetch output, which is written once per wave
-        (payloads live in the blob sidecar, plans/blobs.py, and never hit
-        parquet). Readers pay a filter + a (tiny)
-        anti-join; a real deployment compacts in background maintenance.
-        """
-        src_manifest = self._load_manifest(src_table)
-        src = next(s for s in src_manifest["snapshots"] if s["id"] == src_snapshot_id)
-        manifest = self._load_manifest(table)
-        next_id = self._next_id(table, manifest)
-        entry = {
-            "id": next_id,
-            "wave": wave,
-            "mode": mode,
-            "ref": {"table": src_table, "dir": src["dir"]},
-        }
-        if select:
-            entry["select"] = list(select)
-        if where:
-            entry["where"] = where
-        if anti_keys is not None:
-            rel = f"snap-{next_id:05d}-deletes"
-            anti_keys.write.mode("overwrite").parquet(os.path.join(self._tdir(table), rel))
-            entry["anti"] = {"dir": rel, "key": anti_key_col}
-        manifest["snapshots"].append(entry)
-        self._store_manifest(table, manifest)
-        return next_id
-
     def _snapshot_df(self, spark: SparkSession, table: str, snap: dict) -> DataFrame:
-        """DataFrame for one snapshot entry (plain dir, csv dir, or ref)."""
+        """DataFrame for one snapshot entry (plain dir or csv dir)."""
         if snap.get("fmt") == "csv":
             schema = ", ".join(f"`{c}` string" for c in snap["cols"])
             return (
@@ -259,57 +219,17 @@ class TableIO:
                 .option("header", "true" if snap.get("header") else "false")
                 .csv(os.path.join(self._tdir(table), snap["dir"]))
             )
-        if "ref" in snap:
-            base = spark.read.parquet(
-                os.path.join(self._tdir(snap["ref"]["table"]), snap["ref"]["dir"])
-            )
-            if snap.get("where"):
-                base = base.filter(snap["where"])
-            if snap.get("anti"):
-                key = snap["anti"]["key"]
-                deletes = spark.read.parquet(
-                    os.path.join(self._tdir(table), snap["anti"]["dir"])
-                )
-                base = base.join(F.broadcast(deletes), key, "left_anti")
-            if snap.get("select"):
-                base = base.selectExpr(*snap["select"])
-            return base
         return spark.read.parquet(os.path.join(self._tdir(table), snap["dir"]))
 
-    def _inbound_ref_dirs(self, src_table: str) -> set[str]:
-        """Data dirs of ``src_table`` that some OTHER table's live ref-
-        snapshot still points at (zero-copy commit_ref targets). Dropping
-        these would dangle the referencing table's reads."""
-        pinned: set[str] = set()
-        if not os.path.isdir(self.root):
-            return pinned
-        for other in os.listdir(self.root):
-            if other == src_table or not os.path.isdir(os.path.join(self.root, other)):
-                continue
-            for s in self._live_snapshots(other):
-                ref = s.get("ref")
-                if ref and ref.get("table") == src_table:
-                    pinned.add(ref["dir"])
-        return pinned
-
     def rollback_to(self, table: str, snapshot_id: int) -> None:
-        """Drop snapshots newer than ``snapshot_id`` (manifest truncation;
-        orphan data dirs are deleted lazily). Dirs still referenced by live
-        zero-copy snapshots of OTHER tables are kept on disk — deleting them
-        would break those tables' reads (round-2 ADVICE); they become
-        ordinary orphans once the referencing snapshot itself is dropped."""
+        """Drop snapshots newer than ``snapshot_id``: the manifest is
+        truncated first, then their data dirs are deleted."""
         manifest = self._load_manifest(table)
         keep = [s for s in manifest["snapshots"] if s["id"] <= snapshot_id]
-        drop = [s for s in manifest["snapshots"] if s["id"] > snapshot_id]
         self._store_manifest(table, {"snapshots": keep})
-        pinned = self._inbound_ref_dirs(table) if drop else set()
-        for s in drop:
-            if "dir" in s and s["dir"] not in pinned:
+        for s in manifest["snapshots"]:
+            if s["id"] > snapshot_id and "dir" in s:
                 shutil.rmtree(os.path.join(self._tdir(table), s["dir"]), ignore_errors=True)
-            if "anti" in s:
-                shutil.rmtree(
-                    os.path.join(self._tdir(table), s["anti"]["dir"]), ignore_errors=True
-                )
 
 
 @dataclass

@@ -12,17 +12,17 @@ One wave = one declarative DataFrame plan (SURVEY.md §3 "Spark lifecycle"):
       -> salted repartition       (shuffle 3: host x salt — kills Zipf skew)
       -> fetch+enrich mapInPandas (Arrow batches; payloads go to the blob
          sidecar, plans/blobs.py) -> skinny refs staged ONCE (fetch_out)
-      -> commits: images (zero-copy ref into fetch_out + dedup delete keys —
-         merge-on-read), archive_results append, url_seen append,
-         sha_seen delta, Bloom sidecar update, next frontier, per-wave
-         metrics row
+      -> commits: archive_results append, url_seen append, Bloom sidecar
+         update, next frontier, per-wave metrics row
 
 A fresh crawl has no bootstrap ``frontier`` snapshot: wave 0 plans its
 frontier straight from the seed, and every wave commits the next one. The
 seed-state table is committed once, at bootstrap, alongside wave 0; its
 result cells are a fold of the committed archive_results log, computed by
 ``read_seed_state`` when a reader asks (operators/writeback.py). The
-per-partition lineage is a fold of the same log (``read_lineage``).
+per-partition lineage is a fold of the same log (``read_lineage``), and the
+content-deduplicated images table is a fold of the fetch_out snapshots, one
+per wave (``read_images``): the crawl keeps no content-seen state.
 
 State between waves lives in TableIO snapshots; the checkpoint commits the
 wave atomically across tables, and each wave reads its frontier from the
@@ -38,12 +38,13 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.bloom import BloomSidecar, build_sidecar
-from ..operators.dedup import content_dedup, release
+from ..operators.dedup import first_per_key, release
 from ..operators.fetch import fetch_archive, to_archive_results
 from ..operators.frontier import (
     N_BUCKETS,
@@ -66,6 +67,12 @@ METRICS_SCHEMA = (
 # attempt it is queued for (0 = first, k > 0 = k-th re-crawl)
 FRONTIER_COLS = [
     "sheet", "row_idx", "url", "status", "folder", "url_norm", "url_hash", "host", "attempt",
+]
+# an images row: payload refs (plans/blobs.py materialize_bytes re-attaches
+# pixels for the consumers that need them), enrichments, and its fetch wave
+IMAGE_COLS = [
+    "image_id", "blob_file", "blob_off", "blob_len", "w", "h", "fmt", "caption", "phash",
+    "sha256", "thumb", "wave",
 ]
 
 try:  # USER_HZ: jiffies per second for /proc/stat fields
@@ -97,7 +104,7 @@ def _cpu_snap() -> tuple[float, float] | None:
 # attempts showed the commit segments' ALLOCATION RATE (not bytes) is
 # what trips this host's memory-bandwidth governor — ~400 writer tasks
 # per wave across ~10 commits for tables that are a few MB each. Skinny
-# state tables (url_seen / sha_seen / frontier / bloom) and the
+# state tables (url_seen / frontier / bloom) and the
 # results table get a bounded writer count instead; the fetch_out
 # staging keeps full fan-out (its writers are the fetch tasks
 # themselves). On a real cluster these become "target file size" table
@@ -213,6 +220,33 @@ def read_lineage(spark: SparkSession, io) -> DataFrame:
         .agg(F.count("*").alias("rows"), F.sum("total_bytes").alias("bytes"))
         .select("lineage_partition", "rows", "bytes", "wave")
     )
+
+
+def read_images(spark: SparkSession, io) -> DataFrame:
+    """The archived images, one row per payload hash: the first success row
+    by (wave, url_hash) over every committed fetch_out snapshot, each tagged
+    with its manifest wave — the reference keeps a hash's first occurrence
+    (A1+A2: core/metadata.py:170-198, s3_storage.py:50-64). The winners are
+    picked over the skinny (sha256, wave, url_hash) keys and semi-joined
+    back, so no payload column reaches the aggregate's exchange. The union
+    allows missing columns: a root written while the staging schema had an
+    inline ``bytes`` column has it in its early snapshots only. Such a root
+    also holds an ``images`` table of references into these snapshots, with
+    these rows."""
+    snaps = io.wave_dirs("fetch_out")
+    if not snaps:
+        raise FileNotFoundError("table fetch_out has no committed snapshots")
+    ok = (
+        reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [spark.read.parquet(d).withColumn("wave", F.lit(w).cast("int")) for w, d in snaps],
+        )
+        .filter(F.col("status") == "success")
+        .withColumnRenamed("hash", "sha256")
+    )
+    keys = ["sha256", "wave", "url_hash"]
+    winners = first_per_key(ok.select(*keys), ["sha256"], ["wave", "url_hash"])
+    return ok.join(winners, keys, "left_semi").select(*IMAGE_COLS)
 
 
 def run_crawl(
@@ -389,6 +423,8 @@ def _run_waves(
         newly_seen = admitted.filter(first).select(
             "url_hash", "url_norm", F.lit(wave).cast("int").alias("first_seen_wave")
         )
+        # the re-crawl count, under the segment name WaveStats.extra readers
+        # key on
         mark("images_commit")
 
         # ---- overlapped post-fetch pool (r8, guide §2.6) ------------------
@@ -397,46 +433,9 @@ def _run_waves(
         # tables) and writes a DISJOINT table, so all of them are
         # independent. Sequentially they serialized ~10 tiny Spark jobs'
         # scheduling latency per wave (r7: ~4.5 s wall for ~4 s of cpu across
-        # images/results/stats/state segments). A thread pool runs them as a
-        # flat fan-out: no thunk waits on another's future, and none reads a
-        # table this wave committed.
-
-        def t_images():
-            # The images snapshot is a ZERO-COPY REF into the staged
-            # fetch_out files (Iceberg merge-on-read shape): the commit
-            # writes only metadata + a delete-key sidecar. Which rows the
-            # sidecar deletes is content_dedup's A1+A2 decision; sha_seen is
-            # not bucketed, so it is scanned whole, and shuffled only when
-            # the wave's rows exceed the broadcast threshold. At wave 0 it
-            # is absent, and the join against its empty relation is pruned.
-            kept, drops = content_dedup(
-                fetched.filter(F.col("status") == "success").withColumnRenamed("hash", "sha256"),
-                io.read_or_empty(spark, "sha_seen", "sha256 string"),
-            )
-            ids = {}
-            ids["images"] = io.commit_ref(
-                "images",
-                "fetch_out",
-                snap_ids["fetch_out"],
-                wave,
-                select=[
-                    # payload refs: plans/blobs.py materialize_bytes
-                    # re-attaches pixels for the consumers that need them
-                    "image_id", "blob_file", "blob_off", "blob_len",
-                    "w", "h", "fmt", "caption", "phash",
-                    "hash AS sha256", "thumb", f"CAST({wave} AS INT) AS wave",
-                ],
-                where="status = 'success'",
-                anti_keys=drops.coalesce(1),
-                anti_key_col="url_hash",
-            )
-            # the content hashes this wave actually kept (skinny)
-            ids["sha_seen"] = io.commit(
-                kept.select("sha256").coalesce(STATE_COMMIT_PARTITIONS), "sha_seen", wave,
-                options=_state_opts,
-            )
-            release(kept)
-            return ids
+        # images/results/stats/state segments). A thread pool runs the five
+        # as a flat fan-out: no thunk waits on another's future, and none
+        # reads a table this wave committed.
 
         def t_results():
             return io.commit(
@@ -501,7 +500,6 @@ def _run_waves(
         thunks = {
             "archive_results": t_results,
             "stats": t_stats,
-            "images": t_images,
             "url_seen": _commit_url_seen,
             "url_seen_bloom": _commit_bloom,
             "frontier": _commit_frontier,
@@ -513,7 +511,6 @@ def _run_waves(
             mark("results_commit")
             n_cand, adm_stats, fetch_stats = futs.pop("stats").result()
             mark("wave_stats")
-            snap_ids.update(futs.pop("images").result())
             for name, fut in futs.items():
                 snap_ids[name] = fut.result()
         finally:

@@ -94,13 +94,13 @@ def test_fetch_sidecar_staging_is_skinny(spark, tmp_path):
 
 def test_vacuum_blobs_removes_orphans_keeps_referenced(spark, tmp_path):
     """vacuum_blobs (the remove_orphan_files analog): blob files referenced
-    by the live images table survive; rolled-back-wave leftovers and stale
+    by the images fold (read_images) survive; rolled-back-wave leftovers and stale
     .tmp attempt files are reclaimed; materialization still works after."""
     from pyspark.sql import functions as F
 
     from auto_archiver_spark.plans.blobs import vacuum_blobs
     from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
-    from auto_archiver_spark.plans.wave import CrawlConfig, run_crawl
+    from auto_archiver_spark.plans.wave import CrawlConfig, read_images, run_crawl
     from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df
 
     root = str(tmp_path)
@@ -141,7 +141,7 @@ def test_vacuum_blobs_removes_orphans_keeps_referenced(spark, tmp_path):
     assert not os.path.exists(torn)
     assert not os.path.exists(tmp_attempt)
     # every surviving images row still materializes bit-exactly
-    mat = materialize_bytes(io.read(spark, "images"), root).collect()
+    mat = materialize_bytes(read_images(spark, io), root).collect()
     assert mat and all(
         "SHA-256:" + hashlib.sha256(bytes(r.bytes)).hexdigest() == r.sha256 for r in mat
     )

@@ -32,10 +32,6 @@ class RecordingIO(TableIO):
         self.log.append(("commit", table))
         return super().commit(df, table, *args, **kwargs)
 
-    def commit_ref(self, table, *args, **kwargs):
-        self.log.append(("commit", table))
-        return super().commit_ref(table, *args, **kwargs)
-
 
 class RecordingCheckpoint(WaveCheckpoint):
     def __init__(self, root, log):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from auto_archiver_spark.functions.codec import decode_image, psnr
 from auto_archiver_spark.oracle.runner import run_oracle
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
-from auto_archiver_spark.plans.wave import CrawlConfig, read_lineage, run_crawl
+from auto_archiver_spark.plans.wave import CrawlConfig, read_images, read_lineage, run_crawl
 from auto_archiver_spark.sources.fixture import (
     frontier_seed_df,
     host_policy_df,
@@ -59,7 +59,7 @@ def test_captions_and_pixels_match_oracle(crawl):
     # distributed; only fidelity consumers like this pay the read
     imgs = {
         r.image_id: r
-        for r in materialize_bytes(io.read(spark, "images"), io.root).collect()
+        for r in materialize_bytes(read_images(spark, io), io.root).collect()
     }
     assert imgs
     checked = 0
@@ -80,7 +80,9 @@ def test_captions_and_pixels_match_oracle(crawl):
 
 def test_content_dedup_no_sha_duplicates(crawl):
     spark, io, stats, oracle = crawl
-    assert io.read(spark, "images").groupBy("sha256").count().filter("count > 1").isEmpty()
+    images = read_images(spark, io)
+    assert not images.isEmpty()
+    assert images.groupBy("sha256").count().filter("count > 1").isEmpty()
 
 
 def test_robots_never_fetched(crawl):

@@ -4,9 +4,8 @@
   ReadSchema narrower than the table),
 * the politeness dimension joins as BroadcastHashJoin (J5 — never shuffles
   the frontier),
-* the crawl's content dedup never exchanges a payload column, never
-  broadcasts the committed ``sha_seen`` corpus, and does not shuffle it
-  while the wave fits the broadcast threshold,
+* the fold of the fetch log into images exchanges no payload column
+  (read from the plan tree, tests/plan_tree.py),
 * the URL canonicalization chain stays inside WholeStageCodegen (no Python
   in the hot path).
 """
@@ -16,7 +15,6 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from auto_archiver_spark.operators.dedup import content_dedup, content_winners
 from auto_archiver_spark.operators.frontier import canonicalize, politeness_admission, seed_filter
 from auto_archiver_spark.plans.tableio import local_df
 from auto_archiver_spark.sources.fixture import (
@@ -26,8 +24,9 @@ from auto_archiver_spark.sources.fixture import (
     frontier_seed_rows,
     host_policy_df,
     host_policy_rows,
-    images_df,
 )
+from tests.plan_tree import plan_tree
+from tests.test_images import plant_two_wave_root
 
 SF = "/root/testdata/sf0.001"
 
@@ -70,12 +69,6 @@ def test_host_policy_is_a_local_relation(spark):
     assert host_policy_df(spark).collect() == old.collect()
 
 
-def _content_dedup_plans(rows, sha_seen, mode="formatted") -> list[str]:
-    """Plans of the crawl's A2 decision: its winners and its delete keys."""
-    _, drops = content_dedup(rows, sha_seen)
-    return [_plan(content_winners(rows, sha_seen), mode), _plan(drops, mode)]
-
-
 def _subtrees(plan: str, op: str) -> list[str]:
     """The subtree below every ``op`` node of a simple-mode plan: the lines
     after it whose operator name sits deeper in the indentation."""
@@ -91,35 +84,22 @@ def _subtrees(plan: str, op: str) -> list[str]:
     return out
 
 
-def _hash_exchange_inputs(plan: str) -> list[set[str]]:
-    """Input column names of every hash Exchange in a formatted plan."""
-    return [
-        set(re.findall(r"(\w+)#\d+", block.split("Input")[1].split("\n")[0]))
-        for block in plan.split("\n\n")
-        if re.match(r"\(\d+\) Exchange\b", block.strip()) and "hashpartitioning" in block
-    ]
+def test_read_images_exchanges_no_payload_column(spark, tmp_path):
+    """``read_images`` picks each hash's winner over the skinny (sha256,
+    wave, url_hash) keys and semi-joins the winners back: no Exchange of its
+    plan outputs a payload column, nested in an aggregate buffer or not."""
+    from auto_archiver_spark.plans.wave import read_images
 
-
-def _payload_rows(spark, n, partitions):
-    return (
-        images_df(spark, n, partitions=partitions)
-        .withColumn("sha256", F.sha2(F.col("bytes"), 256))
-        .withColumn("url_hash", F.xxhash64("image_id"))
-    )
-
-
-def test_content_dedup_never_shuffles_bytes(spark):
-    """The crawl's A2 decision reads payload rows but shuffles only the
-    skinny (sha256, url_hash) keys: the winner aggregation is the hash
-    exchange, and no payload column is an input of any hash exchange."""
-    rows = _payload_rows(spark, 60, 4)
-    sha_seen = spark.createDataFrame([], "sha256 string")
-    plans = _content_dedup_plans(rows, sha_seen)
-    inputs = [cols for plan in plans for cols in _hash_exchange_inputs(plan)]
-    assert inputs, "the winner aggregation has no hash exchange"
-    payload = {"bytes", "image_id", "caption", "phash", "w", "h", "fmt"}
-    assert not any(cols & payload for cols in inputs), inputs
-    assert "HashAggregate" in plans[0] and "min(url_hash" in plans[0]
+    images = read_images(spark, plant_two_wave_root(spark, str(tmp_path)))
+    exchanges = [n for n in plan_tree(images).walk() if n.name.endswith("Exchange")]
+    assert exchanges, "the winner aggregate has no exchange"
+    payload = {
+        "thumb", "caption", "phash", "blob_file", "blob_off", "blob_len", "image_id", "w",
+        "h", "fmt",
+    }
+    for node in exchanges:
+        leaked = {p for p in node.output if p.rsplit(".", 1)[-1] in payload}
+        assert not leaked, (node.name, leaked)
 
 
 def test_canonicalize_is_whole_stage_codegen(spark):
@@ -127,80 +107,6 @@ def test_canonicalize_is_whole_stage_codegen(spark):
     plan = _plan(fr, "simple")
     assert "*(" in plan  # simple mode marks WholeStageCodegen stages as *(N)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def _prior_dedup_plans(spark, root, threshold: str) -> list[str]:
-    """Simple-mode plans of the A2 decision for a 40-row wave against two
-    committed waves of ``sha_seen`` (the only parquet scan here, ~2000
-    hashes: tens of KB of parquet), at the given broadcast threshold."""
-    from auto_archiver_spark.plans.tableio import TableIO
-
-    io = TableIO(root)
-    rows = _payload_rows(spark, 40, 2)
-    filler = spark.range(2000).select(F.sha2(F.col("id").cast("string"), 256).alias("sha256"))
-    # two prior committed waves of seen hashes (the skinny table)
-    io.commit(rows.limit(10).select("sha256"), "sha_seen", 0)
-    io.commit(rows.limit(20).select("sha256").union(filler), "sha_seen", 1)
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, threshold)
-    try:
-        plans = _content_dedup_plans(rows, io.read(spark, "sha_seen"), "simple")
-    finally:
-        spark.conf.set(key, old)
-    assert "LeftAnti" in plans[0] and "FileScan parquet [sha256" in plans[0]
-    return plans
-
-
-# the wave's 40 rows fit (40 x SHA_ROW_BYTES); the committed sha_seen does not
-WAVE_FITS = "8192"
-
-
-def test_prior_dedup_has_no_corpus_broadcast(spark, tmp_path):
-    """The cross-wave content dedup must NOT broadcast the committed corpus
-    (round-1 scale-killer: a broadcast hint on every sha256 ever committed):
-    over the threshold, with the wave over or under it, no BroadcastExchange
-    may build from a bare ``sha_seen`` scan; the committed table enters a
-    broadcast only through a join that cuts it to the wave's hits."""
-    for threshold in ("1", WAVE_FITS):
-        for plan in _prior_dedup_plans(spark, str(tmp_path / threshold), threshold):
-            for sub in _subtrees(plan, "BroadcastExchange"):
-                assert "FileScan" not in sub or "Join" in sub, sub
-
-
-def _streamed(plan: str) -> str:
-    """A simple-mode plan without its BroadcastExchange subtrees: the
-    operators whose rows stream into the plan's other nodes."""
-    for sub in _subtrees(plan, "BroadcastExchange"):
-        plan = plan.replace(sub, "")
-    return plan
-
-
-def test_prior_dedup_never_shuffles_sha_seen(spark, tmp_path):
-    """``sha_seen`` grows with the corpus. With it over the broadcast
-    threshold and the wave under it, no Exchange may stream its scan: it
-    streams through a semi-join against the broadcast wave winners instead
-    of being hash-exchanged every wave. Only its wave-sized hits may reach
-    an exchange, as a broadcast."""
-    plans = _prior_dedup_plans(spark, str(tmp_path), WAVE_FITS)
-    assert "LeftSemi" in plans[0]
-    for plan in plans:
-        for sub in _subtrees(plan, "Exchange"):
-            assert "FileScan" not in _streamed(sub), sub
-
-
-def test_prior_dedup_small_sha_seen_keeps_size_rule(spark, tmp_path):
-    """A ``sha_seen`` under the broadcast threshold is broadcast by the
-    size rule into the plain anti-join: no semi-join, no extra broadcast."""
-    plan = _prior_dedup_plans(spark, str(tmp_path), "10485760")[0]
-    assert "LeftSemi" not in plan and plan.count("BroadcastExchange") == 1, plan
-
-
-def test_prior_dedup_wave_over_threshold_is_not_broadcast(spark, tmp_path):
-    """A wave whose rows do not fit the broadcast threshold is not
-    broadcast: the winners anti-join ``sha_seen`` with no hint."""
-    for plan in _prior_dedup_plans(spark, str(tmp_path), "1"):
-        assert "BroadcastExchange" not in plan and "LeftSemi" not in plan, plan
 
 
 def test_anti_join_against_absent_table_is_pruned(spark, tmp_path):

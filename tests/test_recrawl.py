@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
-from auto_archiver_spark.plans.wave import CrawlConfig, read_seed_state, run_crawl
+from auto_archiver_spark.plans.wave import CrawlConfig, read_images, read_seed_state, run_crawl
 from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df
 
 CFG = dict(
@@ -57,8 +57,9 @@ def _run(spark, root, cfg=None, stop_after=None, n=60, seed=None):
 
 
 def _table_fingerprint(spark, io, table, drop=()):
-    # seed_state is read as the fold of archive_results over its base
-    df = read_seed_state(spark, io) if table == "seed_state" else io.read(spark, table)
+    # seed_state and images are read as folds of the committed log
+    read = {"seed_state": read_seed_state, "images": read_images}.get(table)
+    df = read(spark, io) if read else io.read(spark, table)
     df = df.drop(*drop)
     cols = sorted(df.columns)
     rows = df.select(*cols).collect()
@@ -105,7 +106,7 @@ def test_failed_urls_evicted_and_rearchived_next_wave(spark):
         seen = io.read(spark, "url_seen")
         assert seen.count() == seen.select("url_hash").distinct().count()
         # the re-archived flaky images actually landed
-        imgs = io.read(spark, "images").filter(F.col("caption").isNotNull()).count()
+        imgs = read_images(spark, io).filter(F.col("caption").isNotNull()).count()
         assert imgs > 0
         # the retry budget: the URL that never succeeds is fetched exactly
         # 1 + max_recrawls times, and no URL more often

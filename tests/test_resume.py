@@ -15,6 +15,7 @@ import pytest
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
 from auto_archiver_spark.plans.wave import (
     CrawlConfig,
+    read_images,
     read_lineage,
     read_seed_state,
     run_crawl,
@@ -26,8 +27,10 @@ CFG = dict(wave_seconds=20.0, fetch_partitions=8)
 
 
 def _table_fingerprint(spark, io, table, drop=()):
-    # seed_state and lineage are read as folds of archive_results
-    read = {"seed_state": read_seed_state, "lineage": read_lineage}.get(table)
+    # seed_state, lineage and images are read as folds of the committed log
+    read = {"seed_state": read_seed_state, "lineage": read_lineage, "images": read_images}.get(
+        table
+    )
     df = read(spark, io) if read else io.read(spark, table)
     df = df.drop(*drop)
     cols = sorted(df.columns)
@@ -59,7 +62,7 @@ def test_kill_and_resume_equals_uninterrupted(spark):
         assert len(s1) == 1
         # simulate a torn post-crash state: an orphan snapshot dir with no
         # manifest entry must be invisible to the resumed run
-        orphan = os.path.join(root_b, "images", "snap-99999")
+        orphan = os.path.join(root_b, "fetch_out", "snap-00099")
         os.makedirs(orphan, exist_ok=True)
         io_b2, _, s2 = _run(spark, root_b)  # resume
         assert s2[0].wave == 1
@@ -131,12 +134,11 @@ def test_resume_without_sidecar_persists_full_bloom(spark):
 
 def test_resume_reads_root_with_inline_bytes_column(spark, tmp_path):
     """A root whose early waves were written while the fetch staging schema
-    still had an (all-null) ``bytes binary`` column, which the images ref
-    snapshot selected, must still read after a resume with the skinny
-    schema: ``images`` unions the old and new ref snapshots, and every
-    payload re-attaches bit-exactly from the blob sidecar."""
+    still had an (all-null) ``bytes binary`` column must still read after a
+    resume with the skinny schema: ``read_images`` unions the old and new
+    staging snapshots, allowing the missing column, and every payload
+    re-attaches bit-exactly from the blob sidecar."""
     import hashlib
-    import json
 
     from pyspark.sql import functions as F
 
@@ -145,8 +147,8 @@ def test_resume_reads_root_with_inline_bytes_column(spark, tmp_path):
     root = str(tmp_path)
     io, _, _ = _run(spark, root, stop_after=0)
 
-    # rewrite wave 0 in the older layout: staging snapshot with a null
-    # `bytes` column after image_id, and the images ref selecting it
+    # rewrite wave 0's staging snapshot in the older layout: a null `bytes`
+    # column after image_id
     fo_dir = io.live_dirs("fetch_out")[0]
     old = spark.read.parquet(fo_dir)
     cols = old.columns
@@ -158,28 +160,61 @@ def test_resume_reads_root_with_inline_bytes_column(spark, tmp_path):
     legacy.write.parquet(tmp)
     shutil.rmtree(fo_dir)
     os.replace(tmp, fo_dir)
-    mpath = os.path.join(root, "images", "manifest.json")
-    with open(mpath) as fh:
-        manifest = json.load(fh)
-    (snap,) = manifest["snapshots"]
-    sel = snap["select"]
-    sel.insert(sel.index("image_id") + 1, "bytes")
-    with open(mpath, "w") as fh:
-        json.dump(manifest, fh)
+    assert "bytes" in spark.read.parquet(fo_dir).columns
     wave0 = {
         r.image_id: r.sha256
-        for r in io.read(spark, "images").select("image_id", "sha256").collect()
+        for r in read_images(spark, io).select("image_id", "sha256").collect()
     }
-    assert wave0 and "bytes" in io.read(spark, "images").columns
+    assert wave0
 
     io2, _, stats = _run(spark, root)  # resume
     assert stats[0].wave == 1
-    images = io2.read(spark, "images")
-    rows = materialize_bytes(images, root).collect()
+    rows = materialize_bytes(read_images(spark, io2), root).collect()
     assert len(rows) > len(wave0)
     assert {r.image_id: r.sha256 for r in rows if r.image_id in wave0} == wave0
     for r in rows:
         assert r.sha256 == "SHA-256:" + hashlib.sha256(bytes(r.bytes)).hexdigest()
+
+
+def test_resume_root_with_images_and_sha_seen_tables(spark, tmp_path):
+    """A root written while every wave committed an ``images`` table of
+    references into fetch_out and a ``sha_seen`` table names both in its
+    checkpoint. It resumes: recover rolls them back like any other table,
+    the resumed waves commit neither, and ``read_images`` equals an
+    uninterrupted run's."""
+    root_a, root_b = str(tmp_path / "a"), str(tmp_path / "b")
+    io_a, _, _ = _run(spark, root_a)
+    io, cp, _ = _run(spark, root_b, stop_after=0)
+
+    # wave 0 in the older layout: an images reference snapshot with its
+    # delete-key sidecar, and the wave's kept hashes
+    ((_, fo_dir),) = io.wave_dirs("fetch_out")
+    spark.createDataFrame([], "url_hash long").write.parquet(
+        os.path.join(root_b, "images", "snap-00001-deletes")
+    )
+    ref = {"table": "fetch_out", "dir": os.path.basename(fo_dir)}
+    images = [
+        {"id": 1, "wave": 0, "mode": "append", "ref": ref, "where": "status = 'success'",
+         "anti": {"dir": "snap-00001-deletes", "key": "url_hash"}},
+        {"id": 2, "wave": 1, "mode": "append", "ref": ref},  # a torn wave 1's
+    ]
+    with open(os.path.join(root_b, "images", "manifest.json"), "w") as fh:
+        json.dump({"snapshots": images}, fh)
+    kept = read_images(spark, io).select("sha256")
+    state = cp.load()
+    state["snapshots"].update(images=1, sha_seen=io.commit(kept, "sha_seen", 0))
+    cp.commit_wave(0, state["snapshots"])
+    torn = io.commit(kept, "sha_seen", 1)
+    with pytest.raises(ValueError, match="older layout"):
+        io.read(spark, "images")
+
+    io_b, cp_b, stats = _run(spark, root_b)  # resume
+    assert stats[0].wave == 1
+    assert [s["id"] for s in io_b._load_manifest("images")["snapshots"]] == [1]
+    assert [s["id"] for s in io_b._load_manifest("sha_seen")["snapshots"]] == [1]
+    assert not os.path.exists(os.path.join(root_b, "sha_seen", f"snap-{torn:05d}"))
+    assert not {"images", "sha_seen"} & set(cp_b.load()["snapshots"])
+    assert _table_fingerprint(spark, io_a, "images") == _table_fingerprint(spark, io_b, "images")
 
 
 @dataclass
@@ -242,9 +277,9 @@ def test_wave0_crash_with_background_seed_state(spark, tmp_path):
 
 
 def test_crawl_releases_its_checkpoint_blocks(spark, tmp_path):
-    """The candidate, admission and content-winner checkpoints are released
-    once read: after a 3-wave crawl the session holds no more RDD blocks
-    than before it."""
+    """The candidate and admission checkpoints are released once read:
+    after a 3-wave crawl the session holds no more RDD blocks than before
+    it."""
 
     def rdd_blocks():
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())

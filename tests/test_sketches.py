@@ -1,6 +1,6 @@
 """Dedup operators: MinHash-LSH (planted duplicates must surface), SimHash
-block buckets, phash near-dup pairs and exact content dedup on the image
-fixture, and the first-row-per-key helper against its window form."""
+block buckets and phash near-dup pairs on the image fixture, and the
+first-row-per-key helper against its window form."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,7 +9,6 @@ from pyspark.sql.window import Window
 from auto_archiver_spark.functions.hashing import shingle_minhash_arrow
 from auto_archiver_spark.operators import dedup
 from auto_archiver_spark.operators.dedup import (
-    content_dedup,
     first_per_key,
     minhash_dedup,
     minhash_lsh_candidates,
@@ -127,26 +126,6 @@ def test_phash_near_dup_pairs_on_fixture(spark):
     assert ("img_00000095", "img_00000096") in found
     for r in pairs:
         assert r.hamming <= 3
-
-
-def test_exact_content_dedup_on_fixture(spark):
-    """The crawl's A1+A2 decision (``content_dedup``): one survivor per
-    sha256, the least url_hash; every other row is a delete key."""
-    imgs = images_df(spark, 130, partitions=4).select(
-        # url_hash in image order, so the least one is the first occurrence
-        F.substring("image_id", 5, 8).cast("long").alias("url_hash"),
-        F.sha2(F.col("bytes"), 256).alias("sha256"),
-        "image_id",
-        "bytes",
-    )
-    kept, drops = content_dedup(imgs, spark.createDataFrame([], "sha256 string"))
-    kept_ids = {r.url_hash for r in kept.collect()}
-    drop_ids = {r.url_hash for r in drops.collect()}
-    n_sha = imgs.select("sha256").distinct().count()
-    assert len(kept_ids) == n_sha and not kept_ids & drop_ids
-    assert kept_ids | drop_ids == set(range(130))
-    # the exact duplicate img_96 is dropped, its source 95 kept
-    assert 95 in kept_ids and 96 in drop_ids
 
 
 def _window_first(df, keys, order, desc):

@@ -100,21 +100,19 @@ def test_csv_sink_header_iff_empty(spark, root):
     assert io.read(spark, "csvdb").count() == 2
 
 
-def test_rollback_keeps_dirs_pinned_by_refs(spark, root):
-    """Round-2 ADVICE: rolling back a source table must not delete data dirs
-    a live ref-snapshot of ANOTHER table still points at."""
+def test_wave_dirs_is_the_committed_log(spark, root):
+    """``wave_dirs`` lists every committed snapshot with its wave, the
+    overwritten ones too, but neither a rolled-back one nor an orphan dir;
+    a new commit takes no orphan dir's id."""
     io = TableIO(root)
-    sid0 = io.commit(spark.range(4).toDF("id"), "src", wave=0)
-    sid1 = io.commit(spark.range(4, 9).toDF("id"), "src", wave=1)
-    io.commit_ref("view", "src", sid1, wave=1, where="id >= 6")
-    assert io.read(spark, "view").count() == 3
-    io.rollback_to("src", sid0)  # drops src snapshot 2 from src's manifest
-    assert io.read(spark, "src").count() == 4
-    # the ref-pinned dir survived -> the view still reads
-    assert io.read(spark, "view").count() == 3
-    # unpinned rollback still deletes: a fresh snapshot with no inbound ref
-    sid2 = io.commit(spark.range(9, 10).toDF("id"), "src", wave=2)
-    dir2 = os.path.join(root, "src", f"snap-{sid2:05d}")
-    assert os.path.isdir(dir2)
-    io.rollback_to("src", sid0)
-    assert not os.path.isdir(dir2)
+    io.commit(spark.range(2).toDF("id"), "t", wave=0, mode="overwrite")
+    s1 = io.commit(spark.range(3).toDF("id"), "t", wave=1, mode="overwrite")
+    io.commit(spark.range(4).toDF("id"), "t", wave=2, mode="overwrite")
+    io.rollback_to("t", s1)
+    os.makedirs(os.path.join(root, "t", "snap-00007"))
+    assert io.wave_dirs("t") == [
+        (0, os.path.join(root, "t", "snap-00001")),
+        (1, os.path.join(root, "t", "snap-00002")),
+    ]
+    assert io.read(spark, "t").count() == 3
+    assert io.commit(spark.range(1).toDF("id"), "t", wave=2, mode="overwrite") == 8

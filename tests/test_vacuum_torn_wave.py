@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from auto_archiver_spark.plans.blobs import materialize_bytes, vacuum_blobs
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
-from auto_archiver_spark.plans.wave import CrawlConfig, read_seed_state, run_crawl
+from auto_archiver_spark.plans.wave import CrawlConfig, read_images, read_seed_state, run_crawl
 from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df
 
 N = 140
@@ -35,8 +35,9 @@ def _run(spark, root, **extra):
 
 
 def _fingerprint(spark, io, table, drop=()):
-    # seed_state is read as the fold of archive_results over its base
-    df = read_seed_state(spark, io) if table == "seed_state" else io.read(spark, table)
+    # seed_state and images are read as folds of the committed log
+    read = {"seed_state": read_seed_state, "images": read_images}.get(table)
+    df = read(spark, io) if read else io.read(spark, table)
     df = df.drop(*drop)
     cols = sorted(df.columns)
     return sorted(tuple(str(x) for x in r) for r in df.select(*cols).collect())
@@ -93,7 +94,7 @@ def test_torn_wave_orphans_vacuumed_resume_identical(spark):
         assert orphans, "injected crash should leave wave-1 blob orphans"
         referenced = {
             r[0]
-            for r in io_b.read(spark, "images")
+            for r in read_images(spark, io_b)
             .select("blob_file").filter(F.col("blob_file").isNotNull())
             .distinct().collect()
         }
@@ -122,7 +123,7 @@ def test_torn_wave_orphans_vacuumed_resume_identical(spark):
         # payload integrity through the whole tear/vacuum/resume cycle:
         # re-attached bytes hash to the committed row hash
         img = materialize_bytes(
-            io_b2.read(spark, "images").filter(F.col("blob_file").isNotNull()).limit(5),
+            read_images(spark, io_b2).filter(F.col("blob_file").isNotNull()).limit(5),
             root_b,
         ).select("bytes", "sha256").collect()
         assert img

@@ -6,13 +6,11 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from auto_archiver_spark import queries as Q  # noqa: E402
-from auto_archiver_spark.operators.dedup import content_dedup, content_winners  # noqa: E402
 from auto_archiver_spark.operators.frontier import (  # noqa: E402
     anti_join_seen,
     canonicalize,
@@ -22,13 +20,13 @@ from auto_archiver_spark.operators.frontier import (  # noqa: E402
     seed_filter,
 )
 from auto_archiver_spark.plans.tableio import local_df  # noqa: E402
-from auto_archiver_spark.plans.wave import URL_SEEN_SCHEMA  # noqa: E402
+from auto_archiver_spark.plans.wave import URL_SEEN_SCHEMA, read_images  # noqa: E402
 from auto_archiver_spark.session import get_spark  # noqa: E402
 from auto_archiver_spark.sources.fixture import (  # noqa: E402
     frontier_seed_df,
     host_policy_df,
-    images_df,
 )
+from tests.test_images import plant_two_wave_root  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,8 +44,8 @@ def main():
     sections.append(("frontier canonicalize (P1+north-rule, pure codegen)", plan_of(fr)))
 
     cand = dedup_in_wave(fr)
-    # wave 0: url_seen and sha_seen are absent, read as empty relations
-    # (TableIO.read_or_empty), and the joins against them are pruned
+    # wave 0: url_seen is absent, read as an empty relation
+    # (TableIO.read_or_empty), and the join against it is pruned
     seen = local_df(spark, URL_SEEN_SCHEMA)
     sections.append(("in-wave dedup + anti-join vs url_seen (J1/J6) at wave 0: "
                      "the join against the absent url_seen is pruned",
@@ -59,16 +57,12 @@ def main():
     sections.append(("salted fetch repartition (host-skew kill)",
                      plan_of(salted_fetch_repartition(cand, 16))))
 
-    imgs = images_df(spark, 40, partitions=2).withColumn(
-        "sha256", F.sha2(F.col("bytes"), 256)).withColumn("url_hash", F.xxhash64("image_id"))
-    sha_seen = local_df(spark, "sha256 string")
-    _, drops = content_dedup(imgs, sha_seen)
-    sections.append(("payload content dedup at wave 0 (A1+A2 winners: skinny "
-                     "HashAggregate, bytes never shuffle; the anti-join against "
-                     "the absent sha_seen is pruned)",
-                     plan_of(content_winners(imgs.select("url_hash", "sha256"), sha_seen))))
-    sections.append(("payload content dedup (A2 delete keys vs the materialized winners)",
-                     plan_of(drops)))
+    with tempfile.TemporaryDirectory() as root:
+        images = read_images(spark, plant_two_wave_root(spark, root))
+        sections.append(("images as the fold of a two-wave fetch log (A1+A2: first "
+                         "success row per sha256 by (wave, url_hash), picked over the "
+                         "skinny keys; the payload rows are never exchanged)",
+                         plan_of(images)))
 
     for name in ("pricing_summary", "url_canonicalize", "frontier_admission",
                  "cosine_topk", "minhash_lsh", "media_explode", "twitter_parse",

@@ -38,7 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint  # noqa: E402
-from auto_archiver_spark.plans.wave import CrawlConfig, run_crawl  # noqa: E402
+from auto_archiver_spark.plans.wave import CrawlConfig, read_images, run_crawl  # noqa: E402
 from auto_archiver_spark.session import get_spark  # noqa: E402
 from auto_archiver_spark.sources.fixture import (  # noqa: E402
     fixture_link_expander,
@@ -152,14 +152,16 @@ def main():
             ("url_seen", ()),
             ("images", ()),
             ("archive_results", ("processed_at", "ts", "lineage_partition")),
-            ("sha_seen", ()),
             ("url_seen_bloom", ()),
         ]
         if recrawl:
             resume_tables.append(("frontier", ()))
+        def read(io, table):
+            return read_images(spark, io) if table == "images" else io.read(spark, table)
+
         for table, drop in resume_tables:
-            fa = fingerprint(io_a.read(spark, table), drop)
-            fb = fingerprint(io_b.read(spark, table), drop)
+            fa = fingerprint(read(io_a, table), drop)
+            fb = fingerprint(read(io_b, table), drop)
             resume[table] = {"match": fa == fb, "rows": fa[1]}
 
         print(

@@ -4,8 +4,8 @@ Crashes a crawl mid-wave via the fetch-UDF fault-injection hook
 (CrawlConfig.crash_during_fetch_wave), leaving the wave's sidecar blob
 files orphaned (written by completed tasks, never referenced by a
 committed snapshot). Reports what ``vacuum_blobs`` reclaims, then resumes
-the crawl and verifies the blobs directory converges to exactly the
-committed tables' referenced set.
+the crawl and verifies the blobs directory converges to exactly the set
+the images fold (``read_images``) references.
 
 Usage: python tools/vacuum_bench.py [seed_n] [cores]   (defaults 12000 32)
 """
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from auto_archiver_spark.plans.blobs import vacuum_blobs  # noqa: E402
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint  # noqa: E402
-from auto_archiver_spark.plans.wave import CrawlConfig, run_crawl  # noqa: E402
+from auto_archiver_spark.plans.wave import CrawlConfig, read_images, run_crawl  # noqa: E402
 from auto_archiver_spark.session import get_spark  # noqa: E402
 from auto_archiver_spark.sources.fixture import (  # noqa: E402
     frontier_seed_df,
@@ -86,7 +86,7 @@ def main():
                           CrawlConfig(**cfg))
         referenced = {
             r[0]
-            for r in io.read(spark, "images").select("blob_file")
+            for r in read_images(spark, io).select("blob_file")
             .filter(F.col("blob_file").isNotNull()).distinct().collect()
         }
         # maintenance pass after the resumed crawl: must keep exactly the
