@@ -31,7 +31,14 @@ build and probe sides (round-1 ADVICE: a uint64 ``%`` probe disagrees with
 pmod for negative hashes unless n_buckets is a power of two).
 
 Double hashing (Kirsch-Mitzenmacher): pos_i = (h1 + i*h2) mod m with h1/h2
-carved from the 64-bit xxhash key itself — zero extra hashing cost.
+carved from the 64-bit xxhash key itself — zero extra hashing cost. Both are
+taken from bits the bucket does not read: h1 from bits 8 and up, h2 from bits
+33 and up. Every row carries the ``layout`` it was built with; a sidecar
+without one was built when h1 took the low bits, which its bucket key fixes,
+so only 512 of a bucket's 2^17 first positions were reachable (1.6x the
+ideal false-positive rate at 8 bits per key, 3x at 16). Its bits are at
+other positions, so the crawl never probes it: it rebuilds the sidecar from
+url_seen (plans/wave.py).
 """
 
 from __future__ import annotations
@@ -48,14 +55,20 @@ BLOOM_K = 7
 # deployment sets ~12 bits/expected-key (≈60 MB/bucket at 256 buckets)
 DEFAULT_M_BITS = 1 << 17
 
-SIDECAR_SCHEMA = "bucket int, n long, m long, bloom binary"
+# the bit layout a sidecar row was built with (see the module docstring)
+LAYOUT = 2
+# hash bits below this one pick the bucket (pmod(h, N_BUCKETS) with
+# N_BUCKETS = 256 reads bits 0-7): no bit position is taken from them
+BUCKET_BITS = 8
+
+SIDECAR_SCHEMA = "bucket int, n long, m long, bloom binary, layout int"
 
 
 def _bit_positions(hashes: np.ndarray, m: int) -> np.ndarray:
     """(len, BLOOM_K) bit positions via double hashing of the u64 keys."""
     h = hashes.astype(np.uint64)
     m_ = np.uint64(m)
-    h1 = h % m_
+    h1 = (h >> np.uint64(BUCKET_BITS)) % m_
     h2 = ((h >> np.uint64(33)) << np.uint64(1)) | np.uint64(1)
     i = np.arange(BLOOM_K, dtype=np.uint64)
     return ((h1[:, None] + i[None, :] * h2[:, None]) % m_).astype(np.int64)
@@ -87,10 +100,11 @@ def build_sidecar(
     """One fixed-size Bloom bitmap per url_hash bucket, built executor-side.
     Only buckets that hold keys, or a ``prior`` row, get a row.
 
-    ``prior`` is a sidecar built with the same ``m_bits``. Its rows join the
-    keys in the same grouped pass: each bucket's bitmap is the prior's ORed
-    with the keys' bits, and ``n`` is the prior's plus the bucket's key
-    count. A fixed ``m`` per bucket makes this the exact union."""
+    ``prior`` is a sidecar of this ``LAYOUT`` built with the same
+    ``m_bits``. Its rows join the keys in the same grouped pass: each
+    bucket's bitmap is the prior's ORed with the keys' bits, and ``n`` is
+    the prior's plus the bucket's key count. A fixed ``m`` per bucket makes
+    this the exact union."""
     # a key row has no bitmap; a prior row's hash is a placeholder, since a
     # null would make the pandas column float64 and lose hash bits
     rows = keys.select(
@@ -107,7 +121,8 @@ def build_sidecar(
         hashes = pdf["h"].to_numpy(dtype=np.int64)[is_key].astype(np.uint64)
         return pd.DataFrame(
             [{"bucket": int(key[0]), "n": int(pdf["n"].sum()) + len(hashes), "m": m_bits,
-              "bloom": _build_bitmap(hashes, m_bits, pdf["bloom"][~is_key])}]
+              "bloom": _build_bitmap(hashes, m_bits, pdf["bloom"][~is_key]),
+              "layout": LAYOUT}]
         )
 
     return rows.groupBy("bucket").applyInPandas(build_one, SIDECAR_SCHEMA)
@@ -126,6 +141,12 @@ class BloomSidecar:
         """Wrap a persisted ``url_seen_bloom`` snapshot (wave driver path)."""
         return cls(n_buckets, sidecar_df)
 
+    @staticmethod
+    def is_current(sidecar_df: DataFrame) -> bool:
+        """Whether a persisted sidecar has this ``LAYOUT``'s bit positions:
+        one built before rows carried a layout has none."""
+        return "layout" in sidecar_df.columns
+
     def might_contain_col(self, df: DataFrame, hash_col: str = "url_hash") -> DataFrame:
         """Adds boolean ``maybe_seen`` via a bucket-aligned cogroup zip.
 
@@ -142,6 +163,8 @@ class BloomSidecar:
             if side.empty:
                 out["maybe_seen"] = False
                 return out
+            if int(side["layout"].iloc[0]) != LAYOUT:
+                raise ValueError(f"bucket {key[0]}: a layout {side['layout'].iloc[0]} sidecar")
             m = int(side["m"].iloc[0])
             bitmap = side["bloom"].iloc[0]
             h = cand[hash_col].to_numpy(dtype=np.int64).astype(np.uint64)

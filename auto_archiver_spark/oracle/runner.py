@@ -60,22 +60,16 @@ def run_oracle(
     n_seed: int,
     wave_seconds: float = 60.0,
     max_waves: int = 32,
-    allow_sheets: tuple = (),
-    block_sheets: tuple = (),
 ) -> OracleResult:
     policies = {p["host"]: p for p in host_policy_rows()}
     res = OracleResult()
 
-    # feeder enumeration order + row predicate (P11/P12)
+    # feeder enumeration order + row predicate (P11)
     rows = [
         r
         for r in sorted(frontier_seed_rows(n_seed), key=lambda r: (r["sheet"], r["row_idx"]))
         if r["url"].strip() and not (r["status"] or "").strip()
     ]
-    if allow_sheets:
-        rows = [r for r in rows if r["sheet"] in allow_sheets]
-    elif block_sheets:
-        rows = [r for r in rows if r["sheet"] not in block_sheets]
 
     # P1 validity + canonicalization; dedup keeps first occurrence in order
     frontier = []

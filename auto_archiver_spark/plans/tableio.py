@@ -45,6 +45,24 @@ def local_df(spark: SparkSession, schema: str, rows=()) -> DataFrame:
     return spark.range(0, 1, 1, 1).select(F.inline(parsed))
 
 
+def _nullable(dtype):
+    """A data type's JSON form with every field, array element and map value
+    nullable: how a parquet scan reads any schema it is given or infers."""
+    if not isinstance(dtype, dict):
+        return dtype
+    out = dict(dtype)
+    if dtype["type"] == "struct":
+        out["fields"] = [
+            {**f, "nullable": True, "type": _nullable(f["type"])} for f in dtype["fields"]
+        ]
+    elif dtype["type"] == "array":
+        out.update(containsNull=True, elementType=_nullable(dtype["elementType"]))
+    elif dtype["type"] == "map":
+        out.update(valueContainsNull=True, keyType=_nullable(dtype["keyType"]),
+                   valueType=_nullable(dtype["valueType"]))
+    return out
+
+
 @dataclass
 class TableIO:
     root: str
@@ -111,11 +129,45 @@ class TableIO:
     def wave_dirs(self, table: str) -> list[tuple[int, str]]:
         """(wave, data dir) of every committed snapshot of ``table`` in
         commit order, overwritten ones included: a table overwritten each
-        wave read as the log of its waves (``plans.wave.read_images``)."""
+        wave read as the log of its waves (``read_log``)."""
         return [
             (s["wave"], os.path.join(self._tdir(table), s["dir"]))
             for s in self._load_manifest(table)["snapshots"]
         ]
+
+    def _parquet(self, spark: SparkSession, table: str, snaps: list[dict], merge: bool = False):
+        """One multi-dir parquet scan of ``snaps``. When every snapshot
+        recorded the same schema at its commit, the reader is given it and
+        runs no schema-inference job. Otherwise (a snapshot committed before
+        schemas were recorded, or a schema that changed) Spark infers it:
+        from one file, or merged over every file when ``merge``."""
+        schemas = {s.get("schema") for s in snaps}
+        reader = spark.read
+        if len(schemas) == 1 and None not in schemas:
+            reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
+        elif merge:
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*[os.path.join(self._tdir(table), s["dir"]) for s in snaps])
+
+    def read_log(self, spark: SparkSession, table: str) -> DataFrame:
+        """Every committed snapshot's rows, overwritten ones included, with a
+        ``wave`` column: the manifest wave of the snapshot the row was read
+        from. The log is one multi-dir scan, and a row's wave is looked up
+        in a literal map by the snapshot dir in its ``_metadata.file_path``:
+        a union of per-snapshot scans would let the optimizer push a join
+        into every branch (one broadcast per snapshot). The columns are
+        merged over all snapshots, so a column that only some of them hold
+        reads null in the others."""
+        snaps = self._load_manifest(table)["snapshots"]
+        if not snaps:
+            raise FileNotFoundError(f"table {table} has no committed snapshots")
+        wave_of = F.create_map(
+            *[F.lit(x) for w, d in self.wave_dirs(table) for x in (os.path.basename(d), w)]
+        )
+        snap_dir = F.regexp_extract(F.col("_metadata.file_path"), r"([^/]+)/[^/]+$", 1)
+        return self._parquet(spark, table, snaps, merge=True).withColumn(
+            "wave", wave_of[snap_dir].cast("int")
+        )
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """Every live snapshot's rows. Roots written before seed_state and
@@ -134,10 +186,7 @@ class TableIO:
                 "plans.wave.read_images"
             )
         if all(s.get("fmt") != "csv" for s in snaps):
-            # fast path: one multi-dir parquet scan
-            return spark.read.parquet(
-                *[os.path.join(self._tdir(table), s["dir"]) for s in snaps]
-            )
+            return self._parquet(spark, table, snaps)
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             [self._snapshot_df(spark, table, s) for s in snaps],
@@ -165,7 +214,10 @@ class TableIO:
         already-compressed binaries (PNG thumbnails) can pass "uncompressed"
         (zstd/snappy burn CPU on incompressible data for ~0% gain).
         ``options`` are extra per-write parquet options (e.g. a small
-        ``parquet.block.size`` for the fetch staging — see plans/wave.py)."""
+        ``parquet.block.size`` for the fetch staging — see plans/wave.py).
+
+        The manifest entry records ``df``'s schema, which the readers pass
+        to Spark instead of inferring it from the files."""
         manifest = self._load_manifest(table)
         next_id = self._next_id(table, manifest)
         rel = f"snap-{next_id:05d}"
@@ -175,7 +227,10 @@ class TableIO:
         for k, v in (options or {}).items():
             writer = writer.option(k, v)
         writer.parquet(os.path.join(self._tdir(table), rel))
-        manifest["snapshots"].append({"id": next_id, "dir": rel, "wave": wave, "mode": mode})
+        manifest["snapshots"].append({
+            "id": next_id, "dir": rel, "wave": wave, "mode": mode,
+            "schema": json.dumps(_nullable(df.schema.jsonValue())),
+        })
         self._store_manifest(table, manifest)
         return next_id
 

@@ -38,7 +38,6 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -131,9 +130,6 @@ class CrawlConfig:
     # fault injection (tests only): raise inside the fetch UDF during this
     # wave — simulates a mid-wave task death between blob append and commit
     crash_during_fetch_wave: int | None = None
-    strict_urls: bool = False  # P1 via exact ipaddress UDF (reference parity)
-    allow_sheets: tuple = ()
-    block_sheets: tuple = ()
     # Optional outlink expansion: a callable (archive_results_df) -> seed-
     # shaped DataFrame (sheet, row_idx, url, status, folder) of URLs
     # discovered this wave. Its input is the plan of this wave's
@@ -144,10 +140,6 @@ class CrawlConfig:
     # expander. This is the batch-iterative crawl loop proper (the reference
     # archives fixed lists; a web-scale frontier grows itself).
     link_expander: object = None
-    # Optional per-host priority-queue ordering for admission (a list of
-    # Column sort keys, e.g. deferral age or crawl depth). None = crawl
-    # order O1 — required for reference crawl-order parity.
-    admission_priority: object = None
 
 
 @dataclass
@@ -164,10 +156,10 @@ class WaveStats:
     extra: dict = field(default_factory=dict)
 
 
-def _first_attempts(rows: DataFrame, strict: bool = False) -> DataFrame:
+def _first_attempts(rows: DataFrame) -> DataFrame:
     """Seed-shaped rows (sheet, row_idx, url, status, folder) as frontier
     rows queued for their first fetch."""
-    return canonicalize(rows, strict=strict).withColumn("attempt", F.lit(0)).select(*FRONTIER_COLS)
+    return canonicalize(rows).withColumn("attempt", F.lit(0)).select(*FRONTIER_COLS)
 
 
 def _legacy_attempts(spark: SparkSession, io, frontier: DataFrame) -> DataFrame:
@@ -228,19 +220,13 @@ def read_images(spark: SparkSession, io) -> DataFrame:
     with its manifest wave — the reference keeps a hash's first occurrence
     (A1+A2: core/metadata.py:170-198, s3_storage.py:50-64). The winners are
     picked over the skinny (sha256, wave, url_hash) keys and semi-joined
-    back, so no payload column reaches the aggregate's exchange. The union
-    allows missing columns: a root written while the staging schema had an
-    inline ``bytes`` column has it in its early snapshots only. Such a root
-    also holds an ``images`` table of references into these snapshots, with
-    these rows."""
-    snaps = io.wave_dirs("fetch_out")
-    if not snaps:
-        raise FileNotFoundError("table fetch_out has no committed snapshots")
+    back, so no payload column reaches the aggregate's exchange, and the log
+    is one scan, so the winners are broadcast once. A root written while the
+    staging schema had an inline ``bytes`` column has it in its early
+    snapshots only; it is not projected. Such a root also holds an
+    ``images`` table of references into these snapshots, with these rows."""
     ok = (
-        reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True),
-            [spark.read.parquet(d).withColumn("wave", F.lit(w).cast("int")) for w, d in snaps],
-        )
+        io.read_log(spark, "fetch_out")
         .filter(F.col("status") == "success")
         .withColumnRenamed("hash", "sha256")
     )
@@ -274,8 +260,7 @@ def run_crawl(
             seed_commit = boot.submit(
                 io.commit, init_seed_state(seed), "seed_state", 0, "overwrite"
             )
-            base = seed_filter(seed, config.allow_sheets or None, config.block_sheets or None)
-            frontier = _first_attempts(base, config.strict_urls)
+            frontier = _first_attempts(seed_filter(seed))
         else:
             seed_commit = None
             frontier = io.read(spark, "frontier")
@@ -351,13 +336,15 @@ def _run_waves(
 
         # URL-seen Bloom sidecar: probe the PERSISTED bucket-keyed table
         # (OR-merged incrementally below) — the driver holds only a handle,
-        # never a bitmap. Without a sidecar (wave 0, or a root written
-        # before it existed) the anti-join is the plain exact one, and this
-        # wave's commit builds the sidecar, from every seen key if any.
+        # never a bitmap. Without a sidecar of the current bit layout (wave
+        # 0, or a root written before it) the anti-join is the plain exact
+        # one, and this wave's commit builds the sidecar, from every seen key
+        # if any.
         filt = None
-        backfill = None  # seen keys that no sidecar holds yet
-        if io.exists("url_seen_bloom"):
-            filt = BloomSidecar.from_table(io.read(spark, "url_seen_bloom"), N_BUCKETS)
+        backfill = None  # seen keys that no current sidecar holds yet
+        side = io.read(spark, "url_seen_bloom") if io.exists("url_seen_bloom") else None
+        if side is not None and BloomSidecar.is_current(side):
+            filt = BloomSidecar.from_table(side, N_BUCKETS)
         elif io.exists("url_seen"):
             backfill = seen.select("url_hash")
         mark("bloom_build")
@@ -367,10 +354,7 @@ def _run_waves(
 
         # shuffle 2: admission window; one materialization feeds four consumers
         # (the stats agg over it runs later, inside the overlapped pool)
-        adm = politeness_admission(
-            new_urls, host_policy, config.wave_seconds,
-            priority_cols=config.admission_priority,
-        ).localCheckpoint()
+        adm = politeness_admission(new_urls, host_policy, config.wave_seconds).localCheckpoint()
         admitted = adm.filter(F.col("admitted"))
         deferred = adm.filter(~F.col("admitted") & ~F.col("robots_blocked"))
         mark("admission")
@@ -483,9 +467,7 @@ def _run_waves(
             if n_reinjected:
                 nf = nf.unionByName(reinject)
             if config.link_expander is not None:
-                children = _first_attempts(
-                    seed_filter(config.link_expander(results_plan)), config.strict_urls
-                )
+                children = _first_attempts(seed_filter(config.link_expander(results_plan)))
                 nf = nf.unionByName(children)
             return io.commit(
                 nf.coalesce(STATE_COMMIT_PARTITIONS),

@@ -2343,31 +2343,21 @@ def q_pii_scrub(spark, sf):
 
 
 def q_cuckoo_seen(spark, sf):
-    """Cuckoo-filter URL-seen sidecar (operators/cuckoo.py — the deletable
-    alternative to the Bloom sidecar the north rule names): build from the
-    even event ids, EVICT the ids divisible by 10, probe the survivors.
-    The gate asserts the filter's hard guarantee — zero false negatives for
-    inserted-and-not-deleted keys — through the full distributed
-    build -> cogroup-merge-delete -> cogroup-probe path; deleting a key
-    must never disturb another key's membership. (False-positive behavior
-    is probabilistic by design and pytest-bounded instead.)"""
-    import math  # noqa: PLC0415
-
-    from .operators.cuckoo import DEFAULT_NB_LOG2, SLOTS, CuckooSidecar  # noqa: PLC0415
+    """The crawl's URL-seen filter (operators/bloom.py), built from the
+    even event ids that survive the removal of the ids divisible by 10: the
+    crawl removes a key only by rebuilding from the keys that remain. The
+    survivors probe the sidecar; the gate asserts the filter's hard
+    guarantee, zero false negatives, through the same distributed build and
+    cogroup probe the crawl runs. (False positives are probabilistic by
+    design and pytest-bounded instead.)"""
+    from .operators.bloom import BloomSidecar, build_sidecar  # noqa: PLC0415
+    from .operators.frontier import N_BUCKETS  # noqa: PLC0415
 
     ev = load(spark, sf, "events").select("event_id")
-    keys = ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == 0).select(
-        "event_id", F.xxhash64(F.col("event_id").cast("string")).alias("url_hash")
-    )
-    # size the outer bucket count to ~50% load per inner table so the gate
-    # query survives any sf scale-up (ADVICE r6: a hardcoded 8 overflowed at
-    # 10x events — the same super-linear trap the sf ladder caught elsewhere)
-    n_keys = keys.count()
-    n_buckets = max(8, math.ceil(n_keys / (SLOTS * (1 << DEFAULT_NB_LOG2) * 0.5)))
-    side = CuckooSidecar.build(keys, n_buckets=n_buckets).remove_keys(
-        keys.filter(F.pmod(F.col("event_id"), F.lit(10)) == 0)
-    )
-    survivors = keys.filter(F.pmod(F.col("event_id"), F.lit(10)) != 0)
+    survivors = ev.filter(
+        (F.pmod(F.col("event_id"), F.lit(2)) == 0) & (F.pmod(F.col("event_id"), F.lit(10)) != 0)
+    ).select("event_id", F.xxhash64(F.col("event_id").cast("string")).alias("url_hash"))
+    side = BloomSidecar(N_BUCKETS, build_sidecar(survivors, N_BUCKETS))
     return (
         side.might_contain_col(survivors)
         .select("event_id", F.col("maybe_seen").cast("int").alias("seen"))

@@ -3,6 +3,8 @@ between two checkpoints no table is read after it was committed, except the
 fetch_out staging that every post-fetch job reads. Per-partition lineage is
 a fold of the committed archive_results rows (``read_lineage``)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -114,3 +116,22 @@ def test_lineage_is_the_fold_of_archive_results(expander_crawl):
     assert per_wave == {s.wave: (s.admitted, s.bytes_written) for s in stats}
     # one row per (partition, wave)
     assert lin.count() == lin.select("lineage_partition", "wave").distinct().count()
+
+
+def test_table_reads_run_no_spark_job(expander_crawl):
+    """Each snapshot's manifest entry records its schema, so reading any
+    table of a crawl root plans its scan without a schema-inference job, and
+    the recorded schema is the one Spark infers from the files."""
+    spark, io, _, _ = expander_crawl
+    sc = spark.sparkContext
+    tables = sorted(t for t in os.listdir(io.root) if io.exists(t))
+    assert {"fetch_out", "archive_results", "url_seen", "url_seen_bloom", "frontier",
+            "seed_state", "metrics"} <= set(tables)
+    sc.setJobGroup("table-reads", "reads that must plan without running a job")
+    try:
+        schemas = {t: io.read(spark, t).schema for t in tables}
+        assert sc.statusTracker().getJobIdsForGroup("table-reads") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for t in tables:
+        assert schemas[t] == spark.read.parquet(*io.live_dirs(t)).schema, t

@@ -6,7 +6,14 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from auto_archiver_spark.functions.urls import north_norm
-from auto_archiver_spark.operators.bloom import BloomSidecar, build_sidecar
+from auto_archiver_spark.operators.bloom import (
+    BLOOM_K,
+    DEFAULT_M_BITS,
+    BloomSidecar,
+    _build_bitmap,
+    _check_bitmap,
+    build_sidecar,
+)
 from auto_archiver_spark.operators.frontier import (
     anti_join_seen,
     canonicalize,
@@ -88,6 +95,27 @@ def test_bloom_sidecar_no_false_negatives(spark):
         elif r.maybe_seen:
             fp += 1
     assert fp / max(len(rows) - len(seen_hashes), 1) < 0.05
+
+
+def test_bloom_fpr_is_ideal_within_one_bucket():
+    """Keys and probes of one bucket share the low hash bits its key reads,
+    so the bit positions must come from the others: the kernel's
+    false-positive rate stays within 1.2x the ideal (1 - e^(-kn/m))^k."""
+    rng = np.random.default_rng(11)
+    m = DEFAULT_M_BITS
+
+    def one_bucket(n):
+        h = rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64)
+        return ((h & ~np.int64(0xFF)) | 37).astype(np.uint64)
+
+    for bits_per_key in (8, 16):
+        n = m // bits_per_key
+        keys = one_bucket(n)
+        bitmap = _build_bitmap(keys, m)
+        assert _check_bitmap(keys, m, bitmap).all()
+        fp = sum(int(_check_bitmap(one_bucket(250_000), m, bitmap).sum()) for _ in range(4))
+        ideal = (1 - np.exp(-BLOOM_K * n / m)) ** BLOOM_K
+        assert fp / 1_000_000 <= 1.2 * ideal, (bits_per_key, fp / 1_000_000 / ideal)
 
 
 def _or_merge(a, b):

@@ -4,8 +4,8 @@
   ReadSchema narrower than the table),
 * the politeness dimension joins as BroadcastHashJoin (J5 — never shuffles
   the frontier),
-* the fold of the fetch log into images exchanges no payload column
-  (read from the plan tree, tests/plan_tree.py),
+* the fold of the fetch log into images exchanges no payload column and
+  broadcasts its winners once (read from the plan tree, tests/plan_tree.py),
 * the URL canonicalization chain stays inside WholeStageCodegen (no Python
   in the hot path).
 """
@@ -100,6 +100,19 @@ def test_read_images_exchanges_no_payload_column(spark, tmp_path):
     for node in exchanges:
         leaked = {p for p in node.output if p.rsplit(".", 1)[-1] in payload}
         assert not leaked, (node.name, leaked)
+
+
+def test_read_images_broadcasts_once_whatever_the_wave_count(spark, tmp_path):
+    """The fetch log is one scan, so the winners are broadcast once, not
+    once per fetch_out snapshot."""
+    from auto_archiver_spark.plans.wave import read_images
+
+    io = plant_two_wave_root(spark, str(tmp_path))
+    staged = io.read(spark, "fetch_out")
+    for wave in range(2, 6):
+        io.commit(staged, "fetch_out", wave, mode="overwrite")
+        nodes = plan_tree(read_images(spark, io)).walk()
+        assert [n.name for n in nodes if n.name == "BroadcastExchange"] == ["BroadcastExchange"]
 
 
 def test_canonicalize_is_whole_stage_codegen(spark):

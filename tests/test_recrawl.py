@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
 from auto_archiver_spark.plans.wave import CrawlConfig, read_images, read_seed_state, run_crawl
 from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df
+from tests.test_resume import forget_schemas
 
 CFG = dict(
     wave_seconds=3600.0,
@@ -216,6 +217,7 @@ def test_resume_eviction_log_root_with_pending_retries(spark):
         fr.drop("attempt").write.parquet(tmp)
         shutil.rmtree(fr_dir)
         os.replace(tmp, fr_dir)
+        forget_schemas(io_b, "frontier")
         state = cp.load()
         state["snapshots"]["url_evictions"] = io_b.commit(retries, "url_evictions", 0)
         cp.commit_wave(0, state["snapshots"])

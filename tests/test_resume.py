@@ -38,6 +38,16 @@ def _table_fingerprint(spark, io, table, drop=()):
     return sorted(tuple(str(x) for x in r) for r in rows)
 
 
+def forget_schemas(io, table):
+    """Drop the schema each snapshot of ``table`` recorded at its commit, as
+    in a root written before commits recorded one: a test that rewrites the
+    snapshots' files in an older layout leaves the reader to infer it."""
+    manifest = io._load_manifest(table)
+    for snap in manifest["snapshots"]:
+        snap.pop("schema", None)
+    io._store_manifest(table, manifest)
+
+
 def _run(spark, root, stop_after=None):
     io, cp = TableIO(root), WaveCheckpoint(root)
     stats = run_crawl(
@@ -132,6 +142,78 @@ def test_resume_without_sidecar_persists_full_bloom(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def _old_layout_sidecar(spark, io):
+    """url_seen's keys as a sidecar of the layout without a ``layout``
+    column, whose first bit position was the hash mod m."""
+    import numpy as np
+
+    from auto_archiver_spark.operators.bloom import BLOOM_K, DEFAULT_M_BITS
+    from auto_archiver_spark.operators.frontier import N_BUCKETS
+
+    m = np.uint64(DEFAULT_M_BITS)
+    hashes = np.array([r.url_hash for r in io.read(spark, "url_seen").collect()], np.int64)
+    rows = []
+    for b in np.unique(np.mod(hashes, N_BUCKETS)):
+        h = hashes[np.mod(hashes, N_BUCKETS) == b].astype(np.uint64)
+        h2 = ((h >> np.uint64(33)) << np.uint64(1)) | np.uint64(1)
+        i = np.arange(BLOOM_K, dtype=np.uint64)
+        pos = (((h % m)[:, None] + i[None, :] * h2[:, None]) % m).astype(np.int64)
+        bits = np.zeros(DEFAULT_M_BITS // 8, np.uint8)
+        np.bitwise_or.at(bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
+        rows.append((int(b), len(h), DEFAULT_M_BITS, bits.tobytes()))
+    return spark.createDataFrame(rows, "bucket int, n long, m long, bloom binary")
+
+
+def test_resume_rebuilds_old_layout_sidecar(spark, tmp_path):
+    """A root whose Bloom sidecar has the layout before rows carried one
+    resumes like an uninterrupted run. Its bits are at other positions, so
+    the resumed wave never probes it (a seen expander child would read as
+    new) and does not OR it into the new sidecar: it rebuilds the sidecar
+    once from url_seen, and every url_seen key is positive in it."""
+    from pyspark.sql import functions as F
+
+    from auto_archiver_spark.operators.bloom import BloomSidecar, build_sidecar
+    from auto_archiver_spark.operators.frontier import N_BUCKETS
+    from auto_archiver_spark.sources.fixture import fixture_link_expander
+
+    def run(root, stop_after=None):
+        cfg = CrawlConfig(**CFG, max_waves=3, link_expander=fixture_link_expander(400))
+        io = TableIO(root)
+        run_crawl(spark, io, WaveCheckpoint(root), frontier_seed_df(spark, N),
+                  host_policy_df(spark), cfg, stop_after_wave=stop_after)
+        return io
+
+    root_a, root_b = str(tmp_path / "a"), str(tmp_path / "b")
+    io_a = run(root_a)
+    io = run(root_b, stop_after=0)
+
+    # the root as it was written before the layout: the sidecar's rows, and
+    # no recorded schema in any manifest
+    (side_dir,) = io.live_dirs("url_seen_bloom")
+    _old_layout_sidecar(spark, io).write.parquet(side_dir + "-old")
+    shutil.rmtree(side_dir)
+    os.replace(side_dir + "-old", side_dir)
+    for t in os.listdir(root_b):
+        if io.exists(t):
+            forget_schemas(io, t)
+    assert not BloomSidecar.is_current(io.read(spark, "url_seen_bloom"))
+
+    io_b = run(root_b)
+    for table in ("url_seen", "archive_results", "frontier", "images"):
+        drop = ("processed_at", "ts", "lineage_partition") if table == "archive_results" else ()
+        assert _table_fingerprint(spark, io_a, table, drop) == _table_fingerprint(
+            spark, io_b, table, drop
+        ), f"table {table} differs after resume"
+    side = io_b.read(spark, "url_seen_bloom")
+    assert BloomSidecar.is_current(side)
+    seen = io_b.read(spark, "url_seen").select("url_hash")
+    missed = BloomSidecar.from_table(side, N_BUCKETS).might_contain_col(seen)
+    assert missed.filter(~F.col("maybe_seen")).count() == 0
+    # the full build from url_seen: no old bit was ORed in
+    rows = {r.bucket: bytes(r.bloom) for r in side.collect()}
+    assert rows == {r.bucket: bytes(r.bloom) for r in build_sidecar(seen, N_BUCKETS).collect()}
+
+
 def test_resume_reads_root_with_inline_bytes_column(spark, tmp_path):
     """A root whose early waves were written while the fetch staging schema
     still had an (all-null) ``bytes binary`` column must still read after a
@@ -160,6 +242,7 @@ def test_resume_reads_root_with_inline_bytes_column(spark, tmp_path):
     legacy.write.parquet(tmp)
     shutil.rmtree(fo_dir)
     os.replace(tmp, fo_dir)
+    forget_schemas(io, "fetch_out")
     assert "bytes" in spark.read.parquet(fo_dir).columns
     wave0 = {
         r.image_id: r.sha256
